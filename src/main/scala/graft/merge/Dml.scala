@@ -1,20 +1,16 @@
 package graft.merge
 
-import graft.ops.Core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** DML-shaped operators beyond MERGE (SURVEY.md §2.9 M3–M8). All are
-  * expressed as dataframe rewrites (the delete/update is the complement of
-  * the predicate), to be persisted via [[AtomicWriter]].
+/** DML-shaped operators beyond MERGE (SURVEY.md §2.9 M5–M8). Each is a
+  * dataframe rewrite (the delete/update is the complement of the predicate)
+  * that the caller persists, e.g. with [[overwritePartitions]], the
+  * partition-scoped write [[MergeInto.mergePartitioned]] also lands through.
+  * M3 (TRUNCATE + INSERT) is `SyncPipeline.fullSync`; M4 (delete duplicates
+  * keeping the latest) is `Core.dedupByKey`.
   */
 object Dml {
-
-  /** M3: TRUNCATE + INSERT SELECT — full dimension replacement (ref:
-    * `client_dimension_sync_daily/main.py:183-195`). In Spark this is just an
-    * overwrite; exposed for symmetry.
-    */
-  def overwriteWith(replacement: DataFrame): DataFrame = replacement
 
   /** Partition-scoped overwrite: replace ONLY the partitions of the parquet
     * table at `path` that appear in `updated` (dynamic partition overwrite);
@@ -41,13 +37,6 @@ object Dml {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(path)
-
-  /** M4: DELETE duplicate rows keeping the latest per key (ref:
-    * `snowflake_bq_sync Time details/daily_sync.py:92-107` — ROW_NUMBER
-    * partition dedup inside a DELETE). Equivalent to keeping rn=1.
-    */
-  def deleteDupsKeepLatest(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
-    Core.dedupByKey(df, keys, order)
 
   /** M5: "smart delete" — remove today's rows whose key no longer exists in
     * the source extract, guarded so an empty/failed extract never wipes the

@@ -1,7 +1,9 @@
 package graft.merge
 
 import graft.ops.Core
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** MERGE / upsert semantics without a table format (SURVEY.md §2.9 M1/M2).
@@ -19,10 +21,10 @@ import org.apache.spark.sql.functions._
   * truncation at `work_item_budget_vs_actual_…_daily/main.py:374-378` is a
   * scalability bug we deliberately do not reproduce).
   *
-  * Scale note: at 100 TB the target should be partitioned by the snapshot
-  * date column (see [[AtomicWriter]] and Dml.overwritePartitions) so a daily
-  * merge rewrites only touched partitions, and the anti-join shuffles only
-  * the merge keys after Catalyst column pruning.
+  * Landing a synced increment on disk is [[mergePartitioned]]'s job alone:
+  * the target is partitioned by the snapshot date, so a daily merge rewrites
+  * only the days it touches, and the anti-join shuffles only the merge keys
+  * after Catalyst column pruning. It reports the rows it wrote.
   */
 object MergeInto {
 
@@ -46,10 +48,7 @@ object MergeInto {
       keys: Seq[String],
       orderCol: Option[String] = None,
       tieBreak: Seq[Column] = Nil): DataFrame = {
-    val deduped = orderCol match {
-      case Some(c) => Core.dedupByKey(source, keys, col(c).desc +: tieBreak)
-      case None => source.dropDuplicates(keys)
-    }
+    val deduped = latestPerKey(source, keys, orderCol, tieBreak)
     val kept = target.join(deduped.select(keys.map(col): _*), keys, "left_anti")
     kept.unionByName(deduped.select(target.columns.map(col).toIndexedSeq: _*))
   }
@@ -104,10 +103,7 @@ object MergeInto {
         s"mergeClauses reserves the working column name `$r` — rename it on the " +
           "input frames before merging")
     }
-    val deduped = orderCol match {
-      case Some(c) => Core.dedupByKey(source, keys, Seq(col(c).desc))
-      case None => source.dropDuplicates(keys)
-    }
+    val deduped = latestPerKey(source, keys, orderCol)
     val t = target.alias("t")
     val s = deduped.withColumn("__matched", lit(true)).alias("s")
     val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
@@ -167,10 +163,7 @@ object MergeInto {
       if (audit.deterministic) md5(concat_ws("|", keys.map(c => col(c).cast("string")): _*))
       else expr("uuid()")
 
-    val deduped = orderCol match {
-      case Some(c) => Core.dedupByKey(source, keys, Seq(col(c).desc))
-      case None => source.dropDuplicates(keys)
-    }
+    val deduped = latestPerKey(source, keys, orderCol)
     // Carry existing uuids across the merge: left join source→target on keys.
     val existing = target.select((keys.map(col) :+ col(audit.uuidCol).as("__existing_uuid")): _*)
     val srcWithAudit = deduped
@@ -182,16 +175,27 @@ object MergeInto {
     kept.unionByName(srcWithAudit.select(target.columns.map(col).toIndexedSeq: _*))
   }
 
-  /** Partition-scoped MERGE against a date-partitioned parquet target: read
-    * ONLY the partitions the source touches (static partition pruning on the
-    * collected partition values — control-plane-small, one per touched day),
-    * merge, and rewrite just those directories via
-    * [[Dml.overwritePartitions]]. The partition column must be part of the
-    * merge key — the reference's fact grain is exactly that,
-    * (TIME_ENTRY_ID, REPORTING_DATE) / (WORK_ITEM_ID, REPORTING_DATE)
-    * (`snowflake_bq_sync_daily Time Details/main.py:197-206`) — so a matched
-    * row can never move between partitions and the untouched ones stay
-    * byte-identical.
+  /** The one landing path for a keyed increment into a plain-parquet target
+    * partitioned by `partitionCol`; every sync mode calls it. One listing of
+    * the target root decides how the increment lands:
+    *
+    *  - no partition directories yet (no target, or a legacy target written
+    *    UNPARTITIONED, e.g. by `fullSync`): [[mergeAndSwap]] merges with
+    *    whatever is there and publishes the partitioned layout through the
+    *    atomic swap. A dynamic overwrite into a legacy layout would leave its
+    *    root-level files in place and double-count every old row.
+    *  - otherwise: days the source touches that have no partition yet are
+    *    written straight from the deduplicated source, and days that exist
+    *    are merged with ONLY their own partition directories, all in one
+    *    dynamic partition overwrite ([[Dml.overwritePartitions]]). Untouched
+    *    partitions are never opened and stay byte-identical.
+    *
+    * The partition column must be part of the merge key — the reference's
+    * fact grain is exactly that, (TIME_ENTRY_ID, REPORTING_DATE) /
+    * (WORK_ITEM_ID, REPORTING_DATE) (`snowflake_bq_sync_daily Time
+    * Details/main.py:197-206`) — so a matched row never moves partitions.
+    * Returns the rows written: every row of the rewritten partitions (the
+    * sense of Delta's `numOutputRows`), counted by the write job itself.
     */
   def mergePartitioned(
       spark: SparkSession,
@@ -199,82 +203,117 @@ object MergeInto {
       source: DataFrame,
       keys: Seq[String],
       partitionCol: String,
-      orderCol: Option[String] = None,
-      audit: Option[Audit] = None): Unit = {
+      orderCol: Option[String] = None): Long = {
     require(keys.contains(partitionCol),
       s"partition-scoped merge needs '$partitionCol' in the merge keys; " +
         "otherwise a matched row could move partitions and strand its old copy")
-    val fs = new org.apache.hadoop.fs.Path(targetPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(targetPath))) {
-      val deduped = orderCol match {
-        case Some(c) => Core.dedupByKey(source, keys, Seq(col(c).desc))
-        case None => source.dropDuplicates(keys)
-      }
-      Dml.overwritePartitions(deduped, targetPath, Seq(partitionCol))
-    } else if (!isPartitionedLayout(fs, targetPath, partitionCol)) {
-      // Layout guard: dynamic partition overwrite on a target previously
-      // written UNPARTITIONED (e.g. by AtomicWriter.overwrite / fullSync)
-      // would add partitionCol=… subdirectories while leaving the old
-      // root-level parquet files in place — read-back would then double-count
-      // every pre-existing row. Fall back to a full merge through the atomic
-      // write-and-swap, which also converts the target to the partitioned
-      // layout so subsequent merges take the scoped path.
-      val target = spark.read.parquet(targetPath)
-      val merged = audit match {
-        case Some(a) => mergeWithAudit(target, source, keys, a, orderCol)
-        case None =>
+    val root = new Path(targetPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val entries = if (fs.exists(root)) fs.listStatus(root).toSeq else Nil
+    val prefix = partitionCol + "="
+    val days = entries.map(_.getPath.getName).filter(_.startsWith(prefix))
+      .map(_.stripPrefix(prefix)).toSet
+    val legacy = entries.exists(e => e.isFile && e.getPath.getName.endsWith(".parquet"))
+    if (days.isEmpty || legacy) mergeAndSwap(source, targetPath, keys, orderCol, Seq(partitionCol))
+    else {
+      // the directory each touched day is written to, in the writer's own
+      // encoding (value cast to string, escaped, null → default partition)
+      val stale = source.select(col(partitionCol).cast("string")).distinct().collect()
+        .map { r =>
+          val v = r.getString(0)
+          if (v == null || v.isEmpty) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+          else ExternalCatalogUtils.escapePathName(v)
+        }.filter(days.contains).toIndexedSeq
+      val landed =
+        if (stale.isEmpty) latestPerKey(source, keys, orderCol)
+        else {
+          val target = spark.read.option("basePath", targetPath)
+            .parquet(stale.map(d => s"$targetPath/$prefix$d"): _*)
+          // localCheckpoint decouples the self-read from the overwrite of the
+          // same directories (the touched days only, not the whole target),
+          // rather than relying on dynamic mode deferring deletes to commit time
           merge(target, source.select(target.columns.map(col).toIndexedSeq: _*), keys, orderCol)
-      }
-      AtomicWriter.overwrite(merged, targetPath, Seq(partitionCol))
-    } else {
-      val touched = source.select(col(partitionCol)).distinct().collect()
-        .map(_.get(0)).toIndexedSeq
-      val nonNull = touched.filter(_ != null)
-      val target = spark.read.parquet(targetPath)
-      val pruned = target.filter(
-        if (nonNull.length == touched.length) col(partitionCol).isin(nonNull: _*)
-        else col(partitionCol).isin(nonNull: _*) || col(partitionCol).isNull)
-      val merged = audit match {
-        case Some(a) => mergeWithAudit(pruned, source, keys, a, orderCol)
-        case None =>
-          merge(pruned, source.select(pruned.columns.map(col).toIndexedSeq: _*), keys, orderCol)
-      }
-      // localCheckpoint decouples the self-read from the overwrite of the
-      // same path (the touched window only — bounded, not the whole target),
-      // rather than relying on dynamic mode deferring deletes to commit time.
-      Dml.overwritePartitions(merged.localCheckpoint(true), targetPath, Seq(partitionCol))
+            .localCheckpoint(true)
+        }
+      countWritten(landed)(Dml.overwritePartitions(_, targetPath, Seq(partitionCol)))
     }
   }
 
-  /** A target directory is in partitioned layout iff it has `col=…`
-    * subdirectories and no stray root-level data files (a mixed layout means
-    * a previous unpartitioned writer touched it — treat as not partitioned).
+  /** Merge-and-swap: upserts `source` into the WHOLE table at `targetPath`
+    * and publishes the result through [[AtomicWriter.overwrite]]. The landing
+    * path of a target with no partition layout: the first write and the
+    * legacy target of [[mergePartitioned]], and every micro-batch of
+    * `Streaming.upsertSink`. The first write is deduplicated like every
+    * later one.
+    *
+    * A swap that died between its two renames left no table at `targetPath`
+    * and the only full copy at `<targetPath>.__old__`. That copy is put back
+    * before anything looks at the target, so a retry merges into the old
+    * table instead of writing the increment alone (after which the swap
+    * would delete the old copy). Returns the rows written.
     */
-  private def isPartitionedLayout(
-      fs: org.apache.hadoop.fs.FileSystem, path: String, partitionCol: String): Boolean = {
-    val entries = fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
-    val hasPartDirs =
-      entries.exists(e => e.isDirectory && e.getPath.getName.startsWith(partitionCol + "="))
-    val hasRootData =
-      entries.exists(e => e.isFile && e.getPath.getName.endsWith(".parquet"))
-    hasPartDirs && !hasRootData
+  private[graft] def mergeAndSwap(
+      source: DataFrame,
+      targetPath: String,
+      keys: Seq[String],
+      orderCol: Option[String],
+      partitionBy: Seq[String] = Nil): Long = {
+    val spark = source.sparkSession
+    val dst = new Path(targetPath)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = AtomicWriter.oldCopy(targetPath)
+    if (!fs.exists(dst) && fs.exists(old)) fs.rename(old, dst)
+    // a target holding only hidden files (an empty partitioned write leaves
+    // just `_SUCCESS`) has no schema to read and nothing to keep
+    val hasRows = fs.exists(dst) &&
+      fs.listStatus(dst).exists(e => !e.getPath.getName.startsWith("_") &&
+        !e.getPath.getName.startsWith("."))
+    val landed =
+      if (hasRows) {
+        val target = spark.read.parquet(targetPath)
+        merge(target, source.select(target.columns.map(col).toIndexedSeq: _*), keys, orderCol)
+      } else latestPerKey(source, keys, orderCol)
+    countWritten(landed)(AtomicWriter.overwrite(_, targetPath, partitionBy))
   }
+
+  /** Runs `write` over `df` and returns the rows it wrote, counted by the
+    * write job itself rather than by a second job. Attach it after any
+    * `localCheckpoint`: metrics observed inside a checkpointed plan belong to
+    * the checkpoint's job, so the written plan would never report them.
+    */
+  private[graft] def countWritten(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
+  }
+
+  /** The source side of every merge here: one row per key, the greatest
+    * `orderCol` winning (then `tieBreak`), else an arbitrary one. */
+  private def latestPerKey(
+      source: DataFrame,
+      keys: Seq[String],
+      orderCol: Option[String],
+      tieBreak: Seq[Column] = Nil): DataFrame =
+    orderCol match {
+      case Some(c) => Core.dedupByKey(source, keys, col(c).desc +: tieBreak)
+      case None => source.dropDuplicates(keys)
+    }
 }
 
 /** Atomic write-and-swap for plain-parquet targets (the staging-table +
   * MERGE lifecycle of ref `snowflake_bq_sync_daily Time Details/main.py:120-123,217-219`
   * collapsed into write-temp-then-rename). Readers see either the old or the
-  * new table, never a partial write.
+  * new table, never a partial write. A crash between the two renames leaves
+  * the old table at [[oldCopy]]; [[MergeInto.mergeAndSwap]] puts it back.
   */
 object AtomicWriter {
   def overwrite(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
     val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hadoopConf)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".__tmp__")
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val bak = new org.apache.hadoop.fs.Path(path + ".__old__")
+    val fs = new Path(path).getFileSystem(hadoopConf)
+    val tmp = new Path(path + ".__tmp__")
+    val dst = new Path(path)
+    val bak = oldCopy(path)
     if (fs.exists(tmp)) fs.delete(tmp, true)
     val writer = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer).parquet(tmp.toString)
@@ -284,5 +323,6 @@ object AtomicWriter {
     if (fs.exists(bak)) fs.delete(bak, true)
   }
 
-  def read(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+  /** Where [[overwrite]] parks the old table during its swap. */
+  private[merge] def oldCopy(path: String): Path = new Path(path + ".__old__")
 }

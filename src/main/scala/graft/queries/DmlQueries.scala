@@ -56,11 +56,10 @@ object DmlQueries extends QueryModule {
 
     // M3: TRUNCATE+INSERT dimension replacement (`client_dimension_sync_daily/main.py:183-195`).
     "m3_overwrite_dim" -> ((s, dir) =>
-      Dml.overwriteWith(
-        Tables.customer(s, dir).select(
-          col("c_custkey").as("client_id"),
-          upper(col("c_name")).as("client_name"),
-          col("c_mktsegment").as("segment")))),
+      Tables.customer(s, dir).select(
+        col("c_custkey").as("client_id"),
+        upper(col("c_name")).as("client_name"),
+        col("c_mktsegment").as("segment"))),
 
     // M5: smart delete with liveness guard (`…budget…daily/main.py:368-408`):
     // today's rows whose key is absent from the live extract are removed;

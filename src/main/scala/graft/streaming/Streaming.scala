@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.merge.{AtomicWriter, MergeInto}
+import graft.merge.MergeInto
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
@@ -160,8 +160,9 @@ object Streaming {
       }
   }
 
-  /** ST3: upsert-on-arrival sink — every micro-batch is MERGEd into the
-    * parquet target by key, making replays idempotent
+  /** ST3: upsert-on-arrival sink — every micro-batch, the first included, is
+    * deduplicated and MERGEd into the parquet target by key through
+    * `MergeInto`'s merge-and-swap, making replays idempotent
     * (`foreachBatch(MergeInto)`; ref merge `main.py:197-206`).
     */
   def upsertSink(stream: DataFrame, targetPath: String, keys: Seq[String],
@@ -170,17 +171,7 @@ object Streaming {
       .outputMode(OutputMode.Update())
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(targetPath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(new org.apache.hadoop.fs.Path(targetPath))) {
-            val target = spark.read.parquet(targetPath)
-            MergeInto.merge(target, batch.select(target.columns.map(col).toIndexedSeq: _*),
-              keys, orderCol)
-          } else batch
-        // AtomicWriter stages to a tmp dir while the old files are still in
-        // place (the lazy `merged` plan reads them), then swaps via rename.
-        AtomicWriter.overwrite(merged, targetPath)
+        MergeInto.mergeAndSwap(batch, targetPath, keys, orderCol)
+        ()
       }
 }

@@ -1,25 +1,32 @@
 package graft.sync
 
-import graft.merge.{AtomicWriter, Dml, MergeInto}
+import graft.merge.{AtomicWriter, MergeInto}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Pipeline runners reproducing the reference's eight sync functions
-  * (SURVEY.md §7.5): full reload vs date-windowed incremental, audit
-  * columns, tracker emission, smart-delete, and the resumable chunked
-  * backfill state machine.
+  * (SURVEY.md §7.5): full reload vs date-windowed incremental, tracker
+  * emission, smart-delete, and the resumable chunked backfill state machine.
   *
   * The reference splits these across 22 `main.py` variants of the same loop
   * (the `snowflake_bq_sync…` function directories); here each mode is one
-  * declarative plan:
-  * scan → (window filter) → MergeInto/overwrite → tracker row. The driver
+  * call: scan → (window filter) → land → tracker row. Every keyed mode lands
+  * through [[MergeInto.mergePartitioned]], which decides per call how the
+  * increment reaches the date-partitioned target and counts what it wrote;
+  * the full reload is one atomic overwrite counted the same way. The driver
   * loop below replaces the Pub/Sub self-retrigger
   * (`main_paginated.py:313-352`) — state lives in a tiny parquet control
   * table, so a killed run resumes at the first incomplete chunk.
   */
 object SyncPipeline {
 
+  /** One sync call's outcome. `rowsSynced` is the number of rows this run
+    * wrote to the target (the sense of Delta's `numOutputRows`): the whole
+    * new table for a full sync, every row of the rewritten day partitions for
+    * an incremental one — counted by the write job, never by re-reading the
+    * target.
+    */
   final case class SyncResult(rowsSynced: Long, mode: String, tracker: DataFrame)
 
   /** Whole-run retry with fixed backoff, the reference's
@@ -61,59 +68,35 @@ object SyncPipeline {
     * `client_dimension_sync_daily/main.py:183-195`). */
   def fullSync(spark: SparkSession, source: DataFrame, targetPath: String,
       pipeline: String): SyncResult = {
-    AtomicWriter.overwrite(Dml.overwriteWith(source), targetPath)
-    val n = spark.read.parquet(targetPath).count()
+    val n = MergeInto.countWritten(source)(AtomicWriter.overwrite(_, targetPath))
     SyncResult(n, "full", tracker(spark, pipeline, "full", n, "COMPLETED"))
   }
 
-  /** Incremental sync: date-windowed pull merged by key with audit columns
-    * (fact pipelines, ref `snowflake_bq_sync_daily Time Details/main.py:85-90,197-206`).
-    *
-    * When the date column is part of the merge key (the reference's fact
-    * grain), the target is stored partitioned by it and the merge is
-    * partition-scoped: only the ±window partitions are read and rewritten —
-    * at 100 TB the daily sync touches days, not the table. Otherwise it
-    * falls back to the full atomic rewrite.
+  /** Incremental sync: date-windowed pull merged by key (fact pipelines, ref
+    * `snowflake_bq_sync_daily Time Details/main.py:85-90,197-206`). The date
+    * column is part of the merge key (the reference's fact grain), so the
+    * target is stored partitioned by it and only the window's days are read
+    * and rewritten — at 100 TB the daily sync touches days, not the table.
     */
   def incrementalSync(spark: SparkSession, source: DataFrame, targetPath: String,
       keys: Seq[String], dateCol: String, start: String, end: String,
-      pipeline: String, audit: Option[MergeInto.Audit] = None): SyncResult = {
-    val windowed = Tables.dateWindow(source, dateCol, start, end)
-    if (keys.contains(dateCol)) {
-      MergeInto.mergePartitioned(spark, targetPath, windowed, keys, dateCol, audit = audit)
-    } else {
-      val fs = new org.apache.hadoop.fs.Path(targetPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val merged =
-        if (fs.exists(new org.apache.hadoop.fs.Path(targetPath))) {
-          val target = spark.read.parquet(targetPath)
-          audit match {
-            case Some(a) => MergeInto.mergeWithAudit(target, windowed, keys, a)
-            case None => MergeInto.merge(target, windowed.select(
-              target.columns.map(col).toIndexedSeq: _*), keys)
-          }
-        } else windowed
-      AtomicWriter.overwrite(merged, targetPath)
-    }
-    val n = spark.read.parquet(targetPath).count()
+      pipeline: String): SyncResult = {
+    require(keys.contains(dateCol),
+      s"incremental sync needs its date column '$dateCol' in the merge keys")
+    val n = MergeInto.mergePartitioned(spark, targetPath,
+      Tables.dateWindow(source, dateCol, start, end), keys, dateCol)
     SyncResult(n, "incremental", tracker(spark, pipeline, "incremental", n, "COMPLETED"))
   }
 
-  /** ST4 fast path: date-partitioned incremental sync for immutable-date
-    * facts (events, time entries — rows whose `dateCol` never changes once
-    * ingested, the reference's fact grain). The window's day-partitions are
-    * enumerable with date arithmetic, so:
-    *   - days with NO existing partition (the normal rotation/backfill case)
-    *     dedup + dynamic-partition-write DIRECTLY — no target read, no
-    *     touched-partition collect, no per-rotation fixed-cost jobs;
-    *   - days that already exist (boundary days shared by inclusive slice
-    *     ends, crash re-runs) re-merge idempotently, partition-scoped.
-    * vs [[incrementalSync]]'s fallback path for non-key date columns, which
-    * reads and atomically rewrites the WHOLE target per call — O(n²) I/O
-    * over a rotation cycle at 100 TB. Precondition: a key's `dateCol` value
+  /** ST4: date-partitioned incremental sync for immutable-date facts
+    * (events, time entries — rows whose `dateCol` never changes once
+    * ingested) keyed WITHOUT the date: the target is partitioned by the
+    * derived day `part_date`, which joins the merge key. A rotation's fresh
+    * days are written straight from the source and the boundary days shared
+    * by inclusive slice ends re-merge idempotently (see
+    * [[MergeInto.mergePartitioned]]). Precondition: a key's `dateCol` value
     * is immutable (else a moved row could duplicate across partitions).
-    * Output rows are identical to the full-merge path; the derived
-    * `part_date` partition column is dropped on read-back by callers.
+    * Callers drop `part_date` on read-back.
     */
   def incrementalSyncPartitioned(spark: SparkSession, source: DataFrame, targetPath: String,
       keys: Seq[String], dateCol: String, start: String, end: String,
@@ -121,41 +104,7 @@ object SyncPipeline {
     val partCol = "part_date"
     val windowed = Tables.dateWindow(source, dateCol, start, end)
       .withColumn(partCol, to_date(col(dateCol)))
-    val targetRoot = new org.apache.hadoop.fs.Path(targetPath)
-    val fs = targetRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existingDays: Set[String] =
-      if (fs.exists(targetRoot))
-        fs.listStatus(targetRoot).filter(_.isDirectory).map(_.getPath.getName)
-          .filter(_.startsWith(partCol + "=")).map(_.stripPrefix(partCol + "=")).toSet
-      else Set.empty
-    val s0 = java.time.LocalDate.parse(start.take(10))
-    val e0 = java.time.LocalDate.parse(end.take(10))
-    val days = Iterator.iterate(s0)(_.plusDays(1)).takeWhile(!_.isAfter(e0))
-      .map(_.toString).toSeq
-    val (stale, fresh) = days.partition(existingDays.contains)
-    def slice(ds: Seq[String]) =
-      windowed.filter(col(partCol).cast("string").isin(ds: _*))
-    // tracker counts what THIS run wrote — observed DURING the write job
-    // (Dataset.observe), zero extra jobs; a whole-target count would be a
-    // job whose cost grows with the table forever, exactly what the
-    // partitioned path exists to avoid
-    val freshN = if (fresh.isEmpty) 0L else {
-      val obs = org.apache.spark.sql.Observation()
-      Dml.overwritePartitions(
-        slice(fresh).dropDuplicates(keys :+ partCol)
-          .observe(obs, count(lit(1)).as("n")),
-        targetPath, Seq(partCol))
-      obs.get.getOrElse("n", 0L).asInstanceOf[Long]
-    }
-    val staleN = if (stale.isEmpty) 0L else {
-      MergeInto.mergePartitioned(spark, targetPath, slice(stale), keys :+ partCol, partCol)
-      // count POST-dedup rows, matching the fresh leg's semantics — a raw
-      // slice count would report duplicate source keys as extra rows on one
-      // path but not the other (the scan is bounded to the stale-day slice,
-      // typically the 1-2 boundary days of a rotation window)
-      slice(stale).dropDuplicates(keys :+ partCol).count()
-    }
-    val n = freshN + staleN
+    val n = MergeInto.mergePartitioned(spark, targetPath, windowed, keys :+ partCol, partCol)
     SyncResult(n, "incremental_partitioned",
       tracker(spark, pipeline, "incremental_partitioned", n, "COMPLETED"))
   }
@@ -187,11 +136,11 @@ object SyncPipeline {
     * next call resumes at the first incomplete chunk. `clock` is injectable
     * so the early exit is testable deterministically.
     *
-    * The target is partitioned by the chunk-granular date of `dateCol`, so
-    * each chunk writes only its own day partitions (the round-2 version
-    * rewrote the whole target per chunk — O(n²) I/O over a backfill) and the
-    * state table grows by appended rows, never rewritten. Chunk re-runs stay
-    * idempotent: the partition-scoped merge upserts on (keys, day).
+    * The target is partitioned by the day of `dateCol`, so each chunk
+    * rewrites only its own day partitions and the state table grows by
+    * appended rows, never rewritten. Chunk re-runs stay idempotent: the
+    * partition-scoped merge upserts on (keys, day) — which is what recovers a
+    * chunk that committed data but died before its state append.
     */
   def chunkedBackfill(spark: SparkSession, source: DataFrame, targetPath: String,
       statePath: String, keys: Seq[String], dateCol: String,
@@ -206,33 +155,6 @@ object SyncPipeline {
         spark.read.parquet(statePath).filter(col("status") === "COMPLETED")
           .select("chunk_start").as[String].collect().toSet
       else Set.empty
-    // One target-root listing per CALL (not per chunk): a chunk's touched day
-    // partitions are [from, to) by construction — enumerable with date
-    // arithmetic, no Spark job — so a chunk whose days don't exist yet (the
-    // normal backfill path) can dedup + dynamic-partition-write directly,
-    // skipping mergePartitioned's per-chunk target read, touched-partition
-    // collect and localCheckpoint (~4 jobs/chunk of pure fixed cost at any
-    // data size; at 100 TB it also skips re-listing an ever-growing target).
-    // The merge path remains for crash recovery: day partitions that already
-    // exist (a chunk that committed data but died before its state append)
-    // are re-merged idempotently.
-    val targetRoot = new org.apache.hadoop.fs.Path(targetPath)
-    // state and target may live on different filesystems (e.g. local state,
-    // object-store target) — target listings must use the target's own FS
-    val targetFs = targetRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partPrefix = partCol + "="
-    var rootEntries: Seq[org.apache.hadoop.fs.FileStatus] =
-      if (targetFs.exists(targetRoot)) targetFs.listStatus(targetRoot).toSeq else Nil
-    // Tolerates timestamped bounds ("2024-01-01 00:00:00"): only the date
-    // part matters for partition names, and `to`'s own day is included —
-    // a past-midnight `to` touches it, and over-approximating just forces
-    // the safe merge path more often. Unparseable bounds → None → merge.
-    def chunkDays(from: String, to: String): Option[Seq[String]] =
-      try {
-        val f = java.time.LocalDate.parse(from.take(10))
-        val t = java.time.LocalDate.parse(to.take(10))
-        Some(Iterator.iterate(f)(_.plusDays(1)).takeWhile(!_.isAfter(t)).map(_.toString).toSeq)
-      } catch { case _: java.time.format.DateTimeParseException => None }
     val t0 = clock()
     var budgetHit = false
     chunks.foreach { case (from, to) =>
@@ -242,20 +164,7 @@ object SyncPipeline {
           val chunk = source.filter(col(dateCol) >= lit(from).cast("timestamp_ntz") &&
             col(dateCol) < lit(to).cast("timestamp_ntz"))
             .withColumn(partCol, to_date(col(dateCol)))
-          val existingDirs = rootEntries.filter(_.isDirectory).map(_.getPath.getName)
-          val cleanLayout = rootEntries.isEmpty ||
-            (existingDirs.exists(_.startsWith(partPrefix)) &&
-              !rootEntries.exists(e => e.isFile && e.getPath.getName.endsWith(".parquet")))
-          val freshDays = chunkDays(from, to)
-            .exists(days => !days.exists(d => existingDirs.contains(partPrefix + d)))
-          if (cleanLayout && freshDays)
-            Dml.overwritePartitions(
-              chunk.dropDuplicates(keys :+ partCol), targetPath, Seq(partCol))
-          else
-            MergeInto.mergePartitioned(spark, targetPath, chunk, keys :+ partCol, partCol)
-          // an all-empty chunk may leave the target still uncreated
-          rootEntries =
-            if (targetFs.exists(targetRoot)) targetFs.listStatus(targetRoot).toSeq else Nil
+          MergeInto.mergePartitioned(spark, targetPath, chunk, keys :+ partCol, partCol)
           Seq((from, to, "COMPLETED")).toDF("chunk_start", "chunk_end", "status")
             .coalesce(1).write.mode("append").parquet(statePath)
         }
@@ -263,7 +172,9 @@ object SyncPipeline {
     }
     // a budget can expire before the first chunk of a fresh backfill ever
     // commits — a clean stop, not a crash: the next run starts from zero
-    if (!targetFs.exists(targetRoot))
+    // (state and target may live on different filesystems)
+    val targetRoot = new org.apache.hadoop.fs.Path(targetPath)
+    if (!targetRoot.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(targetRoot))
       source.filter(lit(false))
     else
       spark.read.parquet(targetPath).drop(partCol)

@@ -83,14 +83,14 @@ class MergeSpec extends SparkSuite {
   test("AtomicWriter: swap leaves either old or new table, readable after overwrite") {
     val path = tmpDir() + "/tbl"
     AtomicWriter.overwrite(Seq((1, "a")).toDF("k", "v"), path)
-    assert(AtomicWriter.read(spark, path).count() == 1)
+    assert(spark.read.parquet(path).count() == 1)
     AtomicWriter.overwrite(Seq((1, "a"), (2, "b")).toDF("k", "v"), path)
-    assert(AtomicWriter.read(spark, path).count() == 2)
+    assert(spark.read.parquet(path).count() == 2)
     // merged plan reading the target it overwrites (the foreachBatch shape)
-    val target = AtomicWriter.read(spark, path)
+    val target = spark.read.parquet(path)
     val merged = MergeInto.merge(target, Seq((3, "c")).toDF("k", "v"), Seq("k"))
     AtomicWriter.overwrite(merged, path)
-    assert(AtomicWriter.read(spark, path).count() == 3)
+    assert(spark.read.parquet(path).count() == 3)
   }
 
   test("smartDelete: empty live-key set deletes nothing (liveness guard)") {

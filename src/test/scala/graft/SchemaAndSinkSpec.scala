@@ -126,26 +126,37 @@ class SchemaAndSinkSpec extends SparkSuite {
   test("partition-scoped merge detects an unpartitioned legacy target and converts it") {
     import graft.merge.MergeInto
     import java.sql.Date
-    val path = tmpDir() + "/pmerge_legacy"
     // legacy layout: written UNPARTITIONED (root-level parquet files)
     val target = Seq(
       (1L, Date.valueOf("2024-01-01"), "a"),
       (2L, Date.valueOf("2024-01-02"), "b"),
       (3L, Date.valueOf("2024-01-03"), "c")).toDF("id", "d", "v")
-    target.write.parquet(path)
     val src = Seq(
       (2L, Date.valueOf("2024-01-02"), "b2"),
       (9L, Date.valueOf("2024-01-02"), "i")).toDF("id", "d", "v")
-    // dynamic overwrite on this layout would leave the root files in place
-    // and double-count rows 1–3; the layout guard must full-rewrite instead
-    MergeInto.mergePartitioned(spark, path, src, Seq("id", "d"), "d")
-    val out = spark.read.parquet(path)
-    assert(out.count() == 4)
-    assert(out.filter(col("id") === 2L).select("v").as[String].head() == "b2")
-    // and the target is now in partitioned layout, so the next merge prunes
-    assert(new java.io.File(s"$path/d=2024-01-01").isDirectory)
-    assert(!new java.io.File(path).listFiles().exists(f =>
-      f.isFile && f.getName.endsWith(".parquet")))
+    // the legacy target intact, or as a crash between the two renames of its
+    // swap left it: parked at .__old__ beside a partial .__tmp__, with nothing
+    // at the target path — the retry must merge into the old table, not
+    // write the increment alone and then delete the only full copy
+    Seq(false, true).foreach { crashed =>
+      val path = tmpDir() + "/pmerge_legacy"
+      if (crashed) {
+        target.write.parquet(path + ".__old__")
+        src.limit(1).write.parquet(path + ".__tmp__")
+      } else target.write.parquet(path)
+      // dynamic overwrite on this layout would leave the root files in place
+      // and double-count rows 1–3; the layout guard must full-rewrite instead
+      MergeInto.mergePartitioned(spark, path, src, Seq("id", "d"), "d")
+      val out = spark.read.parquet(path)
+      assert(out.count() == 4, s"crashed=$crashed")
+      assert(out.filter(col("id") === 2L).select("v").as[String].head() == "b2")
+      // and the target is now in partitioned layout, so the next merge prunes
+      assert(new java.io.File(s"$path/d=2024-01-01").isDirectory)
+      assert(!new java.io.File(path).listFiles().exists(f =>
+        f.isFile && f.getName.endsWith(".parquet")))
+      assert(!new java.io.File(path + ".__old__").exists &&
+        !new java.io.File(path + ".__tmp__").exists)
+    }
   }
 
   test("S7/S8: temp-view staging lifecycle + create-if-not-exists semantics") {

@@ -24,6 +24,10 @@ class SyncPipelineSpec extends SparkSuite {
     val path = tmpDir() + "/fact"
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("d", col("ts").cast("date"))
+    // a window with no rows leaves a new target holding only `_SUCCESS`; the
+    // syncs after it must still land on it
+    assert(SyncPipeline.incrementalSync(spark, ev, path, Seq("event_id", "d"), "d",
+      "2023-12-01", "2023-12-07", "ev_sync").rowsSynced == 0)
     // bootstrap with the first week; date in the key → partitioned layout
     SyncPipeline.incrementalSync(spark, ev, path, Seq("event_id", "d"), "d",
       "2024-01-01", "2024-01-07", "ev_sync")
@@ -33,8 +37,10 @@ class SyncPipelineSpec extends SparkSuite {
     // pull an overlapping window — idempotent for the overlap, additive for the rest
     val r = SyncPipeline.incrementalSync(spark, ev, path, Seq("event_id", "d"), "d",
       "2024-01-05", "2024-01-14", "ev_sync")
-    val expected = ev.filter(col("d") <= lit("2024-01-14").cast("date")).count()
-    assert(r.rowsSynced == expected && r.rowsSynced > week1)
+    // rows written: the rewritten day partitions, 01-05 … 01-14
+    assert(r.rowsSynced == Tables.dateWindow(ev, "d", "2024-01-05", "2024-01-14").count())
+    val whole = spark.read.parquet(path).count()
+    assert(whole == ev.filter(col("d") <= lit("2024-01-14").cast("date")).count() && whole > week1)
   }
 
   test("chunkedBackfill resumes: partial run + rerun equals one full-range sync") {
@@ -43,22 +49,31 @@ class SyncPipelineSpec extends SparkSuite {
       ("2024-01-01", "2024-01-08"), ("2024-01-08", "2024-01-15"),
       ("2024-01-15", "2024-01-22"), ("2024-01-22", "2024-02-01"))
 
-    // interrupted run: only the first two chunks complete
-    val t1 = tmpDir() + "/bf_target"; val s1 = tmpDir() + "/bf_state"
-    SyncPipeline.chunkedBackfill(spark, ev, t1, s1, Seq("event_id"), "ts", chunks.take(2))
-    val afterPartial = spark.read.parquet(t1).count()
-    // resume with the full chunk list: completed chunks must be skipped
-    SyncPipeline.chunkedBackfill(spark, ev, t1, s1, Seq("event_id"), "ts", chunks)
-
     // single uninterrupted run for comparison
     val t2 = tmpDir() + "/bf_full"; val s2 = tmpDir() + "/bf_full_state"
     SyncPipeline.chunkedBackfill(spark, ev, t2, s2, Seq("event_id"), "ts", chunks)
-
-    val resumed = spark.read.parquet(t1).select("event_id").as[Long].collect().toSet
     val full = spark.read.parquet(t2).select("event_id").as[Long].collect().toSet
-    assert(resumed == full && afterPartial < full.size)
-    // state table recorded all four chunks exactly once
-    assert(spark.read.parquet(s1).count() == 4)
+
+    // the resumed target starts empty, or as a legacy UNPARTITIONED copy of
+    // the first chunk (root-level parquet files, no day directories)
+    Seq(false, true).foreach { legacy =>
+      val t1 = tmpDir() + "/bf_target"; val s1 = tmpDir() + "/bf_state"
+      if (legacy)
+        ev.filter(col("ts") < lit("2024-01-08").cast("timestamp_ntz"))
+          .withColumn("part_date", to_date(col("ts"))).write.parquet(t1)
+      // interrupted run: only the first two chunks complete
+      SyncPipeline.chunkedBackfill(spark, ev, t1, s1, Seq("event_id"), "ts", chunks.take(2))
+      val afterPartial = spark.read.parquet(t1).count()
+      // resume with the full chunk list: completed chunks must be skipped
+      SyncPipeline.chunkedBackfill(spark, ev, t1, s1, Seq("event_id"), "ts", chunks)
+
+      val resumedRows = spark.read.parquet(t1)
+      val resumed = resumedRows.select("event_id").as[Long].collect().toSet
+      assert(resumed == full && resumedRows.count() == full.size && afterPartial < full.size,
+        s"legacy=$legacy")
+      // state table recorded all four chunks exactly once
+      assert(spark.read.parquet(s1).count() == 4)
+    }
   }
 
   test("ST5: time budget stops between chunks; a started chunk always commits") {
@@ -119,9 +134,13 @@ class SyncPipelineSpec extends SparkSuite {
     assert(full.select("event_id").except(rotated.select("event_id")).count() == 0)
     // replaying a slice must not change the table (boundary days take the
     // merge path, fresh days are re-deduped)
-    SyncPipeline.incrementalSyncPartitioned(spark, ev, target, Seq("event_id"), "ts",
-      "2024-01-05", "2024-01-09", "t")
+    val replay = SyncPipeline.incrementalSyncPartitioned(spark, ev, target, Seq("event_id"),
+      "ts", "2024-01-05", "2024-01-09", "t")
     assert(spark.read.parquet(target).count() == full.count())
+    // rows written: every row of the day partitions the slice touches
+    val touched = graft.sources.Tables.dateWindow(ev, "ts", "2024-01-05", "2024-01-09")
+      .select(to_date(col("ts")).as("part_date")).distinct()
+    assert(replay.rowsSynced == spark.read.parquet(target).join(touched, "part_date").count())
   }
 
   test("S5: streaming-insert (append) sink accumulates rows") {
