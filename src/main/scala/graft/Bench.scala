@@ -294,8 +294,7 @@ object Bench {
     val total = ok.map(_._2).sum
     // numeric when the env var is (the driver contract), quoted otherwise —
     // a malformed SPARK_GRAFT_CPUS must not produce unparseable JSON
-    val cpusJson = scala.util.Try(cpus.trim.toInt.toString)
-      .getOrElse("\"" + cpus.replace("\"", "") + "\"")
+    val cpusJson = scala.util.Try(cpus.trim.toInt.toString).getOrElse(jstr(cpus))
     val calMedian = calibration.sorted.apply(calibration.length / 2)
     val ckMedian = ckCalibration.sorted.apply(ckCalibration.length / 2)
     val cal = s"""{"median":${f3(calMedian)},"runs":[${calibration.map(f3).mkString(",")}],""" +

@@ -25,10 +25,6 @@ object Ann {
     aggregate(zip_with(x, y, (a, b) => a.cast("double") * b.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-  def l2norm(x: Column): Column =
-    sqrt(aggregate(transform(x, a => a.cast("double") * a.cast("double")),
-      lit(0.0), (acc, v) => acc + v))
-
   /** Cosine rounded to 1e-6: the fold order of a float sum differs across
     * engines in the last ulp, so ranking/thresholding on the raw value is
     * irreproducible; 6 decimals is far below any meaningful similarity

@@ -30,9 +30,17 @@ object Dml {
     * that read the same path they overwrite must decouple the self-read
     * (e.g. `localCheckpoint`, as [[MergeInto.mergePartitioned]] does) rather
     * than rely on dynamic mode deferring deletes to commit time.
+    *
+    * One file per partition per write: the rows are hash-repartitioned by
+    * `partitionCols` first, so each partition is written by exactly one task
+    * (`spark.sql.files.maxRecordsPerFile` still splits a huge one). Without
+    * it every task of the upstream stage writes its own small file into
+    * every partition it holds, and each later scan opens them all.
+    * `repartition`, not `rebalance`: AQE may split a skewed rebalance
+    * partition and write one partition as several files again.
     */
   def overwritePartitions(updated: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    updated.write
+    updated.repartition(partitionCols.map(col): _*).write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)

@@ -307,6 +307,11 @@ object MergeInto {
   * the old table at [[oldCopy]]; [[MergeInto.mergeAndSwap]] puts it back.
   */
 object AtomicWriter {
+  /** Writes `df` to a temp directory beside `path`, then swaps it in. A
+    * partitioned write lands one file per partition per write, as
+    * [[Dml.overwritePartitions]] does: the rows are hash-repartitioned by
+    * `partitionBy` first.
+    */
   def overwrite(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
     val hadoopConf = spark.sparkContext.hadoopConfiguration
@@ -315,8 +320,10 @@ object AtomicWriter {
     val dst = new Path(path)
     val bak = oldCopy(path)
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    val writer = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer).parquet(tmp.toString)
+    val writer =
+      if (partitionBy.isEmpty) df.write
+      else df.repartition(partitionBy.map(col): _*).write.partitionBy(partitionBy: _*)
+    writer.mode(SaveMode.Overwrite).parquet(tmp.toString)
     if (fs.exists(bak)) fs.delete(bak, true)
     if (fs.exists(dst)) fs.rename(dst, bak)
     fs.rename(tmp, dst)

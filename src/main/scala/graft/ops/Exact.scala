@@ -53,13 +53,6 @@ object Exact {
   def discounted(price: Column, discount: Column): Column =
     (price.cast(D2) * (lit(1).cast(D2) - discount.cast(D2))).cast(D4)
 
-  /** price * (1 - discount) * (1 + tax), staged casts keep both Spark and a
-    * serial SQL engine inside decimal range with identical intermediate
-    * scales.
-    */
-  def charged(price: Column, discount: Column, tax: Column): Column =
-    (discounted(price, discount) * (lit(1).cast(D2) + tax.cast(D2)))
-
   /** Sample stddev computed from exact decimal sums; the only floating-point
     * steps (divide, sqrt) are performed on identical inputs in any engine, so
     * the result is reproducible bit-for-bit. Matches STDDEV_SAMP semantics.

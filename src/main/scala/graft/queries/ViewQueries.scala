@@ -129,21 +129,12 @@ object ViewQueries extends QueryModule {
     // the reference's daily monitoring dashboard (`pipeline_monitoring.sql`):
     // three-section tagged-union health report on reference table names
     "ref_pipeline_monitoring" -> ((s, _) => {
-      // The report fans each input into several check branches with
-      // different prunings, so Catalyst can't reuse one branch's exchanges
-      // for another (each canonicalizes differently). Materialize the shared
-      // frames once — the Spark analog of the reference materializing its
-      // views as tables before monitoring reads them.
+      // the report reads each input once (one aggregate per table), so the
+      // v4 DAG runs inside its single job, pruned to the columns it reads
       val te = graft.views.DomainViews.timeEntryDedupCleanup(
         graft.sources.FixtureGen.timeEntries(s))
       val details = graft.sources.FixtureGen.workItemDetails(s)
         .dropDuplicates("WORK_ITEM_ID", "REPORTING_DATE")
-      // a localCheckpoint is a PRUNING BARRIER: checkpointing the full v4
-      // materializes every windowed measure the report never reads. Project
-      // to the three columns Monitoring.report consumes FIRST so Catalyst
-      // prunes the unused column compute out of the v4 DAG, then checkpoint
-      // the narrow frame (driver r6 flagged this query 2.4→3.7 s; the wide
-      // checkpoint was the cost).
       val v4 = graft.views.DomainViews.v4(details, te,
         graft.sources.FixtureGen.productivityRepeats(s),
         graft.sources.FixtureGen.clientGroupDimension(s),
@@ -151,8 +142,6 @@ object ViewQueries extends QueryModule {
         graft.sources.FixtureGen.tenantTeamDimension(s),
         graft.sources.FixtureGen.tenantTeamMemberDimension(s),
         graft.sources.FixtureGen.userDimension(s))
-        .select(col("WORK_ITEM_ID"), col("REPORTING_DATE"), col("CLIENT_ID"))
-        .localCheckpoint(true)
       graft.quality.Monitoring.report(details, te, v4)
     }),
 

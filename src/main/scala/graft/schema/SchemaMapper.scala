@@ -33,14 +33,6 @@ object SchemaMapper {
     }
   }
 
-  /** Build a StructType from (name, snowflakeType, nullable) triples —
-    * the introspection result shape (S3). Staging tables are forced
-    * all-NULLABLE like the reference's temp tables
-    * (ref: `work_item_details_…_full/main.py:101-105`).
-    */
-  def fromIntrospection(cols: Seq[(String, String)], forceNullable: Boolean = true): StructType =
-    StructType(cols.map { case (n, t) => StructField(n, sparkType(t), nullable = forceNullable) })
-
   /** S3 as an operator: introspect a parquet table's schema into the same
     * (column_name, data_type, ordinal_position) relation the reference reads
     * from `information_schema.columns`.

@@ -171,10 +171,6 @@ private[graft] class VersionedStreamTable(root: String, tableSchema: StructType,
     * it (vt32: `DELETE FROM`/`UPDATE`/`MERGE INTO graft.`/path``).
     */
   private[graft] def rootPath: String = root
-  /** True when this table was loaded `VERSION/TIMESTAMP AS OF` — DML on a
-    * pinned old snapshot must refuse (only the head is writable).
-    */
-  private[graft] def pinnedAsOf: Option[Int] = asOf
   override def name(): String = s"graft-versioned:$root"
   override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =

@@ -45,13 +45,6 @@ object Pii {
           Ipv4Re, "<IP>"),
         lit(PhoneRe)).as("n_phones"))
 
-  def redactCol(text: Column): Column =
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(text, EmailRe, "<EMAIL>"),
-        Ipv4Re, "<IP>"),
-      PhoneRe, "<PHONE>")
-
   /** doc_id, redacted text, and per-family counts in ONE projection — no
     * join, no shuffle; subexpression elimination shares the inner
     * email/IP-scrub between the phone count and the final redaction.

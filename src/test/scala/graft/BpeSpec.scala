@@ -76,15 +76,6 @@ class BpeSpec extends SparkSuite {
     assert(gotSql === expected)
   }
 
-  private def withSQLConf(kvs: (String, String)*)(f: => Unit): Unit = {
-    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try { kvs.foreach { case (k, v) => spark.conf.set(k, v) }; f }
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("null text stays null; vocab rides the plan (serializable)") {
     import spark.implicits._
     val df = Seq((1L, "the table"), (2L, null.asInstanceOf[String]))

@@ -61,6 +61,53 @@ class QualitySpec extends SparkSuite {
     assert(!d.getAs[Boolean]("freshness_ok")) // stale by months
   }
 
+  test("monitoring report: freshness ladder and issue counts over planted pathologies") {
+    import graft.quality.Monitoring
+    // details: a NULL and an empty WORK_ITEM_ID, newest day 08-25
+    val details = Seq(("W1", "2025-08-20"), (null, "2025-08-25"), ("", "2025-08-25"),
+      ("W2", "2025-08-25")).toDF("WORK_ITEM_ID", "d")
+      .select(col("WORK_ITEM_ID"), col("d").cast("date").as("REPORTING_DATE"))
+    // time entries: one dated 09-10, in the future of most report dates
+    val te = Seq(("U1", "2025-08-24"), ("U2", "2025-09-10")).toDF("USER_ID", "d")
+      .select(col("USER_ID"), col("d").cast("date").as("REPORTING_DATE"))
+    val v4 = Seq.empty[(String, String)].toDF("WORK_ITEM_ID", "CLIENT_ID")
+      .withColumn("REPORTING_DATE", lit(null).cast("date"))
+    def report(asOf: String) = Monitoring.report(details, te, v4,
+      lit(asOf).cast("timestamp_ntz")).collect().toSeq
+    val (d, v, t) = ("WORK_ITEM_DETAILS_BQ", "WORK_ITEM_BUDGET_TIME_TRACKING_VIEW_V4",
+      "USER_TIME_ENTRY_BQ")
+
+    val rows = report("2025-08-26 06:00:00")
+    assert(rows.map(r => (r.getString(0), r.getString(2))) === Seq(
+      "🔍 PIPELINE HEALTH REPORT" -> "",
+      "📊 DATA FRESHNESS" -> d, "📊 DATA FRESHNESS" -> v, "📊 DATA FRESHNESS" -> t,
+      "⚠️ DATA QUALITY ISSUES" -> d, "⚠️ DATA QUALITY ISSUES" -> v,
+      "⚠️ DATA QUALITY ISSUES" -> t))
+    def tail(r: org.apache.spark.sql.Row) = (Option(r.get(3)).map(_.toString),
+      Option(r.get(4)), Option(r.get(5)), r.getString(6), r.getString(7))
+    assert(rows.drop(1).map(tail) === Seq(
+      (Some("2025-08-25"), Some(4L), Some(1), "OK", "Data freshness is acceptable"),
+      // an empty table has no newest day: no lag, and no alert
+      (None, Some(0L), None, "OK", "Data freshness is acceptable"),
+      (Some("2025-09-10"), Some(2L), Some(-15), "OK", "Data freshness is acceptable"),
+      (None, Some(2L), None, "WARNING", "NULL_WORK_ITEM_ID: 2 issues found"),
+      (None, Some(0L), None, "OK", "NULL_CLIENT_ID: 0 issues found"),
+      (None, Some(1L), None, "WARNING", "FUTURE_DATES: 1 issues found")))
+
+    // the ladder: a lag above 1 day warns, above 3 days is critical
+    def level(asOf: String, table: String) = report(asOf)
+      .find(r => r.getString(0) == "📊 DATA FRESHNESS" && r.getString(2) == table).get
+      .getString(6)
+    assert(level("2025-08-27 00:00:00", d) === "WARNING")
+    assert(level("2025-08-28 00:00:00", d) === "WARNING")
+    assert(level("2025-08-29 00:00:00", d) === "CRITICAL")
+    // once the report date passes the future entry, it is stale, not future
+    val late = report("2025-09-12 00:00:00")
+    assert(late.filter(_.getString(2) == t).map(r => r.getString(6) -> r.getString(7)) === Seq(
+      "WARNING" -> "Data is more than 1 day old - monitor closely",
+      "OK" -> "FUTURE_DATES: 0 issues found"))
+  }
+
   test("fallback coverage splits FALLBACK_ONLY vs COVERED") {
     val primary = Seq((1, "a"), (2, "a")).toDF("k", "u")
     val fallback = Seq((1, "a"), (2, "a"), (3, "a")).toDF("k", "u")

@@ -43,6 +43,43 @@ class SyncPipelineSpec extends SparkSuite {
     assert(whole == ev.filter(col("d") <= lit("2024-01-14").cast("date")).count() && whole > week1)
   }
 
+  test("every incremental sync lands each day partition as exactly one file") {
+    // six days, each spread over all four input partitions, and no AQE
+    // coalescing (which folds this tiny extract into one task): every task
+    // that writes without a repartition by the date leaves a file in every day
+    val days = (1 to 6).map(d => f"2024-03-$d%02d")
+    def extract(hours: Long) = days.flatMap(d => (1 to 40).map(i => (s"w$i", d, hours)))
+      .toDF("WORK_ITEM_ID", "day", "HOURS")
+      .select(col("WORK_ITEM_ID"), col("day").cast("date").as("REPORTING_DATE"), col("HOURS"))
+      .repartition(4)
+    def filesPerDay(path: String): Map[String, Int] =
+      new java.io.File(path).listFiles().filter(_.getName.startsWith("REPORTING_DATE="))
+        .map(d => d.getName.stripPrefix("REPORTING_DATE=") ->
+          d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    val keys = Seq("WORK_ITEM_ID", "REPORTING_DATE")
+    // an empty target lands through the merge-and-swap; a partitioned one
+    // (days 01-04, one file each) merges its two restated days and writes
+    // two new ones in one dynamic partition overwrite
+    Seq(false, true).foreach { existing =>
+      val path = tmpDir() + "/fact"
+      if (existing) extract(1L).filter(col("REPORTING_DATE") <= lit("2024-03-04").cast("date"))
+        .coalesce(1).write.partitionBy("REPORTING_DATE").parquet(path)
+      val kept = if (existing) days.take(2) else Nil
+      withSQLConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+        val r = SyncPipeline.incrementalSync(spark, extract(2L), path, keys, "REPORTING_DATE",
+          "2024-03-03", "2024-03-06", "fact_sync")
+        assert(r.rowsSynced == 4 * 40, s"existing=$existing")
+        // an empty window still reports what it wrote through the repartition
+        assert(SyncPipeline.incrementalSync(spark, extract(2L), path, keys, "REPORTING_DATE",
+          "2024-04-01", "2024-04-02", "fact_sync").rowsSynced == 0)
+      }
+      assert(filesPerDay(path) == (kept ++ days.drop(2)).map(_ -> 1).toMap, s"existing=$existing")
+      val hoursByDay = spark.read.parquet(path).groupBy(col("REPORTING_DATE").cast("string"))
+        .agg(sum("HOURS")).as[(String, Long)].collect().toMap
+      assert(hoursByDay == (kept.map(_ -> 40L) ++ days.drop(2).map(_ -> 80L)).toMap)
+    }
+  }
+
   test("chunkedBackfill resumes: partial run + rerun equals one full-range sync") {
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
     val chunks = Seq(

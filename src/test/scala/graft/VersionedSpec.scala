@@ -303,6 +303,9 @@ class VersionedSpec extends SparkSuite {
     assert(!Files.exists(Paths.get(base, "p=c")))
     val got = spark.read.parquet(base).as[(Long, String)].collect().sorted.toSeq
     assert(got === Seq((1L, "a"), (2L, "b"), (4L, "b")))
+    // the rewritten partition lands as one file, though its old row and the
+    // inserted one come out of different tasks
+    assert(filesUnder("b").size === 1)
     // empty change set: a no-op that scans nothing
     assert(Versioned.applyChangesPartitioned(spark, base, Seq("p"),
       changes.limit(0)).isEmpty)
