@@ -26,10 +26,15 @@ object Dml {
     * partition is observed fully-old or fully-new; untouched partitions are
     * never opened. On object stores without atomic rename — or if the driver
     * dies mid-commit — a touched partition CAN be observed partially-new;
-    * pair with a committer that gives the needed guarantee there. Callers
-    * that read the same path they overwrite must decouple the self-read
-    * (e.g. `localCheckpoint`, as [[MergeInto.mergePartitioned]] does) rather
-    * than rely on dynamic mode deferring deletes to commit time.
+    * pair with a committer that gives the needed guarantee there.
+    *
+    * `updated` may read the partitions it overwrites (as
+    * [[MergeInto.mergePartitioned]] does), with no checkpoint: the
+    * `repartition` below is a shuffle barrier, so every old file is read
+    * before any task writes, and dynamic overwrite deletes the replaced
+    * partitions only at job commit. A recomputed shuffle stage therefore
+    * still finds the old files. A caller that reads `updated` again AFTER
+    * this write returns sees the new files, and must materialise it first.
     *
     * One file per partition per write: the rows are hash-repartitioned by
     * `partitionCols` first, so each partition is written by exactly one task

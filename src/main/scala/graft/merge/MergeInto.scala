@@ -227,13 +227,11 @@ object MergeInto {
       val landed =
         if (stale.isEmpty) latestPerKey(source, keys, orderCol)
         else {
+          // reads the directories it overwrites: safe under
+          // Dml.overwritePartitions' self-read contract
           val target = spark.read.option("basePath", targetPath)
             .parquet(stale.map(d => s"$targetPath/$prefix$d"): _*)
-          // localCheckpoint decouples the self-read from the overwrite of the
-          // same directories (the touched days only, not the whole target),
-          // rather than relying on dynamic mode deferring deletes to commit time
           merge(target, source.select(target.columns.map(col).toIndexedSeq: _*), keys, orderCol)
-            .localCheckpoint(true)
         }
       countWritten(landed)(Dml.overwritePartitions(_, targetPath, Seq(partitionCol)))
     }

@@ -117,8 +117,8 @@ object Versioned {
     * On a DELTA a dv line ATTACHES to an already-listed file; a FULL
     * manifest lists every live attachment. Older formats parse unchanged.
     * fmt=6 (round 18, vt31) adds OPTIONAL per-file NULL-COUNT lines
-    * (`nulls=<rowCount>,<nullCount per stats col…>|<path>`, written by the
-    * same fused stats pass): IS NULL prunes files with zero nulls in the
+    * (`nulls=<rowCount>,<nullCount per stats col…>|<path>`, measured with
+    * the file's ranges): IS NULL prunes files with zero nulls in the
     * column, IS NOT NULL prunes files that are entirely NULL there — the
     * Delta nullCount design. Files without a line read conservatively.
     */
@@ -839,8 +839,10 @@ object Versioned {
   }
 
   /** VT6: append WITH manifest-level skipping stats — after the commit's
-    * files land, ONE commit-sized pass (group by input file) records each
-    * file's (min, max) of every column in `statsCols` in the manifest, so a
+    * files land, each file's (min, max) of every column in `statsCols` is
+    * recorded in the manifest, taken from the footers the write just
+    * produced (no Spark job; the commit-sized scan runs only when a footer
+    * cannot answer — see [[statsEntriesValidating]]), so a
     * [[readPruned]] later plans only range-overlapping files without
     * opening a footer. This is file-granularity data skipping from log
     * metadata (the Delta/Iceberg published design); it composes with
@@ -850,8 +852,8 @@ object Versioned {
     * epoch-day / epoch-micros; enforced loudly, because a truncating float
     * cast could shrink a range and prune a file that matches) — and
     * consistent across commits of one table. A file where any stats column
-    * is all-NULL gets NO entry (read conservatively, never a NULL range);
-    * an empty commit (zero part files) skips the stats pass entirely.
+    * is all-NULL gets NO range entry (read conservatively, never a NULL
+    * range); an empty commit (zero part files) measures nothing.
     * `options` passes straight to the parquet writer (e.g.
     * `parquet.block.size` to set the row-group skipping granularity when
     * composing with [[graft.ops.ZOrder]] layouts).
@@ -870,8 +872,8 @@ object Versioned {
     val ddl = normalizedDDL(df)
     val (files, marker) = writeData(physicalize(df, cmap), root, n, options)
     sealing(marker) {
-      // constraint check — and vt26 bloom build — fused into the stats
-      // pass: one landed-files scan per commit
+      // footer stats; a constrained or bloom-tracked table instead pays
+      // one landed-files scan that fuses the check and the bloom build
       commitOn(root, cur, "append",
         statsEntriesValidating(df.sparkSession, root, files, statsCols,
           cur.map(_.constraints).getOrElse(Nil), cmap, bCols), Nil, statsCols, Some(ddl),
@@ -959,13 +961,9 @@ object Versioned {
     }
   }
 
-  /** One commit-sized stats pass over freshly-written `files`: per file,
-    * (min, max) of each stats column, exact-long-encoded per
-    * [[statsLongExpr]]. TOTAL over `files`: a file the scan yields no rows
-    * for (empty part file) — or where any stats column is all-NULL — gets a
-    * stats-less entry (conservative read, never a NULL range, never a
-    * dropped file). Shared by [[appendWithStats]], [[compact]],
-    * [[overwrite]], [[deleteWhere]] and [[mergeInto]].
+  /** [[statsEntriesValidating]] without constraints. Shared by [[compact]],
+    * [[compactZOrder]], [[deleteWhere]], [[purgeDeletes]] and the staged
+    * transactional delete.
     */
   private def statsEntries(spark: SparkSession, root: String, files: Seq[(String, Long)],
       statsCols: Seq[String],
@@ -973,15 +971,22 @@ object Versioned {
       bloomCols: Seq[String] = Nil): Seq[FileEntry] =
     statsEntriesValidating(spark, root, files, statsCols, Nil, colMap, bloomCols)
 
-  /** [[statsEntries]] with the vt20 constraint check FUSED into the same
-    * commit-sized scan: the per-file groupBy that measures (min, max)
-    * ranges also counts each constraint's violations per file (summed
-    * driver-side), so a stats-tracked constrained table pays ONE read of
-    * its landed files per commit, not two. Violations throw BEFORE the
-    * entries are returned — the caller commits nothing ([[
-    * validateConstraints]]' contract). A file's stats columns being
-    * all-NULL still yields a stats-less conservative entry; constraint
-    * counts are unaffected (count never returns NULL).
+  /** The manifest entries of freshly-written `files`: per file, (min, max)
+    * of each stats column, exact-long-encoded per [[statsLongExpr]], plus
+    * its row count and per-stats-column null counts. TOTAL over `files`: an
+    * empty part file gets a stats-less entry, and a file where any stats
+    * column is all-NULL gets no ranges (conservative read, never a NULL
+    * range, never a dropped file).
+    *
+    * The source is the parquet footers the write just produced
+    * ([[footerMeasures]]), read on the driver: no Spark job runs. The
+    * commit-sized scan ([[scanMeasures]]) runs instead when the footers
+    * cannot answer: the table has CHECK constraints (the scan counts each
+    * constraint's violations per file, and a violation throws BEFORE any
+    * entry is returned, so the caller commits nothing — [[
+    * validateConstraints]]' contract), it has bloom columns (their bits are
+    * built in the scan), or a stats column has no exact footer statistics
+    * (Spark's default INT96 timestamps).
     */
   private def statsEntriesValidating(spark: SparkSession, root: String,
       files: Seq[(String, Long)], statsCols: Seq[String],
@@ -989,6 +994,41 @@ object Versioned {
       colMap: Map[String, String] = Map.empty,
       bloomCols: Seq[String] = Nil): Seq[FileEntry] = {
     if (files.isEmpty) return Nil // empty commit: nothing to measure, nothing to skip
+    val fromFooters =
+      if (constraints.nonEmpty || bloomCols.nonEmpty) None
+      else footerMeasures(spark, root, files, statsCols, colMap)
+    fileEntries(files, fromFooters.getOrElse(
+      scanMeasures(spark, root, files, statsCols, constraints, colMap, bloomCols)))
+  }
+
+  /** What a stats pass measured of one non-empty landed file. `ranges` is
+    * empty when any stats column holds no non-NULL value in the file.
+    */
+  private[graft] final case class Measured(ranges: Seq[(Long, Long)], rowCount: Long,
+      nullCounts: Seq[Long], blooms: Seq[(String, Vector[Long])] = Nil)
+
+  /** The one entry shape both stats sources produce: a file the pass
+    * measured nothing of (an empty part file) gets a stats-less entry.
+    */
+  private[graft] def fileEntries(files: Seq[(String, Long)],
+      measured: Map[String, Measured]): Seq[FileEntry] =
+    files.map { case (f, sz) =>
+      measured.get(f) match {
+        case Some(m) => FileEntry(f, m.ranges, sz, m.blooms, m.rowCount, m.nullCounts)
+        case None => FileEntry(f, Nil, sz)
+      }
+    }
+
+  /** The commit-sized scan: one read of the landed files, grouped by input
+    * file ([[statsValidationFrame]]). It measures the stats, counts each
+    * constraint's violations (summed driver-side; any violation throws) and
+    * builds the bloom bits. An empty file yields no group, so no measure.
+    */
+  private[graft] def scanMeasures(spark: SparkSession, root: String,
+      files: Seq[(String, Long)], statsCols: Seq[String],
+      constraints: Seq[(String, String)],
+      colMap: Map[String, String] = Map.empty,
+      bloomCols: Seq[String] = Nil): Map[String, Measured] = {
     val rootP = Paths.get(root)
     val rows = statsValidationFrame(spark, root, files, statsCols, constraints, colMap,
       bloomCols).collect().toSeq
@@ -1003,38 +1043,121 @@ object Versioned {
         s"commit to $root violates CHECK constraint(s) — refused, no metadata written: " +
           bad.mkString("; "))
     }
-    def relOf(r: org.apache.spark.sql.Row): String =
-      rootP.relativize(Paths.get(new java.net.URI(r.getString(0)).getPath)).toString
-    val byFile = rows.map { r =>
-      if ((1 to nStat).exists(r.isNullAt)) relOf(r) -> Seq.empty[(Long, Long)]
-      else relOf(r) -> (0 until statsCols.length).map(i =>
-        (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i)))
-    }.toMap
-    // per-file bloom bits ride the SAME pass: word w of bloom col b sits at
-    // column 1 + nStat + nCon + b*BloomWords + w
-    val bloomsByFile: Map[String, Seq[(String, Vector[Long])]] =
-      if (bloomCols.isEmpty) Map.empty
-      else rows.map { r =>
-        relOf(r) -> bloomCols.zipWithIndex.map { case (c, bi) =>
-          c -> Vector.tabulate(BloomWords)(w =>
-            r.getLong(1 + nStat + nCon + bi * BloomWords + w))
-        }
-      }.toMap
     // null-count block sits LAST: rc, then one null count per stats col
     val nBase = 1 + nStat + nCon + bloomCols.length * BloomWords
-    val nullsByFile: Map[String, (Long, Seq[Long])] = rows.map { r =>
-      relOf(r) -> (r.getLong(nBase),
-        (0 until statsCols.length).map(i => r.getLong(nBase + 1 + i)))
+    rows.map { r =>
+      rootP.relativize(Paths.get(new java.net.URI(r.getString(0)).getPath)).toString ->
+        Measured(
+          ranges =
+            if ((1 to nStat).exists(r.isNullAt)) Nil
+            else statsCols.indices.map(i => (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i))),
+          rowCount = r.getLong(nBase),
+          nullCounts = statsCols.indices.map(i => r.getLong(nBase + 1 + i)),
+          // word w of bloom col b sits at column 1 + nStat + nCon + b*BloomWords + w
+          blooms = bloomCols.zipWithIndex.map { case (c, bi) =>
+            c -> Vector.tabulate(BloomWords)(w =>
+              r.getLong(1 + nStat + nCon + bi * BloomWords + w))
+          })
     }.toMap
-    files.map { case (f, sz) =>
-      val nl = nullsByFile.get(f)
-      FileEntry(f, byFile.getOrElse(f, Nil), sz, bloomsByFile.getOrElse(f, Nil),
-        rowCount = nl.map(_._1).getOrElse(-1L),
-        nullCounts = nl.map(_._2).getOrElse(Nil))
+  }
+
+  /** [[scanMeasures]]' stats from the parquet footers of `files` instead of
+    * a scan, as Iceberg's writers take their file metrics. Per file: the row
+    * count is the sum of its row groups' rows; each stats column's null
+    * count is the sum of its chunks' null counts, and its range the
+    * (min, max) over the chunks that hold a non-NULL value. Columns are
+    * matched by path, under their physical (`colMap`) names. Footers are
+    * read on the driver, one after another, so no Spark job runs.
+    *
+    * None — the caller scans instead — unless every stats column of every
+    * file is stored in the encoding [[statsLongExpr]] produces, with exact
+    * chunk statistics: INT32 or INT64 for integral and DATE columns, INT64
+    * `TIMESTAMP(MICROS)` for timestamps, and no legacy calendar rebase.
+    */
+  private[graft] def footerMeasures(spark: SparkSession, root: String,
+      files: Seq[(String, Long)], statsCols: Seq[String],
+      colMap: Map[String, String] = Map.empty): Option[Map[String, Measured]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rootP = Paths.get(root)
+    val phys = statsCols.map(physicalName(colMap, _))
+    val perFile = files.map { case (f, _) =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(rootP.resolve(f).toUri), conf))
+      val footer = try reader.getFooter finally reader.close()
+      f -> footerMeasure(footer, phys)
+    }
+    if (perFile.exists(_._2.isEmpty)) None
+    else Some(perFile.collect { case (f, Some(Some(m))) => f -> m }.toMap)
+  }
+
+  /** One file's [[Measured]] from its footer: None when the footer cannot
+    * answer for some stats column (see [[footerMeasures]]), Some(None) for a
+    * file without rows.
+    */
+  private def footerMeasure(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      cols: Seq[String]): Option[Option[Measured]] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    import org.apache.spark.sql.types._
+    val md = footer.getFileMetaData
+    val kv = md.getKeyValueMetaData.asScala
+    // the Spark type a read-back would see, which decides statsLongExpr's encoding
+    val sparkTypes = kv.get("org.apache.spark.sql.parquet.row.metadata").toSeq
+      .flatMap(j => DataType.fromJson(j).asInstanceOf[StructType].fields)
+      .map(f => f.name -> f.dataType).toMap
+    val rebased = kv.contains("org.apache.spark.legacyDateTime")
+    def exact(c: String): Boolean =
+      md.getSchema.containsPath(Array(c)) && {
+        val t = md.getSchema.getType(Seq(c): _*)
+        t.isPrimitive && !t.isRepetition(org.apache.parquet.schema.Type.Repetition.REPEATED) &&
+          ((sparkTypes.get(c), t.asPrimitiveType.getPrimitiveTypeName,
+            t.getLogicalTypeAnnotation) match {
+            case (Some(ByteType | ShortType | IntegerType), INT32, null) => true
+            case (Some(ByteType | ShortType | IntegerType), INT32,
+              i: IntLogicalTypeAnnotation) => i.isSigned
+            case (Some(LongType), INT64, null) => true
+            case (Some(LongType), INT64, i: IntLogicalTypeAnnotation) => i.isSigned
+            case (Some(DateType), INT32, _: DateLogicalTypeAnnotation) => !rebased
+            case (Some(TimestampType), INT64, ts: TimestampLogicalTypeAnnotation) =>
+              !rebased && ts.isAdjustedToUTC && ts.getUnit == TimeUnit.MICROS
+            case _ => false
+          })
+      }
+    val blocks = footer.getBlocks.asScala.toSeq
+    // (null count, (min, max) unless all NULL) of one chunk; None when the
+    // chunk's statistics are missing or cannot be trusted
+    def chunk(c: String, b: org.apache.parquet.hadoop.metadata.BlockMetaData)
+        : Option[(Long, Option[(Long, Long)])] =
+      b.getColumns.asScala.find(_.getPath.toArray.sameElements(Array(c))).flatMap { cc =>
+        val s: org.apache.parquet.column.statistics.Statistics[_] = cc.getStatistics
+        if (s == null || !s.isNumNullsSet) None
+        else if (s.hasNonNullValue) Some(s.getNumNulls -> Some(
+          (s.genericGetMin.asInstanceOf[Number].longValue,
+            s.genericGetMax.asInstanceOf[Number].longValue)))
+        else if (s.getNumNulls == cc.getValueCount) Some(s.getNumNulls -> None)
+        else None
+      }
+    if (!cols.forall(exact)) None
+    else {
+      val perCol = cols.map(c => blocks.map(chunk(c, _)))
+      val rowCount = blocks.map(_.getRowCount).sum
+      if (perCol.exists(_.contains(None))) None
+      else if (rowCount == 0) Some(None)
+      else {
+        val chunks = perCol.map(_.flatten)
+        val ranges = chunks.map(_.flatMap(_._2))
+        Some(Some(Measured(
+          ranges =
+            if (ranges.exists(_.isEmpty)) Nil
+            else ranges.map(rs => (rs.map(_._1).min, rs.map(_._2).max)),
+          rowCount = rowCount,
+          nullCounts = chunks.map(_.map(_._1).sum))))
+      }
     }
   }
 
-  /** The fused stats+constraint aggregate of [[statsEntriesValidating]] as
+  /** The fused stats+constraint aggregate of [[scanMeasures]] as
     * a frame — `private[graft]` so the spec can pin its SCAN SCHEMA: the
     * aggregate references only the stats columns and the columns the
     * constraint SQL names, so Catalyst's column pruning reduces the parquet
@@ -1892,8 +2015,8 @@ object Versioned {
     sealing(marker) {
       // the merge RESULT (updates included) must pass the constraints —
       // carried-through rows were already valid, so violations can only
-      // come from source; the check is fused into the stats pass when one
-      // runs (one landed-files scan either way)
+      // come from source; a stats-tracked table checks them in the same
+      // landed-files scan that measures its stats (one scan either way)
       val entries =
         if (cur.statsCols.isEmpty) {
           validateConstraints(spark, root, cur.constraints, files, Some(ddl), cur.colMap)
@@ -2965,8 +3088,9 @@ object Versioned {
     }.flatten
     val ins = changeSet.filter(col("change_type") === "insert").select(dataCols: _*)
     val del = changeSet.filter(col("change_type") === "delete").select(dataCols: _*)
-    // localCheckpoint decouples the self-read before the overwrite (same
-    // stance as MergeInto.mergePartitioned)
+    // the write alone may read the partitions it overwrites (Dml.
+    // overwritePartitions' contract), but `updated` is read again below,
+    // after the write, and must still be the pre-write rows: checkpoint it
     val updated = slice.exceptAll(del).unionAll(ins).localCheckpoint(true)
     Dml.overwritePartitions(updated, replicaPath, partitionCols)
     // changed partitions with zero survivors: dynamic overwrite never saw

@@ -43,6 +43,10 @@ object ViewVerification {
   /** Check 2 (`:65-75`): work items with multiple snapshot rows, newest-first
     * date list. */
   def detailsDupGroups(details: DataFrame, limit: Int = 10): DataFrame =
+    detailsDupFlagged(details)
+      .orderBy(col("record_count").desc, col("WORK_ITEM_ID")).limit(limit)
+
+  private def detailsDupFlagged(details: DataFrame): DataFrame =
     details.groupBy(col("WORK_ITEM_ID"))
       .agg(count(lit(1)).as("record_count"),
         // ascending date order (the reference prints DESC — cosmetic)
@@ -50,11 +54,16 @@ object ViewVerification {
           col("REPORTING_DATE"), ", ").as("reporting_dates"))
       .filter(col("record_count") > 1)
       .withColumn("check_name", lit("WORK_ITEM_DETAILS_BQ_DUPLICATES"))
-      .orderBy(col("record_count").desc, col("WORK_ITEM_ID")).limit(limit)
 
   /** Check 3 (`:79-98`): budget allocations re-stated across sync dates —
     * the 7-column duplicate groups the V5 dedup collapses. */
   def budgetDupRows(corrected: DataFrame, limit: Int = 10): DataFrame =
+    budgetDupFlagged(corrected)
+      .orderBy(col("duplicate_count").desc, col("WORK_ITEM_ID"), col("USER_NAME"),
+        col("TASK_TYPE_ID"), col("ROLE_ID"))
+      .limit(limit)
+
+  private def budgetDupFlagged(corrected: DataFrame): DataFrame =
     corrected.filter(col("USER_NAME").isNotNull && col("BUDGETED_MINUTES") > 0)
       .groupBy(col("WORK_ITEM_ID"), col("USER_ID"), col("USER_NAME"),
         col("TASK_TYPE_ID"), col("ROLE_ID"), col("BUDGETED_MINUTES"), col("BUDGETED_COST"))
@@ -63,18 +72,17 @@ object ViewVerification {
           col("sync_reporting_date"), ", ").as("sync_dates"))
       .filter(col("duplicate_count") > 1)
       .withColumn("check_name", lit("BUDGET_VS_ACTUAL_DUPLICATES"))
-      .orderBy(col("duplicate_count").desc, col("WORK_ITEM_ID"), col("USER_NAME"),
-        col("TASK_TYPE_ID"), col("ROLE_ID"))
-      .limit(limit)
 
   /** Check 4 (`:104-115`): the V5 grain must be unique per
     * (work item, user id, user name). */
   def v5GrainDups(v5: DataFrame, limit: Int = 10): DataFrame =
+    v5GrainFlagged(v5).orderBy(col("duplicate_count").desc, col("WORK_ITEM_ID")).limit(limit)
+
+  private def v5GrainFlagged(v5: DataFrame): DataFrame =
     v5.groupBy(col("WORK_ITEM_ID"), col("budget_user_id"), col("budget_user_name"))
       .agg(count(lit(1)).as("duplicate_count"))
       .filter(col("duplicate_count") > 1)
       .withColumn("check_name", lit("V5_VIEW_USER_WORK_ITEM_DUPLICATES"))
-      .orderBy(col("duplicate_count").desc, col("WORK_ITEM_ID")).limit(limit)
 
   /** Check 6 (`:165-196`): Σ individual budgets vs the work-item budget with
     * the reference's variance ladder (>60 min = significant). */
@@ -153,13 +161,16 @@ object ViewVerification {
           col("within_budget_count")) * 100.0 / col("total_records"), 2))
       .withColumn("check_name", lit("VIEW_HEALTH_SUMMARY"))
 
-  /** Dashboard reduction: flagged-row counts for the pass/fail-able checks. */
+  /** Dashboard reduction: flagged-row counts for the pass/fail-able checks.
+    * It counts the checks' unsorted flagged rows: sorting and limiting them
+    * first would only add a range-sampling job per check.
+    */
   def summary(details: DataFrame, corrected: DataFrame, v5: DataFrame): DataFrame = {
     def cnt(name: String, df: DataFrame) =
       df.agg(count(lit(1)).as("flagged")).select(lit(name).as("check_name"), col("flagged"))
-    cnt("WORK_ITEM_DETAILS_BQ_DUPLICATES", detailsDupGroups(details, limit = Int.MaxValue))
-      .unionByName(cnt("BUDGET_VS_ACTUAL_DUPLICATES", budgetDupRows(corrected, limit = Int.MaxValue)))
-      .unionByName(cnt("V5_VIEW_USER_WORK_ITEM_DUPLICATES", v5GrainDups(v5, limit = Int.MaxValue)))
+    cnt("WORK_ITEM_DETAILS_BQ_DUPLICATES", detailsDupFlagged(details))
+      .unionByName(cnt("BUDGET_VS_ACTUAL_DUPLICATES", budgetDupFlagged(corrected)))
+      .unionByName(cnt("V5_VIEW_USER_WORK_ITEM_DUPLICATES", v5GrainFlagged(v5)))
       .unionByName(cnt("BUDGET_CONSISTENCY_NOT_CONSISTENT",
         budgetConsistency(v5).filter(col("consistency_status") =!= "CONSISTENT")))
       .unionByName(cnt("TIME_TRACKING_CONSISTENCY", timeConsistency(v5)))

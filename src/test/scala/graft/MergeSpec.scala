@@ -56,6 +56,47 @@ class MergeSpec extends SparkSuite {
     })
   }
 
+  test("a partition-scoped merge reads the days it overwrites only below a shuffle") {
+    import java.sql.Date
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    val path = tmpDir() + "/pmerge_plan"
+    def dated(rows: (Int, String, Int, String)*) = rows.toDF("k", "d", "seq", "v")
+      .withColumn("d", col("d").cast("date"))
+    Dml.overwritePartitions(dated((1, "2024-01-01", 0, "a"), (2, "2024-01-02", 0, "b"),
+      (3, "2024-01-03", 0, "c")), path, Seq("d"))
+    // restates day 01-02 (one update, one insert) and adds day 01-04
+    val plans = plansOf(MergeInto.mergePartitioned(spark, path,
+      dated((2, "2024-01-02", 1, "b2"), (4, "2024-01-02", 1, "d"), (5, "2024-01-04", 1, "e")),
+      Seq("k", "d"), "d", orderCol = Some("seq")))
+    assert(spark.read.parquet(path).select("k", "d", "seq", "v").as[(Int, Date, Int, String)]
+      .collect().sortBy(_._1).toSeq === Seq(
+        (1, Date.valueOf("2024-01-01"), 0, "a"), (2, Date.valueOf("2024-01-02"), 1, "b2"),
+        (3, Date.valueOf("2024-01-03"), 0, "c"), (4, Date.valueOf("2024-01-02"), 1, "d"),
+        (5, Date.valueOf("2024-01-04"), 1, "e")))
+    // every scan of the target root in the write's plan lies below an
+    // exchange, so all old files are read before any task writes; `walk`
+    // flags each node of a plan that has an exchange above it
+    def walk(p: SparkPlan, shuffled: Boolean): Seq[(SparkPlan, Boolean)] = (p -> shuffled) +:
+      (p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan, shuffled)
+        case q: QueryStageExec => walk(q.plan, shuffled)
+        case r: ReusedExchangeExec => walk(r.child, true)
+        case e: Exchange => e.children.flatMap(walk(_, true))
+        case other => other.children.flatMap(walk(_, shuffled))
+      })
+    val writes = plans.map(walk(_, false))
+      .filter(_.exists(_._1.isInstanceOf[DataWritingCommandExec]))
+    assert(writes.length === 1)
+    val root = new java.io.File(path).getAbsolutePath
+    val targetScans = writes.head.collect { case (s: FileSourceScanExec, sh)
+      if s.relation.location.rootPaths.exists(_.toUri.getPath.startsWith(root)) => sh }
+    assert(targetScans.nonEmpty, "the merge of existing days reads the target")
+    assert(targetScans.forall(identity), s"a target scan reaches the write unshuffled: ${plans}")
+  }
+
   test("merge latest-wins: highest seq per key survives; unmatched target rows kept") {
     val target = kv(Seq((1, 0, "old1"), (2, 0, "old2"), (3, 0, "keep3")))
     val source = kv(Seq((1, 1, "mid1"), (1, 2, "new1"), (2, 5, "new2")))

@@ -108,6 +108,63 @@ class QualitySpec extends SparkSuite {
       "OK" -> "FUTURE_DATES: 0 issues found"))
   }
 
+  test("view verification summary counts what the public checks flag, without sorting") {
+    import graft.quality.ViewVerification
+    // read back from files, as the views are: a local relation's known row
+    // count lets the optimizer drop a sort under a count by itself
+    def landed(df: org.apache.spark.sql.DataFrame) = {
+      val p = tmpDir() + "/f"
+      df.write.parquet(p)
+      spark.read.parquet(p)
+    }
+    // details: 12 work items with 2-3 snapshot rows (more than a check's
+    // default limit of 10) and 3 with one
+    val details = ((1 to 12).flatMap(w => (1 to 2 + w % 2).map(d => (s"W$w", d))) ++
+      (13 to 15).map(w => (s"W$w", 1))).toDF("WORK_ITEM_ID", "d")
+      .select(col("WORK_ITEM_ID"),
+        date_add(lit("2025-08-01").cast("date"), col("d")).as("REPORTING_DATE"))
+    // corrected: two budget rows restated across sync dates; a NULL user and a
+    // zero budget never count
+    val corrected = Seq(
+      ("W1", "U1", "Ann", 1, 1, 60, 10.0, "2025-08-01"),
+      ("W1", "U1", "Ann", 1, 1, 60, 10.0, "2025-08-02"),
+      ("W2", "U2", "Bob", 1, 2, 30, 5.0, "2025-08-01"),
+      ("W2", "U2", "Bob", 1, 2, 30, 5.0, "2025-08-02"),
+      ("W2", "U2", "Bob", 1, 2, 30, 5.0, "2025-08-03"),
+      ("W3", "U3", null, 1, 1, 60, 10.0, "2025-08-01"),
+      ("W3", "U3", null, 1, 1, 60, 10.0, "2025-08-02"),
+      ("W4", "U4", "Cy", 1, 1, 0, 0.0, "2025-08-01"),
+      ("W4", "U4", "Cy", 1, 1, 0, 0.0, "2025-08-02"),
+      ("W5", "U5", "Di", 1, 1, 45, 7.0, "2025-08-01"))
+      .toDF("WORK_ITEM_ID", "USER_ID", "USER_NAME", "TASK_TYPE_ID", "ROLE_ID",
+        "BUDGETED_MINUTES", "BUDGETED_COST", "d")
+      .withColumn("sync_reporting_date", col("d").cast("date")).drop("d")
+    // v5: W1 duplicates its grain (budgets and hours add up), W2 misses its
+    // budget by 70 min and its hours by 2, W3 its budget by 5 min
+    val v5 = Seq(
+      ("W1", "U1", "Ann", "T1", 120, 60, 2.0, 1.0), ("W1", "U1", "Ann", "T1", 120, 60, 2.0, 1.0),
+      ("W2", "U2", "Bob", "T2", 100, 30, 3.0, 1.0), ("W3", "U3", "Cy", "T3", 50, 45, 1.0, 1.0))
+      .toDF("WORK_ITEM_ID", "budget_user_id", "budget_user_name", "WORK_TITLE",
+        "work_item_total_budgeted_minutes", "individual_budgeted_minutes",
+        "work_item_total_hours_logged_summary", "individual_hours_logged_actual")
+    val summary = ViewVerification.summary(landed(details), landed(corrected), landed(v5))
+    val all = Int.MaxValue
+    assert(summary.as[(String, Long)].collect().toMap === Map(
+      "WORK_ITEM_DETAILS_BQ_DUPLICATES" -> ViewVerification.detailsDupGroups(details, all).count(),
+      "BUDGET_VS_ACTUAL_DUPLICATES" -> ViewVerification.budgetDupRows(corrected, all).count(),
+      "V5_VIEW_USER_WORK_ITEM_DUPLICATES" -> ViewVerification.v5GrainDups(v5, all).count(),
+      "BUDGET_CONSISTENCY_NOT_CONSISTENT" -> 2L,
+      "TIME_TRACKING_CONSISTENCY" -> 1L))
+    assert(summary.as[(String, Long)].collect().take(3).map(_._2).toSeq === Seq(12L, 2L, 1L))
+    // the public checks keep their order and limit
+    val top = ViewVerification.detailsDupGroups(details)
+      .select("record_count", "WORK_ITEM_ID").as[(Long, String)].collect().toSeq
+    assert(top.length === 10 && top === top.sortBy { case (n, w) => (-n, w) })
+    assert(summary.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.SortExec if s.global => s
+    }.isEmpty, "summary plans a global sort")
+  }
+
   test("fallback coverage splits FALLBACK_ONLY vs COVERED") {
     val primary = Seq((1, "a"), (2, "a")).toDF("k", "u")
     val fallback = Seq((1, "a"), (2, "a"), (3, "a")).toDF("k", "u")
