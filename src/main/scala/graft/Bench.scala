@@ -1,33 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, count, lit, pmod, sum}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // At bench SF some compute-dense stages (e.g. n-gram set intersection)
-      // move only ~1 MB of shuffle bytes; AQE's default 1 MB minPartitionSize
-      // floor coalesces them to ONE task and serializes minutes of CPU onto
-      // one core. A 64 KB floor lets parallelismFirst spread them; at real
-      // scale partitions dwarf both floors and this is a no-op.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // Scan-side twin of the floor above: at bench SF a whole table fits in
-      // 1-2 default 128 MB scan splits, serializing map-side codec/signature
-      // stages (the shuffle-free paths AQE cannot widen) onto two cores.
-      // Smaller splits spread them with no extra shuffle; at production
-      // scale files dwarf the default split size and this knob is moot.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      // Same pin as Verify: events.ts reads through timestamp casts whose
-      // result is session-timezone dependent under the instant encoding —
-      // an unpinned bench on a non-UTC host would execute different plans
-      // (and w9/x9 would compute different values) than the verified ones.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.session()
     // Deterministic order (a Map iteration let an arbitrary query absorb JVM
     // warm-up) + an untimed warm-up pass covering scan, shuffle, broadcast
     // and window codegen paths before anything is measured.
@@ -292,14 +268,11 @@ object Bench {
     val errs = failed.map { case (k, e) => s"\"" + k + "\":" + jstr(e) }
       .mkString("{", ",", "}")
     val total = ok.map(_._2).sum
-    // numeric when the env var is (the driver contract), quoted otherwise —
-    // a malformed SPARK_GRAFT_CPUS must not produce unparseable JSON
-    val cpusJson = scala.util.Try(cpus.trim.toInt.toString).getOrElse(jstr(cpus))
     val calMedian = calibration.sorted.apply(calibration.length / 2)
     val ckMedian = ckCalibration.sorted.apply(ckCalibration.length / 2)
     val cal = s"""{"median":${f3(calMedian)},"runs":[${calibration.map(f3).mkString(",")}],""" +
       s""""checkpoint_median":${f3(ckMedian)},"checkpoint_runs":[${ckCalibration.map(f3).mkString(",")}]}"""
-    val full = s"""{"metric":"total","value":${f3(total)},"unit":"sec","cpus":$cpusJson,"queries":$qs,"contrasts":$contrastsJson,"errors":$errs,"calibration":$cal,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${f3(total)},"unit":"sec","cpus":${GraftSession.cores},"queries":$qs,"contrasts":$contrastsJson,"errors":$errs,"calibration":$cal,"sf":"$sfDir"}"""
     // The driver captures only the stdout TAIL, front-truncating whatever came
     // earlier: a single 120-query JSON line arrived unparseable three rounds
     // running. So the full per-query line goes FIRST (plus a disk copy in
@@ -313,7 +286,7 @@ object Bench {
       catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
     val hq = ok.filter { case (k, _) => headline.contains(k) || scalingProbe.contains(k) }
       .map { case (k, v) => s"\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","cpus":$cpusJson,"queries":$hq,"errors":$errs,"calibration":$cal,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","cpus":${GraftSession.cores},"queries":$hq,"errors":$errs,"calibration":$cal,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,14 +8,8 @@ object Verify {
     // Optional third arg (dev only; the driver passes two): a comma-separated
     // allowlist of query names — dump/compare just those while iterating.
     val only: Option[Set[String]] = args.drop(2).headOption.map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session Bench times, so the verified plans are the timed ones
+    val spark = GraftSession.session()
     new java.io.File(outDir).mkdirs()
     // Domain fixtures → parquet at a fixed path, so the ref_* domain-view
     // oracles (queries/DomainOracles.scala) can read the exact same inputs

@@ -29,9 +29,8 @@ object BigQueryDialect {
     case _ => None
   }
 
-  /** The dialect's function set as (identifier, info, builder) triples — the
-    * shared source for runtime registration ([[register]]) and session-start
-    * injection ([[GraftExtensions]]).
+  /** The dialect's function set as (identifier, info, builder) triples,
+    * injected at session start by [[GraftExtensions]].
     */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
     def info(name: String) = new ExpressionInfo("graft.functions.BigQueryDialect", name)
@@ -48,7 +47,10 @@ object BigQueryDialect {
       }: Seq[Expression] => Expression),
 
       // BigQuery arg order: DATE_DIFF(a, b, PART) = a - b in PART units.
+      // The name shadows Spark's built-in date_diff(end, start) in every
+      // session, so the two-argument form keeps Spark's meaning (days).
       (FunctionIdentifier("date_diff"), info("date_diff"), {
+        case Seq(a, b) => DateDiff(a, b)
         case Seq(a, b, p) => unit(p) match {
           case Some("DAY") => DateDiff(a, b)
           case Some("WEEK") => IntegralDivide(DateDiff(a, b), Literal(7L))
@@ -56,7 +58,7 @@ object BigQueryDialect {
           case Some("YEAR") => Subtract(Year(a), Year(b))
           case other => throw new IllegalArgumentException(s"date_diff: unsupported part $other")
         }
-        case args => throw new IllegalArgumentException(s"date_diff expects 3 args, got ${args.length}")
+        case args => throw new IllegalArgumentException(s"date_diff expects 2 or 3 args, got ${args.length}")
       }: Seq[Expression] => Expression),
 
       // DATETIME_DIFF(a, b, PART): whole-unit difference of the epoch seconds
@@ -79,11 +81,6 @@ object BigQueryDialect {
         case Seq() => Uuid()
         case args => throw new IllegalArgumentException(s"generate_uuid expects 0 args, got ${args.length}")
       }: Seq[Expression] => Expression))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    functions.foreach { case (id, fInfo, builder) => reg.registerFunction(id, fInfo, builder) }
   }
 
   /** Text pre-pass for parser-level dialect differences. Regex-based and
@@ -147,11 +144,11 @@ object BigQueryDialect {
     s
   }
 
-  /** Convenience: translate + run. */
-  def sql(spark: SparkSession, bqSql: String): org.apache.spark.sql.DataFrame = {
-    register(spark)
+  /** Convenience: translate + run. The session carries the functions
+    * ([[GraftExtensions]]).
+    */
+  def sql(spark: SparkSession, bqSql: String): org.apache.spark.sql.DataFrame =
     spark.sql(translate(bqSql))
-  }
 
   /** Prepare a BigQuery `CREATE OR REPLACE VIEW` file for execution against
     * registered temp views: strip the CREATE header and trailing semicolon,

@@ -10,11 +10,8 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** VT29: a Spark `TableCatalog` over versioned-table roots — the pure-SQL
-  * surface of the substrate. Register once:
-  * {{{
-  *   spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
-  * }}}
-  * and the table IDENTIFIER is its root path:
+  * surface of the substrate, registered as `spark.sql.catalog.graft` by
+  * [[graft.GraftSession]]. The table IDENTIFIER is its root path:
   * {{{
   *   SELECT * FROM graft.`/data/events`                       -- head snapshot
   *   SELECT * FROM graft.`/data/events` VERSION AS OF 3       -- time travel

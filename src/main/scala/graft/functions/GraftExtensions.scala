@@ -2,18 +2,16 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** Session-start wiring for the engine's Catalyst surface: enable with
+/** Session-start wiring for the engine's Catalyst surface, enabled by
   *
   * {{{
   *   spark.sql.extensions=graft.functions.GraftExtensions
   * }}}
   *
-  * (or `SparkSession.builder.withExtensions(new GraftExtensions)`), and every
-  * session created from that point carries the BigQuery-dialect functions
-  * (SAFE_DIVIDE, COUNTIF, DATE_DIFF, DATETIME_DIFF, GENERATE_UUID) as native
-  * Catalyst expressions — no per-session `BigQueryDialect.register` call.
-  * The injected builders are the exact triples `BigQueryDialect.functions`
-  * registers at runtime; this class is deployment packaging, not new logic.
+  * which [[graft.GraftSession]] sets: every session it builds carries the
+  * BigQuery-dialect functions (SAFE_DIVIDE, COUNTIF, DATE_DIFF,
+  * DATETIME_DIFF, GENERATE_UUID) and the engine-native ones
+  * ([[GraftFunctions]]) as native Catalyst expressions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Engine-native SQL functions (as opposed to the BigQuery-compat set in
-  * [[BigQueryDialect]]): registered under graft's own names for SQL users,
-  * injected at session start by [[GraftExtensions]].
+  * [[BigQueryDialect]]) under graft's own names for SQL users, injected at
+  * session start by [[GraftExtensions]].
   */
 object GraftFunctions {
 
@@ -40,10 +39,5 @@ object GraftFunctions {
         case args => throw new IllegalArgumentException(
           s"bpe_token_count expects 1 arg, got ${args.length}")
       }: Seq[Expression] => Expression))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    functions.foreach { case (id, fInfo, builder) => reg.registerFunction(id, fInfo, builder) }
   }
 }

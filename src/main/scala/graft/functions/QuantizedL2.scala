@@ -21,11 +21,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * expression generates one fused Java loop, no intermediates, and
   * participates in whole-stage codegen like any built-in.
   *
-  * Semantics match the HOF formulation bit-for-bit: Σ (aᵢ−bᵢ)² in 64-bit
-  * integer arithmetic, left-to-right (quantized micros are ≤ 2²¹, so a
-  * 64-dim sum is ≤ 2⁴⁸ — exact, no overflow). Mismatched lengths yield NULL
-  * exactly like `zip_with` of unequal arrays (the padded tail's NULL terms
-  * turn the HOF aggregate NULL), as does a NULL element on either side.
+  * Semantics match the HOF formulation bit-for-bit under the session's ANSI
+  * defaults and within the quantized value domain: Σ (aᵢ−bᵢ)² in 64-bit
+  * integer arithmetic, left-to-right. Quantized micros lie in ±2²¹, so a
+  * difference is within ±2²², its square ≤ 2⁴⁴ and a 64-dim sum ≤ 2⁵⁰ —
+  * exact, no overflow. Outside that domain the two part: ANSI arithmetic
+  * makes the HOF throw on a long overflow, where this loop wraps.
+  * Mismatched lengths yield NULL exactly like `zip_with` of unequal arrays
+  * (the padded tail's NULL terms turn the HOF aggregate NULL), as does a
+  * NULL element on either side.
   */
 case class QuantizedL2(left: Expression, right: Expression) extends BinaryExpression {
 

@@ -19,11 +19,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * allocates two intermediate arrays per pair. This is one fused loop in
   * whole-stage codegen.
   *
-  * Semantics match that HOF chain bit-for-bit: `zip_with` pads the shorter
-  * array with NULLs, `when(x === y, 1)` is NULL when either side is NULL,
-  * and the filter drops NULLs — so the count is over positions below the
-  * SHORTER length where both elements are non-null and equal. Inputs NULL →
-  * result NULL (the chain's null propagation).
+  * Semantics match that HOF chain bit-for-bit under the session's ANSI
+  * defaults: `zip_with` pads the shorter array with NULLs, `when(x === y,
+  * 1)` is NULL when either side is NULL, and the filter drops NULLs — so the
+  * count is over positions below the SHORTER length where both elements are
+  * non-null and equal. Inputs NULL → result NULL, as the chain's `size`
+  * returns under ANSI (with ANSI off, legacy `sizeOfNull` makes it -1). A
+  * count cannot overflow: it is at most the shorter array's length.
   */
 case class SigMatchCount(left: Expression, right: Expression) extends BinaryExpression {
 

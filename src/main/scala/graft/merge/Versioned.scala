@@ -1,6 +1,6 @@
 package graft.merge
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicLong
@@ -875,7 +875,7 @@ object Versioned {
       // footer stats; a constrained or bloom-tracked table instead pays
       // one landed-files scan that fuses the check and the bloom build
       commitOn(root, cur, "append",
-        statsEntriesValidating(df.sparkSession, root, files, statsCols,
+        statsEntriesValidating(df.sparkSession, root, files, ddl, statsCols,
           cur.map(_.constraints).getOrElse(Nil), cmap, bCols), Nil, statsCols, Some(ddl),
         bloomCols = bCols)
     }
@@ -966,10 +966,10 @@ object Versioned {
     * transactional delete.
     */
   private def statsEntries(spark: SparkSession, root: String, files: Seq[(String, Long)],
-      statsCols: Seq[String],
+      schemaDDL: String, statsCols: Seq[String],
       colMap: Map[String, String] = Map.empty,
       bloomCols: Seq[String] = Nil): Seq[FileEntry] =
-    statsEntriesValidating(spark, root, files, statsCols, Nil, colMap, bloomCols)
+    statsEntriesValidating(spark, root, files, schemaDDL, statsCols, Nil, colMap, bloomCols)
 
   /** The manifest entries of freshly-written `files`: per file, (min, max)
     * of each stats column, exact-long-encoded per [[statsLongExpr]], plus
@@ -986,10 +986,11 @@ object Versioned {
     * entry is returned, so the caller commits nothing — [[
     * validateConstraints]]' contract), it has bloom columns (their bits are
     * built in the scan), or a stats column has no exact footer statistics
-    * (Spark's default INT96 timestamps).
+    * (Spark's default INT96 timestamps). `schemaDDL` is the commit's LOGICAL
+    * schema, so the scan reads the landed files without inferring theirs.
     */
   private def statsEntriesValidating(spark: SparkSession, root: String,
-      files: Seq[(String, Long)], statsCols: Seq[String],
+      files: Seq[(String, Long)], schemaDDL: String, statsCols: Seq[String],
       constraints: Seq[(String, String)],
       colMap: Map[String, String] = Map.empty,
       bloomCols: Seq[String] = Nil): Seq[FileEntry] = {
@@ -998,7 +999,7 @@ object Versioned {
       if (constraints.nonEmpty || bloomCols.nonEmpty) None
       else footerMeasures(spark, root, files, statsCols, colMap)
     fileEntries(files, fromFooters.getOrElse(
-      scanMeasures(spark, root, files, statsCols, constraints, colMap, bloomCols)))
+      scanMeasures(spark, root, files, schemaDDL, statsCols, constraints, colMap, bloomCols)))
   }
 
   /** What a stats pass measured of one non-empty landed file. `ranges` is
@@ -1025,13 +1026,13 @@ object Versioned {
     * builds the bloom bits. An empty file yields no group, so no measure.
     */
   private[graft] def scanMeasures(spark: SparkSession, root: String,
-      files: Seq[(String, Long)], statsCols: Seq[String],
+      files: Seq[(String, Long)], schemaDDL: String, statsCols: Seq[String],
       constraints: Seq[(String, String)],
       colMap: Map[String, String] = Map.empty,
       bloomCols: Seq[String] = Nil): Map[String, Measured] = {
     val rootP = Paths.get(root)
-    val rows = statsValidationFrame(spark, root, files, statsCols, constraints, colMap,
-      bloomCols).collect().toSeq
+    val rows = statsValidationFrame(spark, root, files, schemaDDL, statsCols, constraints,
+      colMap, bloomCols).collect().toSeq
     val nStat = 2 * statsCols.length
     val nCon = constraints.length
     if (constraints.nonEmpty) {
@@ -1165,17 +1166,18 @@ object Versioned {
     * column never pays full-row decode on the per-commit validation pass.
     */
   private[graft] def statsValidationFrame(spark: SparkSession, root: String,
-      files: Seq[(String, Long)], statsCols: Seq[String],
+      files: Seq[(String, Long)], schemaDDL: String, statsCols: Seq[String],
       constraints: Seq[(String, String)],
       colMap: Map[String, String] = Map.empty,
       bloomCols: Seq[String] = Nil): DataFrame = {
     val rootP = Paths.get(root)
     // landed files carry PHYSICAL names; stats columns and constraint SQL
-    // are LOGICAL — alias back before analyzing (the Project folds into
-    // the scan, no extra pass)
-    val df0 = logicalize(
-      spark.read.parquet(files.map { case (f, _) => rootP.resolve(f).toString }: _*),
-      colMap)
+    // are LOGICAL — read under the physicalized contract (no schema
+    // inference job) and alias back before analyzing (the Project folds
+    // into the scan, no extra pass)
+    val st = org.apache.spark.sql.types.StructType.fromDDL(schemaDDL)
+    val df0 = logicalize(spark.read.schema(physicalStruct(st, colMap))
+      .parquet(files.map { case (f, _) => rootP.resolve(f).toString }: _*), colMap)
     // bloom positions are computed ONCE per row per col (k=3 xxhash64
     // seeds), then the 16 word aggregates pick bits off them — pure
     // codegen, no UDFs, same exchange as the stats/constraint aggs
@@ -1318,7 +1320,8 @@ object Versioned {
     val (files, marker) = writeData(shaped, root, n, Map.empty)
     val entries =
       if (cur.statsCols.isEmpty) plainEntries(files)
-      else statsEntries(spark, root, files, cur.statsCols, bloomCols = cur.bloomCols)
+      else statsEntries(spark, root, files, normalizedDDL(shaped), cur.statsCols,
+        bloomCols = cur.bloomCols)
     sealing(marker)(writeManifest(root, Version(n, "compact", cur.n, entries.map(_.path),
       entries.collect { case e if e.ranges.nonEmpty => e.path -> e.ranges }.toMap,
       cur.statsCols, cur.txns, cur.schema,
@@ -1371,7 +1374,8 @@ object Versioned {
       df.select(df.columns.map(col).toIndexedSeq: _*), encoded, dimStats, bits, nFiles)
     val n = cur.n + 1
     val (files, marker) = writeData(shaped, root, n, options)
-    val entries = statsEntries(spark, root, files, zCols, bloomCols = cur.bloomCols)
+    val entries = statsEntries(spark, root, files, normalizedDDL(shaped), zCols,
+      bloomCols = cur.bloomCols)
     sealing(marker)(writeManifest(root, Version(n, "compact-zorder", cur.n,
       entries.map(_.path),
       entries.collect { case e if e.ranges.nonEmpty => e.path -> e.ranges }.toMap,
@@ -1580,12 +1584,13 @@ object Versioned {
     val survivors = readFiles(spark, root, cur, affected)
       .filter(!coalesce(predicate, lit(false)))
     val n = cur.n + 1
+    val ddl = normalizedDDL(survivors)
     val (files, marker) = writeData(physicalize(survivors, cur.colMap), root, n, Map.empty)
     val entries =
       if (cur.statsCols.isEmpty) plainEntries(files)
-      else statsEntries(spark, root, files, cur.statsCols, cur.colMap, cur.bloomCols)
+      else statsEntries(spark, root, files, ddl, cur.statsCols, cur.colMap, cur.bloomCols)
     sealing(marker)(commitOn(root, Some(cur), "delete", entries, affected,
-      cur.statsCols, Some(normalizedDDL(survivors))))
+      cur.statsCols, Some(ddl)))
   }
 
   /** VT25: copy-on-write row-level UPDATE through the log — the third DML
@@ -1631,8 +1636,8 @@ object Versioned {
         if (cur.statsCols.isEmpty) {
           validateConstraints(spark, root, cur.constraints, files, Some(ddl), cur.colMap)
           plainEntries(files)
-        } else statsEntriesValidating(spark, root, files, cur.statsCols, cur.constraints,
-          cur.colMap, cur.bloomCols)
+        } else statsEntriesValidating(spark, root, files, ddl, cur.statsCols,
+          cur.constraints, cur.colMap, cur.bloomCols)
       commitOn(root, Some(cur), "update", entries, affected, cur.statsCols, Some(ddl))
     }
   }
@@ -1747,8 +1752,8 @@ object Versioned {
         if (cur.statsCols.isEmpty) {
           validateConstraints(spark, root, cur.constraints, files, Some(ddl), cur.colMap)
           plainEntries(files)
-        } else statsEntriesValidating(spark, root, files, cur.statsCols, cur.constraints,
-          cur.colMap, cur.bloomCols)
+        } else statsEntriesValidating(spark, root, files, ddl, cur.statsCols,
+          cur.constraints, cur.colMap, cur.bloomCols)
       commitDvAttach(spark, root, cur, "update-dv", positions, affected,
         addedFiles = entries, addedDDL = Some(ddl))
     }
@@ -1788,13 +1793,15 @@ object Versioned {
         ColumnBridge.expression(sort_array(collect_list(col("pos")))))).as("bits"))
     // one sidecar file per commit: victim sets are blast-radius-sized by
     // design (wide deletes belong to the copy-on-write form), so a single
-    // coalesced write is the right shape — and one manifest line per file
-    val (scFiles, marker) = writeData(packed.coalesce(1), root, n, Map.empty)
-    // counts ride one (file, cnt) row per file now — the read-back is
-    // O(affected files), never O(victims)
+    // coalesced write is the right shape — and one manifest line per file.
+    // The write job itself reports each file's victim count: one (file, cnt)
+    // pair per affected file, O(affected files), never O(victims)
+    val obs = Observation()
+    val (scFiles, marker) = writeData(
+      packed.observe(obs, collect_list(struct(col("file"), col("cnt"))).as("counts"))
+        .coalesce(1), root, n, Map.empty)
     val counts: Map[String, Long] =
-      spark.read.parquet(scFiles.map(f => Paths.get(root).resolve(f._1).toString): _*)
-        .select(col("file"), col("cnt")).collect()
+      obs.get("counts").asInstanceOf[scala.collection.Seq[Row]]
         .map(r => r.getString(0) -> r.getLong(1)).toMap
     if (counts.isEmpty) {
       // no victims ⟹ no matched rows ⟹ any landed rewrite file is empty:
@@ -1853,12 +1860,13 @@ object Versioned {
       else {
         val alive = readFiles(spark, root, cur, dvd)
         val n = cur.n + 1
+        val ddl = normalizedDDL(alive)
         val (files, marker) = writeData(physicalize(alive, cur.colMap), root, n, Map.empty)
         val entries =
           if (cur.statsCols.isEmpty) plainEntries(files)
-          else statsEntries(spark, root, files, cur.statsCols, cur.colMap, cur.bloomCols)
+          else statsEntries(spark, root, files, ddl, cur.statsCols, cur.colMap, cur.bloomCols)
         sealing(marker)(commitOn(root, Some(cur), "purge-dv", entries, dvd,
-          cur.statsCols, Some(normalizedDDL(alive))))
+          cur.statsCols, Some(ddl)))
       }
     }
 
@@ -2021,8 +2029,8 @@ object Versioned {
         if (cur.statsCols.isEmpty) {
           validateConstraints(spark, root, cur.constraints, files, Some(ddl), cur.colMap)
           plainEntries(files)
-        } else statsEntriesValidating(spark, root, files, cur.statsCols, cur.constraints,
-          cur.colMap, cur.bloomCols)
+        } else statsEntriesValidating(spark, root, files, ddl, cur.statsCols,
+          cur.constraints, cur.colMap, cur.bloomCols)
       staged match {
         case Some(m) => commitOnStaged(root, Some(cur), op, entries, affected, Some(ddl), m)
         case None => commitOn(root, Some(cur), op, entries, affected, cur.statsCols, Some(ddl))
@@ -2125,7 +2133,7 @@ object Versioned {
         if (keptStats.isEmpty) {
           validateConstraints(df.sparkSession, root, keptConstraints, files, Some(ddl))
           plainEntries(files)
-        } else statsEntriesValidating(df.sparkSession, root, files, keptStats,
+        } else statsEntriesValidating(df.sparkSession, root, files, ddl, keptStats,
           keptConstraints, bloomCols = keptBlooms)
       writeManifest(root, Version(n, "overwrite", cur.map(_.n).getOrElse(0),
         entries.map(_.path),
@@ -2459,12 +2467,13 @@ object Versioned {
     val survivors = readFiles(spark, root, cur, affected)
       .filter(!coalesce(predicate, lit(false)))
     val n = cur.n + 1
+    val ddl = normalizedDDL(survivors)
     val (files, marker) = writeData(physicalize(survivors, cur.colMap), root, n, Map.empty)
     val entries =
       if (cur.statsCols.isEmpty) plainEntries(files)
-      else statsEntries(spark, root, files, cur.statsCols, cur.colMap, cur.bloomCols)
+      else statsEntries(spark, root, files, ddl, cur.statsCols, cur.colMap, cur.bloomCols)
     sealing(marker)(commitOnStaged(root, Some(cur), "txn-delete", entries, affected,
-      Some(normalizedDDL(survivors)), txnMarkerBase))
+      Some(ddl), txnMarkerBase))
   }
 
   /** Phase 2: publish — one atomic rename makes every staged version of
@@ -2992,8 +3001,8 @@ object Versioned {
           if (statsCols.isEmpty) {
             validateConstraints(df.sparkSession, root, cons, files, Some(ddl), cmap)
             plainEntries(files)
-          } else statsEntriesValidating(df.sparkSession, root, files, statsCols, cons, cmap,
-            cur.map(_.bloomCols).getOrElse(Nil))
+          } else statsEntriesValidating(df.sparkSession, root, files, ddl, statsCols, cons,
+            cmap, cur.map(_.bloomCols).getOrElse(Nil))
         commitOn(root, cur, s"stream-batch-$batchId",
           entries, Nil, statsCols, Some(ddl))
       })

@@ -689,12 +689,11 @@ object SinkQueries extends QueryModule {
     // by ROOT PATH in plain SQL: INSERT INTO routes the guarded append
     // (constraints/contract/CAS), SELECT serves the head with deletion
     // vectors applied, and VERSION AS OF time-travels — no DataFrame API
-    // in the query path at all.
+    // in the query path at all. The session registers the catalog
+    // (`graft.GraftSession`).
     "vt29_sql_catalog" -> ((s, dir) => {
       val root = tmp("graft_vt29") + "/t"
       val V = graft.merge.Versioned
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.functions.GraftCatalog].getName)
       val o = Tables.orders(s, dir)
       V.appendWithStats(
         o.filter(col("o_orderstatus") === "F")

@@ -33,12 +33,12 @@ object Tables {
   def region(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "region")
   /** events.parquet has shipped `ts` under two encodings: INT64
     * TIMESTAMP(NANOS) (which the vectorized reader surfaces as LongType under
-    * `nanosAsLong`) and plain TIMESTAMP(MICROS). Branch on the observed type
-    * so both read to microsecond TIMESTAMP_NTZ — nanos truncate, the same
-    * coercion a serial engine applies.
+    * the session's `nanosAsLong`, see [[graft.GraftSession]]) and plain
+    * TIMESTAMP(MICROS). Branch on the observed type so both read to
+    * microsecond TIMESTAMP_NTZ — nanos truncate, the same coercion a serial
+    * engine applies.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(spark, dir, "events")
     val tsExpr = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

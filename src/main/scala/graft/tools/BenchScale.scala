@@ -196,7 +196,6 @@ object BenchScale {
   def buildSkewCorpus(spark: SparkSession, tenXDir: String, outDir: String): Unit = {
     val done = new java.io.File(s"$outDir/_GRAFT_SCALE_DONE")
     if (done.exists()) { System.err.println(s"[scale] skew corpus at $outDir reused"); return }
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet(s"$tenXDir/events.parquet")
     // hash-deterministic head: 50/20/10% on three hot keys, tail unchanged
     val u = pmod(xxhash64(col("event_id")), lit(100L))
@@ -215,7 +214,6 @@ object BenchScale {
       copies: Int): Unit = {
     val done = new java.io.File(s"$outDir/_GRAFT_SCALE_DONE")
     if (done.exists()) { System.err.println(s"[scale] docs corpus at $outDir reused"); return }
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     writeDocsAndEmbeddings(spark, srcDir, outDir, copies)
     done.createNewFile()
     System.err.println(s"[scale] docs corpus built at $outDir (${copies}x docs+embeddings)")
@@ -254,11 +252,10 @@ object BenchScale {
         .reduce(_ unionAll _).repartition(parts)
     }
     // events.parquet has shipped ts as both INT64 TIMESTAMP(NANOS) and plain
-    // timestamp[us]; nanosAsLong makes the legacy encoding readable (long
-    // values copy through unchanged) and is a no-op on the native one. Either
-    // way the copy re-reads through Tables.events, which branches on the
-    // observed type.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // timestamp[us]; the session's nanosAsLong makes the legacy encoding
+    // readable (long values copy through unchanged) and is a no-op on the
+    // native one. Either way the copy re-reads through Tables.events, which
+    // branches on the observed type.
     shifted("lineitem", "l_orderkey", 32).write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
     shifted("orders", "o_orderkey", 16).write.mode("overwrite").parquet(s"$outDir/orders.parquet")
     shifted("events", "event_id", 16).write.mode("overwrite").parquet(s"$outDir/events.parquet")
@@ -661,7 +658,6 @@ object BenchScale {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Headline is measured on a CURVE of scale points (default 1x, 10x, 30x)
     // so the linearity claim rests on a fit, not a single ratio; the LLM leg
@@ -669,17 +665,7 @@ object BenchScale {
     // /tmp/graft_scale_{n}x and is reused across runs via the done-marker.
     val points = sys.env.getOrElse("SPARK_GRAFT_SCALE_POINTS", "10,30")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      // UTC pin, as in Verify/Bench: keeps ts-cast plans and values
-      // host-timezone independent
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.session()
     val dirs: Seq[(Int, String)] = (1, srcDir) +: points.map { n =>
       val d = s"/tmp/graft_scale_${n}x"
       buildCorpus(spark, srcDir, d, n); (n, d)

@@ -1,37 +1,23 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Scratch profiler: run one registered query N times in a clean JVM and
-  * print wall times + the formatted plan. Not part of the library surface.
+/** The profiler: run one registered query N times in a clean JVM under
+  * the session Bench times, printing per-stage and per-job metrics and wall
+  * times, then (on request) the formatted plan (`explain`), the simple plan
+  * with its codegen spans (`simple`) or the AQE-final plan (`finalplan`).
+  * For CPU profiles, run it under JFR. Not part of the library surface.
   *
-  * usage: runMain graft.tools.ProfileOne <query> [n] [explain]
+  * usage: runMain graft.tools.ProfileOne <query> [n] [explain|simple|finalplan]
   */
 object ProfileOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val n = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      // mirror Bench: keep AQE from coalescing compute-dense small-byte
-      // shuffles onto one core at bench SF
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // mirror Bench: small-SF scans split into enough input partitions that
-      // map-side codec/signature stages use all cores (no shuffle added)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.codegen.maxFields", sys.env.getOrElse("SPARK_GRAFT_MAXFIELDS", "100"))
-      // UTC pin, as in Verify/Bench: profiled plans must match verified ones
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_EXTRA="k=v;k=v": arbitrary conf overrides for experiments
-    val withExtra = sys.env.get("SPARK_GRAFT_EXTRA").map(_.split(";").toSeq).getOrElse(Nil)
-      .map(_.split("=", 2)).collect { case Array(k, v) => (k, v) }
-    val spark = withExtra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.session()
+    // SPARK_GRAFT_EXTRA="k=v;k=v": SQL conf overrides on the built session,
+    // for experiments (e.g. spark.sql.shuffle.partitions)
+    sys.env.get("SPARK_GRAFT_EXTRA").toSeq.flatMap(_.split(";")).map(_.split("=", 2))
+      .foreach { case Array(k, v) => spark.conf.set(k, v); case _ => () }
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       private val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
       override def onStageCompleted(
@@ -55,28 +41,6 @@ object ProfileOne {
         println(f"[job] ${je.jobId}%4d wall=${(je.time - t0) / 1e3}%6.2fs")
       }
     })
-    // SPARK_GRAFT_SAMPLE=1: sample executor-thread stacks every 20 ms (local
-    // mode runs executors in-process) and print a frame histogram at the end —
-    // names where CPU actually goes when stage metrics only say "the big one".
-    val sampling = sys.env.get("SPARK_GRAFT_SAMPLE").exists(_.nonEmpty)
-    val hist = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
-    @volatile var keepSampling = true
-    val sampler = new Thread(() => {
-      while (keepSampling) {
-        import scala.jdk.CollectionConverters._
-        Thread.getAllStackTraces.asScala.foreach { case (t, frames) =>
-          if (t.getName.startsWith("Executor task launch") && frames.nonEmpty) {
-            // top frame plus the first graft/spark exec frame below it
-            val top = frames.head.toString
-            val ctx = frames.find(f => f.getClassName.contains("execution") ||
-              f.getClassName.contains("graft")).map(_.toString).getOrElse("")
-            hist.merge(s"$top | $ctx", 1, (a, b) => a + b)
-          }
-        }
-        Thread.sleep(20)
-      }
-    })
-    if (sampling) { sampler.setDaemon(true); sampler.start() }
     val fn = graft.SparkEntry.queries(name)
     (1 to n).foreach { i =>
       val t0 = System.nanoTime()
@@ -86,14 +50,6 @@ object ProfileOne {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       spark.sqlContext.clearCache()
       System.gc()
-    }
-    if (sampling) {
-      keepSampling = false
-      import scala.jdk.CollectionConverters._
-      println("[samples] top executor frames:")
-      hist.asScala.toSeq.sortBy(-_._2.intValue).take(25).foreach { case (f, c) =>
-        println(f"[samples] $c%6d  $f")
-      }
     }
     if (args.contains("explain")) fn(spark, sfDir).explain("formatted")
     if (args.contains("simple")) fn(spark, sfDir).explain() // shows codegen '*' spans

@@ -290,14 +290,12 @@ object DomainViews {
       clientGroupDim: DataFrame, clientDim: DataFrame, tenantTeamDim: DataFrame,
       tenantTeamMemberDim: DataFrame, userDim: DataFrame,
       asOf: Column = defaultAsOf): DataFrame = {
-    val te = timeEntries.groupBy(col("WORK_ITEM_ID")).agg(
-      (sum(when(col("IS_BILLABLE") === true, col("MINUTES")).otherwise(lit(0L))) / 60.0)
-        .as("billable_hours_logged"),
-      (sum(col("MINUTES")) / 60.0).as("total_hours_logged"),
-      count(lit(1)).as("te_total_time_entries"),
-      countDistinct(col("USER_NAME")).as("te_unique_contributors"),
-      min(col("REPORTING_DATE")).as("first_time_entry_date"),
-      max(col("REPORTING_DATE")).as("last_time_entry_date"))
+    // the per-item rollup is V5's WorkItemTimeEntrySummary under V4's names
+    val te = workItemTimeEntrySummary(timeEntries)
+      .withColumnRenamed("work_item_billable_hours_logged", "billable_hours_logged")
+      .withColumnRenamed("work_item_total_hours_logged", "total_hours_logged")
+      .withColumnRenamed("work_item_total_time_entries", "te_total_time_entries")
+      .withColumnRenamed("unique_contributors", "te_unique_contributors")
 
     val bm = coalesce(col("BUDGETED_MINUTES"), lit(0L))
     val hoursLogged = coalesce(col("total_hours_logged"), lit(0.0))
@@ -520,23 +518,9 @@ object DomainViews {
     * NULL` (`:180-182`, J12) and the either-side-present filter (`:196`).
     */
   def v5Fallback(timeEntries: DataFrame, details: DataFrame, correctedView: DataFrame): DataFrame = {
-    val its = timeEntries.groupBy(col("WORK_ITEM_ID"), col("USER_NAME"), col("USER_ID"))
-      .agg(
-        (sum(when(col("IS_BILLABLE") === true, col("MINUTES")).otherwise(lit(0L))) / 60.0)
-          .as("billable_hours_logged"),
-        (sum(col("MINUTES")) / 60.0).as("total_hours_logged"),
-        count(lit(1)).as("total_time_entries"),
-        min(col("REPORTING_DATE")).as("first_time_entry_date"),
-        max(col("REPORTING_DATE")).as("last_time_entry_date"),
-        (sum(when(year(col("REPORTING_DATE")) === 2025 && month(col("REPORTING_DATE")) === 7,
-          col("MINUTES")).otherwise(lit(0L))) / 60.0).as("hours_logged_jul_2025"))
-    val wits = timeEntries.groupBy(col("WORK_ITEM_ID"))
-      .agg(
-        (sum(when(col("IS_BILLABLE") === true, col("MINUTES")).otherwise(lit(0L))) / 60.0)
-          .as("work_item_billable_hours_logged"),
-        (sum(col("MINUTES")) / 60.0).as("work_item_total_hours_logged"),
-        count(lit(1)).as("work_item_total_time_entries"),
-        countDistinct(col("USER_NAME")).as("unique_contributors"))
+    // V5's rollups; column pruning drops the pivots and dates not read here
+    val its = individualTimeEntrySummary(timeEntries)
+    val wits = workItemTimeEntrySummary(timeEntries)
     val ibs = correctedView
       .filter(col("USER_NAME").isNotNull && col("BUDGETED_MINUTES") > 0)
       .groupBy(col("WORK_ITEM_ID"), col("USER_ID"), col("USER_NAME"))

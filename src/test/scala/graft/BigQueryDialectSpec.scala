@@ -52,7 +52,6 @@ class BigQueryDialectSpec extends SparkSuite {
   }
 
   test("GENERATE_UUID produces uuid-shaped distinct values") {
-    BigQueryDialect.register(spark)
     val ids = spark.sql("SELECT GENERATE_UUID() AS u FROM range(5)").as[String].collect()
     assert(ids.distinct.length == 5)
     assert(ids.forall(_.matches("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")))

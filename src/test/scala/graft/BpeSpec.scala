@@ -68,8 +68,7 @@ class BpeSpec extends SparkSuite {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(gotInterp === expected)
     }
-    // SQL-registered form
-    graft.functions.GraftFunctions.register(spark)
+    // SQL form (the session carries the function)
     sf("documents").createOrReplaceTempView("bpe_docs")
     val gotSql = spark.sql("SELECT doc_id, bpe_token_count(text) AS n FROM bpe_docs")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -101,8 +101,7 @@ class DedupAnnSpec extends SparkSuite {
     val mm = pairs.limit(1).select(
       Ann.cosine(col("ea"), slice(col("eb"), 1, 10)).as("c"))
     assert(mm.filter(col("c").isNull).count() == 1)
-    // registered for SQL users via GraftFunctions
-    graft.functions.GraftFunctions.register(spark)
+    // SQL users get it through the session's GraftExtensions
     val sqlRow = spark.sql(
       "SELECT round(cosine_similarity(array(1.0d,0.0d), array(1.0d,0.0d)), 6) c").head()
     assert(sqlRow.getDouble(0) == 1.0)
@@ -190,8 +189,7 @@ class DedupAnnSpec extends SparkSuite {
       spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
       spark.conf.set("spark.sql.codegen.wholeStage", "true")
     }
-    // SQL registration round-trip
-    graft.functions.GraftFunctions.register(spark)
+    // SQL round-trip through the session's GraftExtensions
     val r = spark.sql(
       "SELECT minhash_signature(array('a b c','b c d'), 4) AS m, simhash_signature(array('a','b')) AS s")
       .head()

@@ -54,6 +54,11 @@ class NativeKernelSpec extends SparkSuite {
       assert(!r.isNullAt(0) && !r.isNullAt(1), s"unexpected null on $fx: $r")
       assert(r.getInt(0) == r.getInt(1), s"count diverged on $fx: $r")
     }
+    // null INPUT array → null, like the HOF chain under ANSI (size(NULL) is NULL)
+    val nullIn = Seq((null.asInstanceOf[Seq[java.lang.Long]], Seq[java.lang.Long](1L)))
+      .toDF("a", "b")
+      .select(matchNative(col("a"), col("b")).as("n"), hof.as("h")).head()
+    assert(nullIn.isNullAt(0) && nullIn.isNullAt(1))
   }
 
   test("the native kernels participate in whole-stage codegen (no interpreted fallback)") {

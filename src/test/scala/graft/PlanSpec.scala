@@ -25,6 +25,17 @@ class PlanSpec extends SparkSuite {
     assert(smj <= 4, s"too many sort-merge joins ($smj) — a dim join lost its broadcast:\n$p")
   }
 
+  test("ref_view_check_summary checkpoints V5 at exactly the 8 columns summary() reads") {
+    val df = ViewQueries.defs("ref_view_check_summary")(spark, dir)
+    val checkpointed = df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.output.map(_.name)
+    }
+    val v5Cols = Seq("WORK_ITEM_ID", "budget_user_id", "budget_user_name", "WORK_TITLE",
+      "work_item_total_budgeted_minutes", "individual_budgeted_minutes",
+      "work_item_total_hours_logged_summary", "individual_hours_logged_actual")
+    assert(checkpointed.contains(v5Cols), checkpointed.mkString("\n"))
+  }
+
   test("j1 star: broadcasts all five dims") {
     val p = plan(JoinQueries.defs("j1_star_left_join")(spark, dir))
     val bhj = "BroadcastHashJoin".r.findAllIn(p).length

@@ -163,8 +163,6 @@ class VersionedBatchReadSpec extends SparkSuite {
     assert(df.schema.fieldNames.toSeq === Seq("k", "price", "tag"))
     assert(df.count() === 0L)
     // SQL over the catalog agrees
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.functions.GraftCatalog].getName)
     assert(spark.sql(s"SELECT count(*) FROM graft.`$root`").as[Long].head() === 0L)
     assert(spark.sql(s"SELECT count(*) FROM graft.`$root` VERSION AS OF 1")
       .as[Long].head() === 100L)

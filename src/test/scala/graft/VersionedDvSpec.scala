@@ -46,6 +46,16 @@ class VersionedDvSpec extends SparkSuite {
     assert(Versioned.currentVersion(root).get.dvs === v2.dvs)
   }
 
+  test("delete-dv commits in one SQL execution: the sidecar write counts its own victims") {
+    val root = tmpDir() + "/t"
+    mk(root)
+    val ex = executionsOf(Versioned.deleteWhereDV(spark, root, col("k") % 10 === 0L))
+    assert(ex.length === 1, s"the sidecar write only, got $ex")
+    assert(ex.forall(!_.startsWith("job-")), s"a job ran outside any SQL execution: $ex")
+    val v = Versioned.currentVersion(root).get
+    assert(v.dvs.valuesIterator.flatten.map(_._2).sum === 10L)
+  }
+
   test("delete-dv blast radius: only stats-overlapping files get vectors; others untouched") {
     val root = tmpDir() + "/t"
     mk(root)

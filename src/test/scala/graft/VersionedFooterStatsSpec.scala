@@ -49,7 +49,7 @@ class VersionedFooterStatsSpec extends SparkSuite {
     */
   private def agree(r: String, fs: Seq[(String, Long)]): Map[String, Versioned.Measured] = {
     val cur = Versioned.currentVersion(r).get
-    val scanned = Versioned.scanMeasures(spark, r, fs, cur.statsCols, Nil, cur.colMap)
+    val scanned = Versioned.scanMeasures(spark, r, fs, cur.schema.get, cur.statsCols, Nil, cur.colMap)
     val footers = Versioned.footerMeasures(spark, r, fs, cur.statsCols, cur.colMap)
     assert(footers.contains(scanned), s"footers $footers vs scan $scanned")
     Versioned.fileEntries(fs, scanned).foreach { e =>
@@ -122,7 +122,7 @@ class VersionedFooterStatsSpec extends SparkSuite {
       val cur = Versioned.currentVersion(r).get
       val fs = files(cur)
       assert(Versioned.footerMeasures(spark, r, fs, cur.statsCols).isEmpty)
-      val scanned = Versioned.scanMeasures(spark, r, fs, cur.statsCols, Nil)
+      val scanned = Versioned.scanMeasures(spark, r, fs, cur.schema.get, cur.statsCols, Nil)
       assert(fs.forall { case (f, _) => cur.stats.get(f).contains(scanned(f).ranges) })
     }
     // a CHECK constraint is verified in the scan; a violation commits nothing

@@ -391,7 +391,7 @@ class VersionedTimeConstraintsSpec extends SparkSuite {
     // fused stats+constraint pass: tracked column + constrained columns,
     // nothing else (input_file_name needs no data column)
     val sv = Versioned.statsValidationFrame(spark, r, files,
-      statsCols = Seq("k"), constraints = Seq(
+      Versioned.currentVersion(r).get.schema.get, statsCols = Seq("k"), constraints = Seq(
         "price_pos" -> "price > 0", "a_nonempty" -> "length(a) > 0"))
     assert(scanCols(sv).toSet === Set("k", "price", "a"), s"got ${scanCols(sv)}")
     // and the real write paths stay green under the same shapes
