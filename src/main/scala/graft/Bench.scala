@@ -68,10 +68,11 @@ object Bench {
     // reads should be steady-state, not first-compile.
     // Bisection runs warm only the queries they measure: warming the full
     // headline list on a filtered subset pays ~30 s for queries that never run.
-    // Headliners warm UNTIL STABLE, not just once: on a fresh JVM one untimed
-    // pass does not outlast C2 tier-up, and the compile tail then lands inside
-    // the first timed pass (round-7 driver run: v5_individual 27.8 s measured
-    // vs 9-12 s steady state in every standalone profile). Stability is judged
+    // Headliners and scaling probes warm UNTIL STABLE, not just once: on a
+    // fresh JVM one untimed pass does not outlast C2 tier-up, and the compile
+    // tail then lands inside the first timed pass (round-7 driver run:
+    // v5_individual 27.8 s measured vs 9-12 s steady state in every
+    // standalone profile). Stability is judged
     // against the ROLLING MINIMUM, not the previous pass: two consecutive slow
     // passes on a cold plateau agree with each other long before C2 finishes
     // (round-8 driver run declared v5 "stable" at 26.6 s, 4x its steady
@@ -89,7 +90,7 @@ object Bench {
       "st15_stream_neardup_ingest") ++ scalingProbe ++ headline)
       .filter(w => filter.forall(_.exists(w.startsWith))).foreach { w =>
       SparkEntry.queries.get(w).foreach { fn =>
-        val maxPasses = if (headline.contains(w)) 6 else 1
+        val maxPasses = if (headline.contains(w) || scalingProbe.contains(w)) 6 else 1
         var best = Double.MaxValue
         var pass = 0
         var stable = false

@@ -800,6 +800,86 @@ object Versioned {
     (listParquet(root, dataDir), marker)
   }
 
+  /** Land `df`, the rewrite of version `cur`'s `replaced` files — a merge,
+    * a copy-on-write delete or update, a purge or a compaction — range-
+    * clustered on one key: `key` (a merge passes its first tracked merge
+    * key), else the table's first stats column. The rows go to `nFiles`
+    * files, by default one per replaced file but no more than
+    * `spark.sql.shuffle.partitions` and at least one, each holding a narrow
+    * key range disjoint from the others, so a later merge, delete or pruned
+    * read overlaps only the files its keys fall in. Without clustering each
+    * task of the rewrite lands its own small file spanning whatever keys
+    * the shuffle handed it, and every later merge overlaps them all.
+    *
+    * The split points come from what the driver already holds, never from
+    * sampling the rows ([[clusterSplits]]): the replaced files' manifest
+    * ranges and row counts plus `source`, a merge source's (min, max, rows)
+    * on `key` from its control-plane aggregate. The computed file id goes to
+    * `repartitionById`; NULL and out-of-range keys land in an edge file. A
+    * table without stats, a rewrite with no known range, or one whose span
+    * does not fit a Long lands unshaped (compaction round-robins into its
+    * `nFiles`).
+    */
+  private def writeRewrite(df: DataFrame, root: String, n: Int, cur: Version,
+      replaced: Seq[String], colMap: Map[String, String], key: Option[String] = None,
+      source: Option[(Long, Long, Long)] = None,
+      nFiles: Option[Int] = None): (Seq[(String, Long)], Path) = {
+    val want = nFiles.getOrElse(math.max(1, math.min(replaced.size,
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)))
+    val clustered = for {
+      k <- key.orElse(cur.statsCols.headOption)
+      if df.columns.contains(k) && statsTypeSupported(df.schema(k).dataType)
+      i = cur.statsCols.indexOf(k)
+      pieces = replaced.flatMap(f => cur.stats.get(f).flatMap(_.lift(i)).map { case (lo, hi) =>
+        (lo, hi, cur.nulls.get(f).fold(1L)(_._1) - cur.dvs.getOrElse(f, Nil).map(_._2).sum)
+      }) ++ source
+      cuts <- clusterSplits(pieces, want)
+    } yield {
+      val e = statsLongExpr(k, df.schema(k).dataType)
+      val id = cuts.zipWithIndex.foldLeft(when(e.isNull, 0)) { case (acc, (c, j)) =>
+        acc.when(e < c, j)
+      }.otherwise(cuts.length)
+      df.repartitionById(cuts.length + 1, id)
+    }
+    val shaped = clustered.getOrElse(nFiles.fold(df)(df.repartition))
+    writeData(physicalize(shaped, colMap), root, n, Map.empty)
+  }
+
+  /** At most `nFiles - 1` increasing split points in (lo, hi] that cut the
+    * rows of `pieces` — (lo, hi, rows) key ranges, each piece's rows taken
+    * as spread evenly over its keys — into runs of about equal rows; key `x`
+    * belongs to the run of the split points at or below it. The j-th point
+    * follows the first key at which the rows so far reach j/nFiles of the
+    * total. Points that would leave a run empty are dropped, so heavy
+    * duplicates give fewer runs. None when nothing is known or the span does
+    * not fit a Long. One sweep, O(pieces log pieces + nFiles).
+    */
+  private def clusterSplits(pieces: Seq[(Long, Long, Long)], nFiles: Int): Option[Seq[Long]] = {
+    if (pieces.isEmpty) return None
+    val (lo, hi) = (pieces.map(_._1).min, pieces.map(_._2).max)
+    if (BigInt(hi) - BigInt(lo) > Long.MaxValue) return None
+    // the rows per key change only where a piece starts (a) or ends (b + 1)
+    val steps = pieces.flatMap { case (a, b, w) =>
+      val perKey = math.max(w, 1L) / ((b - a).toDouble + 1)
+      Seq(BigInt(a) -> perKey, (BigInt(b) + 1) -> -perKey)
+    }.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
+    val total = pieces.map(p => math.max(p._3, 1L).toDouble).sum
+    val cuts = Seq.newBuilder[Long]
+    var (rows, perKey, j) = (0.0, 0.0, 1)
+    steps.zip(steps.drop(1)).foreach { case ((x, d), (next, _)) =>
+      perKey += d
+      val seg = perKey * (next - x).toDouble
+      while (j < nFiles && perKey > 0 && rows + seg >= total * j / nFiles) {
+        val keys = BigDecimal(math.ceil((total * j / nFiles - rows) / perKey)).toBigInt
+        val y = (x + keys - 1).max(x).min(next - 1)
+        if (y < hi) cuts += (y + 1).toLong
+        j += 1
+      }
+      rows += seg
+    }
+    Some(cuts.result().distinct)
+  }
+
   private def plainEntries(files: Seq[(String, Long)]): Seq[FileEntry] =
     files.map { case (f, sz) => FileEntry(f, Nil, sz) }
 
@@ -1287,10 +1367,14 @@ object Versioned {
     * (immutable — reclaim is [[vacuum]]'s deliberate job, never compaction's
     * side effect), concurrent readers of the current version are untouched,
     * and the accumulated stream-batch ids ride along so replay dedup
-    * survives compaction. If the table tracks skipping stats they are
-    * RECOMPUTED for the new files in one compact-sized pass — a pruned read
-    * is exactly as selective after the rewrite. For multi-dimension
-    * clustering instead of bin-packing, pre-shape with
+    * survives compaction. If the table tracks skipping stats, the rewrite
+    * lands range-clustered on the first stats column into at most `nFiles`
+    * files, with split points taken from the manifest's ranges and row
+    * counts (no sampling job; [[writeRewrite]]), and the stats are
+    * RECOMPUTED for the new files from their footers — a pruned read is
+    * exactly as selective after the rewrite. A table without stats
+    * round-robins into `nFiles`. For multi-dimension clustering instead of
+    * bin-packing, pre-shape with
     * [[graft.ops.ZOrder.zCluster]] and [[overwrite]]; this op is the
     * file-count lever, one shuffle, O(current version) and never O(history).
     * On a lost commit race (an append landed while the rewrite ran) the CAS
@@ -1308,19 +1392,16 @@ object Versioned {
     // column, not round-robin: bin-packing would leave every output file
     // spanning the whole key domain, so the recomputed per-file ranges —
     // while correct — would overlap every predicate and pruning silently
-    // degrades to a full scan. One shuffle either way; the clustered shape
-    // keeps a post-compact pruned read as selective as the pre-compact one
-    // (spec-pinned). Multi-dimension clustering stays ZOrder+overwrite's job.
-    val shaped =
-      if (cur.statsCols.nonEmpty) df.repartitionByRange(nFiles, col(cur.statsCols.head))
-      else df.repartition(nFiles)
-    // the rewrite lands under LOGICAL names and the FULL manifest carries
-    // no colmap: compaction MATERIALIZES any pending column rename (every
-    // file is rewritten anyway — the one moment the mapping is free to drop)
-    val (files, marker) = writeData(shaped, root, n, Map.empty)
+    // degrades to a full scan (spec-pinned). Multi-dimension clustering
+    // stays ZOrder+overwrite's job. The rewrite lands under LOGICAL names
+    // and the FULL manifest carries no colmap: compaction MATERIALIZES any
+    // pending column rename (every file is rewritten anyway — the one
+    // moment the mapping is free to drop)
+    val (files, marker) = writeRewrite(df, root, n, cur, cur.files, Map.empty,
+      nFiles = Some(nFiles))
     val entries =
       if (cur.statsCols.isEmpty) plainEntries(files)
-      else statsEntries(spark, root, files, normalizedDDL(shaped), cur.statsCols,
+      else statsEntries(spark, root, files, normalizedDDL(df), cur.statsCols,
         bloomCols = cur.bloomCols)
     sealing(marker)(writeManifest(root, Version(n, "compact", cur.n, entries.map(_.path),
       entries.collect { case e if e.ranges.nonEmpty => e.path -> e.ranges }.toMap,
@@ -1575,22 +1656,30 @@ object Versioned {
     sys.error("unreachable")
   }
 
-  private def deleteWhereOnce(spark: SparkSession, root: String, predicate: Column): Version = {
+  /** One copy-on-write delete; `staged` is the open transaction marker of
+    * [[deleteWhereStaged]].
+    */
+  private def deleteWhereOnce(spark: SparkSession, root: String, predicate: Column,
+      staged: Option[String] = None): Version = {
     val cur = currentVersion(root).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $root"))
     requireNoPendingTxn(Some(cur), root)
     val affected = overlappingFiles(cur, validatedBounds(cur, predicate))
-    if (affected.isEmpty) return cur // provably nothing to delete
+    if (affected.isEmpty) return cur // provably nothing to delete: no stage needed
     val survivors = readFiles(spark, root, cur, affected)
       .filter(!coalesce(predicate, lit(false)))
     val n = cur.n + 1
     val ddl = normalizedDDL(survivors)
-    val (files, marker) = writeData(physicalize(survivors, cur.colMap), root, n, Map.empty)
+    val (files, marker) = writeRewrite(survivors, root, n, cur, affected, cur.colMap)
     val entries =
       if (cur.statsCols.isEmpty) plainEntries(files)
       else statsEntries(spark, root, files, ddl, cur.statsCols, cur.colMap, cur.bloomCols)
-    sealing(marker)(commitOn(root, Some(cur), "delete", entries, affected,
-      cur.statsCols, Some(ddl)))
+    sealing(marker)(staged match {
+      case Some(m) => commitOnStaged(root, Some(cur), "txn-delete", entries, affected,
+        Some(ddl), m)
+      case None => commitOn(root, Some(cur), "delete", entries, affected,
+        cur.statsCols, Some(ddl))
+    })
   }
 
   /** VT25: copy-on-write row-level UPDATE through the log — the third DML
@@ -1630,7 +1719,7 @@ object Versioned {
     }.toIndexedSeq: _*)
     val n = cur.n + 1
     val ddl = normalizedDDL(updated)
-    val (files, marker) = writeData(physicalize(updated, cur.colMap), root, n, Map.empty)
+    val (files, marker) = writeRewrite(updated, root, n, cur, affected, cur.colMap)
     sealing(marker) {
       val entries =
         if (cur.statsCols.isEmpty) {
@@ -1827,7 +1916,9 @@ object Versioned {
     * clean files are untouched at any table size. After the commit the
     * head serves identical rows with zero anti-joins on the purged files;
     * expired sidecars age out through [[vacuum]]/[[gcOrphans]] like any
-    * de-referenced file.
+    * de-referenced file. The rewrite lands as [[mergeInto]]'s does: range-
+    * clustered on the first stats column into at most as many files as it
+    * purges ([[writeRewrite]]).
     */
   /** `minDeletedRatio` makes the purge SELECTIVE: only files whose
     * recorded victim share (dv victim count / fmt-6 row count) is at
@@ -1861,7 +1952,7 @@ object Versioned {
         val alive = readFiles(spark, root, cur, dvd)
         val n = cur.n + 1
         val ddl = normalizedDDL(alive)
-        val (files, marker) = writeData(physicalize(alive, cur.colMap), root, n, Map.empty)
+        val (files, marker) = writeRewrite(alive, root, n, cur, dvd, cur.colMap)
         val entries =
           if (cur.statsCols.isEmpty) plainEntries(files)
           else statsEntries(spark, root, files, ddl, cur.statsCols, cur.colMap, cur.bloomCols)
@@ -1885,6 +1976,15 @@ object Versioned {
     * empty source is a metadata no-op; a source with no fully-keyed row
     * rewrites nothing and lands pure inserts. Source rows must carry the
     * table's columns; the commit re-checks the schema contract.
+    *
+    * The rewrite lands range-clustered on the first stats-tracked merge key
+    * (else the first stats column) into min(`spark.sql.shuffle.partitions`,
+    * affected files) files, at least one, each covering a disjoint key
+    * range; the split points come from the affected files' manifest ranges
+    * and row counts plus the source's key envelope, so no sampling job runs
+    * ([[writeRewrite]]). A later merge over a nearby window therefore
+    * rewrites a few narrow files, not every file an earlier merge left. A
+    * table without stats lands the rewrite unshaped.
     */
   def mergeInto(spark: SparkSession, root: String, source: DataFrame, keys: Seq[String],
       orderCol: Option[String] = None, maxRetries: Int = 0): Version =
@@ -2019,7 +2119,13 @@ object Versioned {
       .getOrElse(MergeInto.merge(target, srcSel, keys, orderCol))
     val n = cur.n + 1
     val ddl = normalizedDDL(merged)
-    val (files, marker) = writeData(physicalize(merged, cur.colMap), root, n, Map.empty)
+    // the rewrite clusters on the first tracked key, whose source envelope
+    // (encoded min, max) sits at r(2), r(3)
+    val envelope =
+      if (trackedKeys.isEmpty || r.isNullAt(2)) None
+      else Some((r.getLong(2), r.getLong(3), r.getLong(0)))
+    val (files, marker) = writeRewrite(merged, root, n, cur, affected, cur.colMap,
+      trackedKeys.headOption, envelope)
     sealing(marker) {
       // the merge RESULT (updates included) must pass the constraints —
       // carried-through rows were already valid, so violations can only
@@ -2459,21 +2565,7 @@ object Versioned {
       txnMarkerBase: String): Version = {
     require(txnResolution(txnMarkerBase) == TxnState.Pending,
       s"transaction $txnMarkerBase is not open")
-    val cur = currentVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $root"))
-    requireNoPendingTxn(Some(cur), root)
-    val affected = overlappingFiles(cur, validatedBounds(cur, predicate))
-    if (affected.isEmpty) return cur // provably nothing to delete: no stage needed
-    val survivors = readFiles(spark, root, cur, affected)
-      .filter(!coalesce(predicate, lit(false)))
-    val n = cur.n + 1
-    val ddl = normalizedDDL(survivors)
-    val (files, marker) = writeData(physicalize(survivors, cur.colMap), root, n, Map.empty)
-    val entries =
-      if (cur.statsCols.isEmpty) plainEntries(files)
-      else statsEntries(spark, root, files, ddl, cur.statsCols, cur.colMap, cur.bloomCols)
-    sealing(marker)(commitOnStaged(root, Some(cur), "txn-delete", entries, affected,
-      Some(ddl), txnMarkerBase))
+    deleteWhereOnce(spark, root, predicate, Some(txnMarkerBase))
   }
 
   /** Phase 2: publish — one atomic rename makes every staged version of
