@@ -213,22 +213,24 @@ object Versioned {
   private def bloomHasBit(bits: Vector[Long], pos: Long): Boolean =
     (bits((pos / 64).toInt) & (1L << (pos % 64).toInt)) != 0L
 
-  /** A manifest as written on disk (delta or full), before folding. `ts` is
+  /** One manifest (delta or full) — what every commit writes ([[render]])
+    * and every reader parses back ([[parseManifest]]) and folds. `ts` is
     * the commit's wall-clock epoch millis (header `ts=`, -1 on pre-vt19
     * manifests); `constraints` are the CHECK constraints this manifest
     * carries (a FULL manifest lists the complete set, a delta only the ones
-    * its commit ADDED).
+    * its commit ADDED). Each entry carries its file's bloom bits and null
+    * counts; `dvs` are a delta's ATTACHED deletion vectors, or a full
+    * manifest's complete set.
     */
-  private final case class Raw(n: Int, op: String, parent: Int, full: Boolean,
-      statsCols: Seq[String], entries: Seq[FileEntry], removed: Seq[String],
-      txns: Set[Long], schema: Option[String], ts: Long = -1L,
+  private[graft] final case class Raw(n: Int, op: String, parent: Int,
+      full: Boolean = false, statsCols: Seq[String] = Nil,
+      entries: Seq[FileEntry] = Nil, removed: Seq[String] = Nil,
+      txns: Set[Long] = Set.empty, schema: Option[String] = None, ts: Long = -1L,
       constraints: Seq[(String, String)] = Nil,
       colMap: Map[String, String] = Map.empty,
       txnMarker: Option[String] = None,
       bloomCols: Seq[String] = Nil,
-      blooms: Map[(String, String), Vector[Long]] = Map.empty,
-      dvs: Map[String, Seq[(String, Long)]] = Map.empty,
-      nulls: Map[String, (Long, Seq[Long])] = Map.empty)
+      dvs: Map[String, Seq[(String, Long)]] = Map.empty)
 
   /** The schema identity the log tracks: DDL with nullability erased —
     * Spark normalizes parquet read-back to nullable, so a compaction or
@@ -284,7 +286,7 @@ object Versioned {
       size)
   }
 
-  private def parseManifest(n: Int, p: Path): Raw = {
+  private[graft] def parseManifest(n: Int, p: Path): Raw = {
     manifestReads.incrementAndGet()
     val lines = Files.readAllLines(p).asScala.toSeq
     val header = lines.head.split(" ").map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
@@ -319,12 +321,12 @@ object Versioned {
       .map(_.stripPrefix("txnmarker="))
     // per-file bloom bits (vt26): `bloom=<col>:<base64>:<path>` — the path
     // LAST because base64/identifiers never contain ':' while paths could
-    val blooms: Map[(String, String), Vector[Long]] =
+    val blooms: Map[String, Seq[(String, Vector[Long])]] =
       body.filter(_.startsWith("bloom=")).map { l =>
         val parts = l.stripPrefix("bloom=").split(":", 3)
         require(parts.length == 3, s"malformed bloom line in $p: $l")
-        (parts(2), parts(0)) -> bloomFromB64(parts(1))
-      }.toMap
+        parts(2) -> (parts(0) -> bloomFromB64(parts(1)))
+      }.groupMap(_._1)(_._2)
     // deletion vectors (vt27): `dv=<count>|<sidecar>|<file>` — '|'-split
     // because BOTH operands are paths (the bloom ':' trick covers one path
     // at most). Line order is attachment order; a file's sidecars fold in
@@ -354,16 +356,21 @@ object Versioned {
       s"manifest $p is FULL but carries a txnmarker — staged txn manifests must be " +
         "deltas (an aborted full manifest could not fold as a no-op); corrupt log?")
     val fmt = header.get("fmt").map(_.toInt).getOrElse(1)
-    // commit wall-time (vt19): an OPTIONAL header key — pre-vt19 manifests
-    // (no `ts=`) read as -1 (unknown), which timestamp travel treats as
-    // "older than any queried instant"
-    val ts = header.get("ts").map(_.toLong).getOrElse(-1L)
-    val bloomCols = header.get("bloom").map(_.split(',').toSeq).getOrElse(Nil)
-    if (full)
-      Raw(n, header("op"), header("parent").toInt, full = true,
-        header.get("stats").map(_.split(',').toSeq).getOrElse(Nil),
-        fileLines.map(parseEntry(_, fmt)), Nil, txns, schema, ts, constraints, colMap,
-        bloomCols = bloomCols, blooms = blooms, dvs = dvs, nulls = nulls)
+    def entry(line: String): FileEntry = {
+      val e = parseEntry(line, fmt)
+      val (rc, ncs) = nulls.getOrElse(e.path, (-1L, Nil))
+      e.copy(blooms = blooms.getOrElse(e.path, Nil), rowCount = rc, nullCounts = ncs)
+    }
+    val raw = Raw(n, header("op"), header("parent").toInt,
+      statsCols = header.get("stats").map(_.split(',').toSeq).getOrElse(Nil),
+      txns = txns, schema = schema,
+      // commit wall-time (vt19): an OPTIONAL header key — pre-vt19 manifests
+      // (no `ts=`) read as -1 (unknown), which timestamp travel treats as
+      // "older than any queried instant"
+      ts = header.get("ts").map(_.toLong).getOrElse(-1L),
+      constraints = constraints, colMap = colMap,
+      bloomCols = header.get("bloom").map(_.split(',').toSeq).getOrElse(Nil), dvs = dvs)
+    if (full) raw.copy(full = true, entries = fileLines.map(entry))
     else {
       val (prefixed, unprefixed) =
         fileLines.partition(l => l.startsWith("+") || l.startsWith("-"))
@@ -373,17 +380,11 @@ object Versioned {
         // writer prefixes), so read it as the complete state it was
         require(prefixed.isEmpty && !header.contains("fmt"),
           s"manifest $p mixes prefixed and unprefixed file lines — corrupt or unsupported")
-        Raw(n, header("op"), header("parent").toInt, full = true,
-          header.get("stats").map(_.split(',').toSeq).getOrElse(Nil),
-          unprefixed.map(parseEntry(_, fmt)), Nil, txns, schema, ts, constraints, colMap,
-          bloomCols = bloomCols, blooms = blooms)
+        raw.copy(full = true, entries = unprefixed.map(entry))
       } else
-        Raw(n, header("op"), header("parent").toInt, full = false,
-          header.get("stats").map(_.split(',').toSeq).getOrElse(Nil),
-          prefixed.filter(_.startsWith("+")).map(l => parseEntry(l.drop(1), fmt)),
-          prefixed.filter(_.startsWith("-")).map(_.drop(1)),
-          txns, schema, ts, constraints, colMap, txnMarker,
-          bloomCols = bloomCols, blooms = blooms, dvs = dvs, nulls = nulls)
+        raw.copy(entries = prefixed.filter(_.startsWith("+")).map(l => entry(l.drop(1))),
+          removed = prefixed.filter(_.startsWith("-")).map(_.drop(1)),
+          txnMarker = txnMarker)
     }
   }
 
@@ -432,40 +433,44 @@ object Versioned {
       Map.empty, raw.statsCols, Set.empty, raw.schema, Map.empty, raw.ts)
   }
 
+  /** The state before any commit: what a FULL manifest folds over (it
+    * replaces everything), and the base of a log's first commit.
+    */
+  private val NoState = Version(0, "", 0, Nil)
+
+  /** A DELTA delists its removes and appends its adds over `prev`; a FULL
+    * manifest is the same fold over [[NoState]]. Deltas never carry `txn=`
+    * or `colmap=` lines (renames commit FULL), so the union with the base's
+    * sets only ever adds a full manifest's own.
+    */
   private def foldResolved(prev: Option[Version], raw: Raw): Version = {
+    val base =
+      if (raw.full) NoState
+      else prev.getOrElse(throw new IllegalStateException(
+        s"delta manifest v${raw.n} has no reconstructable base (missing checkpoint)"))
     val opTxn: Set[Long] = raw.op match {
       case StreamBatchOp(id) => Set(id.toLong)
       case _ => Set.empty
     }
-    if (raw.full)
-      Version(raw.n, raw.op, raw.parent, raw.entries.map(_.path),
-        raw.entries.collect { case e if e.ranges.nonEmpty => e.path -> e.ranges }.toMap,
-        raw.statsCols, raw.txns ++ opTxn, raw.schema,
-        raw.entries.collect { case e if e.size >= 0 => e.path -> e.size }.toMap,
-        raw.ts, raw.constraints, raw.colMap,
-        bloomCols = raw.bloomCols, blooms = raw.blooms, dvs = raw.dvs,
-        nulls = raw.nulls)
-    else {
-      val base = prev.getOrElse(throw new IllegalStateException(
-        s"delta manifest v${raw.n} has no reconstructable base (missing checkpoint)"))
-      val removed = raw.removed.toSet
-      Version(raw.n, raw.op, raw.parent,
-        base.files.filterNot(removed) ++ raw.entries.map(_.path),
-        (base.stats -- removed) ++
-          raw.entries.collect { case e if e.ranges.nonEmpty => e.path -> e.ranges },
-        if (raw.statsCols.nonEmpty) raw.statsCols else base.statsCols,
-        base.txns ++ opTxn,
-        raw.schema.orElse(base.schema), // deltas inherit; checked at commit
-        (base.sizes -- removed) ++
-          raw.entries.collect { case e if e.size >= 0 => e.path -> e.size },
-        raw.ts, // each version's OWN commit time, never inherited
-        base.constraints ++ raw.constraints, // deltas only ever ADD constraints
-        base.colMap, // deltas never change the mapping (renames commit FULL)
-        bloomCols = if (raw.bloomCols.nonEmpty) raw.bloomCols else base.bloomCols,
-        blooms = base.blooms.filterNot { case ((f, _), _) => removed(f) } ++ raw.blooms,
-        dvs = foldDvs(base.dvs, removed, raw.dvs),
-        nulls = (base.nulls -- removed) ++ raw.nulls)
-    }
+    val removed = raw.removed.toSet
+    Version(raw.n, raw.op, raw.parent,
+      base.files.filterNot(removed) ++ raw.entries.map(_.path),
+      (base.stats -- removed) ++
+        raw.entries.collect { case e if e.ranges.nonEmpty => e.path -> e.ranges },
+      if (raw.statsCols.nonEmpty) raw.statsCols else base.statsCols,
+      base.txns ++ raw.txns ++ opTxn,
+      raw.schema.orElse(base.schema), // deltas inherit; checked at commit
+      (base.sizes -- removed) ++
+        raw.entries.collect { case e if e.size >= 0 => e.path -> e.size },
+      raw.ts, // each version's OWN commit time, never inherited
+      base.constraints ++ raw.constraints, // deltas only ever ADD constraints
+      base.colMap ++ raw.colMap,
+      bloomCols = if (raw.bloomCols.nonEmpty) raw.bloomCols else base.bloomCols,
+      blooms = base.blooms.filterNot { case ((f, _), _) => removed(f) } ++
+        raw.entries.flatMap(e => e.blooms.map { case (c, bits) => (e.path, c) -> bits }),
+      dvs = foldDvs(base.dvs, removed, raw.dvs),
+      nulls = (base.nulls -- removed) ++
+        raw.entries.collect { case e if e.rowCount >= 0 => e.path -> (e.rowCount, e.nullCounts) })
   }
 
   /** All committed versions with fully-reconstructed state, ascending. This
@@ -551,8 +556,8 @@ object Versioned {
 
   /** Hot-path hooks for the STREAMING SOURCE half of the loop
     * ([[graft.streaming.VersionedStreamSource]], ST19): head discovery and
-    * the per-version ADD/REMOVE delta, both listing-free. `addedFiles(n)`
-    * is the micro-batch the streaming read of commit `n` serves — the
+    * the per-version ADD/REMOVE delta, both listing-free. The files commit
+    * `n` added are the micro-batch the streaming read of it serves — the
     * Delta streaming-source shape (each commit = one batch of its added
     * files); a nonzero REMOVE count marks a change commit, which the
     * source fails on by default (rewrites re-add already-streamed rows —
@@ -563,29 +568,19 @@ object Versioned {
 
   private[graft] def versionState(root: String, n: Int): Version = stateAt(root, n)
 
-  /** Root-relative (path, size) of the files version `n` ADDED over its
-    * predecessor; size -1 when the manifest predates fmt=3 (callers stat).
-    */
-  private[graft] def addedFiles(root: String, n: Int): Seq[(String, Long)] =
-    addedAndRemoved(root, n)._1
-
-  /** The files version `n` ADDED and the count it REMOVED, in one pair of
-    * checkpoint-bounded state reads. A nonzero removed count marks a
-    * CHANGE commit (COW merge/delete, compact, zorder) — the signal the
-    * streaming source's fail-on-changes guard keys off: such a commit's
-    * "adds" are rewrites of already-streamed rows, not new data.
-    */
-  private[graft] def addedAndRemoved(root: String, n: Int): (Seq[(String, Long)], Int) = {
-    val (a, r, _) = addedRemovedPending(root, n)
-    (a, r)
-  }
-
-  /** [[addedAndRemoved]] plus whether version `n` is an UNRESOLVED staged
-    * txn commit (vt23) — the streaming source must not advance past one:
-    * its add-set is empty NOW but becomes the txn's files when the marker
-    * commits, and an offset already past it would silently skip them.
-    * Pending results must never be memoized (resolution changes them);
-    * committed/aborted resolutions are terminal and cache fine.
+  /** The root-relative (path, size) of the files version `n` ADDED over its
+    * predecessor (size -1 when the manifest predates fmt=3; callers stat),
+    * the count it REMOVED, and whether it is an UNRESOLVED staged txn
+    * commit (vt23), in one pair of checkpoint-bounded state reads.
+    *
+    * A nonzero removed count marks a CHANGE commit (COW merge/delete,
+    * compact, zorder) — the signal the streaming source's fail-on-changes
+    * guard keys off: such a commit's "adds" are rewrites of already-streamed
+    * rows, not new data. The source must not advance past a pending staged
+    * commit: its add-set is empty NOW but becomes the txn's files when the
+    * marker commits, and an offset already past it would silently skip
+    * them. Pending results must never be memoized (resolution changes
+    * them); committed/aborted resolutions are terminal and cache fine.
     */
   private[graft] def addedRemovedPending(root: String, n: Int)
       : (Seq[(String, Long)], Int, Boolean) = {
@@ -613,131 +608,145 @@ object Versioned {
   // number directly — a single-threaded test can't interleave two appends
   // between version selection and promote
   private[graft] def writeManifest(root: String, v: Version): Version =
-    promoteState(root, v, renderFull(v), full = true)
+    commit(root, None, checkpoint(v))
 
-  private def renderFull(v: Version): String = {
-    val head = s"op=${v.op} parent=${v.parent} fmt=$ManifestFormat full=1" +
-      (if (v.ts >= 0) s" ts=${v.ts}" else "") +
-      (if (v.statsCols.nonEmpty) s" stats=${v.statsCols.mkString(",")}" else "") +
-      (if (v.bloomCols.nonEmpty) s" bloom=${v.bloomCols.mkString(",")}" else "")
-    (head +: (v.schema.map(s => s"schema=$s").toSeq ++
-      v.constraints.map { case (nm, sql) => s"constraint=$nm:$sql" } ++
-      v.colMap.toSeq.sorted.map { case (l, p) => s"colmap=$l:$p" } ++
-      v.blooms.toSeq.sortBy(_._1).map { case ((f, c), bits) =>
-        s"bloom=$c:${bloomB64(bits)}:$f" } ++
-      v.dvs.toSeq.sortBy(_._1).flatMap { case (f, atts) =>
-        atts.map { case (sc, cnt) => s"dv=$cnt|$sc|$f" } } ++
-      v.nulls.toSeq.sortBy(_._1).map { case (f, (rc, ncs)) =>
-        s"nulls=${(rc +: ncs).mkString(",")}|$f" } ++
-      v.txns.toSeq.sorted.map(t => s"txn=$t") ++ v.files.map { f =>
-      val sz = v.sizes.getOrElse(f, -1L)
-      (Seq(f, sz.toString) ++
-        v.stats.getOrElse(f, Nil).flatMap { case (mn, mx) => Seq(mn.toString, mx.toString) })
-        .mkString("|")
-    })).mkString("\n")
-  }
-
-  private def renderDelta(op: String, parent: Int, statsCols: Seq[String],
-      added: Seq[FileEntry], removed: Seq[String],
-      schema: Option[String] = None, ts: Long = -1L,
-      addedConstraints: Seq[(String, String)] = Nil,
-      txnMarker: Option[String] = None,
-      bloomCols: Seq[String] = Nil,
-      dvAttach: Map[String, Seq[(String, Long)]] = Map.empty): String = {
-    val head = s"op=$op parent=$parent fmt=$ManifestFormat" +
-      (if (ts >= 0) s" ts=$ts" else "") +
-      (if (statsCols.nonEmpty) s" stats=${statsCols.mkString(",")}" else "") +
-      (if (bloomCols.nonEmpty) s" bloom=${bloomCols.mkString(",")}" else "")
+  /** The manifest text of `raw`; [[parseManifest]] is its inverse. A FULL
+    * manifest lists a state, whose per-file bloom and null-count lines have
+    * no order of their own, so they go sorted by path (and bloom column);
+    * a delta's follow its entries. Unprefixed file lines mark a full
+    * manifest, `-`/`+` a delta's removes and adds.
+    */
+  private[graft] def render(raw: Raw): String = {
+    val head = s"op=${raw.op} parent=${raw.parent} fmt=$ManifestFormat" +
+      (if (raw.full) " full=1" else "") +
+      (if (raw.ts >= 0) s" ts=${raw.ts}" else "") +
+      (if (raw.statsCols.nonEmpty) s" stats=${raw.statsCols.mkString(",")}" else "") +
+      (if (raw.bloomCols.nonEmpty) s" bloom=${raw.bloomCols.mkString(",")}" else "")
+    val perFile =
+      if (raw.full) raw.entries.sortBy(_.path).map(e => e.copy(blooms = e.blooms.sortBy(_._1)))
+      else raw.entries
     // a schema line on a DELTA overrides the inherited contract going
     // forward (fold's raw.schema.orElse(base.schema)) — evolve()'s hook;
     // constraint lines on a delta are the commit's ADDED constraints;
-    // bloom lines are the ADDED files' bloom bits; dv lines are this
-    // commit's ATTACHED deletion vectors (fold appends them per file)
-    (head +: (schema.map(s => s"schema=$s").toSeq ++
-      txnMarker.map(m => s"txnmarker=$m").toSeq ++
-      addedConstraints.map { case (nm, sql) => s"constraint=$nm:$sql" } ++
-      added.flatMap(e => e.blooms.map { case (c, bits) =>
+    // dv lines on a delta are its ATTACHED deletion vectors (fold appends
+    // them per file)
+    (head +: (raw.schema.map(s => s"schema=$s").toSeq ++
+      raw.txnMarker.map(m => s"txnmarker=$m") ++
+      raw.constraints.map { case (nm, sql) => s"constraint=$nm:$sql" } ++
+      raw.colMap.toSeq.sorted.map { case (l, p) => s"colmap=$l:$p" } ++
+      perFile.flatMap(e => e.blooms.map { case (c, bits) =>
         s"bloom=$c:${bloomB64(bits)}:${e.path}" }) ++
-      dvAttach.toSeq.sortBy(_._1).flatMap { case (f, atts) =>
+      raw.dvs.toSeq.sortBy(_._1).flatMap { case (f, atts) =>
         atts.map { case (sc, cnt) => s"dv=$cnt|$sc|$f" } } ++
-      added.collect { case e if e.rowCount >= 0 =>
+      perFile.collect { case e if e.rowCount >= 0 =>
         s"nulls=${(e.rowCount +: e.nullCounts).mkString(",")}|${e.path}" } ++
-      removed.map("-" + _) ++ added.map { e =>
-      "+" + (Seq(e.path, e.size.toString) ++
+      raw.txns.toSeq.sorted.map(t => s"txn=$t") ++
+      raw.removed.map("-" + _) ++ raw.entries.map { e =>
+      (if (raw.full) "" else "+") + (Seq(e.path, e.size.toString) ++
         e.ranges.flatMap { case (mn, mx) => Seq(mn.toString, mx.toString) }).mkString("|")
     })).mkString("\n")
   }
 
-  /** Commit `added` (and delist `removed`) as the next version on top of
-    * the current state — the ONE metadata write path behind every append
-    * and the copy-on-write DML. Writes a DELTA manifest (O(commit) bytes)
-    * unless this version number is a checkpoint multiple or the log is
-    * empty, in which case it writes a FULL one. `private[graft]` so the
-    * checkpoint-cadence spec can drive a 1000-commit log without a thousand
-    * Spark writes. Re-reads the log each call; [[commitOn]] is the
-    * single-read variant for callers that already planned the head.
+  /** State `v` as the FULL manifest that folds back to it (its pending-txn
+    * flag aside): the checkpoint a commit writes in place of its delta.
+    */
+  private def checkpoint(v: Version): Raw = {
+    val blooms = v.blooms.toSeq.groupMap(_._1._1) { case ((_, c), bits) => c -> bits }
+    Raw(v.n, v.op, v.parent, full = true, v.statsCols,
+      v.files.map { f =>
+        val (rc, ncs) = v.nulls.getOrElse(f, (-1L, Nil))
+        FileEntry(f, v.stats.getOrElse(f, Nil), v.sizes.getOrElse(f, -1L),
+          blooms.getOrElse(f, Nil), rc, ncs)
+      },
+      txns = v.txns, schema = v.schema, ts = v.ts, constraints = v.constraints,
+      colMap = v.colMap, bloomCols = v.bloomCols, dvs = v.dvs)
+  }
+
+  /** The delta record of commit `op` on top of `cur`: numbered and
+    * parented after it, and tracking `statsCols`/`bloomCols`, else the
+    * table's own. Writers add their files and contract changes with `copy`.
+    */
+  private def next(cur: Option[Version], op: String, statsCols: Seq[String] = Nil,
+      bloomCols: Seq[String] = Nil): Raw =
+    Raw(cur.fold(1)(_.n + 1), op, cur.fold(0)(_.n),
+      statsCols = if (statsCols.nonEmpty) statsCols else cur.fold(Seq.empty[String])(_.statsCols),
+      bloomCols = if (bloomCols.nonEmpty) bloomCols else cur.fold(Seq.empty[String])(_.bloomCols))
+
+  /** `cur`'s whole state as the FULL record of commit `op` on top of it —
+    * the base of the metadata-only rewrites (drop a constraint, drop or
+    * rename a column).
+    */
+  private def restated(cur: Version, op: String): Raw =
+    checkpoint(cur).copy(n = cur.n + 1, op = op, parent = cur.n)
+
+  /** Commit `added` (and delist `removed`) as the next version — the
+    * metadata-only entry point the checkpoint-cadence and concurrency specs
+    * drive (a 1000-commit log without a thousand Spark writes). Re-reads
+    * the log each call.
     */
   private[graft] def commitFiles(root: String, op: String, added: Seq[FileEntry],
       statsCols: Seq[String], schemaDDL: Option[String] = None,
-      removed: Seq[String] = Nil): Version =
-    commitOn(root, currentVersion(root), op, added, removed, statsCols, schemaDDL)
+      removed: Seq[String] = Nil): Version = {
+    val cur = currentVersion(root)
+    commit(root, cur, next(cur, op, statsCols).copy(entries = added, removed = removed),
+      schemaDDL)
+  }
 
-  private def commitOn(root: String, cur: Option[Version], op: String,
-      added: Seq[FileEntry], removed: Seq[String], statsCols: Seq[String],
-      schemaDDL: Option[String], bloomCols: Seq[String] = Nil,
-      dvAttach: Map[String, Seq[(String, Long)]] = Map.empty): Version = {
-    dvAttach.keys.foreach(f => require(cur.exists(_.files.contains(f)),
-      s"dv attach targets $f, which the current version does not list"))
+  /** Commit `raw` as the next version on top of `cur` — the ONE write path
+    * of the log: every append, merge, delete, update, DV attach and purge,
+    * compaction, overwrite, rollback, clone, constraint, evolve and staged
+    * verb promotes its manifest here.
+    *
+    * A delta is checked against `cur` first: its removes and dv targets
+    * must be listed, its stats and bloom columns must be the table's, and
+    * `schemaDDL` (the commit's data schema) must match the recorded
+    * contract. The commit is stamped with its wall time ([[commitTs]]), and
+    * a log's first commit records `schemaDDL` as the contract.
+    * The record is written FULL when it is one (overwrite, compaction, …)
+    * or lands on v1 or a [[CheckpointInterval]] multiple, else as the delta
+    * (O(commit) bytes); a staged record (txn marker) always stays a delta,
+    * because an aborted full manifest could not fold as a no-op. The
+    * returned state is the readers' own fold of what was written; a staged
+    * one is flagged `pendingTxn`, reflecting the txn OPTIMISTICALLY (as if
+    * it commits) — readers see the passthrough until the marker resolves.
+    */
+  private def commit(root: String, cur: Option[Version], raw: Raw,
+      schemaDDL: Option[String] = None): Version = {
+    val staged = raw.txnMarker.isDefined
     requireNoPendingTxn(cur, root)
-    require(statsCols.isEmpty || cur.forall(c => c.statsCols.isEmpty || c.statsCols == statsCols),
-      s"table tracks stats on ${cur.map(_.statsCols)}, not $statsCols")
-    require(bloomCols.isEmpty || cur.forall(c => c.bloomCols.isEmpty || c.bloomCols == bloomCols),
-      s"table tracks blooms on ${cur.map(_.bloomCols)}, not $bloomCols")
-    // schema guard: a multi-file parquet read takes ONE footer's schema, so
-    // appending a different column set would silently drop columns at read
-    // time — refuse here instead; schema EVOLUTION is overwrite()'s job
-    // (a full manifest records the new contract)
-    for (s <- schemaDDL; c <- cur; t <- c.schema)
-      require(t == s, s"schema drift on append: table at $root is `$t`, commit is `$s` — " +
-        "appends must match; evolve the schema with overwrite()")
-    val curFiles = cur.map(_.files.toSet).getOrElse(Set.empty)
-    removed.foreach(f => require(curFiles.contains(f),
-      s"commit removes $f, which the current version does not list"))
-    val n = cur.map(_.n + 1).getOrElse(1)
-    val opTxn: Set[Long] = op match {
-      case StreamBatchOp(id) => Set(id.toLong)
-      case _ => Set.empty
+    if (!raw.full) {
+      raw.dvs.keys.foreach(f => require(cur.exists(_.files.contains(f)),
+        s"dv attach targets $f, which the current version does not list"))
+      require(raw.statsCols.isEmpty ||
+          cur.forall(c => c.statsCols.isEmpty || c.statsCols == raw.statsCols),
+        s"table tracks stats on ${cur.map(_.statsCols)}, not ${raw.statsCols}")
+      require(raw.bloomCols.isEmpty ||
+          cur.forall(c => c.bloomCols.isEmpty || c.bloomCols == raw.bloomCols),
+        s"table tracks blooms on ${cur.map(_.bloomCols)}, not ${raw.bloomCols}")
+      // schema guard: a multi-file parquet read takes ONE footer's schema,
+      // so appending a different column set would silently drop columns at
+      // read time — refuse here instead; schema EVOLUTION is overwrite()'s
+      // job (a full manifest records the new contract)
+      for (s <- schemaDDL; c <- cur; t <- c.schema)
+        require(t == s,
+          if (staged) s"schema drift on staged commit: table at $root is `$t`, " +
+            s"commit is `$s` — staged writes must match the contract"
+          else s"schema drift on append: table at $root is `$t`, commit is `$s` — " +
+            "appends must match; evolve the schema with overwrite()")
+      val curFiles = cur.map(_.files.toSet).getOrElse(Set.empty)
+      raw.removed.foreach(f => require(curFiles.contains(f),
+        s"${if (staged) "staged commit" else "commit"} removes $f, which the current " +
+          "version does not list"))
     }
-    val removedSet = removed.toSet
-    val cols = if (statsCols.nonEmpty) statsCols else cur.map(_.statsCols).getOrElse(Nil)
-    val bCols = if (bloomCols.nonEmpty) bloomCols else cur.map(_.bloomCols).getOrElse(Nil)
-    val state = Version(n, op, cur.map(_.n).getOrElse(0),
-      cur.map(_.files).getOrElse(Nil).filterNot(removedSet) ++ added.map(_.path),
-      (cur.map(_.stats).getOrElse(Map.empty) -- removedSet) ++
-        added.collect { case e if e.ranges.nonEmpty => e.path -> e.ranges },
-      cols, cur.map(_.txns).getOrElse(Set.empty) ++ opTxn,
-      schemaDDL.orElse(cur.flatMap(_.schema)),
-      (cur.map(_.sizes).getOrElse(Map.empty) -- removedSet) ++
-        added.collect { case e if e.size >= 0 => e.path -> e.size },
-      commitTs(cur), cur.map(_.constraints).getOrElse(Nil),
-      // the mapping rides every commit: a checkpoint-numbered delta renders
-      // FULL, and a full manifest dropping the colmap would silently break
-      // every read of renamed columns
-      cur.map(_.colMap).getOrElse(Map.empty),
-      bloomCols = bCols,
-      blooms = cur.map(_.blooms).getOrElse(Map.empty)
-        .filterNot { case ((f, _), _) => removedSet(f) } ++
-        added.flatMap(e => e.blooms.map { case (c, bits) => (e.path, c) -> bits }),
-      dvs = foldDvs(cur.map(_.dvs).getOrElse(Map.empty), removedSet, dvAttach),
-      nulls = (cur.map(_.nulls).getOrElse(Map.empty) -- removedSet) ++
-        added.collect { case e if e.rowCount >= 0 =>
-          e.path -> (e.rowCount, e.nullCounts) })
-    if (n == 1 || n % CheckpointInterval == 0)
-      promoteState(root, state, renderFull(state), full = true)
-    else
-      promoteState(root, state,
-        renderDelta(op, state.parent, cols, added, removed, ts = state.ts,
-          bloomCols = bCols, dvAttach = dvAttach), full = false)
+    val first = raw.copy(ts = commitTs(cur),
+      schema = if (cur.isEmpty) raw.schema.orElse(schemaDDL) else raw.schema)
+    val base = Some(cur.getOrElse(NoState))
+    val written =
+      if (first.full || staged || (first.n != 1 && first.n % CheckpointInterval != 0)) first
+      else checkpoint(foldResolved(base, first))
+    val state = foldResolved(base, written)
+    promoteState(root, written.n, render(written), written.full)
+    if (staged) state.copy(pendingTxn = raw.txnMarker) else state
   }
 
   /** The wall-time a commit records (vt19): now, clamped MONOTONIC against
@@ -749,24 +758,22 @@ object Versioned {
   private def commitTs(parent: Option[Version]): Long =
     math.max(System.currentTimeMillis(), parent.map(_.ts).getOrElse(-1L))
 
-  private def promoteState(root: String, state: Version, body: String,
-      full: Boolean): Version = {
+  private def promoteState(root: String, n: Int, body: String, full: Boolean): Unit = {
     Files.createDirectories(vlogDir(root))
-    val tmp = Files.createTempFile(vlogDir(root), s".v${state.n}-", ".staged")
+    val tmp = Files.createTempFile(vlogDir(root), s".v$n-", ".staged")
     Files.writeString(tmp, body)
     // atomic promote via hard link: POSIX rename REPLACES silently (so an
     // ATOMIC_MOVE would let the second writer clobber the first), while
     // link(2) fails with EEXIST — fully-written content appears under the
     // final name in one atomic step, and a concurrent winner loses loudly.
-    try Files.createLink(manifestPath(root, state.n), tmp)
+    try Files.createLink(manifestPath(root, n), tmp)
     catch { case e: java.nio.file.FileAlreadyExistsException =>
       throw new IllegalStateException(
-        s"concurrent commit: version ${state.n} already exists at $root " +
+        s"concurrent commit: version $n already exists at $root " +
           "(re-read the log and retry on top of it)", e)
     }
     finally Files.deleteIfExists(tmp)
-    if (full) writePointer(root, state.n) // after the link: never points ahead
-    state
+    if (full) writePointer(root, n) // after the link: never points ahead
   }
 
   /** List the parquet files a finished Spark write left under `dataDir`,
@@ -914,7 +921,7 @@ object Versioned {
     sealing(marker) {
       validateConstraints(df.sparkSession, root,
         cur.map(_.constraints).getOrElse(Nil), files, Some(ddl), cmap)
-      commitOn(root, cur, "append", plainEntries(files), Nil, Nil, Some(ddl))
+      commit(root, cur, next(cur, "append").copy(entries = plainEntries(files)), Some(ddl))
     }
   }
 
@@ -954,10 +961,9 @@ object Versioned {
     sealing(marker) {
       // footer stats; a constrained or bloom-tracked table instead pays
       // one landed-files scan that fuses the check and the bloom build
-      commitOn(root, cur, "append",
+      commit(root, cur, next(cur, "append", statsCols, bCols).copy(entries =
         statsEntriesValidating(df.sparkSession, root, files, ddl, statsCols,
-          cur.map(_.constraints).getOrElse(Nil), cmap, bCols), Nil, statsCols, Some(ddl),
-        bloomCols = bCols)
+          cur.map(_.constraints).getOrElse(Nil), cmap, bCols)), Some(ddl))
     }
   }
 
@@ -1328,8 +1334,8 @@ object Versioned {
           validateConstraints(df.sparkSession, root, cons, files, Some(ddl), cmap)
           validated = cons
         }
-        try committed = Some(
-          commitOn(root, head, "append", plainEntries(files), Nil, Nil, Some(ddl)))
+        try committed = Some(commit(root, head,
+          next(head, "append").copy(entries = plainEntries(files)), Some(ddl)))
         catch {
           case e: IllegalStateException if e.getMessage.startsWith("concurrent commit") =>
             attempt += 1
@@ -1403,15 +1409,9 @@ object Versioned {
       if (cur.statsCols.isEmpty) plainEntries(files)
       else statsEntries(spark, root, files, normalizedDDL(df), cur.statsCols,
         bloomCols = cur.bloomCols)
-    sealing(marker)(writeManifest(root, Version(n, "compact", cur.n, entries.map(_.path),
-      entries.collect { case e if e.ranges.nonEmpty => e.path -> e.ranges }.toMap,
-      cur.statsCols, cur.txns, cur.schema,
-      entries.collect { case e if e.size >= 0 => e.path -> e.size }.toMap,
-      commitTs(Some(cur)), cur.constraints,
-      bloomCols = cur.bloomCols,
-      blooms = entries.flatMap(e => e.blooms.map { case (c, b) => (e.path, c) -> b }).toMap,
-      nulls = entries.collect { case e if e.rowCount >= 0 =>
-        e.path -> (e.rowCount, e.nullCounts) }.toMap)))
+    sealing(marker)(commit(root, Some(cur), next(Some(cur), "compact").copy(full = true,
+      entries = entries, txns = cur.txns, schema = cur.schema,
+      constraints = cur.constraints)))
   }
 
   /** Single-column convenience overload. */
@@ -1457,16 +1457,9 @@ object Versioned {
     val (files, marker) = writeData(shaped, root, n, options)
     val entries = statsEntries(spark, root, files, normalizedDDL(shaped), zCols,
       bloomCols = cur.bloomCols)
-    sealing(marker)(writeManifest(root, Version(n, "compact-zorder", cur.n,
-      entries.map(_.path),
-      entries.collect { case e if e.ranges.nonEmpty => e.path -> e.ranges }.toMap,
-      zCols, cur.txns, cur.schema,
-      entries.collect { case e if e.size >= 0 => e.path -> e.size }.toMap,
-      commitTs(Some(cur)), cur.constraints,
-      bloomCols = cur.bloomCols,
-      blooms = entries.flatMap(e => e.blooms.map { case (c, b) => (e.path, c) -> b }).toMap,
-      nulls = entries.collect { case e if e.rowCount >= 0 =>
-        e.path -> (e.rowCount, e.nullCounts) }.toMap)))
+    sealing(marker)(commit(root, Some(cur), next(Some(cur), "compact-zorder", zCols)
+      .copy(full = true, entries = entries, txns = cur.txns, schema = cur.schema,
+        constraints = cur.constraints)))
   }
 
   /** The files of version `v` whose recorded ranges overlap EVERY bound in
@@ -1674,12 +1667,9 @@ object Versioned {
     val entries =
       if (cur.statsCols.isEmpty) plainEntries(files)
       else statsEntries(spark, root, files, ddl, cur.statsCols, cur.colMap, cur.bloomCols)
-    sealing(marker)(staged match {
-      case Some(m) => commitOnStaged(root, Some(cur), "txn-delete", entries, affected,
-        Some(ddl), m)
-      case None => commitOn(root, Some(cur), "delete", entries, affected,
-        cur.statsCols, Some(ddl))
-    })
+    sealing(marker)(commit(root, Some(cur),
+      next(Some(cur), if (staged.isEmpty) "delete" else "txn-delete")
+        .copy(entries = entries, removed = affected, txnMarker = staged), Some(ddl)))
   }
 
   /** VT25: copy-on-write row-level UPDATE through the log — the third DML
@@ -1727,7 +1717,8 @@ object Versioned {
           plainEntries(files)
         } else statsEntriesValidating(spark, root, files, ddl, cur.statsCols,
           cur.constraints, cur.colMap, cur.bloomCols)
-      commitOn(root, Some(cur), "update", entries, affected, cur.statsCols, Some(ddl))
+      commit(root, Some(cur), next(Some(cur), "update").copy(entries = entries,
+        removed = affected), Some(ddl))
     }
   }
 
@@ -1906,8 +1897,8 @@ object Versioned {
       keyToFile.getOrElse(k, throw new IllegalStateException(
         s"dv sidecar records positions for unscanned file key $k")) -> Seq((sidecar, c))
     }
-    sealing(marker)(commitOn(root, Some(cur), op, addedFiles, Nil,
-      cur.statsCols, addedDDL, dvAttach = attach))
+    sealing(marker)(commit(root, Some(cur),
+      next(Some(cur), op).copy(entries = addedFiles, dvs = attach), addedDDL))
   }
 
   /** VT27 (maintenance half): fold accumulated deletion vectors back into
@@ -1956,8 +1947,8 @@ object Versioned {
         val entries =
           if (cur.statsCols.isEmpty) plainEntries(files)
           else statsEntries(spark, root, files, ddl, cur.statsCols, cur.colMap, cur.bloomCols)
-        sealing(marker)(commitOn(root, Some(cur), "purge-dv", entries, dvd,
-          cur.statsCols, Some(ddl)))
+        sealing(marker)(commit(root, Some(cur),
+          next(Some(cur), "purge-dv").copy(entries = entries, removed = dvd), Some(ddl)))
       }
     }
 
@@ -2019,13 +2010,13 @@ object Versioned {
           case None =>
             // first batch onto an empty log: plain append under the op name
             val (files, marker) = writeData(source, root, 1, Map.empty)
-            sealing(marker)(commitOn(root, None, op, plainEntries(files),
-              Nil, Nil, Some(normalizedDDL(source))))
+            sealing(marker)(commit(root, None,
+              next(None, op).copy(entries = plainEntries(files)), Some(normalizedDDL(source))))
           case Some(c) =>
             val merged = mergeOnState(spark, root, c, source, keys, orderCol, op)
             // empty source returned the same version: commit a zero-file
             // delta anyway so the batch id lands in the txn set
-            if (merged.n == c.n) commitOn(root, Some(c), op, Nil, Nil, Nil, None)
+            if (merged.n == c.n) commit(root, Some(c), next(Some(c), op))
             else merged
         })
       } catch {
@@ -2137,10 +2128,8 @@ object Versioned {
           plainEntries(files)
         } else statsEntriesValidating(spark, root, files, ddl, cur.statsCols,
           cur.constraints, cur.colMap, cur.bloomCols)
-      staged match {
-        case Some(m) => commitOnStaged(root, Some(cur), op, entries, affected, Some(ddl), m)
-        case None => commitOn(root, Some(cur), op, entries, affected, cur.statsCols, Some(ddl))
-      }
+      commit(root, Some(cur), next(Some(cur), op).copy(entries = entries,
+        removed = affected, txnMarker = staged), Some(ddl))
     }
   }
 
@@ -2241,15 +2230,10 @@ object Versioned {
           plainEntries(files)
         } else statsEntriesValidating(df.sparkSession, root, files, ddl, keptStats,
           keptConstraints, bloomCols = keptBlooms)
-      writeManifest(root, Version(n, "overwrite", cur.map(_.n).getOrElse(0),
-        entries.map(_.path),
-        entries.collect { case e if e.ranges.nonEmpty => e.path -> e.ranges }.toMap,
-        keptStats, cur.map(_.txns).getOrElse(Set.empty),
-        Some(ddl),
-        entries.collect { case e if e.size >= 0 => e.path -> e.size }.toMap,
-        commitTs(cur), keptConstraints,
-        bloomCols = if (keptStats.isEmpty) Nil else keptBlooms,
-        blooms = entries.flatMap(e => e.blooms.map { case (c, b) => (e.path, c) -> b }).toMap))
+      commit(root, cur, next(cur, "overwrite").copy(full = true, statsCols = keptStats,
+        entries = entries, txns = cur.map(_.txns).getOrElse(Set.empty), schema = Some(ddl),
+        constraints = keptConstraints,
+        bloomCols = if (keptStats.isEmpty) Nil else keptBlooms))
     }
   }
 
@@ -2274,16 +2258,12 @@ object Versioned {
         s"(first: ${missing.headOption.getOrElse("")})")
     val cur = currentVersion(root).get
     requireNoPendingTxn(Some(cur), root)
-    // the rollback restores the target's schema contract — and its
-    // CONSTRAINT set — along with its files (they ARE that schema, and they
-    // were validated under exactly those constraints)
-    writeManifest(root, Version(cur.n + 1, "rollback", to, target.files,
-      target.stats, target.statsCols, cur.txns, target.schema, target.sizes,
-      commitTs(Some(cur)), target.constraints,
-      target.colMap, // the target's files ARE that mapping's generation
-      bloomCols = target.bloomCols, blooms = target.blooms,
-      dvs = target.dvs, // the target's deletes ARE part of its state
-      nulls = target.nulls))
+    // the rollback restores the target's whole state — schema contract,
+    // CONSTRAINT set, column mapping and deletion vectors — along with its
+    // files (they ARE that schema and mapping's generation, validated under
+    // exactly those constraints)
+    commit(root, Some(cur), checkpoint(target).copy(n = cur.n + 1, op = "rollback",
+      parent = to, txns = cur.txns))
   }
 
   /** Retention (VT3): delete data files referenced ONLY by versions older
@@ -2356,22 +2336,13 @@ object Versioned {
     require(currentVersion(dstRoot).isEmpty,
       s"clone target $dstRoot already has committed versions")
     val srcP = Paths.get(srcRoot)
-    if (!deep) {
+    // (op, relocation of a data file, relocation of a DV sidecar); the
+    // relocated files keep the source's physical column names (its colmap)
+    val (op, file, sidecar): (String, String => String, String => String) = if (!deep) {
+      // DV sidecars are borrowed exactly like data files: absolute
+      // (inherited) paths, protected from the clone's own retention ops
       def abs(f: String): String = srcP.resolve(f).toString
-      writeManifest(dstRoot, Version(1, "clone", 0,
-        src.files.map(abs),
-        src.stats.map { case (f, r) => abs(f) -> r },
-        src.statsCols, Set.empty, src.schema, // fresh txn lineage — see scaladoc
-        src.sizes.map { case (f, s) => abs(f) -> s },
-        commitTs(None), src.constraints,
-        src.colMap, // the borrowed bytes carry the source's physical names
-        bloomCols = src.bloomCols,
-        blooms = src.blooms.map { case ((f, c), b) => (abs(f), c) -> b },
-        // DV sidecars are borrowed exactly like data files: absolute
-        // (inherited) paths, protected from the clone's own retention ops
-        dvs = src.dvs.map { case (f, atts) =>
-          abs(f) -> atts.map { case (sc, cnt) => (abs(sc), cnt) } },
-        nulls = src.nulls.map { case (f, v) => abs(f) -> v }))
+      ("clone", abs, abs)
     } else {
       // DEEP clone (Delta's `CLONE` without SHALLOW — the materializing
       // form): every source file is COPIED into one clone-local commit dir
@@ -2404,19 +2375,14 @@ object Versioned {
       // several files legally share one sidecar — copy each once
       val dvMapping: Map[String, String] = src.dvs.valuesIterator.flatten.map(_._1)
         .toSeq.distinct.map(sc => sc -> copyPreserving(sc)).toMap
-      writeManifest(dstRoot, Version(1, "clone-deep", 0,
-        src.files.map(mapping),
-        src.stats.map { case (f, r) => mapping(f) -> r },
-        src.statsCols, Set.empty, src.schema,
-        src.sizes.map { case (f, s) => mapping(f) -> s },
-        commitTs(None), src.constraints,
-        src.colMap, // byte-identical copies keep the physical column names
-        bloomCols = src.bloomCols,
-        blooms = src.blooms.map { case ((f, c), b) => (mapping(f), c) -> b },
-        dvs = src.dvs.map { case (f, atts) =>
-          mapping(f) -> atts.map { case (sc, cnt) => (dvMapping(sc), cnt) } },
-        nulls = src.nulls.map { case (f, v) => mapping(f) -> v }))
+      ("clone-deep", mapping, dvMapping)
     }
+    val r = checkpoint(src)
+    commit(dstRoot, None, r.copy(n = 1, op = op, parent = 0,
+      txns = Set.empty, // fresh txn lineage — see scaladoc
+      entries = r.entries.map(e => e.copy(path = file(e.path))),
+      dvs = src.dvs.map { case (f, atts) =>
+        file(f) -> atts.map { case (sc, cnt) => (sidecar(sc), cnt) } }))
   }
 
   // ---- vt23: MULTI-TABLE ATOMIC TRANSACTIONS — a two-phase marker commit
@@ -2487,54 +2453,9 @@ object Versioned {
     sealing(marker) {
       validateConstraints(df.sparkSession, root,
         cur.map(_.constraints).getOrElse(Nil), files, Some(ddl), cmap)
-      commitOnStaged(root, cur, "txn-append", plainEntries(files), Nil,
-        Some(ddl), txnMarkerBase)
+      commit(root, cur, next(cur, "txn-append").copy(entries = plainEntries(files),
+        txnMarker = Some(txnMarkerBase)), Some(ddl))
     }
-  }
-
-  /** The staged twin of [[commitOn]]: same guards (schema drift,
-    * removed-files-exist), but ALWAYS a delta manifest — even at checkpoint
-    * numbers — carrying the txn marker. The returned Version reflects the
-    * post-commit state OPTIMISTICALLY (as if the txn commits); readers
-    * re-reading the log see the passthrough until the marker resolves.
-    */
-  private def commitOnStaged(root: String, cur: Option[Version], op: String,
-      added: Seq[FileEntry], removed: Seq[String],
-      schemaDDL: Option[String], txnMarkerBase: String): Version = {
-    for (s <- schemaDDL; c <- cur; t <- c.schema)
-      require(t == s, s"schema drift on staged commit: table at $root is `$t`, " +
-        s"commit is `$s` — staged writes must match the contract")
-    val curFiles = cur.map(_.files.toSet).getOrElse(Set.empty)
-    removed.foreach(f => require(curFiles.contains(f),
-      s"staged commit removes $f, which the current version does not list"))
-    val n = cur.map(_.n + 1).getOrElse(1)
-    val removedSet = removed.toSet
-    val cols = cur.map(_.statsCols).getOrElse(Nil)
-    val state = Version(n, op, cur.map(_.n).getOrElse(0),
-      cur.map(_.files).getOrElse(Nil).filterNot(removedSet) ++ added.map(_.path),
-      (cur.map(_.stats).getOrElse(Map.empty) -- removedSet) ++
-        added.collect { case e if e.ranges.nonEmpty => e.path -> e.ranges },
-      cols, cur.map(_.txns).getOrElse(Set.empty),
-      schemaDDL.orElse(cur.flatMap(_.schema)),
-      (cur.map(_.sizes).getOrElse(Map.empty) -- removedSet) ++
-        added.collect { case e if e.size >= 0 => e.path -> e.size },
-      commitTs(cur), cur.map(_.constraints).getOrElse(Nil),
-      cur.map(_.colMap).getOrElse(Map.empty),
-      pendingTxn = Some(txnMarkerBase),
-      bloomCols = cur.map(_.bloomCols).getOrElse(Nil),
-      blooms = cur.map(_.blooms).getOrElse(Map.empty)
-        .filterNot { case ((f, _), _) => removed.contains(f) } ++
-        added.flatMap(e => e.blooms.map { case (c, bits) => (e.path, c) -> bits }),
-      dvs = cur.map(_.dvs).getOrElse(Map.empty).filterNot { case (f, _) => removedSet(f) },
-      nulls = (cur.map(_.nulls).getOrElse(Map.empty) -- removedSet) ++
-        added.collect { case e if e.rowCount >= 0 =>
-          e.path -> (e.rowCount, e.nullCounts) })
-    promoteState(root, state,
-      renderDelta(op, state.parent, cols, added, removed,
-        schema = if (cur.isEmpty) schemaDDL else None,
-        ts = state.ts, txnMarker = Some(txnMarkerBase),
-        bloomCols = state.bloomCols),
-      full = false)
   }
 
   /** Staged copy-on-write MERGE — [[mergeInto]]'s full machinery (per-key
@@ -2760,14 +2681,9 @@ object Versioned {
         .filter(!coalesce(expr(checkSql), lit(true))).count()
     require(violations == 0L,
       s"cannot add constraint `$name` ($checkSql): $violations existing row(s) violate it")
-    val state = cur.copy(n = cur.n + 1, op = "constrain", parent = cur.n,
-      ts = commitTs(Some(cur)), constraints = cur.constraints :+ (name -> checkSql))
-    if (state.n % CheckpointInterval == 0)
-      promoteState(root, state, renderFull(state), full = true)
-    else
-      promoteState(root, state,
-        renderDelta("constrain", cur.n, cur.statsCols, Nil, Nil, ts = state.ts,
-          addedConstraints = Seq(name -> checkSql)), full = false)
+    // a contract-only delta names no bloom columns: readers inherit them
+    commit(root, Some(cur), next(Some(cur), "constrain")
+      .copy(constraints = Seq(name -> checkSql), bloomCols = Nil))
   }
 
   /** NOT NULL as a CHECK constraint: `col IS NOT NULL` is never unknown, so
@@ -2789,8 +2705,8 @@ object Versioned {
     requireNoPendingTxn(Some(cur), root)
     require(cur.constraints.exists(_._1 == name),
       s"no constraint `$name` on $root (have: ${cur.constraints.map(_._1).mkString(", ")})")
-    writeManifest(root, cur.copy(n = cur.n + 1, op = "deconstrain", parent = cur.n,
-      ts = commitTs(Some(cur)), constraints = cur.constraints.filterNot(_._1 == name)))
+    commit(root, Some(cur), restated(cur, "deconstrain")
+      .copy(constraints = cur.constraints.filterNot(_._1 == name)))
   }
 
   /** One commit-sized count aggregate proving `files` satisfy every
@@ -3095,8 +3011,8 @@ object Versioned {
             plainEntries(files)
           } else statsEntriesValidating(df.sparkSession, root, files, ddl, statsCols, cons,
             cmap, cur.map(_.bloomCols).getOrElse(Nil))
-        commitOn(root, cur, s"stream-batch-$batchId",
-          entries, Nil, statsCols, Some(ddl))
+        commit(root, cur, next(cur, s"stream-batch-$batchId", statsCols).copy(entries = entries),
+          Some(ddl))
       })
     }
   }
@@ -3499,14 +3415,8 @@ object Versioned {
         "materialize the rename and free the physical namespace"))
     val newDDL = org.apache.spark.sql.types.StructType(
       (old.fields ++ added.fields).map(_.copy(nullable = true))).toDDL
-    val state = cur.copy(n = cur.n + 1, op = "evolve", parent = cur.n,
-      schema = Some(newDDL), ts = commitTs(Some(cur)))
-    if (state.n % CheckpointInterval == 0)
-      promoteState(root, state, renderFull(state), full = true)
-    else
-      promoteState(root, state,
-        renderDelta("evolve", cur.n, cur.statsCols, Nil, Nil, Some(newDDL),
-          ts = state.ts), full = false)
+    commit(root, Some(cur), next(Some(cur), "evolve")
+      .copy(schema = Some(newDDL), bloomCols = Nil))
   }
 
   /** VT16b: metadata-only DROP COLUMN — the other half of [[evolve]]'s
@@ -3556,42 +3466,25 @@ object Versioned {
     // go too — and deltas carry neither: commit FULL in those cases
     val dropsMapped = dropCols.exists(cur.colMap.contains)
     val dropsBloom = dropCols.exists(cur.bloomCols.contains)
-    if (droppedTrackedIdx.isEmpty && !dropsMapped && !dropsBloom) {
+    if (droppedTrackedIdx.isEmpty && !dropsMapped && !dropsBloom)
       // plain contract shrink: one delta line, evolve()'s shape
-      val state = cur.copy(n = cur.n + 1, op = "evolve-drop", parent = cur.n,
-        schema = Some(newDDL), ts = commitTs(Some(cur)))
-      if (state.n % CheckpointInterval == 0)
-        promoteState(root, state, renderFull(state), full = true)
-      else
-        promoteState(root, state,
-          renderDelta("evolve-drop", cur.n, cur.statsCols, Nil, Nil, Some(newDDL),
-            ts = state.ts), full = false)
-    } else if (droppedTrackedIdx.isEmpty) {
-      // mapped/bloomed-column drop: metadata-only FULL manifest, entries gone
-      writeManifest(root, cur.copy(n = cur.n + 1, op = "evolve-drop", parent = cur.n,
-        schema = Some(newDDL), ts = commitTs(Some(cur)),
-        colMap = cur.colMap -- dropCols,
-        bloomCols = cur.bloomCols.filterNot(dropCols.contains),
-        blooms = cur.blooms.filterNot { case ((_, c), _) => dropCols.contains(c) }))
-    } else {
-      // a tracked column drops out: per-file ranges are POSITIONAL against
-      // statsCols, so re-align both and commit FULL (it lists every file's
-      // entry with the shrunk ranges — still zero data files touched)
+      commit(root, Some(cur), next(Some(cur), "evolve-drop")
+        .copy(schema = Some(newDDL), bloomCols = Nil))
+    else {
+      // per-file ranges and null counts are POSITIONAL against statsCols,
+      // so a tracked column's drop re-aligns them; the FULL manifest lists
+      // every file's entry with the shrunk ranges, without the dropped
+      // columns' bloom bits — still zero data files touched
       val keepIdx = cur.statsCols.indices.filterNot(droppedTrackedIdx.contains)
-      val state = cur.copy(n = cur.n + 1, op = "evolve-drop", parent = cur.n,
-        schema = Some(newDDL), ts = commitTs(Some(cur)),
-        statsCols = keepIdx.map(cur.statsCols),
-        stats = cur.stats.map { case (f, rs) =>
-          f -> keepIdx.collect { case i if i < rs.length => rs(i) }
-        }.filter(_._2.nonEmpty),
+      def kept[A](xs: Seq[A]): Seq[A] = keepIdx.collect { case i if i < xs.length => xs(i) }
+      val r = restated(cur, "evolve-drop")
+      commit(root, Some(cur), r.copy(schema = Some(newDDL),
+        statsCols = kept(cur.statsCols),
+        entries = r.entries.map(e => e.copy(ranges = kept(e.ranges),
+          blooms = e.blooms.filterNot { case (c, _) => dropCols.contains(c) },
+          nullCounts = kept(e.nullCounts))),
         colMap = cur.colMap -- dropCols,
-        bloomCols = cur.bloomCols.filterNot(dropCols.contains),
-        blooms = cur.blooms.filterNot { case ((_, c), _) => dropCols.contains(c) },
-        // per-file null counts are positional against statsCols too
-        nulls = cur.nulls.map { case (f, (rc, ncs)) =>
-          f -> (rc, keepIdx.collect { case i if i < ncs.length => ncs(i) }.toSeq)
-        })
-      writeManifest(root, state)
+        bloomCols = cur.bloomCols.filterNot(dropCols.contains)))
     }
   }
 
@@ -3635,15 +3528,16 @@ object Versioned {
     val newMap = ((cur.colMap - from) + (to -> physical)).filter { case (l, p) => l != p }
     val newDDL = org.apache.spark.sql.types.StructType(old.fields.map(f =>
       (if (f.name == from) f.copy(name = to) else f).copy(nullable = true))).toDDL
-    writeManifest(root, cur.copy(n = cur.n + 1, op = "evolve-rename", parent = cur.n,
-      schema = Some(newDDL), ts = commitTs(Some(cur)),
-      statsCols = cur.statsCols.map(c => if (c == from) to else c),
+    def renamed(c: String): String = if (c == from) to else c
+    val r = restated(cur, "evolve-rename")
+    commit(root, Some(cur), r.copy(schema = Some(newDDL),
+      statsCols = cur.statsCols.map(renamed),
+      entries = r.entries.map(e =>
+        e.copy(blooms = e.blooms.map { case (c, bits) => renamed(c) -> bits })),
       constraints = cur.constraints.map { case (nm, sql) =>
         (nm, renameInSql(sql, from, to)) },
       colMap = newMap,
-      bloomCols = cur.bloomCols.map(c => if (c == from) to else c),
-      blooms = cur.blooms.map { case ((f, c), b) =>
-        (f, if (c == from) to else c) -> b }))
+      bloomCols = cur.bloomCols.map(renamed)))
   }
 
   /** Rewrite identifier occurrences of `from` to `to` in one line of

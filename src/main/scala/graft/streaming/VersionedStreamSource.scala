@@ -54,7 +54,7 @@ import scala.jdk.CollectionConverters._
   * reader (vectorized when the schema allows; batch-unwrapped here), so
   * executor-side reading is identical to the batch path. Head discovery
   * and per-version add-sets reuse the log's listing-free probes
-  * ([[Versioned.headVersionNumber]]/[[Versioned.addedAndRemoved]]) — O(1)
+  * ([[Versioned.headVersionNumber]]/[[Versioned.addedRemovedPending]]) — O(1)
   * in table age per trigger, which is what a per-minute long-lived reader
   * needs.
   *

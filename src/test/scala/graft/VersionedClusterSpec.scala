@@ -28,7 +28,7 @@ class VersionedClusterSpec extends SparkSuite {
   /** The (min, max) of column `i` of each file version `n` added, by min. */
   private def addedRanges(r: String, n: Int, i: Int = 0): Seq[(Long, Long)] = {
     val v = Versioned.versionState(r, n)
-    Versioned.addedFiles(r, n).flatMap(f => v.stats.get(f._1).map(_(i))).sortBy(_._1)
+    Versioned.addedRemovedPending(r, n)._1.flatMap(f => v.stats.get(f._1).map(_(i))).sortBy(_._1)
   }
 
   private def disjoint(rs: Seq[(Long, Long)]): Boolean =
@@ -78,7 +78,7 @@ class VersionedClusterSpec extends SparkSuite {
     assert(Versioned.currentVersion(r).get.files.length === 20)
 
     val v1 = mergeWindow(0, 1)
-    val (added1, removed1) = Versioned.addedAndRemoved(r, v1.n)
+    val (added1, removed1, _) = Versioned.addedRemovedPending(r, v1.n)
     assert(added1.nonEmpty && added1.length <= math.min(shufflePartitions, removed1),
       s"merge added ${added1.length} files for $removed1 removed")
     assert(disjoint(addedRanges(r, v1.n)), addedRanges(r, v1.n))
@@ -91,7 +91,7 @@ class VersionedClusterSpec extends SparkSuite {
     var v2: Versioned.Version = null
     val plans = plansOf { v2 = mergeWindow(1, 2) }
     assert(!plans.exists(_.toString.contains("rangepartitioning")))
-    val (added2, removed2) = Versioned.addedAndRemoved(r, v2.n)
+    val (added2, removed2, _) = Versioned.addedRemovedPending(r, v2.n)
     // unclustered, the first merge left 21 small files (one per file it
     // touched plus one spanning its whole window), and this merge removed 21
     assert(removed2 < 21, s"merge over a window shifted one day removed $removed2 files")
@@ -110,7 +110,7 @@ class VersionedClusterSpec extends SparkSuite {
     val updated = Versioned.updateWhere(spark, r, col("day") === 3L, Map("val" -> lit(-1L)))
     model = model.map { case (id, (d, v)) => id -> (d, if (d == 3L) -1L else v) }
     Seq(purged, deleted, updated).foreach { v =>
-      val (added, removed) = Versioned.addedAndRemoved(r, v.n)
+      val (added, removed, _) = Versioned.addedRemovedPending(r, v.n)
       assert(removed > 0 && added.length <= removed, s"${v.op}: $added for $removed")
       assert(disjoint(addedRanges(r, v.n)), s"${v.op}: ${addedRanges(r, v.n)}")
     }
@@ -158,7 +158,7 @@ class VersionedClusterSpec extends SparkSuite {
     appendSlices(r, indexed(gapped), 3, Seq("k"))
     val v = mergeChecked(r, Seq((5L, -5, "u"), (35L, -35, "u"), (1000000000000L, -1, "u"),
       (41L, 41, "n"), (1000000000001L, 1, "n")).toDF("k", "i", "pay"), "k")
-    assert(Versioned.addedFiles(r, v.n).length > 1, "gapped keys still split")
+    assert(Versioned.addedRemovedPending(r, v.n)._1.length > 1, "gapped keys still split")
     // a NULL source key never matches: it inserts, into an edge file
     mergeChecked(r, Seq[(Option[Long], Int, String)]((None, 0, "null"), (Some(7L), -7, "u"))
       .toDF("k", "i", "pay"), "k")
@@ -189,7 +189,7 @@ class VersionedClusterSpec extends SparkSuite {
       val src = keyed(key, 0, 200).filter(col("i") % 10 === 0).withColumn("pay", lit("u"))
         .unionByName(keyed(key, 200, 5))
       val v = mergeChecked(r, src, "k")
-      assert(Versioned.addedFiles(r, v.n).length > 1)
+      assert(Versioned.addedRemovedPending(r, v.n)._1.length > 1)
     }
     // keys 0..99 plus Long.MaxValue - 1: the widest span that still fits a Long
     val wide = (0L until 100L) :+ (Long.MaxValue - 1)
