@@ -1,7 +1,18 @@
 package graft.merge
 
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.command.DataWritingCommand
+import org.apache.spark.sql.execution.datasources.{FileFormatWriter, WriteJobStatsTracker,
+  WriteTaskStats, WriteTaskStatsTracker}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, ShortType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
@@ -80,7 +91,8 @@ import scala.jdk.CollectionConverters._
   *    object stores need a CAS'd log service.
   *  - Readers never see partial state: a version exists iff its manifest
   *    link completed, and the files it lists were fully written before the
-  *    link (Spark's job commit precedes the manifest promote).
+  *    link (the write job, whose committed tasks name them, ends before
+  *    the manifest promote).
   *  - Version numbers are formatted `%05d` but parsed at ANY width
   *    (`v\d+\.txt`, numeric sort): `%05d` widens automatically past 99999,
   *    so version 100000 writes `v100000.txt` and stays visible — an
@@ -100,7 +112,7 @@ object Versioned {
     * on-disk contract changes incompatibly; a higher value on disk fails
     * loudly instead of misparsing. fmt=3 (round 16) adds the file SIZE as
     * the first `|`-field of every file line (`path|size[|mn|mx…]`, -1 =
-    * unknown), captured from the commit's own directory walk — so the
+    * unknown), reported by the commit's own write tasks — so the
     * native relation can synthesize `FileStatus`es from pure log metadata
     * (zero filesystem calls on the read path, the Delta/Iceberg design)
     * and the streaming source can plan partitions without stat-ing files.
@@ -439,14 +451,14 @@ object Versioned {
   private val NoState = Version(0, "", 0, Nil)
 
   /** A DELTA delists its removes and appends its adds over `prev`; a FULL
-    * manifest is the same fold over [[NoState]]. Deltas never carry `txn=`
-    * or `colmap=` lines (renames commit FULL), so the union with the base's
-    * sets only ever adds a full manifest's own.
+    * manifest and a log's first commit fold the same way over [[NoState]].
+    * Deltas never carry `txn=` or `colmap=` lines (renames commit FULL), so
+    * the union with the base's sets only ever adds a full manifest's own.
     */
   private def foldResolved(prev: Option[Version], raw: Raw): Version = {
     val base =
       if (raw.full) NoState
-      else prev.getOrElse(throw new IllegalStateException(
+      else prev.getOrElse(if (raw.n == 1) NoState else throw new IllegalStateException(
         s"delta manifest v${raw.n} has no reconstructable base (missing checkpoint)"))
     val opTxn: Set[Long] = raw.op match {
       case StreamBatchOp(id) => Set(id.toLong)
@@ -497,14 +509,16 @@ object Versioned {
     val deltas = scala.collection.mutable.ArrayBuffer.empty[Raw]
     var i = n
     var base: Option[Raw] = None
-    while (base.isEmpty) {
+    // a chain of deltas that reaches v1 (a log whose first commit was
+    // staged, which never writes full) folds over the empty state
+    while (base.isEmpty && i >= 1) {
       if (!Files.exists(manifestPath(root, i)))
         throw new IllegalStateException(
           s"no checkpoint manifest at or below v$n at $root (over-archived or corrupt log)")
       val raw = parseManifest(i, manifestPath(root, i))
       if (raw.full) base = Some(raw) else { deltas += raw; i -= 1 }
     }
-    (base.get +: deltas.reverse.toSeq)
+    (base.toSeq ++ deltas.reverse)
       .foldLeft(Option.empty[Version])((st, raw) => Some(fold(st, raw))).get
   }
 
@@ -776,35 +790,202 @@ object Versioned {
     if (full) writePointer(root, n) // after the link: never points ahead
   }
 
-  /** List the parquet files a finished Spark write left under `dataDir`,
-    * as root-relative (path, byte size) pairs — sizes captured here, during
-    * the commit's own walk, are what fmt=3 manifests record (manifests must
-    * survive a table relocation, hence relative paths).
-    */
-  private def listParquet(root: String, dataDir: Path): Seq[(String, Long)] = {
-    val rootP = Paths.get(root)
-    listClosing(Files.walk(dataDir))(
-      _.filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .map(p => (rootP.relativize(p).toString, Files.size(p)))
-        .toSeq).sortBy(_._1)
-  }
-
-  /** Land `df`'s files in a fresh commit-scoped dir, returning (files,
-    * in-flight marker). The marker (`data/c<n>-<uuid>.inflight`, written
-    * BEFORE the data) is the writer-liveness signal [[gcOrphans]] honors:
-    * job-commit renames preserve task-write mtimes, so file age alone
-    * cannot distinguish a slow in-flight commit from a dead one — the
-    * marker's age (= when the write STARTED) can. Callers delete it right
-    * after their manifest commits; a crashed writer leaves it to age out.
+  /** Land `df`'s files in a fresh commit-scoped dir under the physical
+    * names of `colMap`, returning (entries, in-flight marker) — the one
+    * place a data file of the log is written. The entries list the files
+    * in path order with their byte sizes (fmt=3; root-relative, so a
+    * manifest survives a table relocation) and, when `statsCols` is
+    * non-empty, each file's [[Measured]] stats: ranges, row count and null
+    * counts of [[statsLongExpr]]'s encoding, taken by the write tasks from
+    * the rows they wrote ([[WriteStats]]), so no footer or file is read
+    * back. A file without rows gets a stats-less entry.
+    *
+    * The write is one [[WriteCommand]]: Spark's own task writer with this
+    * log's commit protocol ([[DirectCommit]]), so each file lands at its
+    * final path and the file list comes from the committed tasks' messages
+    * — no `_temporary`, rename, `_SUCCESS` or directory listing. The
+    * manifest CAS stays the only commit.
+    *
+    * The marker (`data/c<n>-<uuid>.inflight`, written BEFORE the data) is
+    * the writer-liveness signal [[gcOrphans]] honors: a file's mtime is when
+    * its task finished, not when the commit will, so file age alone cannot
+    * distinguish a slow in-flight commit from a dead one — the marker's age
+    * (= when the write STARTED) can. Callers delete it right after their
+    * manifest commits; a crashed writer leaves it to age out.
     */
   private def writeData(df: DataFrame, root: String, n: Int,
-      options: Map[String, String]): (Seq[(String, Long)], Path) = {
+      statsCols: Seq[String] = Nil, colMap: Map[String, String] = Map.empty,
+      options: Map[String, String] = Map.empty): (Seq[FileEntry], Path) = {
     val dataDir = Paths.get(root, "data", s"c$n-${java.util.UUID.randomUUID()}")
-    Files.createDirectories(dataDir.getParent)
+    Files.createDirectories(dataDir)
     val marker = dataDir.getParent.resolve(dataDir.getFileName.toString + ".inflight")
     Files.writeString(marker, "")
-    df.write.options(options).parquet(dataDir.toString)
-    (listParquet(root, dataDir), marker)
+    val phys = physicalize(df, colMap)
+    val protocol = new DirectCommit(java.util.UUID.randomUUID().toString, dataDir.toString)
+    val stats = Option.when(statsCols.nonEmpty)(new WriteStats(statsCols.map { c =>
+      val i = phys.schema.fieldIndex(physicalName(colMap, c))
+      statsLongExpr(c, phys.schema(i).dataType) // refuses a type without an exact encoding
+      i -> phys.schema(i).dataType
+    }))
+    val session = phys.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    new QueryExecution(session, WriteCommand(phys.queryExecution.analyzed, dataDir.toString,
+      protocol, stats.toSeq, options), phys.queryExecution.tracker,
+      shuffleCleanupMode = QueryExecution.determineShuffleCleanupMode(session.sessionState.conf)
+    ).assertCommandExecuted()
+    val rootP = Paths.get(root)
+    def rel(f: String): String = rootP.relativize(Paths.get(f)).toString
+    (fileEntries(protocol.committed.map { case (f, sz) => (rel(f), sz) }.sortBy(_._1),
+      stats.fold(Map.empty[String, Measured])(_.measured.map { case (f, m) => rel(f) -> m })),
+      marker)
+  }
+
+  /** [[writeData]]'s write as a command, so it plans like any Spark write
+    * (AQE over the written query, one write node reporting its files and
+    * rows) and runs Spark's own task writer, `FileFormatWriter`, with the
+    * log's [[DirectCommit]] and [[WriteStats]] in place of Hadoop's commit
+    * protocol and a footer re-read.
+    */
+  private final case class WriteCommand(query: LogicalPlan, dir: String,
+      protocol: DirectCommit, trackers: Seq[WriteStats], options: Map[String, String])
+      extends DataWritingCommand {
+    override def outputColumnNames: Seq[String] = query.output.map(_.name)
+
+    override def run(session: org.apache.spark.sql.classic.SparkSession,
+        child: SparkPlan): Seq[Row] = {
+      val conf = session.sessionState.newHadoopConfWithOptions(options)
+      FileFormatWriter.write(session, child, new ParquetFileFormat, protocol,
+        FileFormatWriter.OutputSpec(dir, Map.empty, outputColumns), conf,
+        partitionColumns = Nil, bucketSpec = None,
+        statsTrackers = basicWriteJobStatsTracker(conf) +: trackers, options = options)
+      Nil
+    }
+
+    override protected def withNewChildInternal(child: LogicalPlan): WriteCommand =
+      copy(query = child)
+  }
+
+  /** The commit protocol of [[writeData]]: each task writes its files at
+    * their final paths in the commit dir `dir`, under Spark's usual
+    * `part-<split>-<job>-c000.snappy.parquet` names (a retried attempt adds
+    * `-a<attempt>`, so two attempts never share a path). Nothing is staged,
+    * renamed or marked: the manifest is the table's commit. `commitTask`
+    * reports the attempt's (absolute path, size) pairs and `abortTask`
+    * deletes its files; the job's files come from the committed tasks'
+    * messages alone ([[committed]]), so no failed or duplicate
+    * attempt's file reaches a manifest. An aborted job deletes what its
+    * committed tasks wrote; a crash leaves it to [[gcOrphans]].
+    */
+  private[graft] final class DirectCommit(jobId: String, dir: String)
+      extends FileCommitProtocol with Serializable {
+    private var attemptFiles = Vector.empty[String]
+    @transient private var taskCommits = Vector.empty[(String, Long)]
+    /** The job's committed (absolute path, size) pairs, once it commits. */
+    @transient private[graft] var committed: Seq[(String, Long)] = Nil
+
+    override def setupJob(job: JobContext): Unit = ()
+    override def setupTask(ctx: TaskAttemptContext): Unit = attemptFiles = Vector.empty
+
+    override def newTaskTempFile(ctx: TaskAttemptContext, subDir: Option[String],
+        spec: FileNameSpec): String = {
+      require(subDir.isEmpty, s"a commit dir has no partition subdirectories, got $subDir")
+      val split = ctx.getTaskAttemptID.getTaskID.getId
+      val attempt = Option(org.apache.spark.TaskContext.get()).fold(0)(_.attemptNumber())
+      val f = new HPath(dir, f"${spec.prefix}part-$split%05d-$jobId" +
+        (if (attempt == 0) "" else s"-a$attempt") + spec.suffix).toString
+      attemptFiles :+= f
+      f
+    }
+
+    override def commitTask(ctx: TaskAttemptContext): FileCommitProtocol.TaskCommitMessage =
+      new FileCommitProtocol.TaskCommitMessage(
+        attemptFiles.map(f => f -> Files.size(Paths.get(f))))
+
+    override def abortTask(ctx: TaskAttemptContext): Unit =
+      attemptFiles.foreach(delete(ctx.getConfiguration, _))
+
+    override def onTaskCommit(msg: FileCommitProtocol.TaskCommitMessage): Unit =
+      taskCommits ++= filesOf(msg)
+
+    override def commitJob(job: JobContext,
+        msgs: Seq[FileCommitProtocol.TaskCommitMessage]): Unit =
+      committed = msgs.flatMap(filesOf)
+
+    override def abortJob(job: JobContext): Unit =
+      taskCommits.foreach { case (f, _) => delete(job.getConfiguration, f) }
+
+    private def filesOf(msg: FileCommitProtocol.TaskCommitMessage): Seq[(String, Long)] =
+      msg.obj.asInstanceOf[Seq[(String, Long)]]
+
+    // the local file system's delete also removes the file's `.crc`
+    private def delete(conf: org.apache.hadoop.conf.Configuration, f: String): Unit = {
+      val p = new HPath(f)
+      p.getFileSystem(conf).delete(p, false)
+    }
+  }
+
+  /** The write-stats tracker of [[writeData]]: each task folds, per file it
+    * writes, the row count and, per stats column (its ordinal and type in
+    * the written rows), the null count and the (min, max) of
+    * [[statsLongExpr]]'s encoding, read straight from the rows the task
+    * hands its writer: integral values as they are, DATE as epoch days,
+    * TIMESTAMP as epoch micros — the values Spark holds them as. A file
+    * where some stats column is all NULL gets no ranges, and a file without
+    * rows no measure, as in [[scanMeasures]]. Once the job commits,
+    * [[measured]] holds every committed task's files by absolute path.
+    */
+  private[graft] final class WriteStats(cols: Seq[(Int, DataType)])
+      extends WriteJobStatsTracker {
+    @transient private[graft] var measured: Map[String, Measured] = Map.empty
+
+    override def newTaskInstance(): WriteTaskStatsTracker = new TaskStats(cols.toArray)
+
+    override def processStats(stats: Seq[WriteTaskStats], jobCommitTime: Long): Unit =
+      measured = stats.flatMap { case FileStats(m) => m }.toMap
+  }
+
+  private final case class FileStats(files: Map[String, Measured]) extends WriteTaskStats
+
+  private final class TaskStats(cols: Array[(Int, DataType)]) extends WriteTaskStatsTracker {
+    private final class Acc {
+      var rows = 0L
+      val mins: Array[Long] = Array.fill(cols.length)(Long.MaxValue)
+      val maxs: Array[Long] = Array.fill(cols.length)(Long.MinValue)
+      val nulls = new Array[Long](cols.length)
+    }
+    private val open = scala.collection.mutable.HashMap.empty[String, Acc]
+    private val done = Map.newBuilder[String, Measured]
+
+    override def newPartition(values: InternalRow): Unit = ()
+    override def newFile(path: String): Unit = open(path) = new Acc
+
+    override def newRow(path: String, row: InternalRow): Unit = {
+      val a = open(path)
+      a.rows += 1
+      var i = 0
+      while (i < cols.length) {
+        val (o, t) = cols(i)
+        if (row.isNullAt(o)) a.nulls(i) += 1
+        else {
+          val v = t match {
+            case ByteType => row.getByte(o).toLong
+            case ShortType => row.getShort(o).toLong
+            case IntegerType | DateType => row.getInt(o).toLong
+            case _ => row.getLong(o) // LongType, TimestampType (micros)
+          }
+          if (v < a.mins(i)) a.mins(i) = v
+          if (v > a.maxs(i)) a.maxs(i) = v
+        }
+        i += 1
+      }
+    }
+
+    override def closeFile(path: String): Unit = open.remove(path).foreach { a =>
+      if (a.rows > 0) done += path -> Measured(
+        ranges = if (a.nulls.contains(a.rows)) Nil else a.mins.toSeq.zip(a.maxs),
+        rowCount = a.rows, nullCounts = a.nulls.toSeq)
+    }
+
+    override def getFinalStats(taskCommitTime: Long): WriteTaskStats = FileStats(done.result())
   }
 
   /** Land `df`, the rewrite of version `cur`'s `replaced` files — a merge,
@@ -830,7 +1011,7 @@ object Versioned {
   private def writeRewrite(df: DataFrame, root: String, n: Int, cur: Version,
       replaced: Seq[String], colMap: Map[String, String], key: Option[String] = None,
       source: Option[(Long, Long, Long)] = None,
-      nFiles: Option[Int] = None): (Seq[(String, Long)], Path) = {
+      nFiles: Option[Int] = None): (Seq[FileEntry], Path) = {
     val want = nFiles.getOrElse(math.max(1, math.min(replaced.size,
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)))
     val clustered = for {
@@ -849,7 +1030,7 @@ object Versioned {
       df.repartitionById(cuts.length + 1, id)
     }
     val shaped = clustered.getOrElse(nFiles.fold(df)(df.repartition))
-    writeData(physicalize(shaped, colMap), root, n, Map.empty)
+    writeData(shaped, root, n, cur.statsCols, colMap)
   }
 
   /** At most `nFiles - 1` increasing split points in (lo, hi] that cut the
@@ -887,9 +1068,6 @@ object Versioned {
     Some(cuts.result().distinct)
   }
 
-  private def plainEntries(files: Seq[(String, Long)]): Seq[FileEntry] =
-    files.map { case (f, sz) => FileEntry(f, Nil, sz) }
-
   private def sealing[A](marker: Path)(commit: => A): A = {
     val v = commit
     Files.deleteIfExists(marker)
@@ -917,19 +1095,19 @@ object Versioned {
     val n = cur.map(_.n + 1).getOrElse(1)
     val cmap = cur.map(_.colMap).getOrElse(Map.empty)
     val ddl = normalizedDDL(df)
-    val (files, marker) = writeData(physicalize(df, cmap), root, n, Map.empty)
+    val (landed, marker) = writeData(df, root, n, colMap = cmap)
     sealing(marker) {
-      validateConstraints(df.sparkSession, root,
-        cur.map(_.constraints).getOrElse(Nil), files, Some(ddl), cmap)
-      commit(root, cur, next(cur, "append").copy(entries = plainEntries(files)), Some(ddl))
+      val entries = checkedEntries(df.sparkSession, root, landed, ddl, Nil,
+        cur.map(_.constraints).getOrElse(Nil), cmap)
+      commit(root, cur, next(cur, "append").copy(entries = entries), Some(ddl))
     }
   }
 
   /** VT6: append WITH manifest-level skipping stats — after the commit's
     * files land, each file's (min, max) of every column in `statsCols` is
-    * recorded in the manifest, taken from the footers the write just
-    * produced (no Spark job; the commit-sized scan runs only when a footer
-    * cannot answer — see [[statsEntriesValidating]]), so a
+    * recorded in the manifest, measured by the write's own tasks (no Spark
+    * job after the write; the commit-sized scan runs only for CHECK
+    * constraints and bloom columns — see [[checkedEntries]]), so a
     * [[readPruned]] later plans only range-overlapping files without
     * opening a footer. This is file-granularity data skipping from log
     * metadata (the Delta/Iceberg published design); it composes with
@@ -957,12 +1135,12 @@ object Versioned {
     val cmap = cur.map(_.colMap).getOrElse(Map.empty)
     val bCols = if (bloomCols.nonEmpty) bloomCols else cur.map(_.bloomCols).getOrElse(Nil)
     val ddl = normalizedDDL(df)
-    val (files, marker) = writeData(physicalize(df, cmap), root, n, options)
+    val (landed, marker) = writeData(df, root, n, statsCols, cmap, options)
     sealing(marker) {
-      // footer stats; a constrained or bloom-tracked table instead pays
-      // one landed-files scan that fuses the check and the bloom build
+      // the write's own stats; a constrained or bloom-tracked table instead
+      // pays one landed-files scan that fuses the check and the bloom build
       commit(root, cur, next(cur, "append", statsCols, bCols).copy(entries =
-        statsEntriesValidating(df.sparkSession, root, files, ddl, statsCols,
+        checkedEntries(df.sparkSession, root, landed, ddl, statsCols,
           cur.map(_.constraints).getOrElse(Nil), cmap, bCols)), Some(ddl))
     }
   }
@@ -1047,45 +1225,29 @@ object Versioned {
     }
   }
 
-  /** [[statsEntriesValidating]] without constraints. Shared by [[compact]],
-    * [[compactZOrder]], [[deleteWhere]], [[purgeDeletes]] and the staged
-    * transactional delete.
+  /** The manifest entries of `landed`, [[writeData]]'s entries written
+    * with `statsCols`, once the commit's CHECK constraints hold. The
+    * write's own stats answer (no Spark job runs after the write) unless
+    * the table has constraints or bloom columns: then one commit-sized scan
+    * of the landed files ([[scanMeasures]]) counts each constraint's
+    * violations — any violation throws BEFORE an entry is returned, so the
+    * caller commits nothing ([[validateConstraints]]' contract) — builds
+    * the bloom bits, and measures the stats the same way. A commit without
+    * stats columns checks its constraints alone. `schemaDDL` is the
+    * commit's LOGICAL schema, so a scan reads the landed files without
+    * inferring theirs.
     */
-  private def statsEntries(spark: SparkSession, root: String, files: Seq[(String, Long)],
-      schemaDDL: String, statsCols: Seq[String],
-      colMap: Map[String, String] = Map.empty,
-      bloomCols: Seq[String] = Nil): Seq[FileEntry] =
-    statsEntriesValidating(spark, root, files, schemaDDL, statsCols, Nil, colMap, bloomCols)
-
-  /** The manifest entries of freshly-written `files`: per file, (min, max)
-    * of each stats column, exact-long-encoded per [[statsLongExpr]], plus
-    * its row count and per-stats-column null counts. TOTAL over `files`: an
-    * empty part file gets a stats-less entry, and a file where any stats
-    * column is all-NULL gets no ranges (conservative read, never a NULL
-    * range, never a dropped file).
-    *
-    * The source is the parquet footers the write just produced
-    * ([[footerMeasures]]), read on the driver: no Spark job runs. The
-    * commit-sized scan ([[scanMeasures]]) runs instead when the footers
-    * cannot answer: the table has CHECK constraints (the scan counts each
-    * constraint's violations per file, and a violation throws BEFORE any
-    * entry is returned, so the caller commits nothing — [[
-    * validateConstraints]]' contract), it has bloom columns (their bits are
-    * built in the scan), or a stats column has no exact footer statistics
-    * (Spark's default INT96 timestamps). `schemaDDL` is the commit's LOGICAL
-    * schema, so the scan reads the landed files without inferring theirs.
-    */
-  private def statsEntriesValidating(spark: SparkSession, root: String,
-      files: Seq[(String, Long)], schemaDDL: String, statsCols: Seq[String],
-      constraints: Seq[(String, String)],
+  private def checkedEntries(spark: SparkSession, root: String, landed: Seq[FileEntry],
+      schemaDDL: String, statsCols: Seq[String], constraints: Seq[(String, String)],
       colMap: Map[String, String] = Map.empty,
       bloomCols: Seq[String] = Nil): Seq[FileEntry] = {
-    if (files.isEmpty) return Nil // empty commit: nothing to measure, nothing to skip
-    val fromFooters =
-      if (constraints.nonEmpty || bloomCols.nonEmpty) None
-      else footerMeasures(spark, root, files, statsCols, colMap)
-    fileEntries(files, fromFooters.getOrElse(
-      scanMeasures(spark, root, files, schemaDDL, statsCols, constraints, colMap, bloomCols)))
+    val files = landed.map(e => e.path -> e.size)
+    if (statsCols.isEmpty) {
+      validateConstraints(spark, root, constraints, files, Some(schemaDDL), colMap)
+      landed
+    } else if (constraints.isEmpty && bloomCols.isEmpty) landed
+    else fileEntries(files,
+      scanMeasures(spark, root, files, schemaDDL, statsCols, constraints, colMap, bloomCols))
   }
 
   /** What a stats pass measured of one non-empty landed file. `ranges` is
@@ -1146,102 +1308,6 @@ object Versioned {
               r.getLong(1 + nStat + nCon + bi * BloomWords + w))
           })
     }.toMap
-  }
-
-  /** [[scanMeasures]]' stats from the parquet footers of `files` instead of
-    * a scan, as Iceberg's writers take their file metrics. Per file: the row
-    * count is the sum of its row groups' rows; each stats column's null
-    * count is the sum of its chunks' null counts, and its range the
-    * (min, max) over the chunks that hold a non-NULL value. Columns are
-    * matched by path, under their physical (`colMap`) names. Footers are
-    * read on the driver, one after another, so no Spark job runs.
-    *
-    * None — the caller scans instead — unless every stats column of every
-    * file is stored in the encoding [[statsLongExpr]] produces, with exact
-    * chunk statistics: INT32 or INT64 for integral and DATE columns, INT64
-    * `TIMESTAMP(MICROS)` for timestamps, and no legacy calendar rebase.
-    */
-  private[graft] def footerMeasures(spark: SparkSession, root: String,
-      files: Seq[(String, Long)], statsCols: Seq[String],
-      colMap: Map[String, String] = Map.empty): Option[Map[String, Measured]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val rootP = Paths.get(root)
-    val phys = statsCols.map(physicalName(colMap, _))
-    val perFile = files.map { case (f, _) =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(rootP.resolve(f).toUri), conf))
-      val footer = try reader.getFooter finally reader.close()
-      f -> footerMeasure(footer, phys)
-    }
-    if (perFile.exists(_._2.isEmpty)) None
-    else Some(perFile.collect { case (f, Some(Some(m))) => f -> m }.toMap)
-  }
-
-  /** One file's [[Measured]] from its footer: None when the footer cannot
-    * answer for some stats column (see [[footerMeasures]]), Some(None) for a
-    * file without rows.
-    */
-  private def footerMeasure(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
-      cols: Seq[String]): Option[Option[Measured]] = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation._
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.spark.sql.types._
-    val md = footer.getFileMetaData
-    val kv = md.getKeyValueMetaData.asScala
-    // the Spark type a read-back would see, which decides statsLongExpr's encoding
-    val sparkTypes = kv.get("org.apache.spark.sql.parquet.row.metadata").toSeq
-      .flatMap(j => DataType.fromJson(j).asInstanceOf[StructType].fields)
-      .map(f => f.name -> f.dataType).toMap
-    val rebased = kv.contains("org.apache.spark.legacyDateTime")
-    def exact(c: String): Boolean =
-      md.getSchema.containsPath(Array(c)) && {
-        val t = md.getSchema.getType(Seq(c): _*)
-        t.isPrimitive && !t.isRepetition(org.apache.parquet.schema.Type.Repetition.REPEATED) &&
-          ((sparkTypes.get(c), t.asPrimitiveType.getPrimitiveTypeName,
-            t.getLogicalTypeAnnotation) match {
-            case (Some(ByteType | ShortType | IntegerType), INT32, null) => true
-            case (Some(ByteType | ShortType | IntegerType), INT32,
-              i: IntLogicalTypeAnnotation) => i.isSigned
-            case (Some(LongType), INT64, null) => true
-            case (Some(LongType), INT64, i: IntLogicalTypeAnnotation) => i.isSigned
-            case (Some(DateType), INT32, _: DateLogicalTypeAnnotation) => !rebased
-            case (Some(TimestampType), INT64, ts: TimestampLogicalTypeAnnotation) =>
-              !rebased && ts.isAdjustedToUTC && ts.getUnit == TimeUnit.MICROS
-            case _ => false
-          })
-      }
-    val blocks = footer.getBlocks.asScala.toSeq
-    // (null count, (min, max) unless all NULL) of one chunk; None when the
-    // chunk's statistics are missing or cannot be trusted
-    def chunk(c: String, b: org.apache.parquet.hadoop.metadata.BlockMetaData)
-        : Option[(Long, Option[(Long, Long)])] =
-      b.getColumns.asScala.find(_.getPath.toArray.sameElements(Array(c))).flatMap { cc =>
-        val s: org.apache.parquet.column.statistics.Statistics[_] = cc.getStatistics
-        if (s == null || !s.isNumNullsSet) None
-        else if (s.hasNonNullValue) Some(s.getNumNulls -> Some(
-          (s.genericGetMin.asInstanceOf[Number].longValue,
-            s.genericGetMax.asInstanceOf[Number].longValue)))
-        else if (s.getNumNulls == cc.getValueCount) Some(s.getNumNulls -> None)
-        else None
-      }
-    if (!cols.forall(exact)) None
-    else {
-      val perCol = cols.map(c => blocks.map(chunk(c, _)))
-      val rowCount = blocks.map(_.getRowCount).sum
-      if (perCol.exists(_.contains(None))) None
-      else if (rowCount == 0) Some(None)
-      else {
-        val chunks = perCol.map(_.flatten)
-        val ranges = chunks.map(_.flatMap(_._2))
-        Some(Some(Measured(
-          ranges =
-            if (ranges.exists(_.isEmpty)) Nil
-            else ranges.map(rs => (rs.map(_._1).min, rs.map(_._2).max)),
-          rowCount = rowCount,
-          nullCounts = chunks.map(_.map(_._1).sum))))
-      }
-    }
   }
 
   /** The fused stats+constraint aggregate of [[scanMeasures]] as
@@ -1311,7 +1377,7 @@ object Versioned {
     val n0 = cur.map(_.n + 1).getOrElse(1)
     val cmap = cur.map(_.colMap).getOrElse(Map.empty)
     val ddl = normalizedDDL(df)
-    val (files, marker) = writeData(physicalize(df, cmap), root, n0, Map.empty)
+    val (landed, marker) = writeData(df, root, n0, colMap = cmap)
     sealing(marker) {
       // constraints are re-validated per ATTEMPT against that attempt's
       // head: a racing commit may have ADDED a constraint, and its own
@@ -1331,11 +1397,11 @@ object Versioned {
             "re-run the append (its files carry the pre-rename physical names)")
         val cons = head.map(_.constraints).getOrElse(Nil)
         if (cons != validated) {
-          validateConstraints(df.sparkSession, root, cons, files, Some(ddl), cmap)
+          checkedEntries(df.sparkSession, root, landed, ddl, Nil, cons, cmap)
           validated = cons
         }
         try committed = Some(commit(root, head,
-          next(head, "append").copy(entries = plainEntries(files)), Some(ddl)))
+          next(head, "append").copy(entries = landed), Some(ddl)))
         catch {
           case e: IllegalStateException if e.getMessage.startsWith("concurrent commit") =>
             attempt += 1
@@ -1377,7 +1443,7 @@ object Versioned {
     * lands range-clustered on the first stats column into at most `nFiles`
     * files, with split points taken from the manifest's ranges and row
     * counts (no sampling job; [[writeRewrite]]), and the stats are
-    * RECOMPUTED for the new files from their footers — a pruned read is
+    * RECOMPUTED for the new files by their write — a pruned read is
     * exactly as selective after the rewrite. A table without stats
     * round-robins into `nFiles`. For multi-dimension clustering instead of
     * bin-packing, pre-shape with
@@ -1403,12 +1469,10 @@ object Versioned {
     // and the FULL manifest carries no colmap: compaction MATERIALIZES any
     // pending column rename (every file is rewritten anyway — the one
     // moment the mapping is free to drop)
-    val (files, marker) = writeRewrite(df, root, n, cur, cur.files, Map.empty,
+    val (landed, marker) = writeRewrite(df, root, n, cur, cur.files, Map.empty,
       nFiles = Some(nFiles))
-    val entries =
-      if (cur.statsCols.isEmpty) plainEntries(files)
-      else statsEntries(spark, root, files, normalizedDDL(df), cur.statsCols,
-        bloomCols = cur.bloomCols)
+    val entries = checkedEntries(spark, root, landed, normalizedDDL(df), cur.statsCols, Nil,
+      bloomCols = cur.bloomCols)
     sealing(marker)(commit(root, Some(cur), next(Some(cur), "compact").copy(full = true,
       entries = entries, txns = cur.txns, schema = cur.schema,
       constraints = cur.constraints)))
@@ -1454,8 +1518,8 @@ object Versioned {
     val shaped = graft.ops.ZOrder.zCluster(
       df.select(df.columns.map(col).toIndexedSeq: _*), encoded, dimStats, bits, nFiles)
     val n = cur.n + 1
-    val (files, marker) = writeData(shaped, root, n, options)
-    val entries = statsEntries(spark, root, files, normalizedDDL(shaped), zCols,
+    val (landed, marker) = writeData(shaped, root, n, zCols, options = options)
+    val entries = checkedEntries(spark, root, landed, normalizedDDL(shaped), zCols, Nil,
       bloomCols = cur.bloomCols)
     sealing(marker)(commit(root, Some(cur), next(Some(cur), "compact-zorder", zCols)
       .copy(full = true, entries = entries, txns = cur.txns, schema = cur.schema,
@@ -1663,10 +1727,9 @@ object Versioned {
       .filter(!coalesce(predicate, lit(false)))
     val n = cur.n + 1
     val ddl = normalizedDDL(survivors)
-    val (files, marker) = writeRewrite(survivors, root, n, cur, affected, cur.colMap)
-    val entries =
-      if (cur.statsCols.isEmpty) plainEntries(files)
-      else statsEntries(spark, root, files, ddl, cur.statsCols, cur.colMap, cur.bloomCols)
+    val (landed, marker) = writeRewrite(survivors, root, n, cur, affected, cur.colMap)
+    val entries = checkedEntries(spark, root, landed, ddl, cur.statsCols, Nil, cur.colMap,
+      cur.bloomCols)
     sealing(marker)(commit(root, Some(cur),
       next(Some(cur), if (staged.isEmpty) "delete" else "txn-delete")
         .copy(entries = entries, removed = affected, txnMarker = staged), Some(ddl)))
@@ -1709,14 +1772,10 @@ object Versioned {
     }.toIndexedSeq: _*)
     val n = cur.n + 1
     val ddl = normalizedDDL(updated)
-    val (files, marker) = writeRewrite(updated, root, n, cur, affected, cur.colMap)
+    val (landed, marker) = writeRewrite(updated, root, n, cur, affected, cur.colMap)
     sealing(marker) {
-      val entries =
-        if (cur.statsCols.isEmpty) {
-          validateConstraints(spark, root, cur.constraints, files, Some(ddl), cur.colMap)
-          plainEntries(files)
-        } else statsEntriesValidating(spark, root, files, ddl, cur.statsCols,
-          cur.constraints, cur.colMap, cur.bloomCols)
+      val entries = checkedEntries(spark, root, landed, ddl, cur.statsCols, cur.constraints,
+        cur.colMap, cur.bloomCols)
       commit(root, Some(cur), next(Some(cur), "update").copy(entries = entries,
         removed = affected), Some(ddl))
     }
@@ -1826,14 +1885,10 @@ object Versioned {
     val positions = matched.select(col(DvKeyCol).as("file"), col(DvPosCol).as("pos"))
     val n = cur.n + 1
     val ddl = normalizedDDL(updated)
-    val (files, marker) = writeData(physicalize(updated, cur.colMap), root, n, Map.empty)
+    val (landed, marker) = writeData(updated, root, n, cur.statsCols, cur.colMap)
     val res = sealing(marker) {
-      val entries =
-        if (cur.statsCols.isEmpty) {
-          validateConstraints(spark, root, cur.constraints, files, Some(ddl), cur.colMap)
-          plainEntries(files)
-        } else statsEntriesValidating(spark, root, files, ddl, cur.statsCols,
-          cur.constraints, cur.colMap, cur.bloomCols)
+      val entries = checkedEntries(spark, root, landed, ddl, cur.statsCols, cur.constraints,
+        cur.colMap, cur.bloomCols)
       commitDvAttach(spark, root, cur, "update-dv", positions, affected,
         addedFiles = entries, addedDDL = Some(ddl))
     }
@@ -1877,22 +1932,22 @@ object Versioned {
     // The write job itself reports each file's victim count: one (file, cnt)
     // pair per affected file, O(affected files), never O(victims)
     val obs = Observation()
-    val (scFiles, marker) = writeData(
+    val (sidecars, marker) = writeData(
       packed.observe(obs, collect_list(struct(col("file"), col("cnt"))).as("counts"))
-        .coalesce(1), root, n, Map.empty)
+        .coalesce(1), root, n)
     val counts: Map[String, Long] =
       obs.get("counts").asInstanceOf[scala.collection.Seq[Row]]
         .map(r => r.getString(0) -> r.getLong(1)).toMap
     if (counts.isEmpty) {
       // no victims ⟹ no matched rows ⟹ any landed rewrite file is empty:
-      // remove the sidecar's commit dir wholesale (parquet + _SUCCESS),
-      // commit nothing; the caller removes its own empty rewrite dir
+      // remove the sidecar's commit dir wholesale (the empty part file and
+      // its .crc), commit nothing; the caller removes its own empty rewrite dir
       rmRfDir(Paths.get(marker.toString.stripSuffix(".inflight")))
       Files.deleteIfExists(marker)
       return cur
     }
     val keyToFile = affected.map(f => dvKeyOf(f) -> f).toMap
-    val sidecar = scFiles.head._1
+    val sidecar = sidecars.head.path
     val attach: Map[String, Seq[(String, Long)]] = counts.map { case (k, c) =>
       keyToFile.getOrElse(k, throw new IllegalStateException(
         s"dv sidecar records positions for unscanned file key $k")) -> Seq((sidecar, c))
@@ -1943,10 +1998,9 @@ object Versioned {
         val alive = readFiles(spark, root, cur, dvd)
         val n = cur.n + 1
         val ddl = normalizedDDL(alive)
-        val (files, marker) = writeRewrite(alive, root, n, cur, dvd, cur.colMap)
-        val entries =
-          if (cur.statsCols.isEmpty) plainEntries(files)
-          else statsEntries(spark, root, files, ddl, cur.statsCols, cur.colMap, cur.bloomCols)
+        val (landed, marker) = writeRewrite(alive, root, n, cur, dvd, cur.colMap)
+        val entries = checkedEntries(spark, root, landed, ddl, cur.statsCols, Nil, cur.colMap,
+          cur.bloomCols)
         sealing(marker)(commit(root, Some(cur),
           next(Some(cur), "purge-dv").copy(entries = entries, removed = dvd), Some(ddl)))
       }
@@ -2009,9 +2063,9 @@ object Versioned {
         return Some(cur match {
           case None =>
             // first batch onto an empty log: plain append under the op name
-            val (files, marker) = writeData(source, root, 1, Map.empty)
+            val (landed, marker) = writeData(source, root, 1)
             sealing(marker)(commit(root, None,
-              next(None, op).copy(entries = plainEntries(files)), Some(normalizedDDL(source))))
+              next(None, op).copy(entries = landed), Some(normalizedDDL(source))))
           case Some(c) =>
             val merged = mergeOnState(spark, root, c, source, keys, orderCol, op)
             // empty source returned the same version: commit a zero-file
@@ -2115,19 +2169,15 @@ object Versioned {
     val envelope =
       if (trackedKeys.isEmpty || r.isNullAt(2)) None
       else Some((r.getLong(2), r.getLong(3), r.getLong(0)))
-    val (files, marker) = writeRewrite(merged, root, n, cur, affected, cur.colMap,
+    val (landed, marker) = writeRewrite(merged, root, n, cur, affected, cur.colMap,
       trackedKeys.headOption, envelope)
     sealing(marker) {
       // the merge RESULT (updates included) must pass the constraints —
       // carried-through rows were already valid, so violations can only
       // come from source; a stats-tracked table checks them in the same
       // landed-files scan that measures its stats (one scan either way)
-      val entries =
-        if (cur.statsCols.isEmpty) {
-          validateConstraints(spark, root, cur.constraints, files, Some(ddl), cur.colMap)
-          plainEntries(files)
-        } else statsEntriesValidating(spark, root, files, ddl, cur.statsCols,
-          cur.constraints, cur.colMap, cur.bloomCols)
+      val entries = checkedEntries(spark, root, landed, ddl, cur.statsCols, cur.constraints,
+        cur.colMap, cur.bloomCols)
       commit(root, Some(cur), next(Some(cur), op).copy(entries = entries,
         removed = affected, txnMarker = staged), Some(ddl))
     }
@@ -2220,16 +2270,12 @@ object Versioned {
     val keptBlooms = cur.map(_.bloomCols).getOrElse(Nil)
       .filter(df.schema.fieldNames.contains)
     val ddl = normalizedDDL(df)
-    val (files, marker) = writeData(df, root, n, Map.empty)
+    val (landed, marker) = writeData(df, root, n, keptStats)
     // overwrite IS the schema-evolution op: the full manifest records the
     // new contract, and later appends are checked against it
     sealing(marker) {
-      val entries =
-        if (keptStats.isEmpty) {
-          validateConstraints(df.sparkSession, root, keptConstraints, files, Some(ddl))
-          plainEntries(files)
-        } else statsEntriesValidating(df.sparkSession, root, files, ddl, keptStats,
-          keptConstraints, bloomCols = keptBlooms)
+      val entries = checkedEntries(df.sparkSession, root, landed, ddl, keptStats,
+        keptConstraints, bloomCols = keptBlooms)
       commit(root, cur, next(cur, "overwrite").copy(full = true, statsCols = keptStats,
         entries = entries, txns = cur.map(_.txns).getOrElse(Set.empty), schema = Some(ddl),
         constraints = keptConstraints,
@@ -2449,11 +2495,11 @@ object Versioned {
     val cmap = cur.map(_.colMap).getOrElse(Map.empty)
     val ddl = normalizedDDL(df)
     val n = cur.map(_.n + 1).getOrElse(1)
-    val (files, marker) = writeData(physicalize(df, cmap), root, n, Map.empty)
+    val (landed, marker) = writeData(df, root, n, colMap = cmap)
     sealing(marker) {
-      validateConstraints(df.sparkSession, root,
-        cur.map(_.constraints).getOrElse(Nil), files, Some(ddl), cmap)
-      commit(root, cur, next(cur, "txn-append").copy(entries = plainEntries(files),
+      val entries = checkedEntries(df.sparkSession, root, landed, ddl, Nil,
+        cur.map(_.constraints).getOrElse(Nil), cmap)
+      commit(root, cur, next(cur, "txn-append").copy(entries = entries,
         txnMarker = Some(txnMarkerBase)), Some(ddl))
     }
   }
@@ -2799,10 +2845,10 @@ object Versioned {
     * (data files land before the manifest CAS by design).
     *
     * TWO guards protect in-flight commits, because file mtimes alone
-    * cannot: Spark's rename-based job commit preserves task-write mtimes
-    * and the stats pass runs between data landing and the manifest CAS, so
-    * a write merely RUNNING longer than the age gate would otherwise lose
-    * its files mid-commit (and the late manifest would link to deleted
+    * cannot: a file's mtime is when its task finished writing it, and the
+    * rest of the job plus the constraint pass run before the manifest CAS,
+    * so a write merely RUNNING longer than the age gate would otherwise
+    * lose its files mid-commit (and the late manifest would link to deleted
     * data — silent corruption). (1) The default gate is 7 DAYS (Delta's
     * published default) — it must exceed the longest plausible in-flight
     * write, and callers shortening it own that contract. (2) Every writer
@@ -2810,10 +2856,11 @@ object Versioned {
     * ([[writeData]]) and removes it right after its manifest commits; a
     * commit dir whose marker is younger than the gate is never touched
     * regardless of its files' mtimes (the marker's age is when the write
-    * STARTED — the signal rename-preserved mtimes destroy). Stale markers
-    * (dead writers) are swept once their dir holds nothing referenced.
-    * Returns the reclaimed root-relative parquet paths. Cost: one manifest
-    * fold + one data-dir listing — metadata-plane only.
+    * STARTED). An orphan goes with its `.crc`; a stale marker (dead
+    * writer) is swept once its dir holds nothing referenced, and the dir
+    * with it once no data file is left there. Returns the reclaimed
+    * root-relative parquet paths. Cost: one manifest fold + one data-dir
+    * listing — metadata-plane only.
     */
   def gcOrphans(root: String, olderThanMs: Long = 7L * 24 * 60 * 60 * 1000): Seq[String] = {
     // ARCHIVED manifests count as references too: a file referenced only by
@@ -2865,16 +2912,24 @@ object Versioned {
         .map(p => (p, rootP.relativize(p).toString))
         .filter(e => !referenced.contains(e._2) && !inflightFresh(e._2))
         .toSeq)
-    orphans.foreach { case (p, _) => Files.deleteIfExists(p) }
+    orphans.foreach { case (p, _) =>
+      Files.deleteIfExists(p)
+      Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    }
     // stale markers (writer died before sealing): sweep once their commit
-    // dir holds no referenced file
+    // dir holds no referenced file, and the dir once it holds no data file
     listClosing(Files.list(dataDir))(
       _.filter(_.getFileName.toString.endsWith(".inflight"))
         .filter(m => Files.getLastModifiedTime(m).toMillis < cutoff)
         .toSeq)
       .foreach { m =>
         val dirName = m.getFileName.toString.stripSuffix(".inflight")
-        if (!referenced.exists(_.startsWith(s"data/$dirName/"))) Files.deleteIfExists(m)
+        if (!referenced.exists(_.startsWith(s"data/$dirName/"))) {
+          Files.deleteIfExists(m)
+          val dir = dataDir.resolve(dirName)
+          if (Files.isDirectory(dir) && listClosing(Files.list(dir))(
+              !_.exists(_.getFileName.toString.endsWith(".parquet")))) rmRfDir(dir)
+        }
       }
     orphans.map(_._2).sorted
   }
@@ -3002,15 +3057,10 @@ object Versioned {
       val n = cur.map(_.n + 1).getOrElse(1)
       val cmap = cur.map(_.colMap).getOrElse(Map.empty)
       val ddl = normalizedDDL(df)
-      val (files, marker) = writeData(physicalize(df, cmap), root, n, Map.empty)
+      val (landed, marker) = writeData(df, root, n, statsCols, cmap)
       Some(sealing(marker) {
-        val cons = cur.map(_.constraints).getOrElse(Nil)
-        val entries =
-          if (statsCols.isEmpty) {
-            validateConstraints(df.sparkSession, root, cons, files, Some(ddl), cmap)
-            plainEntries(files)
-          } else statsEntriesValidating(df.sparkSession, root, files, ddl, statsCols, cons,
-            cmap, cur.map(_.bloomCols).getOrElse(Nil))
+        val entries = checkedEntries(df.sparkSession, root, landed, ddl, statsCols,
+          cur.map(_.constraints).getOrElse(Nil), cmap, cur.map(_.bloomCols).getOrElse(Nil))
         commit(root, cur, next(cur, s"stream-batch-$batchId", statsCols).copy(entries = entries),
           Some(ddl))
       })

@@ -34,16 +34,14 @@ class VersionedClusterSpec extends SparkSuite {
   private def disjoint(rs: Seq[(Long, Long)]): Boolean =
     rs.zip(rs.drop(1)).forall { case (a, b) => a._2 < b._1 }
 
-  /** The head's manifest entries are what a scan of its files measures, and
-    * what their footers record wherever the footers can answer.
+  /** The head's manifest entries, measured by the writes that landed its
+    * files, are what a scan of those files measures.
     */
   private def statsMatchFiles(r: String): Unit = {
     val cur = Versioned.currentVersion(r).get
     val fs = cur.files.map(f => f -> cur.sizes.getOrElse(f, -1L))
     val scanned = Versioned.scanMeasures(spark, r, fs, cur.schema.get, cur.statsCols, Nil,
       cur.colMap)
-    Versioned.footerMeasures(spark, r, fs, cur.statsCols, cur.colMap)
-      .foreach(footers => assert(footers === scanned))
     Versioned.fileEntries(fs, scanned).foreach { e =>
       assert(cur.stats.get(e.path) === Some(e.ranges).filter(_.nonEmpty), e.path)
       assert(cur.nulls.get(e.path) === Some((e.rowCount, e.nullCounts)).filter(_._1 >= 0),

@@ -3,12 +3,13 @@ package graft
 import graft.merge.Versioned
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.Paths
+import java.nio.file.{Files, Paths}
 
-/** A stats-tracked commit takes its file stats from the parquet footers it
-  * just wrote, and scans its landed files only when a footer cannot answer:
+/** A stats-tracked commit takes its file stats from the write that landed
+  * its files, and scans them only for CHECK constraints and bloom columns:
   * the two sources must agree entry for entry, and the scan must still run
-  * (and still refuse violations) where it is needed.
+  * (and still refuse violations) where it is needed. `Versioned.scala`
+  * lands every data file through one `FileFormatWriter.write`.
   */
 class VersionedFooterStatsSpec extends SparkSuite {
 
@@ -44,14 +45,12 @@ class VersionedFooterStatsSpec extends SparkSuite {
     try reader.getFooter.getBlocks.size finally reader.close()
   }
 
-  /** The footers answer for `fs`, their measures equal the scan's, and the
-    * committed manifest holds exactly those entries.
+  /** The committed manifest's entries for `fs`, measured by their write,
+    * are exactly what a scan of those files measures.
     */
   private def agree(r: String, fs: Seq[(String, Long)]): Map[String, Versioned.Measured] = {
     val cur = Versioned.currentVersion(r).get
     val scanned = Versioned.scanMeasures(spark, r, fs, cur.schema.get, cur.statsCols, Nil, cur.colMap)
-    val footers = Versioned.footerMeasures(spark, r, fs, cur.statsCols, cur.colMap)
-    assert(footers.contains(scanned), s"footers $footers vs scan $scanned")
     Versioned.fileEntries(fs, scanned).foreach { e =>
       assert(cur.stats.get(e.path) === Some(e.ranges).filter(_.nonEmpty), e.path)
       assert(cur.nulls.get(e.path) ===
@@ -60,45 +59,48 @@ class VersionedFooterStatsSpec extends SparkSuite {
     scanned
   }
 
-  test("footer stats equal the scan's: types, NULLs, all-NULL and empty files, row groups, renames") {
-    withSQLConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
-      val r = root()
-      // v1: three files of every stats type, NULLs in every column
-      val v1 = Versioned.appendWithStats(typed(300).repartition(3), r, statsCols)
-      val m1 = agree(r, files(v1))
-      assert(m1.size === 3 && m1.values.forall(m => m.ranges.length == 6 &&
-        m.nullCounts.forall(_ > 0) && m.nullCounts.forall(_ < m.rowCount)))
-      // v2: one file whose `l` is all NULL — counts, but no ranges
-      Versioned.appendWithStats(typed(50, 1000).withColumn("l", lit(null).cast("long"))
-        .coalesce(1), r, statsCols)
-      val m2 = agree(r, filesOf(r, 2))
-      assert(m2.values.toSeq.map(m => (m.ranges, m.rowCount, m.nullCounts(3))) ===
-        Seq((Nil, 50L, 50L)))
-      // v3: an empty commit still lands one empty part file: a stats-less entry
-      Versioned.appendWithStats(typed(10).filter(lit(false)), r, statsCols)
-      val f3 = filesOf(r, 3)
-      assert(f3.length === 1 && rowGroups(r, f3.head._1) === 0)
-      assert(agree(r, f3).isEmpty)
-      assert(Versioned.currentVersion(r).get.nulls.get(f3.head._1).isEmpty)
-      // v4: one file of many row groups: chunk stats fold across them
-      Versioned.appendWithStats(typed(20000, 5000).coalesce(1), r, statsCols,
-        options = Map("parquet.block.size" -> "8192"))
-      val f4 = filesOf(r, 4)
-      assert(f4.length === 1 && rowGroups(r, f4.head._1) > 1)
-      val m4 = agree(r, f4).values.head
-      assert(m4.rowCount === 20000L && m4.ranges(2) === ((5001 * 1000 - 77).toLong,
-        (24999 * 1000 - 77).toLong))
-      // v5: a renamed stats column lands under its physical name
-      Versioned.evolveRename(r, "l", "l2")
-      Versioned.appendWithStats(typed(40, 30000).withColumnRenamed("l", "l2").coalesce(1), r,
-        statsCols.map(c => if (c == "l") "l2" else c))
-      assert(Versioned.currentVersion(r).get.colMap === Map("l2" -> "l"))
-      assert(agree(r, filesOf(r, 6)).size === 1)
-      // pruning over the recorded stats reads what a full scan filters
-      val all = Versioned.read(spark, r)
-      Seq(col("i") <= 10000, col("l2") > 2000000000000L, col("d") === lit("2000-02-01")
-        .cast("date"), col("b").isNull).foreach { p =>
-        assert(Versioned.readWhere(spark, r, p).count() === all.filter(p).count(), p.toString)
+  test("write-time stats equal the scan's: NULLs, empty files, renames") {
+    // every stats type, in both of Spark's timestamp encodings
+    Seq("TIMESTAMP_MICROS", "INT96").foreach { tsType =>
+      withSQLConf("spark.sql.parquet.outputTimestampType" -> tsType) {
+        val r = root()
+        // v1: three files of every stats type, NULLs in every column
+        val v1 = Versioned.appendWithStats(typed(300).repartition(3), r, statsCols)
+        val m1 = agree(r, files(v1))
+        assert(m1.size === 3 && m1.values.forall(m => m.ranges.length == 6 &&
+          m.nullCounts.forall(_ > 0) && m.nullCounts.forall(_ < m.rowCount)))
+        // v2: one file whose `l` is all NULL — counts, but no ranges
+        Versioned.appendWithStats(typed(50, 1000).withColumn("l", lit(null).cast("long"))
+          .coalesce(1), r, statsCols)
+        val m2 = agree(r, filesOf(r, 2))
+        assert(m2.values.toSeq.map(m => (m.ranges, m.rowCount, m.nullCounts(3))) ===
+          Seq((Nil, 50L, 50L)))
+        // v3: an empty commit still lands one empty part file: a stats-less entry
+        Versioned.appendWithStats(typed(10).filter(lit(false)), r, statsCols)
+        val f3 = filesOf(r, 3)
+        assert(f3.length === 1 && rowGroups(r, f3.head._1) === 0)
+        assert(agree(r, f3).isEmpty)
+        assert(Versioned.currentVersion(r).get.nulls.get(f3.head._1).isEmpty)
+        // v4: one file of many row groups: its stats span them all
+        Versioned.appendWithStats(typed(20000, 5000).coalesce(1), r, statsCols,
+          options = Map("parquet.block.size" -> "8192"))
+        val f4 = filesOf(r, 4)
+        assert(f4.length === 1 && rowGroups(r, f4.head._1) > 1)
+        val m4 = agree(r, f4).values.head
+        assert(m4.rowCount === 20000L && m4.ranges(2) === ((5001 * 1000 - 77).toLong,
+          (24999 * 1000 - 77).toLong))
+        // v5: a renamed stats column lands under its physical name
+        Versioned.evolveRename(r, "l", "l2")
+        Versioned.appendWithStats(typed(40, 30000).withColumnRenamed("l", "l2").coalesce(1), r,
+          statsCols.map(c => if (c == "l") "l2" else c))
+        assert(Versioned.currentVersion(r).get.colMap === Map("l2" -> "l"))
+        assert(agree(r, filesOf(r, 6)).size === 1)
+        // pruning over the recorded stats reads what a full scan filters
+        val all = Versioned.read(spark, r)
+        Seq(col("i") <= 10000, col("l2") > 2000000000000L, col("d") === lit("2000-02-01")
+          .cast("date"), col("b").isNull).foreach { p =>
+          assert(Versioned.readWhere(spark, r, p).count() === all.filter(p).count(), p.toString)
+        }
       }
     }
   }
@@ -106,22 +108,22 @@ class VersionedFooterStatsSpec extends SparkSuite {
   test("an unconstrained stats append launches no Spark job after its write") {
     val r = root()
     Versioned.appendWithStats(typed(100).repartition(2), r, Seq("i", "l"))
-    // one action: the write; the stats come from its footers
+    // one action: the write, whose tasks measure the stats
     assert(executionsOf(
       Versioned.appendWithStats(typed(100, 100).repartition(2), r, Seq("i", "l"))).length === 1)
     // so do the other stats-recording commits
     assert(executionsOf(Versioned.compact(spark, r, 2)).length === 1)
   }
 
-  test("INT96 timestamps, CHECK constraints and bloom columns still run the scan") {
-    // Spark's default timestamp encoding keeps no usable footer statistics
+  test("INT96 stats need no scan; CHECK constraints and blooms still scan") {
+    // Spark's default timestamp encoding keeps no usable footer statistics,
+    // but the write measures the values, not the footers
     withSQLConf("spark.sql.parquet.outputTimestampType" -> "INT96") {
       val r = root()
       val ex = executionsOf(Versioned.appendWithStats(typed(100).repartition(2), r, Seq("i", "t")))
-      assert(ex.length > 1, "the write, then the stats scan")
+      assert(ex.length === 1, "the write alone")
       val cur = Versioned.currentVersion(r).get
       val fs = files(cur)
-      assert(Versioned.footerMeasures(spark, r, fs, cur.statsCols).isEmpty)
       val scanned = Versioned.scanMeasures(spark, r, fs, cur.schema.get, cur.statsCols, Nil)
       assert(fs.forall { case (f, _) => cur.stats.get(f).contains(scanned(f).ranges) })
     }
@@ -144,5 +146,13 @@ class VersionedFooterStatsSpec extends SparkSuite {
     val vb = Versioned.currentVersion(rb).get
     assert(vb.files.forall(f => vb.blooms.contains((f, "pay"))))
     assert(Versioned.readWhere(spark, rb, col("pay") === "p42").count() === 1)
+  }
+
+  test("Versioned.scala writes only through its one FileFormatWriter.write") {
+    val src = new String(Files.readAllBytes(Paths.get(sys.props("user.dir"),
+      "src", "main", "scala", "graft", "merge", "Versioned.scala")), "UTF-8")
+    def count(token: String): Int = src.sliding(token.length).count(_ == token)
+    assert(count("FileFormatWriter.write(") === 1)
+    Seq(".write.", "listParquet", "footerMeasure").foreach(t => assert(count(t) === 0, t))
   }
 }

@@ -56,6 +56,22 @@ class VersionedTxnSpec extends SparkSuite {
     }
   }
 
+  test("a staged append onto an empty table reads back once its txn commits") {
+    val r = tmpDir() + "/t"
+    val txn = Versioned.beginTransaction(tmpDir() + "/_txns")
+    Versioned.appendStaged(spark.range(0, 10).toDF(), r, txn)
+    assert(Versioned.read(spark, r).count() === 0, "pending: the empty state")
+    Versioned.commitTransaction(txn)
+    // the staged v1 is a delta with no checkpoint under it
+    val cur = Versioned.currentVersion(r).get
+    assert(cur.n === 1 && cur.pendingTxn.isEmpty && cur.files.nonEmpty)
+    assert(Versioned.versions(r).map(_.files) === Seq(cur.files))
+    assert(Versioned.read(spark, r).count() === 10)
+    // later commits build on it
+    Versioned.append(spark.range(10, 15).toDF(), r)
+    assert(Versioned.read(spark, r).count() === 15)
+  }
+
   test("abort makes staged versions no-ops forever; their files become reclaimable orphans") {
     import spark.implicits._
     val base = tmpDir()
