@@ -796,9 +796,15 @@ object Versioned {
     * in path order with their byte sizes (fmt=3; root-relative, so a
     * manifest survives a table relocation) and, when `statsCols` is
     * non-empty, each file's [[Measured]] stats: ranges, row count and null
-    * counts of [[statsLongExpr]]'s encoding, taken by the write tasks from
-    * the rows they wrote ([[WriteStats]]), so no footer or file is read
-    * back. A file without rows gets a stats-less entry.
+    * counts of [[statsLongExpr]]'s encoding and the bloom bits of
+    * `bloomCols`, taken by the write tasks from the rows they wrote
+    * ([[WriteStats]]), so no footer or file is read back. A file without
+    * rows gets a stats-less entry. Blooms ride stats-tracked writes only.
+    *
+    * The same tasks count each of `constraints`' violating rows — rows
+    * where the CHECK is FALSE; NULL passes. Any violation throws once the
+    * files land, before an entry is returned, so the caller commits
+    * nothing and the refused files age into [[gcOrphans]]' reclaim.
     *
     * The write is one [[WriteCommand]]: Spark's own task writer with this
     * log's commit protocol ([[DirectCommit]]), so each file lands at its
@@ -815,28 +821,78 @@ object Versioned {
     */
   private def writeData(df: DataFrame, root: String, n: Int,
       statsCols: Seq[String] = Nil, colMap: Map[String, String] = Map.empty,
-      options: Map[String, String] = Map.empty): (Seq[FileEntry], Path) = {
+      options: Map[String, String] = Map.empty,
+      constraints: Seq[(String, String)] = Nil,
+      bloomCols: Seq[String] = Nil): (Seq[FileEntry], Path) = {
+    val blooms = if (statsCols.isEmpty) Nil else bloomCols
+    // physicalize renames in place, so the logical frame's ordinals are the
+    // written rows' ones: constraint SQL and bloom columns bind by logical name
+    val stats = Option.when(statsCols.nonEmpty || constraints.nonEmpty)(new WriteStats(
+      statsCols.map { c =>
+        val i = df.schema.fieldIndex(c)
+        statsLongExpr(c, df.schema(i).dataType) // refuses a type without an exact encoding
+        i -> df.schema(i).dataType
+      }, constraints.length, blooms,
+      rowExprs(df.sparkSession, df.schema, constraints.map { case (_, sql) =>
+        !coalesce(expr(sql), lit(true))
+      } ++ blooms.flatMap(c => bloomPositions(col(c))))))
     val dataDir = Paths.get(root, "data", s"c$n-${java.util.UUID.randomUUID()}")
     Files.createDirectories(dataDir)
     val marker = dataDir.getParent.resolve(dataDir.getFileName.toString + ".inflight")
     Files.writeString(marker, "")
     val phys = physicalize(df, colMap)
     val protocol = new DirectCommit(java.util.UUID.randomUUID().toString, dataDir.toString)
-    val stats = Option.when(statsCols.nonEmpty)(new WriteStats(statsCols.map { c =>
-      val i = phys.schema.fieldIndex(physicalName(colMap, c))
-      statsLongExpr(c, phys.schema(i).dataType) // refuses a type without an exact encoding
-      i -> phys.schema(i).dataType
-    }))
     val session = phys.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     new QueryExecution(session, WriteCommand(phys.queryExecution.analyzed, dataDir.toString,
       protocol, stats.toSeq, options), phys.queryExecution.tracker,
       shuffleCleanupMode = QueryExecution.determineShuffleCleanupMode(session.sessionState.conf)
     ).assertCommandExecuted()
+    stats.foreach(s => refuseViolations(root, constraints.zip(s.violations)))
+    val measured = if (statsCols.isEmpty) Map.empty[String, Measured] else stats.get.measured
     val rootP = Paths.get(root)
-    def rel(f: String): String = rootP.relativize(Paths.get(f)).toString
-    (fileEntries(protocol.committed.map { case (f, sz) => (rel(f), sz) }.sortBy(_._1),
-      stats.fold(Map.empty[String, Measured])(_.measured.map { case (f, m) => rel(f) -> m })),
-      marker)
+    (protocol.committed.sortBy(_._1).map { case (f, sz) =>
+      val rel = rootP.relativize(Paths.get(f)).toString
+      measured.get(f).fold(FileEntry(rel, Nil, sz))(m =>
+        FileEntry(rel, m.ranges, sz, m.blooms, m.rowCount, m.nullCounts))
+    }, marker)
+  }
+
+  /** The k bloom bit positions of `c`, one per seed — the one hashing both
+    * the write tasks ([[WriteStats]]) and a probe ([[bloomPrune]]) use, so
+    * a probe tests exactly the bits its value would have set.
+    */
+  private def bloomPositions(c: Column): Seq[Column] =
+    (0 until BloomHashes).map(sd => pmod(xxhash64(c, lit(sd)), lit(BloomBits.toLong)))
+
+  /** `cols` resolved and optimized against rows of `schema` (every field
+    * nullable, as a file reads back), then bound to its ordinals: catalyst
+    * expressions a task evaluates per row, or the driver folds to constants.
+    * The rows come from an empty RDD, which no rule can fold away, so the
+    * projection survives optimization; nothing runs.
+    */
+  private def rowExprs(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+      cols: Seq[Column]): Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
+    if (cols.isEmpty) Nil
+    else {
+      import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences}
+      import org.apache.spark.sql.catalyst.plans.logical.Project
+      val rows = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        org.apache.spark.sql.types.StructType(schema.fields.map(_.copy(nullable = true))))
+      rows.select(cols: _*).queryExecution.optimizedPlan match {
+        case Project(list, child) => list.map(e => BindReferences.bindReference(
+          e match { case a: Alias => a.child; case _ => e }, child.output))
+        case p => throw new IllegalStateException(s"row expressions planned as $p")
+      }
+    }
+
+  /** Refuse a commit whose rows violate a CHECK constraint: `counted` pairs
+    * each constraint with its violating rows.
+    */
+  private def refuseViolations(root: String, counted: Seq[((String, String), Long)]): Unit = {
+    val bad = counted.collect { case ((nm, sql), k) if k > 0 => s"`$nm` ($sql): $k row(s)" }
+    require(bad.isEmpty,
+      s"commit to $root violates CHECK constraint(s) — refused, no metadata written: " +
+        bad.mkString("; "))
   }
 
   /** [[writeData]]'s write as a command, so it plans like any Spark write
@@ -930,30 +986,54 @@ object Versioned {
     * hands its writer: integral values as they are, DATE as epoch days,
     * TIMESTAMP as epoch micros — the values Spark holds them as. A file
     * where some stats column is all NULL gets no ranges, and a file without
-    * rows no measure, as in [[scanMeasures]]. Once the job commits,
-    * [[measured]] holds every committed task's files by absolute path.
+    * rows no measure. Once the job commits, [[measured]] holds every
+    * committed task's files by absolute path.
+    *
+    * `exprs` ([[rowExprs]]) are evaluated per row only on a table with
+    * CHECK constraints or bloom columns: first `nChecks` violation flags,
+    * summed per task into [[violations]], then [[BloomHashes]] bit
+    * positions per column of `blooms`, OR-ed into each file's bits.
     */
-  private[graft] final class WriteStats(cols: Seq[(Int, DataType)])
+  private[graft] final class WriteStats(cols: Seq[(Int, DataType)], nChecks: Int,
+      blooms: Seq[String],
+      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       extends WriteJobStatsTracker {
     @transient private[graft] var measured: Map[String, Measured] = Map.empty
+    @transient private[graft] var violations: Seq[Long] = Nil
 
-    override def newTaskInstance(): WriteTaskStatsTracker = new TaskStats(cols.toArray)
+    override def newTaskInstance(): WriteTaskStatsTracker =
+      new TaskStats(cols.toArray, nChecks, blooms, exprs)
 
-    override def processStats(stats: Seq[WriteTaskStats], jobCommitTime: Long): Unit =
-      measured = stats.flatMap { case FileStats(m) => m }.toMap
+    override def processStats(stats: Seq[WriteTaskStats], jobCommitTime: Long): Unit = {
+      val tasks = stats.map { case s: FileStats => s }
+      measured = tasks.flatMap(_.files).toMap
+      violations = (0 until nChecks).map(i => tasks.map(_.violations(i)).sum)
+    }
   }
 
-  private final case class FileStats(files: Map[String, Measured]) extends WriteTaskStats
+  private final case class FileStats(files: Map[String, Measured], violations: Array[Long])
+      extends WriteTaskStats
 
-  private final class TaskStats(cols: Array[(Int, DataType)]) extends WriteTaskStatsTracker {
+  private final class TaskStats(cols: Array[(Int, DataType)], nChecks: Int,
+      blooms: Seq[String], exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+      extends WriteTaskStatsTracker {
     private final class Acc {
       var rows = 0L
       val mins: Array[Long] = Array.fill(cols.length)(Long.MaxValue)
       val maxs: Array[Long] = Array.fill(cols.length)(Long.MinValue)
       val nulls = new Array[Long](cols.length)
+      val bits = new Array[Long](blooms.length * BloomWords)
     }
     private val open = scala.collection.mutable.HashMap.empty[String, Acc]
     private val done = Map.newBuilder[String, Measured]
+    private val violations = new Array[Long](nChecks)
+    private val eval =
+      if (exprs.isEmpty) null
+      else {
+        val p = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(exprs)
+        p.initialize(org.apache.spark.TaskContext.getPartitionId())
+        p
+      }
 
     override def newPartition(values: InternalRow): Unit = ()
     override def newFile(path: String): Unit = open(path) = new Acc
@@ -977,15 +1057,33 @@ object Versioned {
         }
         i += 1
       }
+      if (eval != null) {
+        val out = eval(row)
+        var j = 0
+        while (j < nChecks) {
+          if (out.getBoolean(j)) violations(j) += 1
+          j += 1
+        }
+        while (j < out.numFields) {
+          val p = out.getLong(j)
+          val w = (j - nChecks) / BloomHashes * BloomWords + (p / 64).toInt
+          a.bits(w) |= 1L << (p % 64).toInt
+          j += 1
+        }
+      }
     }
 
     override def closeFile(path: String): Unit = open.remove(path).foreach { a =>
       if (a.rows > 0) done += path -> Measured(
         ranges = if (a.nulls.contains(a.rows)) Nil else a.mins.toSeq.zip(a.maxs),
-        rowCount = a.rows, nullCounts = a.nulls.toSeq)
+        rowCount = a.rows, nullCounts = a.nulls.toSeq,
+        blooms = blooms.zipWithIndex.map { case (c, b) =>
+          c -> a.bits.slice(b * BloomWords, (b + 1) * BloomWords).toVector
+        })
     }
 
-    override def getFinalStats(taskCommitTime: Long): WriteTaskStats = FileStats(done.result())
+    override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
+      FileStats(done.result(), violations)
   }
 
   /** Land `df`, the rewrite of version `cur`'s `replaced` files — a merge,
@@ -1006,12 +1104,14 @@ object Versioned {
     * `repartitionById`; NULL and out-of-range keys land in an edge file. A
     * table without stats, a rewrite with no known range, or one whose span
     * does not fit a Long lands unshaped (compaction round-robins into its
-    * `nFiles`).
+    * `nFiles`). The write measures `cur`'s stats and bloom columns and
+    * checks `constraints` ([[writeData]]).
     */
   private def writeRewrite(df: DataFrame, root: String, n: Int, cur: Version,
       replaced: Seq[String], colMap: Map[String, String], key: Option[String] = None,
       source: Option[(Long, Long, Long)] = None,
-      nFiles: Option[Int] = None): (Seq[FileEntry], Path) = {
+      nFiles: Option[Int] = None,
+      constraints: Seq[(String, String)] = Nil): (Seq[FileEntry], Path) = {
     val want = nFiles.getOrElse(math.max(1, math.min(replaced.size,
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)))
     val clustered = for {
@@ -1030,7 +1130,8 @@ object Versioned {
       df.repartitionById(cuts.length + 1, id)
     }
     val shaped = clustered.getOrElse(nFiles.fold(df)(df.repartition))
-    writeData(shaped, root, n, cur.statsCols, colMap)
+    writeData(shaped, root, n, cur.statsCols, colMap, constraints = constraints,
+      bloomCols = cur.bloomCols)
   }
 
   /** At most `nFiles - 1` increasing split points in (lo, hi] that cut the
@@ -1095,19 +1196,16 @@ object Versioned {
     val n = cur.map(_.n + 1).getOrElse(1)
     val cmap = cur.map(_.colMap).getOrElse(Map.empty)
     val ddl = normalizedDDL(df)
-    val (landed, marker) = writeData(df, root, n, colMap = cmap)
-    sealing(marker) {
-      val entries = checkedEntries(df.sparkSession, root, landed, ddl, Nil,
-        cur.map(_.constraints).getOrElse(Nil), cmap)
-      commit(root, cur, next(cur, "append").copy(entries = entries), Some(ddl))
-    }
+    val (landed, marker) = writeData(df, root, n, colMap = cmap,
+      constraints = cur.map(_.constraints).getOrElse(Nil))
+    sealing(marker)(commit(root, cur, next(cur, "append").copy(entries = landed), Some(ddl)))
   }
 
   /** VT6: append WITH manifest-level skipping stats — after the commit's
     * files land, each file's (min, max) of every column in `statsCols` is
-    * recorded in the manifest, measured by the write's own tasks (no Spark
-    * job after the write; the commit-sized scan runs only for CHECK
-    * constraints and bloom columns — see [[checkedEntries]]), so a
+    * recorded in the manifest, measured by the write's own tasks along
+    * with the bloom bits and the CHECK constraints' violation counts (no
+    * Spark job after the write — see [[writeData]]), so a
     * [[readPruned]] later plans only range-overlapping files without
     * opening a footer. This is file-granularity data skipping from log
     * metadata (the Delta/Iceberg published design); it composes with
@@ -1135,14 +1233,10 @@ object Versioned {
     val cmap = cur.map(_.colMap).getOrElse(Map.empty)
     val bCols = if (bloomCols.nonEmpty) bloomCols else cur.map(_.bloomCols).getOrElse(Nil)
     val ddl = normalizedDDL(df)
-    val (landed, marker) = writeData(df, root, n, statsCols, cmap, options)
-    sealing(marker) {
-      // the write's own stats; a constrained or bloom-tracked table instead
-      // pays one landed-files scan that fuses the check and the bloom build
-      commit(root, cur, next(cur, "append", statsCols, bCols).copy(entries =
-        checkedEntries(df.sparkSession, root, landed, ddl, statsCols,
-          cur.map(_.constraints).getOrElse(Nil), cmap, bCols)), Some(ddl))
-    }
+    val (landed, marker) = writeData(df, root, n, statsCols, cmap, options,
+      cur.map(_.constraints).getOrElse(Nil), bCols)
+    sealing(marker)(commit(root, cur,
+      next(cur, "append", statsCols, bCols).copy(entries = landed), Some(ddl)))
   }
 
   /** The exact-long encoding of a stats/pruning column — the write-side
@@ -1225,143 +1319,11 @@ object Versioned {
     }
   }
 
-  /** The manifest entries of `landed`, [[writeData]]'s entries written
-    * with `statsCols`, once the commit's CHECK constraints hold. The
-    * write's own stats answer (no Spark job runs after the write) unless
-    * the table has constraints or bloom columns: then one commit-sized scan
-    * of the landed files ([[scanMeasures]]) counts each constraint's
-    * violations — any violation throws BEFORE an entry is returned, so the
-    * caller commits nothing ([[validateConstraints]]' contract) — builds
-    * the bloom bits, and measures the stats the same way. A commit without
-    * stats columns checks its constraints alone. `schemaDDL` is the
-    * commit's LOGICAL schema, so a scan reads the landed files without
-    * inferring theirs.
-    */
-  private def checkedEntries(spark: SparkSession, root: String, landed: Seq[FileEntry],
-      schemaDDL: String, statsCols: Seq[String], constraints: Seq[(String, String)],
-      colMap: Map[String, String] = Map.empty,
-      bloomCols: Seq[String] = Nil): Seq[FileEntry] = {
-    val files = landed.map(e => e.path -> e.size)
-    if (statsCols.isEmpty) {
-      validateConstraints(spark, root, constraints, files, Some(schemaDDL), colMap)
-      landed
-    } else if (constraints.isEmpty && bloomCols.isEmpty) landed
-    else fileEntries(files,
-      scanMeasures(spark, root, files, schemaDDL, statsCols, constraints, colMap, bloomCols))
-  }
-
-  /** What a stats pass measured of one non-empty landed file. `ranges` is
-    * empty when any stats column holds no non-NULL value in the file.
+  /** What the write tasks measured of one non-empty landed file. `ranges`
+    * is empty when any stats column holds no non-NULL value in the file.
     */
   private[graft] final case class Measured(ranges: Seq[(Long, Long)], rowCount: Long,
-      nullCounts: Seq[Long], blooms: Seq[(String, Vector[Long])] = Nil)
-
-  /** The one entry shape both stats sources produce: a file the pass
-    * measured nothing of (an empty part file) gets a stats-less entry.
-    */
-  private[graft] def fileEntries(files: Seq[(String, Long)],
-      measured: Map[String, Measured]): Seq[FileEntry] =
-    files.map { case (f, sz) =>
-      measured.get(f) match {
-        case Some(m) => FileEntry(f, m.ranges, sz, m.blooms, m.rowCount, m.nullCounts)
-        case None => FileEntry(f, Nil, sz)
-      }
-    }
-
-  /** The commit-sized scan: one read of the landed files, grouped by input
-    * file ([[statsValidationFrame]]). It measures the stats, counts each
-    * constraint's violations (summed driver-side; any violation throws) and
-    * builds the bloom bits. An empty file yields no group, so no measure.
-    */
-  private[graft] def scanMeasures(spark: SparkSession, root: String,
-      files: Seq[(String, Long)], schemaDDL: String, statsCols: Seq[String],
-      constraints: Seq[(String, String)],
-      colMap: Map[String, String] = Map.empty,
-      bloomCols: Seq[String] = Nil): Map[String, Measured] = {
-    val rootP = Paths.get(root)
-    val rows = statsValidationFrame(spark, root, files, schemaDDL, statsCols, constraints,
-      colMap, bloomCols).collect().toSeq
-    val nStat = 2 * statsCols.length
-    val nCon = constraints.length
-    if (constraints.nonEmpty) {
-      val bad = constraints.zipWithIndex.collect {
-        case ((nm, sql), i) if rows.map(_.getLong(1 + nStat + i)).sum > 0 =>
-          s"`$nm` ($sql): ${rows.map(_.getLong(1 + nStat + i)).sum} row(s)"
-      }
-      require(bad.isEmpty,
-        s"commit to $root violates CHECK constraint(s) — refused, no metadata written: " +
-          bad.mkString("; "))
-    }
-    // null-count block sits LAST: rc, then one null count per stats col
-    val nBase = 1 + nStat + nCon + bloomCols.length * BloomWords
-    rows.map { r =>
-      rootP.relativize(Paths.get(new java.net.URI(r.getString(0)).getPath)).toString ->
-        Measured(
-          ranges =
-            if ((1 to nStat).exists(r.isNullAt)) Nil
-            else statsCols.indices.map(i => (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i))),
-          rowCount = r.getLong(nBase),
-          nullCounts = statsCols.indices.map(i => r.getLong(nBase + 1 + i)),
-          // word w of bloom col b sits at column 1 + nStat + nCon + b*BloomWords + w
-          blooms = bloomCols.zipWithIndex.map { case (c, bi) =>
-            c -> Vector.tabulate(BloomWords)(w =>
-              r.getLong(1 + nStat + nCon + bi * BloomWords + w))
-          })
-    }.toMap
-  }
-
-  /** The fused stats+constraint aggregate of [[scanMeasures]] as
-    * a frame — `private[graft]` so the spec can pin its SCAN SCHEMA: the
-    * aggregate references only the stats columns and the columns the
-    * constraint SQL names, so Catalyst's column pruning reduces the parquet
-    * read to exactly that subset — a wide table with one constrained
-    * column never pays full-row decode on the per-commit validation pass.
-    */
-  private[graft] def statsValidationFrame(spark: SparkSession, root: String,
-      files: Seq[(String, Long)], schemaDDL: String, statsCols: Seq[String],
-      constraints: Seq[(String, String)],
-      colMap: Map[String, String] = Map.empty,
-      bloomCols: Seq[String] = Nil): DataFrame = {
-    val rootP = Paths.get(root)
-    // landed files carry PHYSICAL names; stats columns and constraint SQL
-    // are LOGICAL — read under the physicalized contract (no schema
-    // inference job) and alias back before analyzing (the Project folds
-    // into the scan, no extra pass)
-    val st = org.apache.spark.sql.types.StructType.fromDDL(schemaDDL)
-    val df0 = logicalize(spark.read.schema(physicalStruct(st, colMap))
-      .parquet(files.map { case (f, _) => rootP.resolve(f).toString }: _*), colMap)
-    // bloom positions are computed ONCE per row per col (k=3 xxhash64
-    // seeds), then the 16 word aggregates pick bits off them — pure
-    // codegen, no UDFs, same exchange as the stats/constraint aggs
-    val df = bloomCols.zipWithIndex.foldLeft(df0) { case (d, (c, bi)) =>
-      (0 until BloomHashes).foldLeft(d)((dd, sd) =>
-        dd.withColumn(s"__bp${bi}_$sd",
-          pmod(xxhash64(col(c), lit(sd)), lit(BloomBits.toLong))))
-    }
-    val statAggs = statsCols.flatMap { c =>
-      val e = statsLongExpr(c, df.schema(c).dataType)
-      Seq(min(e).as(s"mn_$c"), max(e).as(s"mx_$c"))
-    }
-    val conAggs = constraints.map { case (nm, sql) =>
-      count(when(!coalesce(expr(sql), lit(true)), lit(1))).as(s"viol_$nm")
-    }
-    val bloomAggs = bloomCols.zipWithIndex.flatMap { case (_, bi) =>
-      (0 until BloomWords).map { w =>
-        val terms = (0 until BloomHashes).map { sd =>
-          s"IF((__bp${bi}_$sd div 64) = $w, " +
-            s"shiftleft(1L, CAST(__bp${bi}_$sd % 64 AS INT)), 0L)"
-        }.mkString(" | ")
-        expr(s"bit_or($terms)").as(s"bf_${bi}_$w")
-      }
-    }
-    // vt31 null-count stats ride the SAME pass, appended LAST so every
-    // earlier consumer's positional indexing is untouched: row count +
-    // per-stats-col null count (count never returns NULL)
-    val nullAggs = count(lit(1)).as("__rc") +:
-      statsCols.map(c => count(when(col(c).isNull, lit(1))).as(s"__nc_$c"))
-    val aggs = statAggs ++ conAggs ++ bloomAggs ++ nullAggs
-    df.groupBy(input_file_name().as("f")).agg(aggs.head, aggs.tail: _*)
-  }
+      nullCounts: Seq[Long], blooms: Seq[(String, Vector[Long])])
 
   /** VT8: optimistic-retry append — the CAS loser's side of the concurrency
     * story. The data files land ONCE (immutable, commit-scoped); on a lost
@@ -1371,20 +1333,20 @@ object Versioned {
     * landed files age into [[gcOrphans]]' reclaim). Safe under any
     * interleaving: every retry re-reads the current state, and the
     * hard-link promote guarantees exactly one writer per version number.
+    * The write checks the constraints of the head it started from; an
+    * attempt whose head carries a constraint added since is checked against
+    * it by [[countViolations]], the count [[addConstraint]] admits with.
     */
   def appendWithRetry(df: DataFrame, root: String, maxRetries: Int = 5): Version = {
     val cur = currentVersion(root)
     val n0 = cur.map(_.n + 1).getOrElse(1)
     val cmap = cur.map(_.colMap).getOrElse(Map.empty)
     val ddl = normalizedDDL(df)
-    val (landed, marker) = writeData(df, root, n0, colMap = cmap)
+    var validated = cur.map(_.constraints).getOrElse(Nil)
+    val (landed, marker) = writeData(df, root, n0, colMap = cmap, constraints = validated)
     sealing(marker) {
-      // constraints are re-validated per ATTEMPT against that attempt's
-      // head: a racing commit may have ADDED a constraint, and its own
-      // admission check scanned only committed data — never these not-yet-
-      // committed files. Validation reruns only when the constraint set
-      // actually changed (the common retry re-commits metadata-only).
-      var validated: Seq[(String, String)] = null
+      // a racing commit may have ADDED a constraint, and its admission check
+      // counted only committed data — never these not-yet-committed files
       var attempt = 0
       var committed: Option[Version] = None
       while (committed.isEmpty) {
@@ -1395,11 +1357,13 @@ object Versioned {
         require(head.map(_.colMap).getOrElse(Map.empty) == cmap,
           s"concurrent column rename at $root while this append was in flight — " +
             "re-run the append (its files carry the pre-rename physical names)")
-        val cons = head.map(_.constraints).getOrElse(Nil)
-        if (cons != validated) {
-          checkedEntries(df.sparkSession, root, landed, ddl, Nil, cons, cmap)
-          validated = cons
-        }
+        val added = head.toSeq.flatMap(h => h.constraints.filterNot(validated.contains).map {
+          case c @ (_, sql) =>
+            c -> countViolations(df.sparkSession, root, h.copy(schema = Some(ddl)),
+              landed.map(_.path), sql)
+        })
+        refuseViolations(root, added)
+        validated ++= added.map(_._1)
         try committed = Some(commit(root, head,
           next(head, "append").copy(entries = landed), Some(ddl)))
         catch {
@@ -1471,10 +1435,8 @@ object Versioned {
     // moment the mapping is free to drop)
     val (landed, marker) = writeRewrite(df, root, n, cur, cur.files, Map.empty,
       nFiles = Some(nFiles))
-    val entries = checkedEntries(spark, root, landed, normalizedDDL(df), cur.statsCols, Nil,
-      bloomCols = cur.bloomCols)
     sealing(marker)(commit(root, Some(cur), next(Some(cur), "compact").copy(full = true,
-      entries = entries, txns = cur.txns, schema = cur.schema,
+      entries = landed, txns = cur.txns, schema = cur.schema,
       constraints = cur.constraints)))
   }
 
@@ -1518,11 +1480,10 @@ object Versioned {
     val shaped = graft.ops.ZOrder.zCluster(
       df.select(df.columns.map(col).toIndexedSeq: _*), encoded, dimStats, bits, nFiles)
     val n = cur.n + 1
-    val (landed, marker) = writeData(shaped, root, n, zCols, options = options)
-    val entries = checkedEntries(spark, root, landed, normalizedDDL(shaped), zCols, Nil,
+    val (landed, marker) = writeData(shaped, root, n, zCols, options = options,
       bloomCols = cur.bloomCols)
     sealing(marker)(commit(root, Some(cur), next(Some(cur), "compact-zorder", zCols)
-      .copy(full = true, entries = entries, txns = cur.txns, schema = cur.schema,
+      .copy(full = true, entries = landed, txns = cur.txns, schema = cur.schema,
         constraints = cur.constraints)))
   }
 
@@ -1600,33 +1561,17 @@ object Versioned {
     base.filter(predicate)
   }
 
-  /** VT26 (read half): POINT-LOOKUP file skipping via per-file BLOOM bits —
-    * the pruning min/max ranges cannot do: an equality probe on a
-    * high-cardinality UNSORTED column (a doc_id lookup on an ingest-ordered
-    * table) overlaps every file's range, but each file's 1024-bit bloom
-    * (recorded by [[appendWithStats]]' `bloomCols`, built in the same
-    * commit-sized pass as the stats) proves most files cannot hold the
-    * value (the Delta bloom-index / Iceberg puffin design). The probe's k
-    * bit positions are computed with the SAME Spark `xxhash64` the write
-    * side used — via one local 1-row job, under the column's CONTRACT type
-    * (hashing a literal under a different type would probe garbage bits) —
-    * and a file is pruned only when a bit is provably absent: blooms only
-    * SKIP, never admit rows (the residual equality filter always applies;
-    * bloom-less files read conservatively). Range-stats pruning composes
-    * (intersection). Without a contract schema the bloom is not consulted
-    * (type-unverifiable probe) — conservative, never wrong.
-    */
   /** Keep only the files of `candidates` whose recorded bloom could hold
     * `litv` (already cast to the CONTRACT type — the bits the write side
-    * hashed). One local 1-row job computes the probe's k positions with the
-    * same Spark xxhash64; bloom-less files stay (conservative). Shared by
-    * [[readEquals]] and the DSv2 batch scan's pushed-EqualTo pruning.
+    * hashed). The probe's k positions are [[bloomPositions]] of the
+    * literal, constant-folded on the driver, so no Spark job runs;
+    * bloom-less files stay (conservative). Shared by [[readEquals]] and the
+    * DSv2 batch scan's pushed-EqualTo pruning.
     */
   private[graft] def bloomPrune(spark: SparkSession, v: Version, column: String,
       litv: Column, candidates: Seq[String]): Seq[String] = {
-    val posRow = spark.range(1).select((0 until BloomHashes).map(sd =>
-      pmod(xxhash64(litv, lit(sd)), lit(BloomBits.toLong)).as(s"p$sd")): _*).head
-    val positions = (0 until BloomHashes).map(posRow.getLong)
+    val positions = rowExprs(spark, org.apache.spark.sql.types.StructType(Nil),
+      bloomPositions(litv)).map(_.eval().asInstanceOf[Long])
     candidates.filter { f =>
       v.blooms.get((f, column)) match {
         case Some(bits) => positions.forall(bloomHasBit(bits, _))
@@ -1635,6 +1580,22 @@ object Versioned {
     }
   }
 
+  /** VT26 (read half): POINT-LOOKUP file skipping via per-file BLOOM bits —
+    * the pruning min/max ranges cannot do: an equality probe on a
+    * high-cardinality UNSORTED column (a doc_id lookup on an ingest-ordered
+    * table) overlaps every file's range, but each file's 1024-bit bloom
+    * (recorded by [[appendWithStats]]' `bloomCols`, folded by the write
+    * tasks along with the stats) proves most files cannot hold the
+    * value (the Delta bloom-index / Iceberg puffin design). The probe's k
+    * bit positions are the write side's own [[bloomPositions]], folded on
+    * the driver under the column's CONTRACT type (hashing a literal under
+    * a different type would probe garbage bits) — and a file is pruned
+    * only when a bit is provably absent: blooms only SKIP, never admit rows
+    * (the residual equality filter always applies; bloom-less files read
+    * conservatively). Range-stats pruning composes (intersection). Without
+    * a contract schema the bloom is not consulted (type-unverifiable
+    * probe) — conservative, never wrong.
+    */
   def readEquals(spark: SparkSession, root: String, column: String, value: Any,
       asOf: Option[Int] = None): DataFrame = {
     val v = asOf.map(stateAt(root, _)).getOrElse(currentVersion(root).getOrElse(
@@ -1728,11 +1689,9 @@ object Versioned {
     val n = cur.n + 1
     val ddl = normalizedDDL(survivors)
     val (landed, marker) = writeRewrite(survivors, root, n, cur, affected, cur.colMap)
-    val entries = checkedEntries(spark, root, landed, ddl, cur.statsCols, Nil, cur.colMap,
-      cur.bloomCols)
     sealing(marker)(commit(root, Some(cur),
       next(Some(cur), if (staged.isEmpty) "delete" else "txn-delete")
-        .copy(entries = entries, removed = affected, txnMarker = staged), Some(ddl)))
+        .copy(entries = landed, removed = affected, txnMarker = staged), Some(ddl)))
   }
 
   /** VT25: copy-on-write row-level UPDATE through the log — the third DML
@@ -1772,13 +1731,10 @@ object Versioned {
     }.toIndexedSeq: _*)
     val n = cur.n + 1
     val ddl = normalizedDDL(updated)
-    val (landed, marker) = writeRewrite(updated, root, n, cur, affected, cur.colMap)
-    sealing(marker) {
-      val entries = checkedEntries(spark, root, landed, ddl, cur.statsCols, cur.constraints,
-        cur.colMap, cur.bloomCols)
-      commit(root, Some(cur), next(Some(cur), "update").copy(entries = entries,
-        removed = affected), Some(ddl))
-    }
+    val (landed, marker) = writeRewrite(updated, root, n, cur, affected, cur.colMap,
+      constraints = cur.constraints)
+    sealing(marker)(commit(root, Some(cur), next(Some(cur), "update").copy(entries = landed,
+      removed = affected), Some(ddl)))
   }
 
   /** VT27: MERGE-ON-READ row-level DELETE — [[deleteWhere]]'s semantics at
@@ -1885,13 +1841,10 @@ object Versioned {
     val positions = matched.select(col(DvKeyCol).as("file"), col(DvPosCol).as("pos"))
     val n = cur.n + 1
     val ddl = normalizedDDL(updated)
-    val (landed, marker) = writeData(updated, root, n, cur.statsCols, cur.colMap)
-    val res = sealing(marker) {
-      val entries = checkedEntries(spark, root, landed, ddl, cur.statsCols, cur.constraints,
-        cur.colMap, cur.bloomCols)
-      commitDvAttach(spark, root, cur, "update-dv", positions, affected,
-        addedFiles = entries, addedDDL = Some(ddl))
-    }
+    val (landed, marker) = writeData(updated, root, n, cur.statsCols, cur.colMap,
+      constraints = cur.constraints, bloomCols = cur.bloomCols)
+    val res = sealing(marker)(commitDvAttach(spark, root, cur, "update-dv", positions,
+      affected, addedFiles = landed, addedDDL = Some(ddl)))
     // a no-victim no-op (every overlapping row already deleted): this
     // write's rewrite set is empty by construction — remove its dir too
     if (res.n == cur.n)
@@ -1999,10 +1952,8 @@ object Versioned {
         val n = cur.n + 1
         val ddl = normalizedDDL(alive)
         val (landed, marker) = writeRewrite(alive, root, n, cur, dvd, cur.colMap)
-        val entries = checkedEntries(spark, root, landed, ddl, cur.statsCols, Nil, cur.colMap,
-          cur.bloomCols)
         sealing(marker)(commit(root, Some(cur),
-          next(Some(cur), "purge-dv").copy(entries = entries, removed = dvd), Some(ddl)))
+          next(Some(cur), "purge-dv").copy(entries = landed, removed = dvd), Some(ddl)))
       }
     }
 
@@ -2169,18 +2120,13 @@ object Versioned {
     val envelope =
       if (trackedKeys.isEmpty || r.isNullAt(2)) None
       else Some((r.getLong(2), r.getLong(3), r.getLong(0)))
+    // the merge RESULT (updates included) must pass the constraints —
+    // carried-through rows were already valid, so violations can only come
+    // from source; the rewrite's own tasks count them as they write
     val (landed, marker) = writeRewrite(merged, root, n, cur, affected, cur.colMap,
-      trackedKeys.headOption, envelope)
-    sealing(marker) {
-      // the merge RESULT (updates included) must pass the constraints —
-      // carried-through rows were already valid, so violations can only
-      // come from source; a stats-tracked table checks them in the same
-      // landed-files scan that measures its stats (one scan either way)
-      val entries = checkedEntries(spark, root, landed, ddl, cur.statsCols, cur.constraints,
-        cur.colMap, cur.bloomCols)
-      commit(root, Some(cur), next(Some(cur), op).copy(entries = entries,
-        removed = affected, txnMarker = staged), Some(ddl))
-    }
+      trackedKeys.headOption, envelope, constraints = cur.constraints)
+    sealing(marker)(commit(root, Some(cur), next(Some(cur), op).copy(entries = landed,
+      removed = affected, txnMarker = staged), Some(ddl)))
   }
 
   /** The COVERING range set of `source`'s key `k` inside its known
@@ -2245,7 +2191,7 @@ object Versioned {
     * separate, deliberate vacuum, never a side effect of a write.
     *
     * If the table tracks skipping stats, they are RECOMPUTED for the new
-    * files in one overwrite-sized pass (same pass [[compact]] uses) — a
+    * files by the overwrite's own write tasks, as for [[compact]] — a
     * schema evolution or full replacement must not silently degrade every
     * later pruned read to a conservative full scan. Tracked columns the new
     * schema drops (or re-types to something without an exact long encoding)
@@ -2266,18 +2212,17 @@ object Versioned {
       catch { case _: org.apache.spark.sql.AnalysisException => false }
     }
     // bloom tracking survives an overwrite only for columns the new schema
-    // keeps AND when a stats pass runs (blooms ride that pass)
+    // keeps AND when stats are tracked (the write measures blooms only then)
     val keptBlooms = cur.map(_.bloomCols).getOrElse(Nil)
       .filter(df.schema.fieldNames.contains)
     val ddl = normalizedDDL(df)
-    val (landed, marker) = writeData(df, root, n, keptStats)
+    val (landed, marker) = writeData(df, root, n, keptStats, constraints = keptConstraints,
+      bloomCols = keptBlooms)
     // overwrite IS the schema-evolution op: the full manifest records the
     // new contract, and later appends are checked against it
     sealing(marker) {
-      val entries = checkedEntries(df.sparkSession, root, landed, ddl, keptStats,
-        keptConstraints, bloomCols = keptBlooms)
       commit(root, cur, next(cur, "overwrite").copy(full = true, statsCols = keptStats,
-        entries = entries, txns = cur.map(_.txns).getOrElse(Set.empty), schema = Some(ddl),
+        entries = landed, txns = cur.map(_.txns).getOrElse(Set.empty), schema = Some(ddl),
         constraints = keptConstraints,
         bloomCols = if (keptStats.isEmpty) Nil else keptBlooms))
     }
@@ -2495,13 +2440,10 @@ object Versioned {
     val cmap = cur.map(_.colMap).getOrElse(Map.empty)
     val ddl = normalizedDDL(df)
     val n = cur.map(_.n + 1).getOrElse(1)
-    val (landed, marker) = writeData(df, root, n, colMap = cmap)
-    sealing(marker) {
-      val entries = checkedEntries(df.sparkSession, root, landed, ddl, Nil,
-        cur.map(_.constraints).getOrElse(Nil), cmap)
-      commit(root, cur, next(cur, "txn-append").copy(entries = entries,
-        txnMarker = Some(txnMarkerBase)), Some(ddl))
-    }
+    val (landed, marker) = writeData(df, root, n, colMap = cmap,
+      constraints = cur.map(_.constraints).getOrElse(Nil))
+    sealing(marker)(commit(root, cur, next(cur, "txn-append").copy(entries = landed,
+      txnMarker = Some(txnMarkerBase)), Some(ddl)))
   }
 
   /** Staged copy-on-write MERGE — [[mergeInto]]'s full machinery (per-key
@@ -2690,9 +2632,9 @@ object Versioned {
     * table); the commit itself is metadata-only (a delta carrying the
     * constraint line — zero data files touched, evolve-style). Every later
     * [[append]]/[[appendWithStats]]/[[mergeInto]]/[[overwrite]]/stream
-    * commit validates its landed files with one commit-sized count
-    * aggregate and REFUSES loudly on violation (the refused files age into
-    * [[gcOrphans]]' reclaim — the log never references them).
+    * commit counts the violating rows in its own write tasks and REFUSES
+    * loudly on violation (the refused files age into [[gcOrphans]]'
+    * reclaim — the log never references them; see [[writeData]]).
     */
   def addConstraint(spark: SparkSession, root: String, name: String,
       checkSql: String): Version = {
@@ -2723,8 +2665,7 @@ object Versioned {
         }
         0L
       }
-      else readFiles(spark, root, cur, cur.files)
-        .filter(!coalesce(expr(checkSql), lit(true))).count()
+      else countViolations(spark, root, cur, cur.files, checkSql)
     require(violations == 0L,
       s"cannot add constraint `$name` ($checkSql): $violations existing row(s) violate it")
     // a contract-only delta names no bloom columns: readers inherit them
@@ -2755,54 +2696,14 @@ object Versioned {
       .copy(constraints = cur.constraints.filterNot(_._1 == name)))
   }
 
-  /** One commit-sized count aggregate proving `files` satisfy every
-    * constraint — the write-side enforcement behind vt20. Runs over the
-    * LANDED parquet (what will actually be referenced), not the input
-    * frame, so the check never recomputes upstream lineage and validates
-    * precisely what readers will see; a violation throws BEFORE the
-    * manifest commit, so the log never references the bad files (they age
-    * into [[gcOrphans]]' reclaim). No-op when the table has no constraints
-    * or the commit no files.
+  /** The rows of `files`, read under `v`'s contract, that violate the
+    * CHECK `checkSql` (FALSE; NULL passes) — the count that admits a
+    * constraint over committed data, and that checks an in-flight
+    * [[appendWithRetry]]'s files against one a racing commit added.
     */
-  private def validateConstraints(spark: SparkSession, root: String,
-      constraints: Seq[(String, String)], files: Seq[(String, Long)],
-      schemaDDL: Option[String],
-      colMap: Map[String, String] = Map.empty): Unit = {
-    if (constraints.isEmpty || files.isEmpty) return
-    val r = constraintViolationCounts(spark, root, constraints, files, schemaDDL, colMap).head
-    val bad = constraints.zipWithIndex.collect {
-      case ((nm, sql), i) if r.getLong(i) > 0 => s"`$nm` ($sql): ${r.getLong(i)} row(s)"
-    }
-    require(bad.isEmpty,
-      s"commit to $root violates CHECK constraint(s) — refused, no metadata written: " +
-        bad.mkString("; "))
-  }
-
-  /** [[validateConstraints]]' aggregate as a frame — `private[graft]` so
-    * the spec can pin its SCAN SCHEMA: the count aggregates reference only
-    * the columns the constraint SQL names, so Catalyst's column pruning
-    * reduces the parquet read to that subset (a 100-column table with a
-    * 1-column constraint decodes one column per commit, not 100).
-    */
-  private[graft] def constraintViolationCounts(spark: SparkSession, root: String,
-      constraints: Seq[(String, String)], files: Seq[(String, Long)],
-      schemaDDL: Option[String],
-      colMap: Map[String, String] = Map.empty): DataFrame = {
-    val rootP = Paths.get(root)
-    val paths = files.map { case (f, _) => rootP.resolve(f).toString }
-    // the DDL and constraint SQL are LOGICAL; landed files carry PHYSICAL
-    // names — read under the physicalized struct and alias back
-    val df = schemaDDL match {
-      case Some(ddl) =>
-        val st = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-        logicalize(spark.read.schema(physicalStruct(st, colMap)).parquet(paths: _*), colMap)
-      case None => logicalize(spark.read.parquet(paths: _*), colMap)
-    }
-    val aggs = constraints.map { case (nm, sql) =>
-      count(when(!coalesce(expr(sql), lit(true)), lit(1))).as(nm)
-    }
-    df.agg(aggs.head, aggs.tail: _*)
-  }
+  private def countViolations(spark: SparkSession, root: String, v: Version,
+      files: Seq[String], checkSql: String): Long =
+    readFiles(spark, root, v, files).filter(!coalesce(expr(checkSql), lit(true))).count()
 
   /** Move manifests that no RETAINED version needs out of the hot `_vlog`
     * directory into `_vlog/_archive` — the directory-growth counterpart to
@@ -3042,11 +2943,11 @@ object Versioned {
     appendStreamBatch(df, root, batchId, Nil)
 
   /** [[appendStreamBatch]] carrying manifest SKIPPING STATS for the batch's
-    * files (the [[appendWithStats]] pass at micro-batch size): a long-lived
+    * files (measured by the batch's write, as [[appendWithStats]]'): a long-lived
     * sink's accreted files prune from day one instead of reading
     * conservatively until the first [[compact]]/[[compactZOrder]] re-lays
     * them. `statsCols` must match the table's tracked set when one exists
-    * (the commit re-checks); the stats pass costs O(batch), never O(table).
+    * (the commit re-checks); measuring costs O(batch), never O(table).
     */
   def appendStreamBatch(df: DataFrame, root: String, batchId: Long,
       statsCols: Seq[String]): Option[Version] = {
@@ -3057,13 +2958,11 @@ object Versioned {
       val n = cur.map(_.n + 1).getOrElse(1)
       val cmap = cur.map(_.colMap).getOrElse(Map.empty)
       val ddl = normalizedDDL(df)
-      val (landed, marker) = writeData(df, root, n, statsCols, cmap)
-      Some(sealing(marker) {
-        val entries = checkedEntries(df.sparkSession, root, landed, ddl, statsCols,
-          cur.map(_.constraints).getOrElse(Nil), cmap, cur.map(_.bloomCols).getOrElse(Nil))
-        commit(root, cur, next(cur, s"stream-batch-$batchId", statsCols).copy(entries = entries),
-          Some(ddl))
-      })
+      val (landed, marker) = writeData(df, root, n, statsCols, cmap,
+        constraints = cur.map(_.constraints).getOrElse(Nil),
+        bloomCols = cur.map(_.bloomCols).getOrElse(Nil))
+      Some(sealing(marker)(commit(root, cur,
+        next(cur, s"stream-batch-$batchId", statsCols).copy(entries = landed), Some(ddl))))
     }
   }
 
@@ -3417,16 +3316,6 @@ object Versioned {
   private def physicalize(df: DataFrame, colMap: Map[String, String]): DataFrame =
     if (colMap.isEmpty) df
     else df.select(df.columns.map(c => col(c).as(physicalName(colMap, c))).toIndexedSeq: _*)
-
-  /** Rename a PHYSICAL-named frame (a landed-files scan) back to logical
-    * names so stats exprs and constraint SQL — both logical — analyze.
-    */
-  private def logicalize(df: DataFrame, colMap: Map[String, String]): DataFrame =
-    if (colMap.isEmpty) df
-    else {
-      val inv = colMap.map(_.swap)
-      df.select(df.columns.map(c => col(c).as(inv.getOrElse(c, c))).toIndexedSeq: _*)
-    }
 
   /** VT16: metadata-only ADD COLUMN — schema evolution WITHOUT the full
     * rewrite [[overwrite]] costs. The published Delta/Iceberg design: an

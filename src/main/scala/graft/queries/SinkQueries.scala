@@ -909,7 +909,7 @@ object SinkQueries extends QueryModule {
     // (`snowflake_bq_sync Time details/daily_sync.py:159-166`); here the
     // constraint is RECORDED in the log (a metadata-only `constrain`
     // commit, admitted only because current data passes) and every later
-    // write validates its landed files with one count aggregate, refusing
+    // write counts the violating rows in its own write tasks, refusing
     // loudly on violation. The query proves the whole lifecycle: add two
     // constraints, a violating append (negative price + NULL key) REFUSES
     // and leaves the table untouched, a valid append lands — the

@@ -58,6 +58,51 @@ trait SparkSuite extends AnyFunSuite {
     finally spark.listenerManager.unregister(l)
     plans.asScala.toSeq
   }
+  /** The reference measure of `files` (root-relative) of version `v` at
+    * `root`, independent of the write tasks that measured them: one plain
+    * `groupBy(input_file_name)` aggregate over the files read under `v`'s
+    * contract. Per non-empty file: each stats column's (min, max) of its
+    * exact-long encoding (no ranges when some column is all NULL), the row
+    * count, each stats column's null count, and each bloom column's bits,
+    * built word by word from `pmod(xxhash64(c, seed), BloomBits)`.
+    */
+  def scanMeasures(root: String, v: graft.merge.Versioned.Version,
+      files: Seq[String]): Map[String, graft.merge.Versioned.Measured] = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    import graft.merge.Versioned.{BloomBits, BloomHashes, BloomWords, Measured}
+    val st = StructType.fromDDL(v.schema.get)
+    val rootP = java.nio.file.Paths.get(root)
+    val df = spark.read
+      .schema(StructType(st.fields.map(f => f.copy(name = v.colMap.getOrElse(f.name, f.name)))))
+      .parquet(files.map(rootP.resolve(_).toString): _*).toDF(st.fieldNames.toIndexedSeq: _*)
+    def enc(c: String) = st(c).dataType match {
+      case DateType => unix_date(col(c)).cast("long")
+      case TimestampType => unix_micros(col(c))
+      case _ => col(c).cast("long")
+    }
+    def word(c: String, w: Int) = bit_or((0 until BloomHashes).map { sd =>
+      val p = pmod(xxhash64(col(c), lit(sd)), lit(BloomBits.toLong))
+      when(floor(p / 64) === w,
+        call_function("shiftleft", lit(1L), (p % 64).cast("int"))).otherwise(0L)
+    }.reduce(_ bitwiseOR _))
+    val aggs = count(lit(1)) +: (v.statsCols.flatMap(c =>
+      Seq(min(enc(c)), max(enc(c)), count(when(col(c).isNull, 1)))) ++
+      v.bloomCols.flatMap(c => (0 until BloomWords).map(word(c, _))))
+    val ns = v.statsCols.length
+    df.groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*).collect().map { r =>
+      val stats = (0 until ns).map(i =>
+        (r.get(2 + 3 * i), r.get(3 + 3 * i), r.getLong(4 + 3 * i)))
+      rootP.relativize(java.nio.file.Paths.get(new java.net.URI(r.getString(0)).getPath))
+        .toString -> Measured(
+        ranges = if (stats.exists(_._1 == null)) Nil
+          else stats.map(s => (s._1.asInstanceOf[Long], s._2.asInstanceOf[Long])),
+        rowCount = r.getLong(1), nullCounts = stats.map(_._3),
+        blooms = v.bloomCols.zipWithIndex.map { case (c, b) =>
+          c -> Vector.tabulate(BloomWords)(w => r.getLong(2 + 3 * ns + b * BloomWords + w))
+        })
+    }.toMap
+  }
   def tmpDir(): String = {
     val d = java.nio.file.Files.createTempDirectory("graft_test").toFile
     d.deleteOnExit()

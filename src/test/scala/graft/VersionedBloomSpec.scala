@@ -48,6 +48,18 @@ class VersionedBloomSpec extends SparkSuite {
     assert(Versioned.readEquals(spark, r, "tag", null).count() === 0)
   }
 
+  test("a bloom probe runs no Spark job: readEquals plans the files holding the value") {
+    val r = root()
+    fixture(r)
+    val v = Versioned.currentVersion(r).get
+    var q: org.apache.spark.sql.DataFrame = null
+    assert(executionsOf { q = Versioned.readEquals(spark, r, "tag", "g2") }.isEmpty)
+    val holding = v.files.map(f => java.nio.file.Paths.get(r).resolve(f).toString)
+      .filter(p => spark.read.parquet(p).filter(col("tag") === "g2").count() > 0)
+    assert(holding.nonEmpty && holding.length < v.files.length)
+    assert(q.inputFiles.map(p => new java.net.URI(p).getPath).sorted.toSeq === holding.sorted)
+  }
+
   test("blooms round-trip the manifest (delta + checkpoint fold) and type-align the probe") {
     import spark.implicits._
     val r = root()

@@ -39,13 +39,10 @@ class VersionedClusterSpec extends SparkSuite {
     */
   private def statsMatchFiles(r: String): Unit = {
     val cur = Versioned.currentVersion(r).get
-    val fs = cur.files.map(f => f -> cur.sizes.getOrElse(f, -1L))
-    val scanned = Versioned.scanMeasures(spark, r, fs, cur.schema.get, cur.statsCols, Nil,
-      cur.colMap)
-    Versioned.fileEntries(fs, scanned).foreach { e =>
-      assert(cur.stats.get(e.path) === Some(e.ranges).filter(_.nonEmpty), e.path)
-      assert(cur.nulls.get(e.path) === Some((e.rowCount, e.nullCounts)).filter(_._1 >= 0),
-        e.path)
+    val scanned = scanMeasures(r, cur, cur.files)
+    cur.files.foreach { f =>
+      assert(cur.stats.get(f) === scanned.get(f).map(_.ranges).filter(_.nonEmpty), f)
+      assert(cur.nulls.get(f) === scanned.get(f).map(m => (m.rowCount, m.nullCounts)), f)
     }
   }
 

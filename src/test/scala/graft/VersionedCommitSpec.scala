@@ -132,8 +132,7 @@ class VersionedCommitSpec extends SparkSuite {
     val v = Versioned.overwrite(replacement, r)
     val cur = Versioned.currentVersion(r).get
     assert(cur.files.length === 4)
-    val files = cur.files.map(f => f -> cur.sizes(f))
-    val measured = Versioned.scanMeasures(spark, r, files, cur.schema.get, cur.statsCols, Nil)
+    val measured = scanMeasures(r, cur, cur.files)
     assert(cur.nulls === measured.map { case (f, m) => f -> (m.rowCount, m.nullCounts) })
     assert(v === cur)
     val isNull = Versioned.readWhere(spark, r, col("k").isNull)

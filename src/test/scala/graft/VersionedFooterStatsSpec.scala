@@ -5,11 +5,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
-/** A stats-tracked commit takes its file stats from the write that landed
-  * its files, and scans them only for CHECK constraints and bloom columns:
-  * the two sources must agree entry for entry, and the scan must still run
-  * (and still refuse violations) where it is needed. `Versioned.scala`
-  * lands every data file through one `FileFormatWriter.write`.
+/** A stats-tracked commit takes its file stats and bloom bits, and its
+  * CHECK violation counts, from the write that landed its files: the
+  * entries must equal a reference scan of those files ([[scanMeasures]])
+  * entry for entry, no Spark job may run after the write, and violations
+  * must still refuse the commit. `Versioned.scala` lands every data file
+  * through one `FileFormatWriter.write` and measures it nowhere else.
   */
 class VersionedFooterStatsSpec extends SparkSuite {
 
@@ -27,7 +28,7 @@ class VersionedFooterStatsSpec extends SparkSuite {
       when(col("id") % 6 =!= 4, date_add(lit("1999-12-25").cast("date"),
         col("id").cast("int"))).as("d"),
       when(col("id") % 9 =!= 5, timestamp_micros(col("id") * 3600000001L - 17L)).as("t"),
-      concat(lit("p"), col("id").cast("string")).as("pay"))
+      when(col("id") % 8 =!= 6, concat(lit("p"), col("id").cast("string"))).as("pay"))
 
   private def files(v: Versioned.Version): Seq[(String, Long)] =
     v.files.map(f => f -> v.sizes.getOrElse(f, -1L))
@@ -46,15 +47,17 @@ class VersionedFooterStatsSpec extends SparkSuite {
   }
 
   /** The committed manifest's entries for `fs`, measured by their write,
-    * are exactly what a scan of those files measures.
+    * are exactly what a scan of those files measures, bloom bits included.
     */
   private def agree(r: String, fs: Seq[(String, Long)]): Map[String, Versioned.Measured] = {
     val cur = Versioned.currentVersion(r).get
-    val scanned = Versioned.scanMeasures(spark, r, fs, cur.schema.get, cur.statsCols, Nil, cur.colMap)
-    Versioned.fileEntries(fs, scanned).foreach { e =>
-      assert(cur.stats.get(e.path) === Some(e.ranges).filter(_.nonEmpty), e.path)
-      assert(cur.nulls.get(e.path) ===
-        Some((e.rowCount, e.nullCounts)).filter(_._1 >= 0), e.path)
+    val scanned = scanMeasures(r, cur, fs.map(_._1))
+    fs.foreach { case (f, _) =>
+      val m = scanned.get(f)
+      assert(cur.stats.get(f) === m.map(_.ranges).filter(_.nonEmpty), f)
+      assert(cur.nulls.get(f) === m.map(m => (m.rowCount, m.nullCounts)), f)
+      cur.bloomCols.foreach(c =>
+        assert(cur.blooms.get((f, c)) === m.map(_.blooms.toMap.apply(c)), s"$f $c"))
     }
     scanned
   }
@@ -64,11 +67,14 @@ class VersionedFooterStatsSpec extends SparkSuite {
     Seq("TIMESTAMP_MICROS", "INT96").foreach { tsType =>
       withSQLConf("spark.sql.parquet.outputTimestampType" -> tsType) {
         val r = root()
-        // v1: three files of every stats type, NULLs in every column
-        val v1 = Versioned.appendWithStats(typed(300).repartition(3), r, statsCols)
+        // v1: three files of every stats type, NULLs in every column, and
+        // bloom columns of type long, string and date
+        val v1 = Versioned.appendWithStats(typed(300).repartition(3), r, statsCols,
+          bloomCols = Seq("l", "pay", "d"))
         val m1 = agree(r, files(v1))
         assert(m1.size === 3 && m1.values.forall(m => m.ranges.length == 6 &&
           m.nullCounts.forall(_ > 0) && m.nullCounts.forall(_ < m.rowCount)))
+        assert(v1.blooms.size === 9 && v1.blooms.values.forall(_.exists(_ != 0L)))
         // v2: one file whose `l` is all NULL — counts, but no ranges
         Versioned.appendWithStats(typed(50, 1000).withColumn("l", lit(null).cast("long"))
           .coalesce(1), r, statsCols)
@@ -89,12 +95,24 @@ class VersionedFooterStatsSpec extends SparkSuite {
         val m4 = agree(r, f4).values.head
         assert(m4.rowCount === 20000L && m4.ranges(2) === ((5001 * 1000 - 77).toLong,
           (24999 * 1000 - 77).toLong))
-        // v5: a renamed stats column lands under its physical name
+        // v5: a renamed stats and bloom column lands under its physical name
         Versioned.evolveRename(r, "l", "l2")
+        val renamed = statsCols.map(c => if (c == "l") "l2" else c)
         Versioned.appendWithStats(typed(40, 30000).withColumnRenamed("l", "l2").coalesce(1), r,
-          statsCols.map(c => if (c == "l") "l2" else c))
+          renamed)
         assert(Versioned.currentVersion(r).get.colMap === Map("l2" -> "l"))
+        assert(Versioned.currentVersion(r).get.bloomCols === Seq("l2", "pay", "d"))
         assert(agree(r, filesOf(r, 6)).size === 1)
+        // v8: the renamed column under a CHECK constraint, checked by the write
+        Versioned.addConstraint(spark, r, "l2_floor", "l2 > -10")
+        Versioned.appendWithStats(typed(40, 40000).withColumnRenamed("l", "l2").coalesce(1), r,
+          renamed)
+        assert(agree(r, filesOf(r, 8)).size === 1)
+        val refused = intercept[IllegalArgumentException] {
+          Versioned.appendWithStats(typed(40, 50000).withColumnRenamed("l", "l2")
+            .withColumn("l2", lit(-20L)).coalesce(1), r, renamed)
+        }
+        assert(refused.getMessage.contains("`l2_floor` (l2 > -10): 40 row(s)"))
         // pruning over the recorded stats reads what a full scan filters
         val all = Versioned.read(spark, r)
         Seq(col("i") <= 10000, col("l2") > 2000000000000L, col("d") === lit("2000-02-01")
@@ -115,7 +133,7 @@ class VersionedFooterStatsSpec extends SparkSuite {
     assert(executionsOf(Versioned.compact(spark, r, 2)).length === 1)
   }
 
-  test("INT96 stats need no scan; CHECK constraints and blooms still scan") {
+  test("INT96 stats, CHECK constraints and blooms need no post-write scan") {
     // Spark's default timestamp encoding keeps no usable footer statistics,
     // but the write measures the values, not the footers
     withSQLConf("spark.sql.parquet.outputTimestampType" -> "INT96") {
@@ -123,29 +141,37 @@ class VersionedFooterStatsSpec extends SparkSuite {
       val ex = executionsOf(Versioned.appendWithStats(typed(100).repartition(2), r, Seq("i", "t")))
       assert(ex.length === 1, "the write alone")
       val cur = Versioned.currentVersion(r).get
-      val fs = files(cur)
-      val scanned = Versioned.scanMeasures(spark, r, fs, cur.schema.get, cur.statsCols, Nil)
-      assert(fs.forall { case (f, _) => cur.stats.get(f).contains(scanned(f).ranges) })
+      val scanned = scanMeasures(r, cur, cur.files)
+      assert(cur.files.forall(f => cur.stats.get(f).contains(scanned(f).ranges)))
     }
-    // a CHECK constraint is verified in the scan; a violation commits nothing
+    // a CHECK constraint is counted by the write; a violation commits nothing
     val r = root()
     Versioned.appendWithStats(typed(100), r, Seq("i", "l"))
     Versioned.addConstraint(spark, r, "i_floor", "i > -100")
     assert(executionsOf(Versioned.appendWithStats(typed(100, 100), r, Seq("i", "l")))
-      .length > 1)
+      .length === 1)
     val before = Versioned.versions(r)
     val e = intercept[IllegalArgumentException] {
       Versioned.appendWithStats(typed(10).withColumn("i", lit(-500)), r, Seq("i", "l"))
     }
-    assert(e.getMessage.contains("i_floor"))
+    assert(e.getMessage === s"requirement failed: commit to $r violates CHECK " +
+      "constraint(s) — refused, no metadata written: `i_floor` (i > -100): 10 row(s)")
     assert(Versioned.versions(r) === before, "no manifest written")
-    // bloom bits are built in the scan
+    // bloom bits are folded by the write; so are a constrained bloom table's
+    // update and compaction
     val rb = root()
     assert(executionsOf(Versioned.appendWithStats(typed(100).repartition(2), rb, Seq("i"),
-      bloomCols = Seq("pay"))).length > 1)
+      bloomCols = Seq("pay"))).length === 1)
     val vb = Versioned.currentVersion(rb).get
     assert(vb.files.forall(f => vb.blooms.contains((f, "pay"))))
     assert(Versioned.readWhere(spark, rb, col("pay") === "p42").count() === 1)
+    Versioned.addConstraint(spark, rb, "i_floor", "i > -100")
+    assert(executionsOf(Versioned.updateWhere(spark, rb, col("i") < 5000,
+      Map("pay" -> lit("upd")))).length === 1)
+    assert(executionsOf(Versioned.compact(spark, rb, 2)).length === 1)
+    val vc = Versioned.currentVersion(rb).get
+    assert(vc.files.forall(f => vc.blooms.contains((f, "pay"))))
+    assert(Versioned.readEquals(spark, rb, "pay", "upd").count() === 4)
   }
 
   test("Versioned.scala writes only through its one FileFormatWriter.write") {
@@ -153,6 +179,10 @@ class VersionedFooterStatsSpec extends SparkSuite {
       "src", "main", "scala", "graft", "merge", "Versioned.scala")), "UTF-8")
     def count(token: String): Int = src.sliding(token.length).count(_ == token)
     assert(count("FileFormatWriter.write(") === 1)
-    Seq(".write.", "listParquet", "footerMeasure").foreach(t => assert(count(t) === 0, t))
+    Seq(".write.", "listParquet", "footerMeasure", "input_file_name", "scanMeasures",
+      "statsValidationFrame", "constraintViolationCounts").foreach(t =>
+      assert(count(t) === 0, t))
+    // one bloom-position definition, shared by the write and the probe
+    assert(count("xxhash64(") === 1)
   }
 }

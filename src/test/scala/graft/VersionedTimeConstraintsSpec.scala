@@ -370,34 +370,77 @@ class VersionedTimeConstraintsSpec extends SparkSuite {
     assert(Versioned.read(spark, r).count() === 1)
   }
 
-  test("vt20: the validation pass scans ONLY the constrained/tracked columns (column pruning)") {
+  test("vt20: a constrained append and merge never scan what they land") {
     import spark.implicits._
-    val r = root()
-    // a WIDE table (6 columns) with a constraint naming one column: the
-    // per-commit validation scan must decode that column, not the row
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // a WIDE table (6 columns) with constraints naming two of its columns:
+    // the write tasks check them, no pass re-reads what they landed
     val wide = (1L to 50L).map(k => (k, k * 1.0, s"a$k", s"b$k", s"c$k", s"d$k"))
       .toDF("k", "price", "a", "b", "c", "d")
-    Versioned.append(wide, r)
-    val files = Versioned.currentVersion(r).get.files.map(f => (f, -1L))
-    def scanCols(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.queryExecution.sparkPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.requiredSchema.fieldNames.toSeq
-      }.flatten.distinct
-    // plain validation (no stats): one constrained column → one-column scan
-    val vc = Versioned.constraintViolationCounts(spark, r,
-      Seq("price_pos" -> "price > 0"), files, Versioned.currentVersion(r).get.schema)
-    assert(scanCols(vc) === Seq("price"), s"got ${scanCols(vc)}")
-    // fused stats+constraint pass: tracked column + constrained columns,
-    // nothing else (input_file_name needs no data column)
-    val sv = Versioned.statsValidationFrame(spark, r, files,
-      Versioned.currentVersion(r).get.schema.get, statsCols = Seq("k"), constraints = Seq(
-        "price_pos" -> "price > 0", "a_nonempty" -> "length(a) > 0"))
-    assert(scanCols(sv).toSet === Set("k", "price", "a"), s"got ${scanCols(sv)}")
-    // and the real write paths stay green under the same shapes
-    Versioned.addConstraint(spark, r, "price_pos", "price > 0")
-    Versioned.append(wide.withColumn("k", col("k") + 100), r)
-    assert(Versioned.read(spark, r).count() === 100)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    /** `commit`'s executions, and its scans of the commit dir of version `n`. */
+    def run(n: Int)(commit: => Unit): (Int, Seq[String]) = {
+      var plans: Seq[SparkPlan] = Nil
+      val ex = executionsOf { plans = plansOf(commit) }
+      (ex.length, plans.flatMap(nodes).collect { case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.toString)
+      }.flatten.filter(_.contains(s"/data/c$n-")))
+    }
+    val src = (40L to 60L).map(k => (k, k * 2.0, s"a$k", "b", "c", "d"))
+      .toDF("k", "price", "a", "b", "c", "d")
+    // the same commits on an unconstrained twin run as many executions
+    val Seq(plain, r) = Seq(false, true).map { constrained =>
+      val t = root()
+      Versioned.append(wide, t)
+      if (constrained) {
+        Versioned.addConstraint(spark, t, "price_pos", "price > 0")
+        Versioned.addConstraint(spark, t, "a_nonempty", "length(a) > 0")
+      }
+      t
+    }
+    assert(run(4)(Versioned.append(wide.withColumn("k", col("k") + 100), r)) === ((1, Nil)))
+    Versioned.append(wide.withColumn("k", col("k") + 100), plain)
+    assert(run(5)(Versioned.mergeInto(spark, r, src, Seq("k"))) ===
+      ((executionsOf(Versioned.mergeInto(spark, plain, src, Seq("k"))).length, Nil)))
+    assert(Versioned.read(spark, r).count() === 110)
+    // and a violating merge still refuses
+    intercept[IllegalArgumentException] {
+      Versioned.mergeInto(spark, r, src.withColumn("price", lit(-1.0)), Seq("k"))
+    }
+    assert(Versioned.currentVersion(r).get.n === 5)
+  }
+
+  test("vt20: staged appends, updates and overwrites refuse a violating write") {
+    import spark.implicits._
+    val base = tmpDir()
+    val cases: Seq[(String, String => Unit)] = Seq(
+      "appendStaged" -> (r => Versioned.appendStaged(Seq((9L, -1.0)).toDF("k", "price"), r,
+        Versioned.beginTransaction(base + "/_txns"))),
+      "updateWhere" -> (r =>
+        Versioned.updateWhere(spark, r, col("k") === 2L, Map("price" -> lit(-2.0)))),
+      "updateWhereDV" -> (r =>
+        Versioned.updateWhereDV(spark, r, col("k") === 2L, Map("price" -> lit(-2.0)))),
+      "overwrite" -> (r =>
+        Versioned.overwrite(Seq((1L, 1.0), (2L, -2.0)).toDF("k", "price"), r)))
+    cases.foreach { case (verb, write) =>
+      val r = s"$base/$verb"
+      Versioned.appendWithStats(Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("k", "price"), r,
+        Seq("k"))
+      Versioned.addConstraint(spark, r, "price_pos", "price > 0")
+      val versions = Versioned.versions(r)
+      def rows = Versioned.read(spark, r).as[(Long, Double)].collect().sorted.toSeq
+      val before = rows
+      val e = intercept[IllegalArgumentException](write(r))
+      assert(e.getMessage === s"requirement failed: commit to $r violates CHECK " +
+        "constraint(s) — refused, no metadata written: `price_pos` (price > 0): 1 row(s)", verb)
+      assert(Versioned.versions(r) === versions, verb)
+      assert(rows === before, verb)
+    }
   }
 
   test("vt20: rollback restores the target's constraint set") {
