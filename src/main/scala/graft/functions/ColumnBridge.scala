@@ -2,7 +2,6 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Classic-mode bridge between the public `Column` API and Catalyst
@@ -16,193 +15,8 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** The ENCODING a literal's long value is in — integral as-is, DATE as
-    * epoch days, TIMESTAMP as epoch micros. The Column-side walker runs on
-    * UNANALYZED nodes, so unlike the Expression-side twin it cannot assume
-    * the literal's encoding matches the column it compares against: Spark
-    * legally coerces a DATE literal against a TIMESTAMP column (and vice
-    * versa), and an epoch-day bound applied to epoch-micros stats would
-    * silently prune files that match. Callers must check the kind against
-    * the stats column's tracked type and DROP mismatched bounds as
-    * unconstrained (conservative: more files read, same rows out).
-    */
   /** Public face of [[RangeAlgebra.MaxDisjuncts]] (that object is
     * `private[sql]`) for callers outside the spark.sql tree.
     */
   val MaxDisjuncts: Int = RangeAlgebra.MaxDisjuncts
-
-  sealed trait LitKind
-  object LitKind {
-    case object Integral extends LitKind
-    case object DateDays extends LitKind
-    case object TsMicros extends LitKind
-  }
-
-  /** Per-column range SETS implied by a predicate Column — the general form
-    * behind [[predicateBounds]]. An entry `c -> ranges` means: every row
-    * satisfying the predicate has `c` non-null and inside the UNION of
-    * `ranges` (sorted, disjoint). A column absent from the map is
-    * unconstrained; an EMPTY range list is a proven contradiction (no row
-    * can satisfy — callers may plan zero files).
-    *
-    * Conservative algebra:
-    *  - AND intersects range sets per column;
-    *  - OR unions them — but only for columns constrained in BOTH branches
-    *    (a column bound in one disjunct alone is unconstrained overall);
-    *  - `IN (v1..vk)` is the union of its point ranges;
-    *  - strict bounds widen by one (callers prune FILES and re-apply the
-    *    full predicate as the residual row filter, so over-reading is safe
-    *    and the MinValue/MaxValue overflow edge disappears);
-    *  - anything unrecognized (null tests, non-literal comparisons, UDFs,
-    *    NOT) contributes no constraint.
-    *
-    * Literal encoding matches [[graft.merge.Versioned]]'s stats encoding:
-    * integrals as-is, DATE as epoch days, TIMESTAMP as epoch micros — so
-    * the reference's canonical `REPORTING_DATE BETWEEN …` predicate
-    * (`snowflake_bq_sync_daily Time Details/main.py:139-145`) prunes a
-    * versioned read without the caller doing calendar math. Floating-point
-    * literals contribute nothing (stats are long-exact by contract).
-    *
-    * `maxDisjuncts` caps the per-column range-list length a union may
-    * produce (the reference's progressive day-rotation windows,
-    * `main_progressive.py:31-54`, build bounded disjunctions; a pathological
-    * predicate must not): past the cap the set collapses to its envelope —
-    * still conservative, never larger than one range.
-    */
-  def predicateRanges(predicate: Column,
-      maxDisjuncts: Int = 64): Map[String, Seq[(Long, Long)]] =
-    predicateRangesTyped(predicate, maxDisjuncts).map { case (c, (_, rs)) => c -> rs }
-
-  /** [[predicateRanges]] with each column's range set TAGGED by the literal
-    * kind ([[LitKind]]) its bounds are encoded in. Combining ranges of
-    * CONFLICTING kinds on one column (a date literal AND a timestamp literal
-    * both bounding `c` — Spark coerces, the long encodings don't) drops the
-    * column as unconstrained rather than intersecting apples with oranges.
-    */
-  def predicateRangesTyped(predicate: Column,
-      maxDisjuncts: Int = 64): Map[String, (LitKind, Seq[(Long, Long)])] = {
-    import org.apache.spark.sql.internal.{ColumnNode, Literal => NLit,
-      UnresolvedAttribute => NAttr, UnresolvedFunction => NFn}
-    type Typed = Map[String, (LitKind, Seq[(Long, Long)])]
-    def longOf(n: ColumnNode): Option[(Long, LitKind)] = n match {
-      case l: NLit => l.value match {
-        case i: java.lang.Integer => Some((i.toLong, LitKind.Integral))
-        case i: java.lang.Long => Some((i.longValue, LitKind.Integral))
-        case i: java.lang.Short => Some((i.toLong, LitKind.Integral))
-        case i: java.lang.Byte => Some((i.toLong, LitKind.Integral))
-        case d: java.sql.Date => Some((DateTimeUtils.fromJavaDate(d).toLong, LitKind.DateDays))
-        case d: java.time.LocalDate => Some((d.toEpochDay, LitKind.DateDays))
-        case t: java.sql.Timestamp =>
-          Some((DateTimeUtils.fromJavaTimestamp(t), LitKind.TsMicros))
-        case t: java.time.Instant =>
-          Some((DateTimeUtils.instantToMicros(t), LitKind.TsMicros))
-        case _ => None // float/string/…: no bound (skip stats are long-exact)
-      }
-      case _ => None
-    }
-    def nameOf(n: ColumnNode): Option[String] = n match {
-      case a: NAttr => Some(a.nameParts.mkString("."))
-      case _ => None
-    }
-    // interval-set algebra shared with the Expression-side walker
-    // (ManifestFileIndex.exprRanges); only the cap is parameterized here
-    import RangeAlgebra.{norm, inter}
-    def union(a: Seq[(Long, Long)], b: Seq[(Long, Long)]): Seq[(Long, Long)] = {
-      val u = norm(a ++ b)
-      if (u.length > maxDisjuncts) Seq((u.head._1, u.last._2)) else u // envelope past the cap
-    }
-    def one(colN: ColumnNode, lo: Option[(Long, LitKind)],
-        hi: Option[(Long, LitKind)]): Typed = {
-      val kind = lo.map(_._2).orElse(hi.map(_._2))
-      if (lo.nonEmpty && hi.nonEmpty && lo.map(_._2) != hi.map(_._2)) Map.empty
-      else nameOf(colN).flatMap(c => kind.map(k => Map(c -> (k,
-        Seq((lo.map(_._1).getOrElse(Long.MinValue), hi.map(_._1).getOrElse(Long.MaxValue)))))))
-        .getOrElse(Map.empty)
-    }
-    // a column constrained with two different literal kinds drops out
-    // entirely — intersecting/unioning mixed-unit bounds would be garbage
-    def combine(a: Typed, b: Typed,
-        keys: Set[String])(f: (Seq[(Long, Long)], Seq[(Long, Long)]) => Seq[(Long, Long)],
-        oneSided: String => Option[(LitKind, Seq[(Long, Long)])]): Typed =
-      keys.flatMap { k =>
-        (a.get(k), b.get(k)) match {
-          case (Some((ka, ra)), Some((kb, rb))) =>
-            if (ka == kb) Some(k -> (ka, f(ra, rb))) else None
-          case _ => oneSided(k).map(k -> _)
-        }
-      }.toMap
-    def walk(e: ColumnNode): Typed = e match {
-      case f: NFn => (f.functionName, f.arguments) match {
-        case ("and", Seq(l, r)) =>
-          val (a, b) = (walk(l), walk(r))
-          combine(a, b, a.keySet ++ b.keySet)(inter, k => a.get(k).orElse(b.get(k)))
-        case ("or", Seq(l, r)) =>
-          val (a, b) = (walk(l), walk(r))
-          // only columns constrained in BOTH disjuncts stay constrained
-          combine(a, b, a.keySet.intersect(b.keySet))(union, _ => None)
-        case ("=" | "==" | "equalTo", Seq(a, b)) =>
-          longOf(b).map(v => one(a, Some(v), Some(v)))
-            .orElse(longOf(a).map(v => one(b, Some(v), Some(v)))).getOrElse(Map.empty)
-        case (">" | ">=", Seq(a, b)) =>
-          longOf(b).map(v => one(a, Some(v), None))
-            .orElse(longOf(a).map(v => one(b, None, Some(v)))).getOrElse(Map.empty)
-        case ("<" | "<=", Seq(a, b)) =>
-          longOf(b).map(v => one(a, None, Some(v)))
-            .orElse(longOf(a).map(v => one(b, Some(v), None))).getOrElse(Map.empty)
-        case ("in", valueExpr +: list) if list.nonEmpty =>
-          val vs = list.map(longOf)
-          if (vs.exists(_.isEmpty) || vs.flatten.map(_._2).distinct.length != 1)
-            Map.empty // any unboundable or mixed-kind member: conservative
-          else nameOf(valueExpr).map { c =>
-            val u = norm(vs.flatten.map { case (v, _) => (v, v) })
-            Map(c -> ((vs.head.get._2,
-              if (u.length > maxDisjuncts) Seq((u.head._1, u.last._2)) else u)))
-          }.getOrElse(Map.empty)
-        case _ => Map.empty // not / isNull / udf / …: conservative
-      }
-      case _ => Map.empty
-    }
-    walk(predicate.node)
-  }
-
-  /** The top-level CONJUNCT null tests of a predicate: (column, isNull).
-    * Only AND-reachable isnull/isnotnull nodes count — a null test inside
-    * an OR (or under NOT) constrains nothing globally and is ignored
-    * (conservative). Feeds the vt31 null-count file skipping.
-    */
-  def nullTests(predicate: Column): Seq[(String, Boolean)] = {
-    import org.apache.spark.sql.internal.{ColumnNode,
-      UnresolvedAttribute => NAttr, UnresolvedFunction => NFn}
-    def nameOf(n: ColumnNode): Option[String] = n match {
-      case a: NAttr => Some(a.nameParts.mkString("."))
-      case _ => None
-    }
-    def walk(e: ColumnNode): Seq[(String, Boolean)] = e match {
-      case f: NFn => (f.functionName.toLowerCase(java.util.Locale.ROOT),
-          f.arguments) match {
-        case ("and", Seq(l, r)) => walk(l) ++ walk(r)
-        case ("isnull", Seq(a)) => nameOf(a).map((_, true)).toSeq
-        case ("isnotnull", Seq(a)) => nameOf(a).map((_, false)).toSeq
-        case _ => Nil
-      }
-      case _ => Nil
-    }
-    walk(predicate.node)
-  }
-
-  /** Per-column [lo, hi] ENVELOPE bounds implied by a predicate Column —
-    * the single-range view of [[predicateRanges]] (columns whose envelope
-    * is the full long domain are dropped as unconstrained; a proven
-    * contradiction surfaces as the canonical empty range (MaxValue,
-    * MinValue)). Kept for callers that want one range per column; pruning
-    * paths use [[predicateRanges]] directly so OR/IN disjunctions skip too.
-    */
-  def predicateBounds(predicate: Column): Map[String, (Long, Long)] =
-    predicateRanges(predicate).flatMap { case (c, rs) =>
-      if (rs.isEmpty) Some(c -> (Long.MaxValue, Long.MinValue))
-      else {
-        val env = (rs.head._1, rs.last._2)
-        if (env == (Long.MinValue, Long.MaxValue)) None else Some(c -> env)
-      }
-    }
 }

@@ -19,8 +19,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   INSERT INTO graft.`/data/events` SELECT ...              -- guarded append
   * }}}
   * Reads resolve to the same DSv2 table as `spark.read.format
-  * ("graft-versioned")` — planning-time manifest-stats pruning, column
-  * pruning, executor-side deletion-vector drops — and INSERT INTO routes
+  * ("graft-versioned")` — planning-time pruning by the rule every read of
+  * the log uses (`Versioned.prunedFiles`: ranges, null counts, blooms),
+  * column pruning, executor-side deletion-vector drops — and INSERT INTO routes
   * the V1Write fallback through the log's own verbs (schema contract,
   * CHECK/NOT NULL constraints, pending-txn refusal, CAS). `VERSION AS OF` /
   * `TIMESTAMP AS OF` land on the loadTable overloads Spark calls for SQL

@@ -10,22 +10,21 @@ import org.apache.spark.sql.types.StructType
 
 /** The versioned table as a NATIVE Spark relation (VT14): a [[FileIndex]]
   * whose file listing is the manifest's reconstructed state and whose
-  * `listFiles` applies manifest-stats pruning to whatever data filters
-  * CATALYST pushed down. `Versioned.table(spark, root)` returns a plain
-  * DataFrame backed by this index, so ANY query shape — SQL over a temp
-  * view, joins, aggregates, the reference's `REPORTING_DATE BETWEEN`
-  * windows — gets file skipping at planning time without calling
-  * `readWhere`: FileSourceStrategy hands every scan's pushed predicates to
-  * the index, exactly the hook Spark's own catalog file index uses for
+  * `listFiles` hands whatever data filters CATALYST pushed down to `prune`,
+  * the log's one pruning rule (`Versioned.prunedFiles`: manifest ranges,
+  * null counts and blooms). Every read of the log is a DataFrame over this
+  * index, so ANY query shape — SQL over a temp view, joins, aggregates, the
+  * reference's `REPORTING_DATE BETWEEN` windows — gets file skipping at
+  * planning time: FileSourceStrategy hands every scan's pushed predicates
+  * to the index, exactly the hook Spark's own catalog file index uses for
   * partition pruning.
   *
-  * Pruning algebra is [[RangeAlgebra]]'s — the same conservative
-  * intersect/union the Column-side walker uses, but over ANALYZED catalyst
-  * expressions (attributes + literals, so DATE/TIMESTAMP literals are
-  * already epoch-encoded ints/longs and match the stats encoding for
-  * free). Anything unrecognized contributes no constraint; Spark always
-  * re-applies the full predicate to the rows, so pruning here can only
-  * drop files proven row-free, never rows.
+  * The pushed filters are ANALYZED, optimized catalyst conjuncts
+  * (attributes + literals, so DATE/TIMESTAMP literals are already
+  * epoch-encoded ints/longs and match the stats encoding for free).
+  * Anything unrecognized contributes no constraint; Spark always re-applies
+  * the full predicate to the rows, so pruning here can only drop files
+  * proven row-free, never rows.
   *
   * Lives in the `org.apache.spark.sql` tree: `HadoopFsRelation`'s session
   * parameter and `Dataset.ofRows` are `private[sql]` in Spark 4.
@@ -34,10 +33,8 @@ private[sql] class ManifestFileIndex(
     spark: SparkSession,
     root: String,
     files: Seq[String],
-    stats: Map[String, Seq[(Long, Long)]],
-    statsCols: Seq[String],
-    dataSchema: StructType,
-    sizes: Map[String, Long] = Map.empty) extends FileIndex {
+    prune: Seq[Expression] => Seq[String],
+    sizes: Map[String, Long]) extends FileIndex {
 
   private val rootPath = new Path(root)
   private lazy val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -87,22 +84,8 @@ private[sql] class ManifestFileIndex(
   override def sizeInBytes: Long = allStatuses.map(_._2.getLen).sum
 
   override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val bounds = ManifestFileIndex.exprRanges(dataFilters)
-      .filter { case (c, _) => statsCols.contains(c) }
-    val kept =
-      if (bounds.isEmpty) files
-      else files.filter { rel =>
-        stats.get(rel).forall { rs =>
-          bounds.forall { case (c, ranges) =>
-            rs.lift(statsCols.indexOf(c)).forall { case (mn, mx) =>
-              ranges.exists { case (lo, hi) => mx >= lo && mn <= hi }
-            }
-          }
-        }
-      }
-    Seq(PartitionDirectory(InternalRow.empty, statusesFor(kept).map(_._2).toArray))
-  }
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, statusesFor(prune(dataFilters)).map(_._2).toArray))
 }
 
 object ManifestFileIndex {
@@ -113,13 +96,30 @@ object ManifestFileIndex {
     */
   val dirsStatted = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Per-column range sets implied by ANALYZED catalyst predicates
-    * (implicitly conjoined, as FileSourceStrategy hands them over) — the
-    * Expression-side twin of [[ColumnBridge.predicateRanges]]. Analysis has
-    * already encoded DATE literals as epoch-day ints and TIMESTAMP literals
-    * as epoch-micros longs, so the stats encoding lines up with no calendar
-    * math here. Strict bounds widen by one (Spark re-applies the full
-    * predicate to rows; files prune, rows never).
+  /** Per-column range SETS implied by ANALYZED catalyst predicates
+    * (implicitly conjoined, as FileSourceStrategy hands them over). An entry
+    * `c -> ranges` means: every row satisfying the predicates has `c`
+    * non-null and inside the UNION of `ranges` (sorted, disjoint). A column
+    * absent from the map is unconstrained; an EMPTY range list is a proven
+    * contradiction (no row can satisfy — callers may plan zero files).
+    *
+    * Conservative algebra ([[RangeAlgebra]]): AND intersects per column; OR
+    * unions, but only columns constrained in BOTH branches stay; `IN`/`InSet`
+    * is the union of its points, collapsed to its envelope past
+    * [[RangeAlgebra.MaxDisjuncts]] ranges (the reference's progressive
+    * day-rotation windows, `main_progressive.py:31-54`, build bounded
+    * disjunctions; a pathological predicate must not). Strict bounds widen
+    * by one (Spark re-applies the full predicate to rows; files prune, rows
+    * never). Anything else — null tests, NOT, UDFs, a comparison with a
+    * `Cast` left on the attribute — contributes nothing.
+    *
+    * Analysis has already encoded DATE literals as epoch-day ints and
+    * TIMESTAMP literals as epoch-micros longs, and a comparison's two sides
+    * share one type, so a literal's long is in its column's stats encoding
+    * with no calendar math here: a DATE literal against a TIMESTAMP column
+    * folds to micros, and a TIMESTAMP literal against a DATE column leaves a
+    * cast on the column that bounds nothing. Floating-point, decimal and
+    * string literals contribute nothing (stats are long-exact).
     */
   def exprRanges(filters: Seq[Expression]): Map[String, Seq[(Long, Long)]] = {
     import RangeAlgebra._
@@ -175,33 +175,32 @@ object ManifestFileIndex {
         if (vs.exists(_.isEmpty)) Map.empty
         else nameOf(a).map(c => Map(c -> capped(norm(vs.flatten.map(v => (v, v))))))
           .getOrElse(Map.empty)
-      case IsNotNull(_) => Map.empty // no range information
-      case _ => Map.empty // not / isNull / udf / subquery: conservative
+      case _ => Map.empty // null tests / not / udf / subquery / cast: conservative
     }
     filters.map(walk).foldLeft(Map.empty[String, Seq[(Long, Long)]])(intersectMaps)
   }
 
-  /** `Versioned.table`'s backend: a DataFrame over a [[ManifestFileIndex]]
-    * via `HadoopFsRelation` + `LogicalRelation` (both `private[sql]` —
-    * hence this bridge). Parquet format, no buckets, no partition columns
-    * (the manifest, not the directory layout, scopes the scan).
+  /** The scan of every `Versioned` read: a DataFrame over a
+    * [[ManifestFileIndex]] via `HadoopFsRelation` + `LogicalRelation` (both
+    * `private[sql]` — hence this bridge). Parquet format, no buckets, no
+    * partition columns (the manifest, not the directory layout, scopes the
+    * scan).
     */
   def relation(spark: SparkSession, root: String, files: Seq[String],
-      stats: Map[String, Seq[(Long, Long)]], statsCols: Seq[String],
-      dataSchema: StructType, sizes: Map[String, Long] = Map.empty): DataFrame = {
+      prune: Seq[Expression] => Seq[String], dataSchema: StructType,
+      sizes: Map[String, Long]): DataFrame = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val index = new ManifestFileIndex(spark, root, files, stats, statsCols, dataSchema, sizes)
+    val index = new ManifestFileIndex(spark, root, files, prune, sizes)
     val rel = HadoopFsRelation(index, new StructType(), dataSchema, None,
       new ParquetFileFormat, Map.empty)(classic)
     org.apache.spark.sql.classic.Dataset.ofRows(classic, LogicalRelation(rel))
   }
 }
 
-/** Sorted-disjoint interval-set algebra shared by the two predicate
-  * walkers ([[ColumnBridge.predicateRanges]] over Column nodes,
-  * [[ManifestFileIndex.exprRanges]] over catalyst expressions): normalize,
-  * intersect, union, and the disjunct-count cap that collapses a
-  * pathological union to its (still conservative) envelope.
+/** Sorted-disjoint interval-set algebra behind
+  * [[ManifestFileIndex.exprRanges]]: normalize, intersect, union, and the
+  * disjunct-count cap that collapses a pathological union to its (still
+  * conservative) envelope.
   */
 private[sql] object RangeAlgebra {
   val MaxDisjuncts = 64

@@ -5,14 +5,18 @@ import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
 import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression,
+  IsNotNull, IsNull, Literal, Pmod, XxHash64}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.command.DataWritingCommand
 import org.apache.spark.sql.execution.datasources.{FileFormatWriter, WriteJobStatsTracker,
   WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, ShortType}
+import org.apache.spark.sql.graft.{ColumnBridge, ManifestFileIndex}
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, IntegerType,
+  ShortType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
@@ -772,6 +776,31 @@ object Versioned {
   private def commitTs(parent: Option[Version]): Long =
     math.max(System.currentTimeMillis(), parent.map(_.ts).getOrElse(-1L))
 
+  /** The manifest CAS lost: another writer already committed the version
+    * this one staged. The one signal every retry loop ([[retryOnRace]])
+    * catches.
+    */
+  final class ConcurrentCommitException(msg: String, cause: Throwable)
+      extends IllegalStateException(msg, cause)
+
+  /** Run `attempt` again while it loses a commit race, at most
+    * `maxRetries` more times; past that the loss propagates loudly. Each
+    * attempt re-reads the head itself. What an attempt redoes is the
+    * caller's: [[appendWithRetry]] re-commits the files it landed once,
+    * while a copy-on-write verb re-plans and re-writes (the winner may have
+    * changed the affected-file set; the losing attempt's files are orphans
+    * [[gcOrphans]] ages out). The DML verbs default to 0 retries: the loss
+    * is loud and the caller owns the policy, as with a failed Delta
+    * transaction.
+    */
+  @annotation.tailrec
+  private def retryOnRace[A](maxRetries: Int)(attempt: => A): A =
+    scala.util.Try(attempt) match {
+      case scala.util.Failure(_: ConcurrentCommitException) if maxRetries > 0 =>
+        retryOnRace(maxRetries - 1)(attempt)
+      case r => r.get
+    }
+
   private def promoteState(root: String, n: Int, body: String, full: Boolean): Unit = {
     Files.createDirectories(vlogDir(root))
     val tmp = Files.createTempFile(vlogDir(root), s".v$n-", ".staged")
@@ -782,7 +811,7 @@ object Versioned {
     // final name in one atomic step, and a concurrent winner loses loudly.
     try Files.createLink(manifestPath(root, n), tmp)
     catch { case e: java.nio.file.FileAlreadyExistsException =>
-      throw new IllegalStateException(
+      throw new ConcurrentCommitException(
         s"concurrent commit: version $n already exists at $root " +
           "(re-read the log and retry on top of it)", e)
     }
@@ -835,7 +864,8 @@ object Versioned {
       }, constraints.length, blooms,
       rowExprs(df.sparkSession, df.schema, constraints.map { case (_, sql) =>
         !coalesce(expr(sql), lit(true))
-      } ++ blooms.flatMap(c => bloomPositions(col(c))))))
+      } ++ blooms.flatMap(c =>
+        bloomPositions(ColumnBridge.expression(col(c))).map(ColumnBridge.column)))))
     val dataDir = Paths.get(root, "data", s"c$n-${java.util.UUID.randomUUID()}")
     Files.createDirectories(dataDir)
     val marker = dataDir.getParent.resolve(dataDir.getFileName.toString + ".inflight")
@@ -857,31 +887,58 @@ object Versioned {
     }, marker)
   }
 
-  /** The k bloom bit positions of `c`, one per seed — the one hashing both
-    * the write tasks ([[WriteStats]]) and a probe ([[bloomPrune]]) use, so
-    * a probe tests exactly the bits its value would have set.
+  /** The k bloom bit positions of `e`, one per seed: Spark's 64-bit xxHash
+    * of `(e, seed)` modulo [[BloomBits]]. The one hashing both the write
+    * tasks ([[WriteStats]], over each written value) and a probe
+    * ([[prunedFiles]], over a literal of the column's type) use, so a probe
+    * tests exactly the bits its value would have set.
     */
-  private def bloomPositions(c: Column): Seq[Column] =
-    (0 until BloomHashes).map(sd => pmod(xxhash64(c, lit(sd)), lit(BloomBits.toLong)))
+  private def bloomPositions(e: Expression): Seq[Expression] =
+    (0 until BloomHashes).map(sd =>
+      Pmod(new XxHash64(Seq(e, Literal(sd))), Literal(BloomBits.toLong)))
 
-  /** `cols` resolved and optimized against rows of `schema` (every field
-    * nullable, as a file reads back), then bound to its ordinals: catalyst
-    * expressions a task evaluates per row, or the driver folds to constants.
-    * The rows come from an empty RDD, which no rule can fold away, so the
-    * projection survives optimization; nothing runs.
+  /** An empty relation with `schema`'s fields, every one nullable as a file
+    * reads back: the ground [[rowExprs]], [[analyzesDeterministic]] and
+    * [[conjuncts]] resolve Columns on. Its rows come from an empty RDD,
+    * which no optimizer rule can fold away; nothing runs.
     */
-  private def rowExprs(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
-      cols: Seq[Column]): Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
+  private def emptyRows(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(schema.fields.map(_.copy(nullable = true))))
+
+  /** `cols` resolved and optimized against rows of `schema`, then bound to
+    * its ordinals: catalyst expressions a task evaluates per row.
+    */
+  private def rowExprs(spark: SparkSession, schema: StructType,
+      cols: Seq[Column]): Seq[Expression] =
     if (cols.isEmpty) Nil
     else {
       import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences}
       import org.apache.spark.sql.catalyst.plans.logical.Project
-      val rows = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType(schema.fields.map(_.copy(nullable = true))))
-      rows.select(cols: _*).queryExecution.optimizedPlan match {
+      emptyRows(spark, schema).select(cols: _*).queryExecution.optimizedPlan match {
         case Project(list, child) => list.map(e => BindReferences.bindReference(
           e match { case a: Alias => a.child; case _ => e }, child.output))
         case p => throw new IllegalStateException(s"row expressions planned as $p")
+      }
+    }
+
+  /** `predicate` resolved and optimized over rows of `v`'s contract, as the
+    * conjuncts [[prunedFiles]] reads — one optimizer pass, no physical plan.
+    * Constant folding leaves each comparison's literal in its column's type
+    * (a DATE literal against a TIMESTAMP column folds to micros), and
+    * Spark infers `IS NOT NULL` for every strictly compared column. A
+    * predicate the optimizer proves unsatisfiable comes back as one FALSE
+    * conjunct. A log without a contract gives none: its bounds cannot be
+    * checked against a type, so it reads every file.
+    */
+  private[graft] def conjuncts(spark: SparkSession, v: Version,
+      predicate: Column): Seq[Expression] =
+    v.schema.fold(Seq.empty[Expression]) { ddl =>
+      emptyRows(spark, StructType.fromDDL(ddl)).filter(predicate)
+        .queryExecution.optimizedPlan match {
+        case Filter(cond, _) => Seq(cond)
+        case _: LocalRelation => Seq(Literal.FalseLiteral)
+        case _ => Nil
       }
     }
 
@@ -1098,10 +1155,11 @@ object Versioned {
     * the shuffle handed it, and every later merge overlaps them all.
     *
     * The split points come from what the driver already holds, never from
-    * sampling the rows ([[clusterSplits]]): the replaced files' manifest
-    * ranges and row counts plus `source`, a merge source's (min, max, rows)
-    * on `key` from its control-plane aggregate. The computed file id goes to
-    * `repartitionById`; NULL and out-of-range keys land in an edge file. A
+    * sampling the rows ([[graft.ops.ZOrder.splitPoints]]): the replaced
+    * files' manifest ranges and row counts plus `source`, a merge source's
+    * (min, max, rows) on `key` from its control-plane aggregate. The rows
+    * land by [[graft.ops.ZOrder.landByCuts]]; NULL and out-of-range keys land
+    * in an edge file. A
     * table without stats, a rewrite with no known range, or one whose span
     * does not fit a Long lands unshaped (compaction round-robins into its
     * `nFiles`). The write measures `cur`'s stats and bloom columns and
@@ -1121,52 +1179,11 @@ object Versioned {
       pieces = replaced.flatMap(f => cur.stats.get(f).flatMap(_.lift(i)).map { case (lo, hi) =>
         (lo, hi, cur.nulls.get(f).fold(1L)(_._1) - cur.dvs.getOrElse(f, Nil).map(_._2).sum)
       }) ++ source
-      cuts <- clusterSplits(pieces, want)
-    } yield {
-      val e = statsLongExpr(k, df.schema(k).dataType)
-      val id = cuts.zipWithIndex.foldLeft(when(e.isNull, 0)) { case (acc, (c, j)) =>
-        acc.when(e < c, j)
-      }.otherwise(cuts.length)
-      df.repartitionById(cuts.length + 1, id)
-    }
+      cuts <- graft.ops.ZOrder.splitPoints(pieces, want)
+    } yield graft.ops.ZOrder.landByCuts(df, statsLongExpr(k, df.schema(k).dataType), cuts)
     val shaped = clustered.getOrElse(nFiles.fold(df)(df.repartition))
     writeData(shaped, root, n, cur.statsCols, colMap, constraints = constraints,
       bloomCols = cur.bloomCols)
-  }
-
-  /** At most `nFiles - 1` increasing split points in (lo, hi] that cut the
-    * rows of `pieces` — (lo, hi, rows) key ranges, each piece's rows taken
-    * as spread evenly over its keys — into runs of about equal rows; key `x`
-    * belongs to the run of the split points at or below it. The j-th point
-    * follows the first key at which the rows so far reach j/nFiles of the
-    * total. Points that would leave a run empty are dropped, so heavy
-    * duplicates give fewer runs. None when nothing is known or the span does
-    * not fit a Long. One sweep, O(pieces log pieces + nFiles).
-    */
-  private def clusterSplits(pieces: Seq[(Long, Long, Long)], nFiles: Int): Option[Seq[Long]] = {
-    if (pieces.isEmpty) return None
-    val (lo, hi) = (pieces.map(_._1).min, pieces.map(_._2).max)
-    if (BigInt(hi) - BigInt(lo) > Long.MaxValue) return None
-    // the rows per key change only where a piece starts (a) or ends (b + 1)
-    val steps = pieces.flatMap { case (a, b, w) =>
-      val perKey = math.max(w, 1L) / ((b - a).toDouble + 1)
-      Seq(BigInt(a) -> perKey, (BigInt(b) + 1) -> -perKey)
-    }.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
-    val total = pieces.map(p => math.max(p._3, 1L).toDouble).sum
-    val cuts = Seq.newBuilder[Long]
-    var (rows, perKey, j) = (0.0, 0.0, 1)
-    steps.zip(steps.drop(1)).foreach { case ((x, d), (next, _)) =>
-      perKey += d
-      val seg = perKey * (next - x).toDouble
-      while (j < nFiles && perKey > 0 && rows + seg >= total * j / nFiles) {
-        val keys = BigDecimal(math.ceil((total * j / nFiles - rows) / perKey)).toBigInt
-        val y = (x + keys - 1).max(x).min(next - 1)
-        if (y < hi) cuts += (y + 1).toLong
-        j += 1
-      }
-      rows += seg
-    }
-    Some(cuts.result().distinct)
   }
 
   private def sealing[A](marker: Path)(commit: => A): A = {
@@ -1239,10 +1256,11 @@ object Versioned {
       next(cur, "append", statsCols, bCols).copy(entries = landed), Some(ddl)))
   }
 
-  /** The exact-long encoding of a stats/pruning column — the write-side
-    * twin of [[org.apache.spark.sql.graft.ColumnBridge.predicateRanges]]'
-    * literal encoding. Integral as-is, DATE as epoch days, TIMESTAMP as
-    * epoch micros; anything else (floats especially: a long cast truncates
+  /** The exact-long encoding of a stats/pruning column — the encoding
+    * catalyst itself gives a literal of the column's type, which is what
+    * lets [[prunedFiles]] compare analyzed literals with the recorded ranges.
+    * Integral as-is, DATE as epoch days, TIMESTAMP as epoch micros; anything
+    * else (floats especially: a long cast truncates
     * toward zero and can SHRINK a range — silent wrong pruning) is refused
     * loudly.
     */
@@ -1276,49 +1294,6 @@ object Versioned {
     }
   }
 
-  /** The [[org.apache.spark.sql.graft.ColumnBridge.LitKind]] a column of
-    * this type's stats are encoded in — the read-side contract
-    * [[statsLongExpr]] writes.
-    */
-  private def statsKind(dt: org.apache.spark.sql.types.DataType)
-      : Option[org.apache.spark.sql.graft.ColumnBridge.LitKind] = {
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.graft.ColumnBridge.LitKind
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType => Some(LitKind.Integral)
-      case DateType => Some(LitKind.DateDays)
-      case TimestampType => Some(LitKind.TsMicros)
-      case _ => None
-    }
-  }
-
-  /** The pruning bounds of `predicate` against version `v`, VALIDATED
-    * against the schema contract: a bound whose literal kind does not match
-    * the tracked column's stats encoding is DROPPED as unconstrained. The
-    * Column-side walker runs on unanalyzed nodes, so a predicate Spark
-    * legally coerces — a DATE literal against a TIMESTAMP-tracked column or
-    * vice versa — would otherwise yield wrong-UNIT bounds (epoch days vs
-    * epoch micros) and silently prune files holding matching rows. Dropping
-    * is conservative (more files read; the residual filter still decides
-    * rows); a pre-contract log (no recorded schema) keeps only bounds whose
-    * kind a legal Spark comparison could not have coerced away from the
-    * column's own type — i.e. nothing is assumed, every non-verifiable
-    * bound is dropped too.
-    */
-  private def validatedBounds(v: Version, predicate: Column)
-      : Map[String, Seq[(Long, Long)]] = {
-    val typed = org.apache.spark.sql.graft.ColumnBridge.predicateRangesTyped(predicate)
-    val contract = v.schema.map(org.apache.spark.sql.types.StructType.fromDDL)
-    typed.flatMap { case (c, (kind, rs)) =>
-      if (!v.statsCols.contains(c)) None
-      else contract.flatMap(st => st.fields.find(_.name == c)).map(_.dataType)
-        .flatMap(statsKind) match {
-        case Some(k) if k == kind => Some(c -> rs)
-        case _ => None // cross-type coercion, untrackable type, or no contract
-      }
-    }
-  }
-
   /** What the write tasks measured of one non-empty landed file. `ranges`
     * is empty when any stats column holds no non-NULL value in the file.
     */
@@ -1347,9 +1322,7 @@ object Versioned {
     sealing(marker) {
       // a racing commit may have ADDED a constraint, and its admission check
       // counted only committed data — never these not-yet-committed files
-      var attempt = 0
-      var committed: Option[Version] = None
-      while (committed.isEmpty) {
+      retryOnRace(maxRetries) {
         val head = currentVersion(root)
         // the landed files carry the PRE-WRITE physical names: a rename
         // racing this append would pair a stale generation of names with a
@@ -1364,15 +1337,8 @@ object Versioned {
         })
         refuseViolations(root, added)
         validated ++= added.map(_._1)
-        try committed = Some(commit(root, head,
-          next(head, "append").copy(entries = landed), Some(ddl)))
-        catch {
-          case e: IllegalStateException if e.getMessage.startsWith("concurrent commit") =>
-            attempt += 1
-            if (attempt > maxRetries) throw e
-        }
+        commit(root, head, next(head, "append").copy(entries = landed), Some(ddl))
       }
-      committed.get
     }
   }
 
@@ -1382,18 +1348,8 @@ object Versioned {
     */
   private[graft] def retryCommit(root: String, op: String, added: Seq[FileEntry],
       statsCols: Seq[String], maxRetries: Int,
-      schemaDDL: Option[String] = None): Version = {
-    var attempt = 0
-    while (true) {
-      try return commitFiles(root, op, added, statsCols, schemaDDL)
-      catch {
-        case e: IllegalStateException if e.getMessage.startsWith("concurrent commit") =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-    sys.error("unreachable")
-  }
+      schemaDDL: Option[String] = None): Version =
+    retryOnRace(maxRetries)(commitFiles(root, op, added, statsCols, schemaDDL))
 
   /** VT9: OPTIMIZE-style compaction THROUGH the log — the deliberate answer
     * to the small-files pathology a per-micro-batch sink (ST17) accretes:
@@ -1487,24 +1443,88 @@ object Versioned {
         constraints = cur.constraints)))
   }
 
-  /** The files of version `v` whose recorded ranges overlap EVERY bound in
-    * `bounds` (per column, overlap with ANY of its ranges — the disjunctive
-    * form OR/IN predicates produce). Files without stats are kept
-    * (conservative); a column with an EMPTY range list is a proven
-    * contradiction and excludes every stats-bearing file.
+  /** The range half of [[prunedFiles]]: the files of `files` whose
+    * recorded ranges overlap, on every column of `bounds` the version
+    * tracks, ANY of its ranges (the disjunctive form OR/IN produce). Files
+    * without stats are kept (conservative); an EMPTY range list is a
+    * proven contradiction and excludes every stats-bearing file.
     */
-  private def overlappingFiles(v: Version,
-      bounds: Map[String, Seq[(Long, Long)]]): Seq[String] =
-    if (bounds.isEmpty) v.files
-    else v.files.filter { f =>
+  private def rangePruned(v: Version, files: Seq[String],
+      bounds: Map[String, Seq[(Long, Long)]]): Seq[String] = {
+    val byIdx = bounds.toSeq.map { case (c, rs) => (v.statsCols.indexOf(c), rs) }
+      .filter(_._1 >= 0)
+    if (byIdx.isEmpty) files
+    else files.filter { f =>
       v.stats.get(f).forall { rs =>
-        bounds.forall { case (c, ranges) =>
-          rs.lift(v.statsCols.indexOf(c)).forall { case (mn, mx) =>
+        byIdx.forall { case (i, ranges) =>
+          rs.lift(i).forall { case (mn, mx) =>
             ranges.exists { case (lo, hi) => mx >= lo && mn <= hi }
           }
         }
       }
     }
+  }
+
+  /** The files of `files` (a subset of version `v`'s list) that can hold a
+    * row satisfying every one of `conjuncts` — the log's ONE pruning rule.
+    * `conjuncts` are analyzed, optimized catalyst predicates whose
+    * attribute names map to `v`'s logical columns through `logical`. Every
+    * read prunes through here: the native relation's
+    * [[org.apache.spark.sql.graft.ManifestFileIndex]] on the filters
+    * Catalyst pushes, the library reads and the DML on their predicate's
+    * [[conjuncts]], the DSv2 batch on its pushed filters. Three proofs, all
+    * from manifest metadata:
+    *  - RANGES ([[org.apache.spark.sql.graft.ManifestFileIndex.exprRanges]]
+    *    then [[rangePruned]]): the file's recorded range on a tracked column
+    *    misses every range the predicate allows;
+    *  - NULL COUNTS (vt31): an `IS NULL` conjunct skips a file with zero
+    *    nulls in the column, an `IS NOT NULL` one (Spark infers it for every
+    *    strictly compared column) a file that is entirely null;
+    *  - BLOOMS (vt26): a `column = literal` conjunct on a bloom column skips
+    *    a file whose bits lack one of the literal's [[bloomPositions]] (the
+    *    literal has the column's type, so it hashes as the written values
+    *    did) — the pruning an unsorted high-cardinality column's ranges
+    *    cannot do.
+    * A proven contradiction — a column's range set empty, or a conjunct
+    * folded to FALSE or NULL — keeps no file at all. Files and columns
+    * without recorded metadata stay (conservative), and a deletion vector
+    * only shrinks a file's rows, so every proof survives one. Only
+    * top-level conjuncts count: a null test or equality under OR or NOT
+    * proves nothing.
+    */
+  private[graft] def prunedFiles(v: Version, files: Seq[String], conjuncts: Seq[Expression],
+      logical: String => String = identity): Seq[String] = {
+    def split(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => split(l) ++ split(r)
+      case _ => Seq(e)
+    }
+    val cs = conjuncts.flatMap(split)
+    val bounds = ManifestFileIndex.exprRanges(cs)
+    if (bounds.valuesIterator.exists(_.isEmpty) ||
+        cs.exists { case Literal(b, BooleanType) => b == null || b == false; case _ => false })
+      return Nil
+    val ranged = rangePruned(v, files, bounds.map { case (c, rs) => logical(c) -> rs })
+    val nullTests = cs.collect {
+      case IsNull(a: AttributeReference) => (v.statsCols.indexOf(logical(a.name)), true)
+      case IsNotNull(a: AttributeReference) => (v.statsCols.indexOf(logical(a.name)), false)
+    }.filter(_._1 >= 0)
+    val probes = cs.collect {
+      case EqualTo(a: AttributeReference, l: Literal) => (a, l)
+      case EqualTo(l: Literal, a: AttributeReference) => (a, l)
+    }.collect { case (a, l) if l.value != null && l.dataType == a.dataType &&
+        v.bloomCols.contains(logical(a.name)) =>
+      (logical(a.name), bloomPositions(l).map(_.eval().asInstanceOf[Long]))
+    }
+    ranged.filter { f =>
+      nullTests.forall { case (i, isNull) =>
+        !v.nulls.get(f).exists { case (rc, ncs) =>
+          ncs.lift(i).exists(nc => if (isNull) nc == 0L else nc == rc)
+        }
+      } && probes.forall { case (c, positions) =>
+        v.blooms.get((f, c)).forall(bits => positions.forall(bloomHasBit(bits, _)))
+      }
+    }
+  }
 
   /** VT6 (read half): the version's rows with `statsCol` in [lo, hi],
     * planned from ONLY the manifest entries whose (min, max) on that column
@@ -1517,67 +1537,36 @@ object Versioned {
   def readPruned(spark: SparkSession, root: String, statsCol: String, lo: Long, hi: Long,
       asOf: Option[Int] = None): DataFrame = {
     require(lo <= hi, s"empty range [$lo, $hi]")
-    val v = asOf.map(stateAt(root, _)).getOrElse(currentVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $root")))
-    val idx = v.statsCols.indexOf(statsCol)
-    require(idx >= 0, s"version ${v.n} at $root tracks stats on ${v.statsCols}, " +
-      s"not $statsCol — use read() + filter")
-    // rs.lift: a file committed before statsCols widened may carry fewer
-    // ranges — no range at idx means read it conservatively
-    val candidates = v.files.filter(f =>
-      v.stats.get(f).forall(rs => rs.lift(idx).forall { case (mn, mx) => mx >= lo && mn <= hi }))
+    val v = versionAt(root, asOf)
+    require(v.statsCols.contains(statsCol),
+      s"version ${v.n} at $root tracks stats on ${v.statsCols}, " +
+        s"not $statsCol — use read() + filter")
     val cc = col(statsCol)
-    val base =
-      if (candidates.isEmpty) read(spark, root, Some(v.n)).limit(0)
-      else readFiles(spark, root, v, candidates)
-    base.filter(cc >= lo && cc <= hi)
+    scan(spark, root, v, rangePruned(v, v.files, Map(statsCol -> Seq((lo, hi)))))
+      .filter(cc >= lo && cc <= hi)
   }
 
   /** VT10: filter-driven automatic data skipping — [[readPruned]] without
-    * the caller doing the range algebra. The predicate's node tree is
-    * walked for per-column range SETS ([[org.apache.spark.sql.graft
-    * .ColumnBridge.predicateRanges]]: conjunctions intersect, OR/IN
-    * disjunctions union — so the reference's progressive day-rotation
-    * windows prune too; DATE/TIMESTAMP literals encode as epoch days/
-    * micros, matching the stats encoding; strict bounds widen by one —
-    * files prune, rows never), the manifest plans only range-overlapping
-    * files, and the FULL predicate applies as the residual filter.
-    * Anything the walker cannot bound — non-literal comparisons, untracked
-    * columns, null tests — contributes NO constraint (conservative: more
-    * files read, same rows out). This is the read a user actually writes:
-    * `readWhere(s, root, $"k" >= 5 && $"d" < 100)` skips like the
-    * hand-ranged call, proven equivalent in VersionedSpec.
+    * the caller doing the range algebra. The predicate is resolved once
+    * against the version's contract ([[conjuncts]]) and [[prunedFiles]]
+    * plans only the files it cannot rule out: per-column range SETS
+    * (conjunctions intersect, OR/IN disjunctions union — so the reference's
+    * progressive day-rotation windows prune too; DATE/TIMESTAMP literals
+    * arrive epoch-encoded in the column's own unit, matching the stats),
+    * null counts and bloom bits. The FULL predicate applies as the
+    * residual filter, over [[table]]'s relation of the kept files (whose
+    * `inputFiles` are exactly those). Anything the rule cannot bound —
+    * non-literal comparisons, untracked columns — contributes NO
+    * constraint (conservative: more files read, same rows out). This is
+    * the read a user actually writes: `readWhere(s, root, $"k" >= 5 &&
+    * $"d" < 100)` skips like the hand-ranged call, proven equivalent in
+    * VersionedSpec.
     */
   def readWhere(spark: SparkSession, root: String, predicate: Column,
       asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.map(stateAt(root, _)).getOrElse(currentVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $root")))
-    val candidates = nullPrune(v,
-      org.apache.spark.sql.graft.ColumnBridge.nullTests(predicate),
-      overlappingFiles(v, validatedBounds(v, predicate)))
-    val base =
-      if (candidates.isEmpty) read(spark, root, Some(v.n)).limit(0)
-      else readFiles(spark, root, v, candidates)
-    base.filter(predicate)
-  }
-
-  /** Keep only the files of `candidates` whose recorded bloom could hold
-    * `litv` (already cast to the CONTRACT type — the bits the write side
-    * hashed). The probe's k positions are [[bloomPositions]] of the
-    * literal, constant-folded on the driver, so no Spark job runs;
-    * bloom-less files stay (conservative). Shared by [[readEquals]] and the
-    * DSv2 batch scan's pushed-EqualTo pruning.
-    */
-  private[graft] def bloomPrune(spark: SparkSession, v: Version, column: String,
-      litv: Column, candidates: Seq[String]): Seq[String] = {
-    val positions = rowExprs(spark, org.apache.spark.sql.types.StructType(Nil),
-      bloomPositions(litv)).map(_.eval().asInstanceOf[Long])
-    candidates.filter { f =>
-      v.blooms.get((f, column)) match {
-        case Some(bits) => positions.forall(bloomHasBit(bits, _))
-        case None => true // no bloom recorded for this file: conservative
-      }
-    }
+    val v = versionAt(root, asOf)
+    scan(spark, root, v, prunedFiles(v, v.files, conjuncts(spark, v, predicate)))
+      .filter(predicate)
   }
 
   /** VT26 (read half): POINT-LOOKUP file skipping via per-file BLOOM bits —
@@ -1585,52 +1574,20 @@ object Versioned {
     * high-cardinality UNSORTED column (a doc_id lookup on an ingest-ordered
     * table) overlaps every file's range, but each file's 1024-bit bloom
     * (recorded by [[appendWithStats]]' `bloomCols`, folded by the write
-    * tasks along with the stats) proves most files cannot hold the
-    * value (the Delta bloom-index / Iceberg puffin design). The probe's k
-    * bit positions are the write side's own [[bloomPositions]], folded on
-    * the driver under the column's CONTRACT type (hashing a literal under
-    * a different type would probe garbage bits) — and a file is pruned
-    * only when a bit is provably absent: blooms only SKIP, never admit rows
-    * (the residual equality filter always applies; bloom-less files read
-    * conservatively). Range-stats pruning composes (intersection). Without
-    * a contract schema the bloom is not consulted (type-unverifiable
-    * probe) — conservative, never wrong.
+    * tasks along with the stats) proves most files cannot hold the value
+    * (the Delta bloom-index / Iceberg puffin design). This is
+    * [[readWhere]] of `column = value`: analysis gives the literal the
+    * column's CONTRACT type (hashing it under another type would probe
+    * garbage bits), and [[prunedFiles]] folds its [[bloomPositions]] on the
+    * driver, so no Spark job runs. A file is pruned only when a bit is
+    * provably absent: blooms only SKIP, never admit rows (the residual
+    * equality filter always applies; bloom-less files read
+    * conservatively). Range and null-count pruning compose
+    * (intersection). Without a contract schema nothing prunes — never wrong.
     */
   def readEquals(spark: SparkSession, root: String, column: String, value: Any,
-      asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.map(stateAt(root, _)).getOrElse(currentVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $root")))
-    val dt = v.schema.map(org.apache.spark.sql.types.StructType.fromDDL)
-      .flatMap(_.fields.find(_.name == column)).map(_.dataType)
-    // cast the probe to the CONTRACT type (the hash the write side used) —
-    // but only when needed: a Cast node over an already-matching literal
-    // would defeat the range walker's bound extraction and cost the free
-    // range-pruning intersection
-    def matchesNatively(t: org.apache.spark.sql.types.DataType): Boolean = {
-      import org.apache.spark.sql.types._
-      (value, t) match {
-        case (_: Long, LongType) | (_: Int, IntegerType) | (_: String, StringType) |
-             (_: Double, DoubleType) | (_: Float, FloatType) | (_: Boolean, BooleanType) |
-             (_: java.sql.Date, DateType) | (_: java.sql.Timestamp, TimestampType) => true
-        case _ => false
-      }
-    }
-    val litv = dt match {
-      case Some(t) if !matchesNatively(t) => lit(value).cast(t)
-      case _ => lit(value)
-    }
-    val pred = col(column) === litv
-    // an equality probe implies NOT NULL: entirely-null files prune (vt31)
-    val ranged = nullPrune(v, Seq((column, false)),
-      overlappingFiles(v, validatedBounds(v, pred)))
-    val candidates =
-      if (value == null || dt.isEmpty || !v.bloomCols.contains(column)) ranged
-      else bloomPrune(spark, v, column, litv, ranged)
-    val base =
-      if (candidates.isEmpty) read(spark, root, Some(v.n)).limit(0)
-      else readFiles(spark, root, v, candidates)
-    base.filter(pred)
-  }
+      asOf: Option[Int] = None): DataFrame =
+    readWhere(spark, root, col(column) === lit(value), asOf)
 
   /** VT12b: copy-on-write row-level DELETE through the log — the versioned
     * substrate's answer to [[Dml]]'s smart delete (ref `work_item_budget_vs
@@ -1651,28 +1608,7 @@ object Versioned {
     */
   def deleteWhere(spark: SparkSession, root: String, predicate: Column,
       maxRetries: Int = 0): Version =
-    cowRetry(maxRetries)(deleteWhereOnce(spark, root, predicate))
-
-  /** Optimistic-retry loop for the copy-on-write DML ops. Unlike
-    * [[retryCommit]] (append: the same files re-commit on top of the
-    * winner), a lost COW race must re-run the WHOLE op — the winner may
-    * have changed the affected-file set — so each attempt re-plans and
-    * re-writes; the losing attempt's files are orphans [[gcOrphans]] ages
-    * out. Default 0 retries: the loss is loud and the caller owns the
-    * policy, same stance as a failed Delta transaction.
-    */
-  private def cowRetry(maxRetries: Int)(op: => Version): Version = {
-    var attempt = 0
-    while (true) {
-      try return op
-      catch {
-        case e: IllegalStateException if e.getMessage.startsWith("concurrent commit") =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-    sys.error("unreachable")
-  }
+    retryOnRace(maxRetries)(deleteWhereOnce(spark, root, predicate))
 
   /** One copy-on-write delete; `staged` is the open transaction marker of
     * [[deleteWhereStaged]].
@@ -1682,9 +1618,9 @@ object Versioned {
     val cur = currentVersion(root).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $root"))
     requireNoPendingTxn(Some(cur), root)
-    val affected = overlappingFiles(cur, validatedBounds(cur, predicate))
+    val affected = prunedFiles(cur, cur.files, conjuncts(spark, cur, predicate))
     if (affected.isEmpty) return cur // provably nothing to delete: no stage needed
-    val survivors = readFiles(spark, root, cur, affected)
+    val survivors = scan(spark, root, cur, affected)
       .filter(!coalesce(predicate, lit(false)))
     val n = cur.n + 1
     val ddl = normalizedDDL(survivors)
@@ -1710,16 +1646,16 @@ object Versioned {
     */
   def updateWhere(spark: SparkSession, root: String, predicate: Column,
       set: Map[String, Column], maxRetries: Int = 0): Version =
-    cowRetry(maxRetries)(updateWhereOnce(spark, root, predicate, set))
+    retryOnRace(maxRetries)(updateWhereOnce(spark, root, predicate, set))
 
   private def updateWhereOnce(spark: SparkSession, root: String,
       predicate: Column, set: Map[String, Column]): Version = {
     require(set.nonEmpty, "updateWhere needs at least one SET column")
     val cur = currentVersion(root).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $root"))
-    val affected = overlappingFiles(cur, validatedBounds(cur, predicate))
+    val affected = prunedFiles(cur, cur.files, conjuncts(spark, cur, predicate))
     if (affected.isEmpty) return cur // provably nothing to update
-    val base = readFiles(spark, root, cur, affected)
+    val base = scan(spark, root, cur, affected)
     set.keys.foreach(k => require(base.columns.contains(k),
       s"updateWhere: SET column `$k` is not in the table (${base.columns.mkString(", ")})"))
     val hit = coalesce(predicate, lit(false)) // NULL predicate = row not updated
@@ -1754,7 +1690,7 @@ object Versioned {
     */
   def deleteWhereDV(spark: SparkSession, root: String, predicate: Column,
       maxRetries: Int = 0): Version =
-    cowRetry(maxRetries)(deleteWhereDVOnce(spark, root, predicate))
+    retryOnRace(maxRetries)(deleteWhereDVOnce(spark, root, predicate))
 
   /** True iff `c` ANALYZES deterministic against `v`'s schema contract —
     * the unresolved tree alone cannot answer this (an unresolved `rand()`
@@ -1763,12 +1699,8 @@ object Versioned {
     * (the legacy-permissive stance every other contract check takes).
     */
   private def analyzesDeterministic(spark: SparkSession, v: Version, c: Column): Boolean =
-    v.schema.forall { ddl =>
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        .select(c.as("__p")).queryExecution.analyzed.expressions
-        .forall(_.deterministic)
-    }
+    v.schema.forall(ddl => emptyRows(spark, StructType.fromDDL(ddl))
+      .select(c.as("__p")).queryExecution.analyzed.expressions.forall(_.deterministic))
 
   /** The merge-on-read verbs claim two working column names for the
     * position scan; refuse up front on a table that carries either (the
@@ -1791,10 +1723,10 @@ object Versioned {
     require(analyzesDeterministic(spark, cur, predicate),
       "deleteWhereDV needs a deterministic predicate — recorded positions must be " +
         "reproducible; use deleteWhere (copy-on-write) for nondeterministic deletes")
-    val affected = overlappingFiles(cur, validatedBounds(cur, predicate))
+    val affected = prunedFiles(cur, cur.files, conjuncts(spark, cur, predicate))
     if (affected.isEmpty) return cur // provably nothing to delete
     val hit = coalesce(predicate, lit(false)) // NULL predicate keeps the row
-    val positions = scanAlivePos(spark, root, cur, affected).filter(hit)
+    val positions = scan(spark, root, cur, affected, withPos = true).filter(hit)
       .select(col(DvKeyCol).as("file"), col(DvPosCol).as("pos"))
     commitDvAttach(spark, root, cur, "delete-dv", positions, affected,
       addedFiles = Nil, addedDDL = None)
@@ -1811,7 +1743,7 @@ object Versioned {
     */
   def updateWhereDV(spark: SparkSession, root: String, predicate: Column,
       set: Map[String, Column], maxRetries: Int = 0): Version =
-    cowRetry(maxRetries)(updateWhereDVOnce(spark, root, predicate, set))
+    retryOnRace(maxRetries)(updateWhereDVOnce(spark, root, predicate, set))
 
   private def updateWhereDVOnce(spark: SparkSession, root: String,
       predicate: Column, set: Map[String, Column]): Version = {
@@ -1825,10 +1757,10 @@ object Versioned {
       "updateWhereDV needs deterministic predicate and SET expressions — the matched " +
         "set is scanned twice (positions + rewrites) and the passes must agree; use " +
         "updateWhere (copy-on-write, one pass) for nondeterministic updates")
-    val affected = overlappingFiles(cur, validatedBounds(cur, predicate))
+    val affected = prunedFiles(cur, cur.files, conjuncts(spark, cur, predicate))
     if (affected.isEmpty) return cur
     val hit = coalesce(predicate, lit(false))
-    val matched = scanAlivePos(spark, root, cur, affected).filter(hit)
+    val matched = scan(spark, root, cur, affected, withPos = true).filter(hit)
     val dataCols = matched.columns.filterNot(c => c == DvKeyCol || c == DvPosCol)
     set.keys.foreach(k => require(dataCols.contains(k),
       s"updateWhereDV: SET column `$k` is not in the table (${dataCols.mkString(", ")})"))
@@ -1931,7 +1863,7 @@ object Versioned {
     */
   def purgeDeletes(spark: SparkSession, root: String, maxRetries: Int = 0,
       minDeletedRatio: Double = 0.0): Version =
-    cowRetry(maxRetries) {
+    retryOnRace(maxRetries) {
       require(minDeletedRatio >= 0.0 && minDeletedRatio <= 1.0,
         s"minDeletedRatio must be in [0, 1], got $minDeletedRatio")
       val cur = currentVersion(root).getOrElse(
@@ -1948,7 +1880,7 @@ object Versioned {
       }
       if (dvd.isEmpty) cur // nothing to purge
       else {
-        val alive = readFiles(spark, root, cur, dvd)
+        val alive = scan(spark, root, cur, dvd)
         val n = cur.n + 1
         val ddl = normalizedDDL(alive)
         val (landed, marker) = writeRewrite(alive, root, n, cur, dvd, cur.colMap)
@@ -1984,7 +1916,7 @@ object Versioned {
     */
   def mergeInto(spark: SparkSession, root: String, source: DataFrame, keys: Seq[String],
       orderCol: Option[String] = None, maxRetries: Int = 0): Version =
-    cowRetry(maxRetries)(mergeIntoOnce(spark, root, source, keys, orderCol, "merge"))
+    retryOnRace(maxRetries)(mergeIntoOnce(spark, root, source, keys, orderCol, "merge"))
 
   /** ST18: exactly-once streaming MERGE — the reference's scheduled
     * incremental upsert (`snowflake_bq_sync_daily Time Details/main.py:
@@ -2004,33 +1936,25 @@ object Versioned {
       keys: Seq[String], batchId: Long, orderCol: Option[String] = None,
       maxRetries: Int = 5): Option[Version] = {
     val op = s"stream-batch-$batchId"
-    var attempt = 0
-    while (true) {
+    retryOnRace(maxRetries) {
       // each attempt re-reads head AND re-checks the txn set: the racing
       // writer that beat us may have been a replay of this very batch
       val cur = currentVersion(root)
-      if (cur.exists(_.txns.contains(batchId))) return None
-      try {
-        return Some(cur match {
-          case None =>
-            // first batch onto an empty log: plain append under the op name
-            val (landed, marker) = writeData(source, root, 1)
-            sealing(marker)(commit(root, None,
-              next(None, op).copy(entries = landed), Some(normalizedDDL(source))))
-          case Some(c) =>
-            val merged = mergeOnState(spark, root, c, source, keys, orderCol, op)
-            // empty source returned the same version: commit a zero-file
-            // delta anyway so the batch id lands in the txn set
-            if (merged.n == c.n) commit(root, Some(c), next(Some(c), op))
-            else merged
-        })
-      } catch {
-        case e: IllegalStateException if e.getMessage.startsWith("concurrent commit") =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      if (cur.exists(_.txns.contains(batchId))) None
+      else Some(cur match {
+        case None =>
+          // first batch onto an empty log: plain append under the op name
+          val (landed, marker) = writeData(source, root, 1)
+          sealing(marker)(commit(root, None,
+            next(None, op).copy(entries = landed), Some(normalizedDDL(source))))
+        case Some(c) =>
+          val merged = mergeOnState(spark, root, c, source, keys, orderCol, op)
+          // empty source returned the same version: commit a zero-file
+          // delta anyway so the batch id lands in the txn set
+          if (merged.n == c.n) commit(root, Some(c), next(Some(c), op))
+          else merged
+      })
     }
-    sys.error("unreachable")
   }
 
   private def mergeIntoOnce(spark: SparkSession, root: String, source: DataFrame,
@@ -2054,7 +1978,7 @@ object Versioned {
       keys: Seq[String], matched: Seq[MergeInto.MergeAction],
       insert: Option[Column] = None, orderCol: Option[String] = None,
       maxRetries: Int = 0): Version =
-    cowRetry(maxRetries) {
+    retryOnRace(maxRetries) {
       val cur = currentVersion(root).getOrElse(
         throw new IllegalArgumentException(s"no committed versions at $root"))
       mergeOnState(spark, root, cur, source, keys, orderCol, "merge-clauses",
@@ -2069,15 +1993,16 @@ object Versioned {
       staged: Option[String] = None): Version = {
     require(keys.nonEmpty, "mergeInto needs at least one merge key")
     // a tracked key bounds the blast radius only if the SOURCE column's
-    // stats encoding matches the table contract's (a DATE source key against
-    // a TIMESTAMP-tracked table would bound in the wrong unit — treat the
-    // key as untracked instead: wider rewrite, never a wrong one)
-    val contract = cur.schema.map(org.apache.spark.sql.types.StructType.fromDDL)
+    // stats encoding is the table contract's (a DATE source key against a
+    // TIMESTAMP-tracked table would bound in the wrong unit — treat the key
+    // as untracked instead: wider rewrite, never a wrong one)
+    def encoding(dt: DataType): Option[String] = scala.util.Try(statsLongSql("k", dt)).toOption
+    val contract = cur.schema.map(StructType.fromDDL)
     val trackedKeys = keys.filter { k =>
       cur.statsCols.contains(k) && {
-        val srcKind = statsKind(source.schema(k).dataType)
-        srcKind.nonEmpty && srcKind == contract
-          .flatMap(st => st.fields.find(_.name == k)).map(_.dataType).flatMap(statsKind)
+        val src = encoding(source.schema(k).dataType)
+        src.nonEmpty && src == contract.flatMap(_.fields.find(_.name == k))
+          .flatMap(f => encoding(f.dataType))
       }
     }
     // one control-plane agg over the source: row count, fully-keyed row
@@ -2095,8 +2020,8 @@ object Versioned {
     // source (the classic Jan+Dec shape) would widen one [min, max] to
     // near-table span and degrade the COW to a full rewrite; bucketing the
     // source's keys inside the envelope and keeping only populated runs
-    // (keyRangeSet) scopes `affected` to the actual windows, same algebra
-    // the OR/IN predicate walker feeds overlappingFiles
+    // (keyRangeSet) scopes `affected` to the actual windows — the range
+    // half of the pruning rule, which an OR/IN predicate feeds the same way
     val bounds: Map[String, Seq[(Long, Long)]] = trackedKeys.zipWithIndex.flatMap {
       case (k, i) =>
         if (r.isNullAt(2 + 2 * i)) None
@@ -2106,10 +2031,8 @@ object Versioned {
     val affected =
       if (r.getLong(1) == 0L) Nil // no fully-keyed source row can match anything
       else if (trackedKeys.isEmpty) cur.files // no stats on any key: honest full rewrite
-      else overlappingFiles(cur, bounds)
-    val target =
-      if (affected.isEmpty) read(spark, root, Some(cur.n)).limit(0)
-      else readFiles(spark, root, cur, affected)
+      else rangePruned(cur, cur.files, bounds)
+    val target = scan(spark, root, cur, affected)
     val srcSel = source.select(target.columns.map(col).toIndexedSeq: _*)
     val merged = combine.map(f => f(target, srcSel))
       .getOrElse(MergeInto.merge(target, srcSel, keys, orderCol))
@@ -2322,8 +2245,7 @@ object Versioned {
     */
   def cloneTable(srcRoot: String, dstRoot: String, asOf: Option[Int] = None,
       deep: Boolean = false): Version = {
-    val src = asOf.map(stateAt(srcRoot, _)).getOrElse(currentVersion(srcRoot).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $srcRoot")))
+    val src = versionAt(srcRoot, asOf)
     require(currentVersion(dstRoot).isEmpty,
       s"clone target $dstRoot already has committed versions")
     val srcP = Paths.get(srcRoot)
@@ -2703,7 +2625,7 @@ object Versioned {
     */
   private def countViolations(spark: SparkSession, root: String, v: Version,
       files: Seq[String], checkSql: String): Long =
-    readFiles(spark, root, v, files).filter(!coalesce(expr(checkSql), lit(true))).count()
+    scan(spark, root, v, files).filter(!coalesce(expr(checkSql), lit(true))).count()
 
   /** Move manifests that no RETAINED version needs out of the hot `_vlog`
     * directory into `_vlog/_archive` — the directory-growth counterpart to
@@ -2851,7 +2773,6 @@ object Versioned {
     val vFrom = stateAt(root, from)
     val vTo = stateAt(root, to)
     val (fa, fb) = (vFrom.files.toSet, vTo.files.toSet)
-    val schemaSrc = read(spark, root, Some(to)) // lazy; schema only
     // a file listed on BOTH sides whose deletion-vector set differs (vt27)
     // changed rows without changing bytes: read it on both sides — each
     // under its own version's vectors — and let the multiset difference
@@ -2864,8 +2785,8 @@ object Versioned {
     // column as NULL, exactly as version `to` itself reads them — and a
     // PURE evolve shares every file, so its change set is empty
     def rd(files: Set[String], dvState: Version): DataFrame =
-      if (files.isEmpty) schemaSrc.limit(0)
-      else readFiles(spark, root, vTo.copy(dvs = dvState.dvs), files.toSeq.sorted)
+      scan(spark, root, vTo.copy(dvs = dvState.dvs, sizes = vFrom.sizes ++ vTo.sizes),
+        files.toSeq.sorted)
     val onlyFrom = rd((fa -- fb) ++ dvChanged, vFrom)
     val onlyTo = rd((fb -- fa) ++ dvChanged, vTo)
     onlyTo.exceptAll(onlyFrom).withColumn("change_type", lit("insert"))
@@ -3088,64 +3009,75 @@ object Versioned {
     replica.join(delKeys, keys, "left_anti").unionByName(ins)
   }
 
-  /** Read the table at version `asOf` (default: latest). The scan set is
-    * exactly the version's reconstructed file list — no directory listing,
-    * so readers are immune to concurrent commits and leftover files.
+  /** Read the table at version `asOf` (default: latest): [[table]]. The
+    * scan set is exactly the version's reconstructed file list — no
+    * directory listing, so readers are immune to concurrent commits and
+    * leftover files.
     */
-  def read(spark: SparkSession, root: String, asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.map(stateAt(root, _)).getOrElse(currentVersion(root).getOrElse(
+  def read(spark: SparkSession, root: String, asOf: Option[Int] = None): DataFrame =
+    table(spark, root, asOf)
+
+  /** The version `asOf`, or the head when None. */
+  private def versionAt(root: String, asOf: Option[Int]): Version =
+    asOf.map(stateAt(root, _)).getOrElse(currentVersion(root).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $root")))
-    if (v.files.isEmpty) emptyVersion(spark, root, v)
-    else readFiles(spark, root, v, v.files)
-  }
 
-  /** Scan `files` (a subset of version `v`'s list) UNDER v's schema
-    * contract when one is recorded: an explicit read schema makes parquet
-    * fill columns a file lacks with typed NULLs, which is what lets
-    * [[evolve]] add a column without rewriting a byte — every file
-    * generation reads under the version's contract, and each version time-
-    * travels under its OWN contract. (It also skips footer schema
-    * inference, one less driver pass.) Pre-contract logs fall back to
-    * footer inference, the old behavior.
+  /** The one scan of the log's data files: `files` (a subset of version
+    * `v`'s list) as a [[org.apache.spark.sql.graft.ManifestFileIndex]]
+    * relation under v's schema contract, v's deletion vectors applied.
+    * Every read, the DML's affected rows, CDC and constraint checks are
+    * frames of this scan, and its `inputFiles` are `files` (plus any
+    * deletion-vector sidecars).
+    *
+    * The explicit read schema makes parquet fill columns a file lacks with
+    * typed NULLs, which is what lets [[evolve]] add a column without
+    * rewriting a byte — every file generation reads under the version's
+    * contract, and each version time-travels under its OWN contract. A
+    * pre-contract log infers its schema from the footers instead.
+    *
+    * The relation runs in the PHYSICAL namespace (vt24: files and recorded
+    * stats alike — ranges are positional, unaffected by a rename) with a
+    * logical projection on top; Catalyst pushes predicate and column
+    * pruning through the aliases, and the index prunes what reaches it with
+    * [[prunedFiles]], so skipping on a renamed column is as selective as
+    * before the rename. Statuses come from the manifest's sizes, so
+    * planning stats no file.
+    *
+    * A file with deletion vectors (vt27) scans WITH each row's [[dvKeyOf]]
+    * key and parquet position (`_metadata` rides any file-source relation)
+    * so the recorded victims anti-join away; clean files keep the plain
+    * scan. `withPos` keeps the two columns on every file: the victim scan
+    * of [[deleteWhereDV]]/[[updateWhereDV]].
     */
-  private def readFiles(spark: SparkSession, root: String, v: Version,
-      files: Seq[String]): DataFrame = {
-    val dvd = files.filter(f => v.dvs.get(f).exists(_.nonEmpty))
-    if (dvd.isEmpty) plainScan(spark, root, v, files)
-    else {
-      // vt27 merge-on-read: files with deletion vectors anti-join their
-      // recorded positions; clean files keep the plain whole-stage-codegen
-      // scan (zero per-row overhead where no delete ever landed)
-      val dvdSet = dvd.toSet
-      val alive = scanAlivePos(spark, root, v, dvd).drop(DvKeyCol, DvPosCol)
-      val clean = files.filterNot(dvdSet)
-      if (clean.isEmpty) alive
-      else plainScan(spark, root, v, clean).unionByName(alive)
+  private def scan(spark: SparkSession, root: String, v: Version, files: Seq[String],
+      withPos: Boolean = false): DataFrame = {
+    val schema = v.schema.map(StructType.fromDDL).getOrElse {
+      if (v.files.isEmpty) throw new IllegalArgumentException(
+        s"version ${v.n} at $root lists no files and records no schema contract")
+      spark.read.parquet(v.files.map(f => Paths.get(root).resolve(f).toString): _*).schema
     }
-  }
-
-  /** The DV-less scan of `files` under `v`'s contract — [[readFiles]]
-    * before vt27, factored so the merge-on-read path composes with it.
-    */
-  private def plainScan(spark: SparkSession, root: String, v: Version,
-      files: Seq[String]): DataFrame = {
-    val paths = files.map(f => Paths.get(root).resolve(f).toString)
-    v.schema match {
-      case Some(ddl) =>
-        val st = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-        if (v.colMap.isEmpty)
-          spark.read.schema(st).parquet(paths: _*)
-        else
-          // vt24 column mapping: files carry PHYSICAL names (a column's
-          // original name, stable across any number of renames), the
-          // contract carries LOGICAL ones — read under the physicalized
-          // struct (same order/types, renamed fields) and project back.
-          // Catalyst pushes filters/pruning through the alias Project, so
-          // scans stay as selective as the unmapped path.
-          spark.read.schema(physicalStruct(st, v.colMap)).parquet(paths: _*)
-            .select(st.fields.map(f =>
-              col(physicalName(v.colMap, f.name)).as(f.name)).toIndexedSeq: _*)
-      case None => spark.read.parquet(paths: _*)
+    val logicalOf = v.colMap.map(_.swap)
+    val logicalCols = schema.fields.toSeq.map(f => col(physicalName(v.colMap, f.name)).as(f.name))
+    def rel(fs: Seq[String], pos: Boolean): DataFrame = {
+      val raw = ManifestFileIndex.relation(spark, root, fs,
+        prunedFiles(v, fs, _, p => logicalOf.getOrElse(p, p)),
+        physicalStruct(schema, v.colMap), v.sizes)
+      if (pos)
+        raw.select(logicalCols :+
+          substring_index(col("_metadata.file_path"), "/", -2).as(DvKeyCol) :+
+          col("_metadata.row_index").as(DvPosCol): _*)
+      else if (v.colMap.isEmpty) raw
+      else raw.select(logicalCols: _*)
+    }
+    val dvd = files.filter(f => v.dvs.get(f).exists(_.nonEmpty))
+    if (withPos) antiJoinDv(spark, root, v, files, rel(files, pos = true))
+    else if (dvd.isEmpty) rel(files, pos = false)
+    else {
+      val alive = antiJoinDv(spark, root, v, dvd, rel(dvd, pos = true))
+        .drop(DvKeyCol, DvPosCol)
+      val clean = files.filterNot(dvd.toSet)
+      if (clean.isEmpty) alive
+      else rel(clean, pos = false).unionByName(alive)
     }
   }
 
@@ -3164,41 +3096,6 @@ object Versioned {
 
   private[graft] val DvKeyCol = "__dv_key"
   private[graft] val DvPosCol = "__dv_pos"
-
-  /** The sidecar join key of a data file: its `<commitDir>/<fileName>`
-    * tail. Commit dirs are uuid-named, so the tail is unique per table —
-    * and stable under table relocation, shallow-clone absolute paths, and
-    * [[cloneTable]]'s tail-preserving deep copies (an absolute-path scan's
-    * `_metadata.file_path` still ends with the same two segments).
-    */
-  /** The files of version `v` a reader with `predicate` must scan — the
-    * range-walker + manifest-stats composition behind [[readWhere]],
-    * exposed for the DSv2 batch scan's planning-time pruning (its pushed
-    * `sources.Filter`s convert to a Column and prune through the SAME
-    * tested walker; anything unboundable reads conservatively).
-    */
-  private[graft] def candidateFiles(v: Version, predicate: Column): Seq[String] =
-    overlappingFiles(v, validatedBounds(v, predicate))
-
-  /** vt31 null-count pruning over `files`: IS NULL skips files with
-    * provably zero nulls in the column, IS NOT NULL skips files that are
-    * ENTIRELY null there. Valid under deletion vectors (a vector only
-    * shrinks a file's rows, so both proofs survive); files without
-    * recorded counts — and columns outside the stats set — read
-    * conservatively. Shared by [[readWhere]]/[[readEquals]] and the DSv2
-    * batch scan.
-    */
-  private[graft] def nullPrune(v: Version, tests: Seq[(String, Boolean)],
-      files: Seq[String]): Seq[String] =
-    tests.foldLeft(files) { case (fs, (c, isNull)) =>
-      val idx = v.statsCols.indexOf(c)
-      if (idx < 0) fs
-      else fs.filterNot { f =>
-        v.nulls.get(f).exists { case (rc, ncs) =>
-          ncs.lift(idx).exists(nc => if (isNull) nc == 0L else nc == rc)
-        }
-      }
-    }
 
   /** Sidecar loads performed since JVM start (each = one sidecar parquet
     * opened and its positions materialized, EXECUTOR-side on the DSv2
@@ -3236,35 +3133,15 @@ object Versioned {
           .otherwise(array(col("pos")))).as("pos"))
   }
 
+  /** The sidecar join key of a data file: its `<commitDir>/<fileName>`
+    * tail. Commit dirs are uuid-named, so the tail is unique per table —
+    * and stable under table relocation, shallow-clone absolute paths, and
+    * [[cloneTable]]'s tail-preserving deep copies (an absolute-path scan's
+    * `_metadata.file_path` still ends with the same two segments).
+    */
   private[graft] def dvKeyOf(f: String): String = {
     val p = Paths.get(f)
     s"${p.getParent.getFileName}/${p.getFileName}"
-  }
-
-  /** Scan `files` under `v`'s contract with two extra columns — the
-    * [[dvKeyOf]] join key and the row's parquet position — and `v`'s
-    * recorded deletion vectors ALREADY APPLIED (a deleted position is not
-    * served, and not re-recordable). This is both halves of merge-on-read:
-    * [[readFiles]] drops the two columns to serve rows; [[deleteWhereDV]]/
-    * [[updateWhereDV]] keep them to record new victim positions.
-    */
-  private def scanAlivePos(spark: SparkSession, root: String, v: Version,
-      files: Seq[String]): DataFrame = {
-    val paths = files.map(f => Paths.get(root).resolve(f).toString)
-    val keyExpr = substring_index(col("_metadata.file_path"), "/", -2)
-    val posExpr = col("_metadata.row_index")
-    val withMeta = v.schema match {
-      case Some(ddl) =>
-        val st = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-        spark.read.schema(physicalStruct(st, v.colMap)).parquet(paths: _*)
-          .select((st.fields.map(f =>
-            col(physicalName(v.colMap, f.name)).as(f.name)).toSeq :+
-            keyExpr.as(DvKeyCol) :+ posExpr.as(DvPosCol)).toIndexedSeq: _*)
-      case None =>
-        spark.read.parquet(paths: _*)
-          .select(col("*"), keyExpr.as(DvKeyCol), posExpr.as(DvPosCol))
-    }
-    antiJoinDv(spark, root, v, files, withMeta)
   }
 
   /** Anti-join `scanned` (a frame carrying [[DvKeyCol]]/[[DvPosCol]])
@@ -3323,7 +3200,7 @@ object Versioned {
     * removed — at 100 TB, the difference between a sub-second metadata op
     * and rewriting the table); readers under the new contract project the
     * column as typed NULLs over old-generation files (the explicit-read-
-    * schema semantics [[readFiles]] applies and s13's mergeSchema story
+    * schema semantics [[scan]] applies and s13's mergeSchema story
     * proves), later appends are checked against the evolved contract, and
     * time travel reads each version under its own. Added columns are
     * forced nullable (old files MUST read as NULL), must not already
@@ -3362,7 +3239,7 @@ object Versioned {
     * additive story, same economics (a contract-only commit; zero data
     * files touched at any table size): readers under the shrunk contract
     * simply never project the column (the explicit-read-schema semantics
-    * [[readFiles]] applies — parquet reads a subset of a file's columns
+    * [[scan]] applies — parquet reads a subset of a file's columns
     * natively), old versions time-travel with the column intact, and
     * later appends are checked against the shrunk contract. RENAME is a
     * separate op ([[evolveRename]], via column mapping — a bare drop+add
@@ -3512,20 +3389,6 @@ object Versioned {
     out.toString
   }
 
-  /** A version with no files is a legitimate state (a full-table
-    * [[deleteWhere]], an empty initial commit): serve it as an EMPTY frame
-    * under the version's recorded schema contract rather than failing — a
-    * reader of "the table right now" must not crash because the table is
-    * momentarily empty. Only a pre-contract log with no files has nothing
-    * to type the result with, and that fails loudly.
-    */
-  private def emptyVersion(spark: SparkSession, root: String, v: Version): DataFrame = {
-    val ddl = v.schema.getOrElse(throw new IllegalArgumentException(
-      s"version ${v.n} at $root lists no files and records no schema contract"))
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
-  }
-
   /** VT15: DESCRIBE HISTORY — the audit surface every table format ships:
     * one row per live (non-archived) version with its operation, parent,
     * file count, accumulated stream-batch count, and schema contract.
@@ -3545,21 +3408,6 @@ object Versioned {
           "commit_ts BIGINT, n_constraints INT"))
   }
 
-  /** VT14: the versioned table as a NATIVE Spark relation — a DataFrame
-    * whose file listing is a [[org.apache.spark.sql.graft
-    * .ManifestFileIndex]] over this version's manifest state, so CATALYST
-    * ITSELF pushes every scan's predicates into manifest-stats pruning at
-    * planning time. [[readWhere]] is the explicit-call form; this is the
-    * form a user composes freely: register it as a temp view and the
-    * reference's SQL (`REPORTING_DATE BETWEEN …`) skips files, join it and
-    * the join's pushed-down residuals skip files, no API beyond
-    * `spark.sql` required. Snapshot semantics are unchanged — the index is
-    * pinned to the version's reconstructed file list (immune to concurrent
-    * commits), and Spark re-applies every predicate to rows, so the
-    * conservative pruning can never change results. The schema comes from
-    * the version's recorded contract (vt11), falling back to footer
-    * inference for pre-contract logs.
-    */
   /** VT30: DESCRIBE DETAIL — the one-row operational summary every table
     * format ships (Delta's `DESCRIBE DETAIL`): current version, file/byte
     * counts, delete pressure (files carrying deletion vectors + recorded
@@ -3568,8 +3416,7 @@ object Versioned {
     * driver-built, O(head state) at any table size.
     */
   def detail(spark: SparkSession, root: String, asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.map(stateAt(root, _)).getOrElse(currentVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $root")))
+    val v = versionAt(root, asOf)
     val row = org.apache.spark.sql.Row(
       "graft-versioned", v.n, v.op, v.files.length,
       v.sizes.valuesIterator.filter(_ >= 0).sum,
@@ -3594,8 +3441,7 @@ object Versioned {
     * manifest metadata, driver-built, O(head files).
     */
   def filesDetail(spark: SparkSession, root: String, asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.map(stateAt(root, _)).getOrElse(currentVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $root")))
+    val v = versionAt(root, asOf)
     val rows = v.files.map { f =>
       val ranges = v.stats.getOrElse(f, Nil)
       org.apache.spark.sql.Row(f,
@@ -3618,47 +3464,23 @@ object Versioned {
           "null_counts STRING"))
   }
 
+  /** VT14: the versioned table as a NATIVE Spark relation — a DataFrame
+    * whose file listing is a [[org.apache.spark.sql.graft
+    * .ManifestFileIndex]] over this version's manifest state, so CATALYST
+    * ITSELF pushes every scan's predicates into [[prunedFiles]] at planning
+    * time. [[readWhere]] is the explicit-call form over the same relation;
+    * this is the form a user composes freely: register it as a temp view
+    * and the reference's SQL (`REPORTING_DATE BETWEEN …`) skips files, join
+    * it and the join's pushed-down residuals skip files, no API beyond
+    * `spark.sql` required. Snapshot semantics are unchanged — the index is
+    * pinned to the version's reconstructed file list (immune to concurrent
+    * commits), and Spark re-applies every predicate to rows, so the
+    * conservative pruning can never change results. A version with no files
+    * (a full-table [[deleteWhere]]) reads as an empty frame under its
+    * contract. See [[scan]].
+    */
   def table(spark: SparkSession, root: String, asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.map(stateAt(root, _)).getOrElse(currentVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $root")))
-    if (v.files.isEmpty) return emptyVersion(spark, root, v)
-    val schema = v.schema.map(org.apache.spark.sql.types.StructType.fromDDL)
-      .getOrElse(read(spark, root, Some(v.n)).schema)
-    // vt24: the relation itself runs in the PHYSICAL namespace (files and
-    // recorded statsCols alike — ranges are positional, unaffected by the
-    // rename) with a logical projection on top; Catalyst pushes predicate
-    // and column pruning through the aliases, so manifest-stats skipping
-    // on a renamed column is as selective as before the rename
-    def rel(files: Seq[String], withPos: Boolean): DataFrame = {
-      val raw =
-        if (v.colMap.isEmpty)
-          org.apache.spark.sql.graft.ManifestFileIndex.relation(
-            spark, root, files, v.stats, v.statsCols, schema, v.sizes)
-        else
-          org.apache.spark.sql.graft.ManifestFileIndex.relation(
-            spark, root, files, v.stats,
-            v.statsCols.map(physicalName(v.colMap, _)),
-            physicalStruct(schema, v.colMap), v.sizes)
-      lazy val logicalCols = schema.fields.map(f =>
-        col(physicalName(v.colMap, f.name)).as(f.name)).toSeq
-      if (withPos)
-        // vt27: a file with deletion vectors scans WITH (key, position)
-        // so the recorded victims anti-join away — `_metadata` rides any
-        // file-source relation, custom index included
-        raw.select((logicalCols :+
-          substring_index(col("_metadata.file_path"), "/", -2).as(DvKeyCol) :+
-          col("_metadata.row_index").as(DvPosCol)).toIndexedSeq: _*)
-      else if (v.colMap.isEmpty) raw
-      else raw.select(logicalCols.toIndexedSeq: _*)
-    }
-    val dvd = v.files.filter(f => v.dvs.get(f).exists(_.nonEmpty))
-    if (dvd.isEmpty) rel(v.files, withPos = false)
-    else {
-      val alive = antiJoinDv(spark, root, v, dvd, rel(dvd, withPos = true))
-        .drop(DvKeyCol, DvPosCol)
-      val clean = v.files.filterNot(dvd.toSet)
-      if (clean.isEmpty) alive
-      else rel(clean, withPos = false).unionByName(alive)
-    }
+    val v = versionAt(root, asOf)
+    scan(spark, root, v, v.files)
   }
 }

@@ -94,8 +94,9 @@ object ZOrder {
     * parquet row-group min/max stats are tight on EVERY dim. `blockBytes`
     * caps the parquet row-group size — the skipping granularity (small here
     * so sf-scale fixtures span many row groups; production leaves the
-    * 128 MB default). One shuffle (the range exchange), no driver data
-    * movement; `nFiles` scales with cluster size, not data ownership.
+    * 128 MB default). One small aggregate (the z histogram [[zCluster]]
+    * splits on) and one shuffle, no driver data movement; `nFiles` scales
+    * with cluster size, not data ownership.
     */
   def layoutWrite(df: DataFrame, dims: Seq[Column], stats: Seq[(Long, Long)],
       bits: Int, path: String, nFiles: Int, blockBytes: Long = 128L << 20): Unit =
@@ -110,11 +111,71 @@ object ZOrder {
     * vt7 query): file-level skipping comes from the manifest ranges, row-
     * group skipping from this ordering. A plain `.write` on the result
     * preserves the range-partitioning and intra-partition sort.
+    *
+    * The split points are a function of the rows alone: one aggregate
+    * counts the rows of each of at most 4096 equal-width `z` buckets, and
+    * [[splitPoints]] cuts that histogram into `nFiles` runs of about equal
+    * rows. (`repartitionByRange` would sample with a seed Spark derives from
+    * the RDD id, so the same rows could split differently from run to run.)
     */
   def zCluster(df: DataFrame, dims: Seq[Column], stats: Seq[(Long, Long)],
-      bits: Int, nFiles: Int): DataFrame =
-    df.withColumn("__z", zValue(dims, stats, bits))
-      .repartitionByRange(nFiles, col("__z"))
+      bits: Int, nFiles: Int): DataFrame = {
+    val z = df.withColumn("__z", zValue(dims, stats, bits))
+    val shift = math.max(0, bits * dims.size - 12)
+    val pieces = z.groupBy(shiftright(col("__z"), shift).as("b")).count()
+      .filter(col("b").isNotNull).collect().toSeq
+      .map(r => (r.getLong(0) << shift, ((r.getLong(0) + 1) << shift) - 1, r.getLong(1)))
+    val cuts = splitPoints(pieces, nFiles).getOrElse(Nil)
+    landByCuts(z, col("__z"), cuts)
       .sortWithinPartitions(col("__z"))
       .drop("__z")
+  }
+
+  /** At most `nFiles - 1` increasing split points in (lo, hi] that cut the
+    * rows of `pieces` — (lo, hi, rows) key ranges, each piece's rows taken
+    * as spread evenly over its keys — into runs of about equal rows; key `x`
+    * belongs to the run of the split points at or below it. The j-th point
+    * follows the first key at which the rows so far reach j/nFiles of the
+    * total. Points that would leave a run empty are dropped, so heavy
+    * duplicates give fewer runs. None when nothing is known or the span does
+    * not fit a Long. One sweep, O(pieces log pieces + nFiles).
+    */
+  private[graft] def splitPoints(pieces: Seq[(Long, Long, Long)],
+      nFiles: Int): Option[Seq[Long]] = {
+    if (pieces.isEmpty) return None
+    val (lo, hi) = (pieces.map(_._1).min, pieces.map(_._2).max)
+    if (BigInt(hi) - BigInt(lo) > Long.MaxValue) return None
+    // the rows per key change only where a piece starts (a) or ends (b + 1)
+    val steps = pieces.flatMap { case (a, b, w) =>
+      val perKey = math.max(w, 1L) / ((b - a).toDouble + 1)
+      Seq(BigInt(a) -> perKey, (BigInt(b) + 1) -> -perKey)
+    }.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
+    val total = pieces.map(p => math.max(p._3, 1L).toDouble).sum
+    val cuts = Seq.newBuilder[Long]
+    var (rows, perKey, j) = (0.0, 0.0, 1)
+    steps.zip(steps.drop(1)).foreach { case ((x, d), (next, _)) =>
+      perKey += d
+      val seg = perKey * (next - x).toDouble
+      while (j < nFiles && perKey > 0 && rows + seg >= total * j / nFiles) {
+        val keys = BigDecimal(math.ceil((total * j / nFiles - rows) / perKey)).toBigInt
+        val y = (x + keys - 1).max(x).min(next - 1)
+        if (y < hi) cuts += (y + 1).toLong
+        j += 1
+      }
+      rows += seg
+    }
+    Some(cuts.result().distinct)
+  }
+
+  /** `df` repartitioned into the runs of `cuts` (increasing split points
+    * of [[splitPoints]]) on the long key `e`: key `x` goes to the run of the
+    * points at or below it, a NULL key to the first run. Lands through
+    * `repartitionById`, so the layout is the cuts' alone.
+    */
+  private[graft] def landByCuts(df: DataFrame, e: Column, cuts: Seq[Long]): DataFrame = {
+    val id = cuts.zipWithIndex.foldLeft(when(e.isNull, 0)) { case (acc, (c, j)) =>
+      acc.when(e < c, j)
+    }.otherwise(cuts.length)
+    df.repartitionById(cuts.length + 1, id)
+  }
 }

@@ -431,9 +431,9 @@ object SinkQueries extends QueryModule {
 
     // VT10c: OR/IN range-UNION skipping — the reference's progressive
     // rotation windows (`main_progressive.py:31-54`) are disjunctions of
-    // ranges; predicateRanges unions them per column, so BOTH windows prune
-    // (round 14's walker read the whole file list on any OR). The untracked
-    // status term stays residual.
+    // ranges; the pruning rule unions them per column, so BOTH windows
+    // prune (round 14's walker read the whole file list on any OR). The
+    // untracked status term stays residual.
     "vt10c_or_read_where" -> ((s, dir) => {
       val root = tmp("graft_vt10c") + "/t"
       val V = graft.merge.Versioned

@@ -222,11 +222,12 @@ private[graft] class VersionedStreamTable(root: String, tableSchema: StructType,
 
 /** One ScanBuilder for both read shapes. BATCH (vt28): the scan's file set
   * is the pinned version's manifest list, PRUNED at planning time by the
-  * pushed filters — `sources.Filter`s convert back to a `Column` and run
-  * through the same range walker every explicit read uses
-  * ([[Versioned.candidateFiles]]), so a `WHERE k BETWEEN …` over
-  * `spark.read.format("graft-versioned")` skips files exactly like
-  * `readWhere`. Every filter is RETURNED as a residual (pruning only skips
+  * pushed filters — `sources.Filter`s convert back to one `Column`, which
+  * resolves ([[Versioned.conjuncts]]) and prunes ([[Versioned.prunedFiles]])
+  * as every read of the log does (ranges, null counts, blooms), so a
+  * `WHERE k BETWEEN …` over `spark.read.format("graft-versioned")` skips
+  * files exactly like `readWhere`. Every filter is RETURNED as a residual
+  * (pruning only skips
   * files, Spark still decides rows), and column pruning narrows the
   * parquet reader's required schema. Deletion vectors (vt27) apply
   * executor-side: each partition ships its file's victim positions and the
@@ -253,10 +254,11 @@ private[streaming] class VersionedScanBuilder(root: String, tableSchema: StructT
     required = StructType(tableSchema.fields.filter(f =>
       requiredSchema.fieldNames.contains(f.name)))
 
-  /** The pushed filters as one conjunctive Column, for the range walker.
-    * Unconvertible filters become `lit(true)` — inside an AND they
-    * contribute no bound, inside an OR they make that column unbounded;
-    * both are the walker's conservative stance (more files, same rows).
+  /** The pushed filters as one conjunctive Column for the pruning rule.
+    * Unconvertible filters (NOT among them: negating a widened filter would
+    * narrow it) become `lit(true)` — inside an AND they contribute no
+    * bound, inside an OR they make that column unbounded; both are the
+    * rule's conservative stance (more files, same rows).
     */
   private def filterColumn: Option[org.apache.spark.sql.Column] = {
     def conv(f: sources.Filter): org.apache.spark.sql.Column = f match {
@@ -266,6 +268,8 @@ private[streaming] class VersionedScanBuilder(root: String, tableSchema: StructT
       case sources.LessThan(a, v) => col(a) < lit(v)
       case sources.LessThanOrEqual(a, v) => col(a) <= lit(v)
       case sources.In(a, vs) => col(a).isin(vs.toIndexedSeq: _*)
+      case sources.IsNull(a) => col(a).isNull
+      case sources.IsNotNull(a) => col(a).isNotNull
       case sources.And(l, r) => conv(l) && conv(r)
       case sources.Or(l, r) => conv(l) || conv(r)
       case _ => lit(true)
@@ -281,18 +285,7 @@ private[streaming] class VersionedScanBuilder(root: String, tableSchema: StructT
         maxVersionsPerTrigger, ignoreChanges, maxBytesPerTrigger,
         maxFilesPerTrigger, colMap)
     override def toBatch: Batch = new VersionedBatch(root, required, colMap,
-      asOf, filterColumn,
-      // top-level array elements are CONJUNCTS (Spark splits And before
-      // translation), so a bare EqualTo here may bloom-prune globally; an
-      // EqualTo nested inside an Or must not — and is not collected
-      pushed.collect { case sources.EqualTo(a, v) if v != null => (a, v) }.toSeq,
-      // same conjunct rule for the vt31 null-count prunes — note Spark
-      // AUTO-GENERATES IsNotNull for every strictly-filtered column, so
-      // entirely-null files skip on ordinary predicates for free
-      pushed.collect {
-        case sources.IsNull(a) => (a, true)
-        case sources.IsNotNull(a) => (a, false)
-      }.toSeq)
+      asOf, filterColumn)
   }
 }
 
@@ -302,9 +295,7 @@ private[streaming] class VersionedScanBuilder(root: String, tableSchema: StructT
   */
 private[streaming] class VersionedBatch(root: String, schema: StructType,
     colMap: Map[String, String], asOf: Option[Int],
-    predicate: Option[org.apache.spark.sql.Column],
-    equalities: Seq[(String, Any)] = Nil,
-    nullTests: Seq[(String, Boolean)] = Nil) extends Batch {
+    predicate: Option[org.apache.spark.sql.Column]) extends Batch {
 
   // resolved ONCE: the scan is a snapshot, immune to commits racing the job
   private lazy val state = asOf.map(Versioned.versionState(root, _))
@@ -312,23 +303,9 @@ private[streaming] class VersionedBatch(root: String, schema: StructType,
       throw new IllegalArgumentException(s"no committed versions at $root")))
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
     val rootP = Paths.get(root)
-    val ranged = predicate.map(Versioned.candidateFiles(state, _))
-      .getOrElse(state.files)
-    // vt26 composes: a pushed conjunctive EqualTo on a bloom-tracked column
-    // prunes files whose bits provably lack the probe (cast to the CONTRACT
-    // type — the bits the write side hashed); bloom-less files stay
-    val contract = state.schema.map(StructType.fromDDL)
-    val bloomed = equalities.foldLeft(ranged) { case (files, (c, value)) =>
-      contract.flatMap(_.fields.find(_.name == c)) match {
-        case Some(f) if state.bloomCols.contains(c) =>
-          Versioned.bloomPrune(spark, state, c, lit(value).cast(f.dataType), files)
-        case _ => files
-      }
-    }
-    // vt31 null-count pruning — the shared helper readWhere uses
-    val candidates = Versioned.nullPrune(state, nullTests, bloomed)
+    val candidates = predicate.fold(state.files)(p => Versioned.prunedFiles(state, state.files,
+      Versioned.conjuncts(SparkSession.active, state, p)))
     // vt27/vt32: deletion vectors plan as pure MANIFEST METADATA — each
     // partition carries its file's sidecar PATHS and the partition reader
     // loads+merges its own positions executor-side. The driver never opens

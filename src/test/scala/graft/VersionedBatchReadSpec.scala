@@ -115,7 +115,7 @@ class VersionedBatchReadSpec extends SparkSuite {
     val qRange = df.filter(col("k") > 0L)
     assert(qRange.count() === 75L)
     assert(scanPartitions(qRange) === 2)
-    // the Column-level path prunes identically (ColumnBridge.nullTests)
+    // the library read prunes identically (the same rule)
     val hand = Versioned.readWhere(spark, root, col("k").isNull)
     assert(hand.count() === 75L)
     assert(hand.inputFiles.length === 2, s"got ${hand.inputFiles.length}")

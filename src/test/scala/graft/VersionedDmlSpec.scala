@@ -2,7 +2,6 @@ package graft
 
 import graft.merge.Versioned
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
 import scala.jdk.CollectionConverters._
@@ -18,10 +17,13 @@ class VersionedDmlSpec extends SparkSuite {
   private def freshRoot(): String =
     Files.createTempDirectory("graft_vt_dml").toString + "/t"
 
-  // ---- predicateRanges algebra (the walker behind readWhere/deleteWhere) ----
+  // ---- exprRanges over resolved predicates (the range half of the one
+  // pruning rule behind readWhere/deleteWhere and the native relation) ----
 
-  test("predicateRanges: OR/IN union, AND intersect, date literals, contradiction, cap") {
-    def r(c: org.apache.spark.sql.Column) = ColumnBridge.predicateRanges(c)
+  test("exprRanges over resolved predicates: OR/IN union, AND intersect, dates, contradiction, cap") {
+    import org.apache.spark.sql.graft.ManifestFileIndex.exprRanges
+    val v = Versioned.Version(0, "", 0, Nil, schema = Some("k BIGINT, d BIGINT, dt DATE"))
+    def r(c: org.apache.spark.sql.Column) = exprRanges(Versioned.conjuncts(spark, v, c))
     // OR of two windows → two ranges (the reference's progressive rotation shape)
     assert(r(col("k").between(1, 5) || col("k").between(10, 15)) ===
       Map("k" -> Seq((1L, 5L), (10L, 15L))))
@@ -38,14 +40,13 @@ class VersionedDmlSpec extends SparkSuite {
     val d = java.sql.Date.valueOf("2024-03-01")
     assert(r(col("dt") >= lit(d)) ===
       Map("dt" -> Seq((d.toLocalDate.toEpochDay, Long.MaxValue))))
-    // an IN with any unboundable member contributes nothing
-    assert(r(col("k").isin(1, "x")) === Map.empty)
-    // past the disjunct cap the set collapses to its envelope — still one range
-    assert(ColumnBridge.predicateRanges(
-      col("k").isin(1, 10, 100), maxDisjuncts = 2) === Map("k" -> Seq((1L, 100L))))
-    // predicateBounds envelope view: contradiction is the canonical empty
-    assert(ColumnBridge.predicateBounds(col("k") > 5 && col("k") < 2) ===
-      Map("k" -> (Long.MaxValue, Long.MinValue)))
+    // an IN with any unboundable (non-literal) member contributes nothing
+    assert(r(col("k").isin(lit(1L), col("d"))) === Map.empty)
+    // past the disjunct cap (64) the set collapses to its envelope — still
+    // one range; the optimizer hands a long IN over as an InSet
+    val spread = (0 until 70).map(i => i * 10L)
+    assert(r(col("k").isin(spread: _*)) === Map("k" -> Seq((0L, 690L))))
+    assert(r(col("k").isin(spread.take(64): _*))("k").length === 64)
   }
 
   // ---- VT12b: copy-on-write deleteWhere ----
@@ -429,7 +430,9 @@ class VersionedDmlSpec extends SparkSuite {
     val got = Versioned.readWhere(spark, root, col("ts") >= dLit)
     assert(got.select("k").as[Long].collect().sorted.toSeq === (24L to 95L),
       "a coerced date literal must not drop matching files")
-    assert(got.inputFiles.length === nFiles, "mismatched-kind bound must be dropped, not applied")
+    // analysis folds the date literal to TIMESTAMP micros, the stats' unit,
+    // so the coerced bound prunes in the right unit
+    assert(got.inputFiles.length < nFiles, "the coerced literal must prune in micros")
     // …and a SAME-kind timestamp literal still prunes (the fix must not
     // disable legitimate skipping)
     val tLit = lit(java.sql.Timestamp.from(t0.plusSeconds(90L * 3600)))
@@ -456,18 +459,28 @@ class VersionedDmlSpec extends SparkSuite {
     // 0..59 (dates before Mar 1) qualify
     assert(got2.select("k").as[Long].collect().sorted.toSeq === (0L to 59L))
 
-    // mergeInto: a source whose key column is the WRONG temporal type for
-    // the tracked stats must treat the key as untracked (full rewrite),
-    // never bound in the wrong unit. The merged schema then fails the
-    // contract check loudly — no silent partial merge either way.
-    val typed = org.apache.spark.sql.graft.ColumnBridge.predicateRangesTyped(
-      col("dt") < tsLit)
-    import org.apache.spark.sql.graft.ColumnBridge.LitKind
-    assert(typed("dt")._1 === LitKind.TsMicros)
-    // mixed-kind constraints on ONE column drop the column entirely
-    assert(org.apache.spark.sql.graft.ColumnBridge.predicateRangesTyped(
-      col("dt") >= lit(java.sql.Date.valueOf("2024-01-01")) && col("dt") < tsLit)
-      .isEmpty)
+    assert(Versioned.readWhere(spark, root2, col("dt") >= lit(java.sql.Date.valueOf(
+      "2024-01-01")) && col("dt") < tsLit).count() === 60L)
+
+    // mergeInto's merge-key rule: an integral source key bounds an integral
+    // tracked column whatever its width — an INT-keyed source rewrites only
+    // the file its keys fall in…
+    val root3 = freshRoot()
+    Versioned.appendWithStats((1L to 40L).map(k => (k, k)).toDF("k", "v")
+      .repartitionByRange(4, col("k")), root3, "k")
+    val v3 = Versioned.currentVersion(root3).get
+    val m3 = Versioned.mergeInto(spark, root3,
+      Seq((5, 500L)).toDF("k", "v").select(col("k").cast("int").as("k"), col("v")), Seq("k"))
+    assert((v3.files.toSet -- m3.files.toSet).size === 1, "an INT key must bound a BIGINT column")
+    assert(Versioned.read(spark, root3).filter(col("k") === 5L).select("v").as[Long]
+      .head() === 500L)
+    // …while a DATE-keyed source against TIMESTAMP stats is an untracked key
+    // (its epoch days would bound micros): every file is affected
+    val v1 = Versioned.currentVersion(root).get
+    val m1 = Versioned.mergeInto(spark, root,
+      Seq((java.sql.Date.valueOf("2024-01-01"), 7L)).toDF("ts", "k"), Seq("ts"))
+    assert((v1.files.toSet & m1.files.toSet).isEmpty, "a DATE key must not bound TIMESTAMP stats")
+    assert(Versioned.read(spark, root).filter(col("k") === 7L).count() === 2L)
   }
 
   test("vt25 updateWhere: COW update — blast radius bounded, SQL semantics, constraints enforced, time travel intact") {

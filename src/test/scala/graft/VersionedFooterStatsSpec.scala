@@ -183,6 +183,6 @@ class VersionedFooterStatsSpec extends SparkSuite {
       "statsValidationFrame", "constraintViolationCounts").foreach(t =>
       assert(count(t) === 0, t))
     // one bloom-position definition, shared by the write and the probe
-    assert(count("xxhash64(") === 1)
+    assert(count("XxHash64(") === 1 && count("xxhash64(") === 0)
   }
 }

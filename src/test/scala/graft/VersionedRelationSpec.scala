@@ -81,7 +81,7 @@ class VersionedRelationSpec extends SparkSuite {
     assert(Versioned.table(spark, root).schema.fieldNames.toSeq === Seq("k"))
   }
 
-  test("exprRanges: catalyst-side algebra mirrors the Column walker") {
+  test("exprRanges: range algebra over the conjuncts the planner pushes") {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.graft.ManifestFileIndex.exprRanges
     import org.apache.spark.sql.types.LongType

@@ -445,15 +445,20 @@ class VersionedSpec extends SparkSuite {
 
   test("readWhere: bounds extracted from the predicate prune files; residual decides rows") {
     import spark.implicits._
-    import org.apache.spark.sql.graft.ColumnBridge
-    // bounds algebra straight off Catalyst trees
-    def b(c: org.apache.spark.sql.Column) = ColumnBridge.predicateBounds(c)
-    assert(b(col("k") >= 5 && col("k") < 9) === Map("k" -> (5L, 9L))) // strict < widened
-    assert(b(col("k") === 7) === Map("k" -> (7L, 7L)))
-    assert(b(lit(5) <= col("k")) === Map("k" -> (5L, Long.MaxValue)))
-    assert(b(col("k").between(3, 6) && col("d") === 40) === Map("k" -> (3L, 6L), "d" -> (40L, 40L)))
-    assert(b(col("k") <= 2 || col("k") >= 39) === Map.empty) // OR: conservative
-    assert(b(col("k") === "x") === Map.empty) // non-integral literal: conservative
+    import org.apache.spark.sql.graft.ManifestFileIndex.exprRanges
+    // bounds algebra over the predicate as analysis resolves it
+    val contract = Versioned.Version(0, "", 0, Nil, schema = Some("k BIGINT, d BIGINT"))
+    def b(c: org.apache.spark.sql.Column) = exprRanges(Versioned.conjuncts(spark, contract, c))
+    assert(b(col("k") >= 5 && col("k") < 9) === Map("k" -> Seq((5L, 9L)))) // strict < widened
+    assert(b(col("k") === 7) === Map("k" -> Seq((7L, 7L))))
+    assert(b(lit(5) <= col("k")) === Map("k" -> Seq((5L, Long.MaxValue))))
+    assert(b(col("k").between(3, 6) && col("d") === 40) ===
+      Map("k" -> Seq((3L, 6L)), "d" -> Seq((40L, 40L))))
+    // OR: a range SET, each disjunct's range kept
+    assert(b(col("k") <= 2 || col("k") >= 39) ===
+      Map("k" -> Seq((Long.MinValue, 2L), (39L, Long.MaxValue))))
+    // non-integral literal: the column is cast, which bounds nothing
+    assert(b(col("k") === 1.5) === Map.empty)
     // end-to-end on a two-column stats table: (k, d = k*10), 4 tight files
     val root = freshRoot()
     Versioned.appendWithStats((1L to 40L).map(k => (k, k * 10L)).toDF("k", "d")

@@ -142,6 +142,24 @@ class ZOrderSpec extends SparkSuite {
       s"compaction did not cluster: ($cp, $cs) vs append ($ap, $as_)")
   }
 
+  test("compactZOrder lays the same rows out the same way whatever ran before") {
+    import spark.implicits._
+    // (stats, rows) of each file the compaction lands, in range order
+    def layout(): Seq[(Seq[(Long, Long)], Long)] = {
+      val r = tmpDir() + "/t"
+      graft.merge.Versioned.appendWithStats((0L until 2000L)
+        .map(i => (i, (i * 7919L) % 1000L)).toDF("a", "b").repartition(4), r, Seq("a"))
+      val v = graft.merge.Versioned.compactZOrder(spark, r, Seq("a", "b"), nFiles = 4)
+      v.files.map(f => (v.stats(f), v.nulls(f)._1)).sortBy(_._1.head)
+    }
+    val first = layout()
+    assert(first.length === 4 && first.map(_._2).sum === 2000L)
+    // Spark seeds a range partitioner's sample with the RDD id: new RDDs in
+    // between must not move a split point
+    (0 until 3).foreach(_ => spark.sparkContext.emptyRDD[Int])
+    assert(layout() === first)
+  }
+
   test("tx21 PMI: planted collocation outranks frequent-but-independent pair") {
     import spark.implicits._
     // "zyx qwv" always co-occur (never apart); "the cat" both frequent but
