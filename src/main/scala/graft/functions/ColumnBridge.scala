@@ -14,9 +14,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Public face of [[RangeAlgebra.MaxDisjuncts]] (that object is
-    * `private[sql]`) for callers outside the spark.sql tree.
-    */
-  val MaxDisjuncts: Int = RangeAlgebra.MaxDisjuncts
 }

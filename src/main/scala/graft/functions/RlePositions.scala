@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
 
 /** vt27/vt32: run-length + varint-delta codec for DELETION-VECTOR position
@@ -20,11 +20,10 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
   * the exact inverse and both live here so the interpreted and generated
   * paths share one implementation.
   *
-  * Encoding/decoding happens EXECUTOR-SIDE on both paths: the write verbs
-  * aggregate victim positions per file and encode inside the commit job;
-  * readers decode inside the partition reader (DSv2) or behind an explode
-  * (the library read's broadcast anti-join). The driver never materializes
-  * a position.
+  * Encoding/decoding happens EXECUTOR-SIDE: the write verbs aggregate victim
+  * positions per file and encode inside the commit job; every read decodes
+  * in the task that scans the file (`Versioned.victimPositions`). The
+  * driver never materializes a position.
   */
 object RlePositions {
 
@@ -57,10 +56,10 @@ object RlePositions {
   }
 
   /** Decode a blob back to the sorted ascending position array. */
-  def decode(bytes: Array[Byte]): ArrayData = {
+  def decodeLongs(bytes: Array[Byte]): Array[Long] = {
     require(bytes.length >= 1 && bytes(0) == FormatByte,
       s"unknown deletion-vector blob format ${if (bytes.isEmpty) "<empty>" else bytes(0)}")
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val buf = Array.newBuilder[Long]
     var at = 1
     var next = 0L
     while (at < bytes.length) {
@@ -72,15 +71,7 @@ object RlePositions {
       next = start + len
       at = a2
     }
-    new GenericArrayData(buf.toArray)
-  }
-
-  /** [[decode]] to a plain sorted Array[Long] — the partition-reader path
-    * (no ArrayData wrapper in the two-pointer merge).
-    */
-  def decodeLongs(bytes: Array[Byte]): Array[Long] = {
-    val a = decode(bytes)
-    Array.tabulate(a.numElements())(a.getLong)
+    buf.result()
   }
 
   private def writeVarint(out: java.io.ByteArrayOutputStream, v0: Long): Unit = {
@@ -121,27 +112,4 @@ case class RleEncodePositions(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "rle_encode_positions"
-}
-
-/** Compressed `binary` blob → sorted `array<long>`. */
-case class RleDecodePositions(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"rle_decode_positions expects binary, got $t")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    RlePositions.decode(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RlePositions.decode($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "rle_decode_positions"
 }

@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * `snowflake_bq_sync Time details/daily_sync.py:252-269`).
   *
   * Spark has no MERGE on plain parquet, so the operator is the relational
-  * rewrite: dedup the source latest-wins per key, then
-  * `target ANTI-JOIN source  UNION ALL  source`. One shuffle on the merge
-  * keys; no driver-side key lists (the reference's 1000-key `NOT IN`
+  * rewrite: `target ANTI-JOIN source-keys  UNION ALL  dedup(source)`, the
+  * source deduplicated latest-wins per key once, on the union's side only.
+  * No driver-side key lists (the reference's 1000-key `NOT IN`
   * truncation at `work_item_budget_vs_actual_…_daily/main.py:374-378` is a
   * scalability bug we deliberately do not reproduce).
   *
@@ -49,8 +49,8 @@ object MergeInto {
       orderCol: Option[String] = None,
       tieBreak: Seq[Column] = Nil): DataFrame = {
     val deduped = latestPerKey(source, keys, orderCol, tieBreak)
-    val kept = target.join(deduped.select(keys.map(col): _*), keys, "left_anti")
-    kept.unionByName(deduped.select(target.columns.map(col).toIndexedSeq: _*))
+    kept(target, source, keys).unionByName(
+      deduped.select(target.columns.map(col).toIndexedSeq: _*))
   }
 
   /** One WHEN MATCHED action of the full MERGE grammar ([[mergeClauses]]).
@@ -171,9 +171,16 @@ object MergeInto {
       .withColumn(audit.uuidCol, coalesce(col("__existing_uuid"), freshUuid))
       .drop("__existing_uuid")
       .withColumn(audit.tsCol, ts)
-    val kept = target.join(deduped.select(keys.map(col): _*), keys, "left_anti")
-    kept.unionByName(srcWithAudit.select(target.columns.map(col).toIndexedSeq: _*))
+    kept(target, source, keys).unionByName(
+      srcWithAudit.select(target.columns.map(col).toIndexedSeq: _*))
   }
+
+  /** The target rows no source row matches: an anti-join on the RAW source
+    * keys. Deduplicating the source changes which of its rows wins, never
+    * which keys it holds, so the build side needs no second dedup shuffle.
+    */
+  private def kept(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame =
+    target.join(source.select(keys.map(col): _*), keys, "left_anti")
 
   /** The one landing path for a keyed increment into a plain-parquet target
     * partitioned by `partitionCol`; every sync mode calls it. One listing of

@@ -3,20 +3,23 @@ package graft.merge
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
 import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression,
-  IsNotNull, IsNull, Literal, Pmod, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BinaryExpression,
+  EqualTo, Expression, IsNotNull, IsNull, Literal, Pmod, UnaryExpression, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.command.DataWritingCommand
-import org.apache.spark.sql.execution.datasources.{FileFormatWriter, WriteJobStatsTracker,
-  WriteTaskStats, WriteTaskStatsTracker}
+import org.apache.spark.sql.execution.datasources.{FileFormatWriter, PartitionedFile,
+  WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{ColumnBridge, ManifestFileIndex}
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, IntegerType,
-  ShortType, StructType}
+  LongType, ShortType, StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
@@ -1174,7 +1177,7 @@ object Versioned {
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)))
     val clustered = for {
       k <- key.orElse(cur.statsCols.headOption)
-      if df.columns.contains(k) && statsTypeSupported(df.schema(k).dataType)
+      if df.columns.contains(k) && statsEncoding(df.schema(k).dataType).nonEmpty
       i = cur.statsCols.indexOf(k)
       pieces = replaced.flatMap(f => cur.stats.get(f).flatMap(_.lift(i)).map { case (lo, hi) =>
         (lo, hi, cur.nulls.get(f).fold(1L)(_._1) - cur.dvs.getOrElse(f, Nil).map(_._2).sum)
@@ -1277,21 +1280,14 @@ object Versioned {
     }
   }
 
-  private def statsTypeSupported(dt: org.apache.spark.sql.types.DataType): Boolean =
-    try { statsLongExpr("x", dt); true } catch { case _: IllegalArgumentException => false }
-
-  /** [[statsLongExpr]] as a SQL fragment — for call sites that compose it
-    * into `selectExpr` arithmetic (exact `div` bucketing in [[keyRangeSet]]).
+  /** The exact-long encoding [[statsLongExpr]] gives `dt`, by the type it
+    * encodes from: integral types share one (the value itself), DATE and
+    * TIMESTAMP have their own; None for a type without one.
     */
-  private def statsLongSql(c: String, dt: org.apache.spark.sql.types.DataType): String = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType => s"CAST(`$c` AS BIGINT)"
-      case DateType => s"CAST(unix_date(`$c`) AS BIGINT)"
-      case TimestampType => s"unix_micros(`$c`)"
-      case other => throw new IllegalArgumentException(
-        s"stats column `$c` is ${other.simpleString}: no exact long encoding")
-    }
+  private def statsEncoding(dt: DataType): Option[DataType] = dt match {
+    case ByteType | ShortType | IntegerType | LongType => Some(LongType)
+    case DateType | TimestampType => Some(dt)
+    case _ => None
   }
 
   /** What the write tasks measured of one non-empty landed file. `ranges`
@@ -1681,8 +1677,9 @@ object Versioned {
     * scanned for victims), already-deleted positions are never re-recorded
     * (the victim scan runs with existing vectors applied), a no-match
     * predicate commits nothing, and old versions time-travel with their
-    * own (smaller) vector sets. Reads of DV-carrying files pay one
-    * broadcast anti-join; [[purgeDeletes]] folds accumulated vectors back
+    * own (smaller) vector sets. A read of a DV-carrying file loads its
+    * sidecars in the task that scans it and drops the victims by row
+    * position ([[scan]]); [[purgeDeletes]] folds accumulated vectors back
     * into clean files when the read tax outgrows the write saving. The
     * predicate must be DETERMINISTIC (it is evaluated in one pass here,
     * but a nondeterministic predicate would make the recorded positions
@@ -1705,7 +1702,7 @@ object Versioned {
   /** The merge-on-read verbs claim two working column names for the
     * position scan; refuse up front on a table that carries either (the
     * guarded failure beats an ambiguous-reference AnalysisException from
-    * deep inside the anti-join — same stance as mergeClauses' guard).
+    * deep inside the scan — same stance as mergeClauses' guard).
     */
   private def requireNoReservedDvCols(cur: Version, root: String): Unit =
     cur.schema.map(org.apache.spark.sql.types.StructType.fromDDL).foreach { st =>
@@ -1800,7 +1797,8 @@ object Versioned {
     * aggregation and encoding run INSIDE the commit job (a native
     * expression over `sort_array(collect_list)`), so no victim position
     * ever reaches the driver. Pre-round-19 sidecars — one `(file, pos)`
-    * row per victim — read through the same [[sidecarPositions]] fallback.
+    * row per victim — still read: [[victimPositions]], the one loader of
+    * every read, takes either row shape.
     */
   private def commitDvAttach(spark: SparkSession, root: String, cur: Version,
       op: String, positions: DataFrame, affected: Seq[String],
@@ -1845,7 +1843,7 @@ object Versioned {
     * clean files — Delta's `REORG TABLE … APPLY (PURGE)`. Only files that
     * CARRY vectors are read (with the vectors applied) and rewritten;
     * clean files are untouched at any table size. After the commit the
-    * head serves identical rows with zero anti-joins on the purged files;
+    * head serves identical rows with no sidecar loads on the purged files;
     * expired sidecars age out through [[vacuum]]/[[gcOrphans]] like any
     * de-referenced file. The rewrite lands as [[mergeInto]]'s does: range-
     * clustered on the first stats column into at most as many files as it
@@ -1855,7 +1853,7 @@ object Versioned {
     * recorded victim share (dv victim count / fmt-6 row count) is at
     * least the threshold rewrite — the operator lever for folding ONLY
     * heavily-deleted files while lightly-touched ones keep paying the
-    * (small) anti-join instead of a full rewrite. A file without a
+    * (small) in-scan sidecar load instead of a full rewrite. A file without a
     * recorded row count always purges at any threshold (its ratio is
     * unknowable — the conservative direction HERE is to fold, since
     * keeping it risks unbounded accumulating vectors). Default 0.0 = purge
@@ -1894,9 +1892,10 @@ object Versioned {
     * MERGE ON keys, matched UPDATE all, not-matched INSERT all; latest-wins
     * within the staging batch via `orderCol`) landing on the TIME-TRAVELABLE
     * substrate instead of plain parquet. The AFFECTED files are those whose
-    * stats ranges on every stats-tracked merge key overlap the source's
-    * key envelope (a matched row agrees on ALL keys, so any tracked key
-    * bounds the blast radius); only those are read and merged with the
+    * stats ranges on every stats-tracked merge key hold one of the source's
+    * keys (a matched row agrees on ALL keys, so any tracked key bounds the
+    * blast radius), planned from one aggregate over the source
+    * ([[planMerge]]); only those are read and merged with the
     * source ([[MergeInto.merge]] semantics), the result lands in a fresh
     * commit dir, and one DELTA manifest swaps affected for rewritten.
     * Untouched files carry over with their stats — never scanned, never
@@ -1992,120 +1991,95 @@ object Versioned {
       combine: Option[(DataFrame, DataFrame) => DataFrame] = None,
       staged: Option[String] = None): Version = {
     require(keys.nonEmpty, "mergeInto needs at least one merge key")
-    // a tracked key bounds the blast radius only if the SOURCE column's
-    // stats encoding is the table contract's (a DATE source key against a
-    // TIMESTAMP-tracked table would bound in the wrong unit — treat the key
-    // as untracked instead: wider rewrite, never a wrong one)
-    def encoding(dt: DataType): Option[String] = scala.util.Try(statsLongSql("k", dt)).toOption
-    val contract = cur.schema.map(StructType.fromDDL)
-    val trackedKeys = keys.filter { k =>
-      cur.statsCols.contains(k) && {
-        val src = encoding(source.schema(k).dataType)
-        src.nonEmpty && src == contract.flatMap(_.fields.find(_.name == k))
-          .flatMap(f => encoding(f.dataType))
-      }
-    }
-    // one control-plane agg over the source: row count, fully-keyed row
-    // count, and the [min, max] envelope of every tracked key (encoded the
-    // same way the stats were)
-    val keyedCond = keys.map(col(_).isNotNull).reduce(_ && _)
-    val aggs = Seq(count(lit(1)).as("n"), count(when(keyedCond, lit(1))).as("keyed")) ++
-      trackedKeys.flatMap { k =>
-        val e = statsLongExpr(k, source.schema(k).dataType)
-        Seq(min(e).as(s"mn_$k"), max(e).as(s"mx_$k"))
-      }
-    val r = source.agg(aggs.head, aggs.tail: _*).head
-    if (r.getLong(0) == 0L) return cur // empty source: metadata no-op
-    // per-key range SETS, not a single envelope: a two-window backfill
-    // source (the classic Jan+Dec shape) would widen one [min, max] to
-    // near-table span and degrade the COW to a full rewrite; bucketing the
-    // source's keys inside the envelope and keeping only populated runs
-    // (keyRangeSet) scopes `affected` to the actual windows — the range
-    // half of the pruning rule, which an OR/IN predicate feeds the same way
-    val bounds: Map[String, Seq[(Long, Long)]] = trackedKeys.zipWithIndex.flatMap {
-      case (k, i) =>
-        if (r.isNullAt(2 + 2 * i)) None
-        else Some(k -> keyRangeSet(source, k,
-          r.getLong(2 + 2 * i), r.getLong(3 + 2 * i)))
-    }.toMap
-    val affected =
-      if (r.getLong(1) == 0L) Nil // no fully-keyed source row can match anything
-      else if (trackedKeys.isEmpty) cur.files // no stats on any key: honest full rewrite
-      else rangePruned(cur, cur.files, bounds)
+    val plan = planMerge(cur, source, keys)
+    if (plan.rows == 0L) return cur // empty source: metadata no-op
+    val affected = plan.affected
     val target = scan(spark, root, cur, affected)
     val srcSel = source.select(target.columns.map(col).toIndexedSeq: _*)
     val merged = combine.map(f => f(target, srcSel))
       .getOrElse(MergeInto.merge(target, srcSel, keys, orderCol))
     val n = cur.n + 1
     val ddl = normalizedDDL(merged)
-    // the rewrite clusters on the first tracked key, whose source envelope
-    // (encoded min, max) sits at r(2), r(3)
-    val envelope =
-      if (trackedKeys.isEmpty || r.isNullAt(2)) None
-      else Some((r.getLong(2), r.getLong(3), r.getLong(0)))
     // the merge RESULT (updates included) must pass the constraints —
     // carried-through rows were already valid, so violations can only come
     // from source; the rewrite's own tasks count them as they write
     val (landed, marker) = writeRewrite(merged, root, n, cur, affected, cur.colMap,
-      trackedKeys.headOption, envelope, constraints = cur.constraints)
+      plan.trackedKeys.headOption, plan.envelope, constraints = cur.constraints)
     sealing(marker)(commit(root, Some(cur), next(Some(cur), op).copy(entries = landed,
       removed = affected, txnMarker = staged), Some(ddl)))
   }
 
-  /** The COVERING range set of `source`'s key `k` inside its known
-    * [mn, mx] envelope, as ≤[[org.apache.spark.sql.graft.RangeAlgebra
-    * .MaxDisjuncts]] intervals: bucket the encoded key into ≤4096
-    * equal-width buckets, collect the POPULATED bucket ids (one
-    * control-plane distinct over the batch-sized source — ≤4096 rows back,
-    * never data), merge adjacent ids into runs, convert runs to value
-    * intervals, and merge across the SMALLEST inter-run gaps until the cap
-    * holds. Every source key value lies inside some returned interval
-    * (bucket-granular, so coverage is by construction — conservative for
-    * pruning: a file overlapping an interval may still hold no matching
-    * key, and MergeInto carries its unmatched rows through unchanged), so
-    * using these intervals to pick `affected` files can widen the rewrite
-    * but never lose a matching target row. A two-window backfill thus
-    * rewrites two windows' files; the degenerate envelope (every bucket
-    * populated, or a span too wide to bucket without overflow) falls back
-    * to the single [mn, mx] range — exactly the pre-range-set behavior.
+  /** What a merge of `source` into version `cur` rewrites, from ONE
+    * aggregate over the source: `rows` (0 = a metadata no-op), the
+    * `affected` files, the merge keys the table tracks stats on (each in
+    * the source's own stats encoding, so a DATE source key never bounds a
+    * TIMESTAMP-tracked column in the wrong unit — such a key counts as
+    * untracked: a wider rewrite, never a wrong one), per tracked key the
+    * ranges its fully-keyed source rows populate (`bounds`), and the
+    * source's (min, max, rows) on the first tracked key, which the rewrite
+    * clusters on ([[writeRewrite]]).
     */
-  private[graft] def keyRangeSet(source: DataFrame, k: String, mn: Long, mx: Long,
-      maxDisjuncts: Int = org.apache.spark.sql.graft.ColumnBridge.MaxDisjuncts)
-      : Seq[(Long, Long)] = {
-    val span = BigInt(mx) - BigInt(mn)
-    if (span <= 0) return Seq((mn, mx)) // single point (or degenerate): one range
-    val nBuckets = 4096
-    val w = (span / nBuckets + 1).toLong // fits: span/4096+1 ≤ 2^64/4096 < 2^63
-    // (e - mn) can only overflow if span itself exceeds Long range — the
-    // BigInt w above already absorbed that; the subtraction below is then
-    // still exact because e ∈ [mn, mx] and w ≥ span/4096
-    if (span >= BigInt(Long.MaxValue)) return Seq((mn, mx)) // unbucketable span
-    // exact integral `div`, never `/`: double division rounds past 2^53 and
-    // a value bucketed off-by-one would escape its covering interval
-    val encSql = statsLongSql(k, source.schema(k).dataType)
-    val ids = source.filter(col(k).isNotNull)
-      .selectExpr(s"(($encSql) - (${mn}L)) div ${w}L AS b")
-      .distinct().collect().map(_.getLong(0)).sorted
-    val runs = ids.foldLeft(Vector.empty[(Long, Long)]) { case (acc, b) =>
-      acc.lastOption match {
-        case Some((lo, hi)) if b == hi + 1 => acc.init :+ (lo, b)
-        case _ => acc :+ (b, b)
+  private[graft] final case class MergePlan(rows: Long, affected: Seq[String],
+      trackedKeys: Seq[String], bounds: Map[String, Seq[(Long, Long)]],
+      envelope: Option[(Long, Long, Long)])
+
+  /** Plan a merge from what the driver already holds and one control-plane
+    * aggregate over the source. The manifest gives, per tracked key, the
+    * sorted distinct boundaries of the files' ranges; they cut the key
+    * domain into segments (each boundary a point, the gaps between them
+    * open intervals), and a file's range is exactly a run of segments. The
+    * aggregate counts the source's rows and fully-keyed rows, takes the
+    * first tracked key's envelope and collects, per tracked key, the
+    * segments the fully-keyed rows fall in ([[KeySegment]]; keys below or
+    * above every file fall in none). A file is affected iff, on every
+    * tracked key, its range holds a populated segment, i.e. a source key:
+    * every file holding a matching row is rewritten, a file none of the
+    * source's keys falls in is not, and a two-window backfill rewrites two
+    * windows' files, not the span between them. A source with no fully-
+    * keyed row can match nothing and affects no file; a table without
+    * stats on any merge key rewrites every file.
+    */
+  private[graft] def planMerge(cur: Version, source: DataFrame, keys: Seq[String]): MergePlan = {
+    val contract = cur.schema.map(StructType.fromDDL)
+    val trackedKeys = keys.filter { k =>
+      cur.statsCols.contains(k) && {
+        val src = statsEncoding(source.schema(k).dataType)
+        src.nonEmpty && src == contract.flatMap(_.fields.find(_.name == k))
+          .flatMap(f => statsEncoding(f.dataType))
       }
     }
-    val ranges = runs.map { case (b0, b1) =>
-      (mn + b0 * w, List(BigInt(mn) + (BigInt(b1) + 1) * w - 1, BigInt(mx)).min.toLong)
+    val edges = trackedKeys.map { k =>
+      val i = cur.statsCols.indexOf(k)
+      cur.files.flatMap(f => cur.stats.get(f).flatMap(_.lift(i)))
+        .flatMap { case (lo, hi) => Seq(lo, hi) }.distinct.sorted.toArray
     }
-    if (ranges.length <= maxDisjuncts) ranges
-    else {
-      // keep the (maxDisjuncts - 1) LARGEST gaps as split points; merge the rest
-      val splitAfter = (0 until ranges.length - 1)
-        .sortBy(i => -(BigInt(ranges(i + 1)._1) - BigInt(ranges(i)._2)))
-        .take(maxDisjuncts - 1).toSet
-      ranges.zipWithIndex.foldLeft(Vector.empty[(Long, Long)]) { case (acc, (rg, i)) =>
-        if (acc.isEmpty || splitAfter.contains(i - 1)) acc :+ rg
-        else acc.init :+ (acc.last._1, rg._2)
+    def enc(k: String): Column = statsLongExpr(k, source.schema(k).dataType)
+    val keyed = keys.map(col(_).isNotNull).reduce(_ && _)
+    val envelopeAggs = trackedKeys.headOption.toSeq.flatMap(k => Seq(min(enc(k)), max(enc(k))))
+    val aggs = Seq(count(lit(1)), count(when(keyed, lit(1)))) ++ envelopeAggs ++
+      trackedKeys.zip(edges).map { case (k, es) =>
+        collect_set(when(keyed, ColumnBridge.column(KeySegment(ColumnBridge.expression(enc(k)), es))))
       }
-    }
+    val r = source.agg(aggs.head, aggs.tail: _*).head()
+    val setsAt = 2 + envelopeAggs.length
+    // each populated segment as a value range — segment 2i+1 is the point
+    // edges(i), segment 2i the open gap (edges(i-1), edges(i)) — and ranges
+    // that abut merged into one
+    val bounds = trackedKeys.zip(edges).zipWithIndex.map { case ((k, es), j) =>
+      val ranges = r.getSeq[Int](setsAt + j).sorted.map(s =>
+        if (s % 2 == 1) (es(s / 2), es(s / 2)) else (es(s / 2 - 1) + 1, es(s / 2) - 1))
+      k -> ranges.foldLeft(List.empty[(Long, Long)]) {
+        case ((lo, hi) :: done, (l, h)) if l == hi + 1 => (lo, h) :: done
+        case (done, rg) => rg :: done
+      }.reverse
+    }.toMap
+    val affected =
+      if (r.getLong(1) == 0L) Nil // no fully-keyed source row can match anything
+      else if (trackedKeys.isEmpty) cur.files // no stats on any key: honest full rewrite
+      else rangePruned(cur, cur.files, bounds)
+    val envelope = Option.when(envelopeAggs.nonEmpty && !r.isNullAt(2))(
+      (r.getLong(2), r.getLong(3), r.getLong(0)))
+    MergePlan(r.getLong(0), affected, trackedKeys, bounds, envelope)
   }
 
   /** Replace the table contents with `df` as the next version — always a
@@ -2126,7 +2100,7 @@ object Versioned {
     requireNoPendingTxn(cur, root)
     val n = cur.map(_.n + 1).getOrElse(1)
     val keptStats = cur.map(_.statsCols).getOrElse(Nil).filter(c =>
-      df.schema.fieldNames.contains(c) && statsTypeSupported(df.schema(c).dataType))
+      df.schema.fieldNames.contains(c) && statsEncoding(df.schema(c).dataType).nonEmpty)
     // constraints whose SQL no longer resolves against the new schema fall
     // out of the contract (the stats-column stance); surviving ones must
     // hold on the replacement data
@@ -3026,8 +3000,7 @@ object Versioned {
     * `v`'s list) as a [[org.apache.spark.sql.graft.ManifestFileIndex]]
     * relation under v's schema contract, v's deletion vectors applied.
     * Every read, the DML's affected rows, CDC and constraint checks are
-    * frames of this scan, and its `inputFiles` are `files` (plus any
-    * deletion-vector sidecars).
+    * frames of this scan, and its `inputFiles` are `files`.
     *
     * The explicit read schema makes parquet fill columns a file lacks with
     * typed NULLs, which is what lets [[evolve]] add a column without
@@ -3043,11 +3016,13 @@ object Versioned {
     * before the rename. Statuses come from the manifest's sizes, so
     * planning stats no file.
     *
-    * A file with deletion vectors (vt27) scans WITH each row's [[dvKeyOf]]
-    * key and parquet position (`_metadata` rides any file-source relation)
-    * so the recorded victims anti-join away; clean files keep the plain
-    * scan. `withPos` keeps the two columns on every file: the victim scan
-    * of [[deleteWhereDV]]/[[updateWhereDV]].
+    * When any of `files` carries deletion vectors (vt27) the scan reads
+    * each row's [[dvKeyOf]] key and parquet position (`_metadata` rides any
+    * file-source relation) and a [[DvAlive]] filter right above the file
+    * scan drops the recorded victims, each task loading its files' vectors
+    * itself ([[victimPositions]]): no join, no broadcast, one job. Clean
+    * files pass the filter untouched. `withPos` keeps the two columns: the
+    * victim scan of [[deleteWhereDV]]/[[updateWhereDV]].
     */
   private def scan(spark: SparkSession, root: String, v: Version, files: Seq[String],
       withPos: Boolean = false): DataFrame = {
@@ -3058,26 +3033,22 @@ object Versioned {
     }
     val logicalOf = v.colMap.map(_.swap)
     val logicalCols = schema.fields.toSeq.map(f => col(physicalName(v.colMap, f.name)).as(f.name))
-    def rel(fs: Seq[String], pos: Boolean): DataFrame = {
-      val raw = ManifestFileIndex.relation(spark, root, fs,
-        prunedFiles(v, fs, _, p => logicalOf.getOrElse(p, p)),
-        physicalStruct(schema, v.colMap), v.sizes)
-      if (pos)
-        raw.select(logicalCols :+
-          substring_index(col("_metadata.file_path"), "/", -2).as(DvKeyCol) :+
-          col("_metadata.row_index").as(DvPosCol): _*)
-      else if (v.colMap.isEmpty) raw
-      else raw.select(logicalCols: _*)
-    }
-    val dvd = files.filter(f => v.dvs.get(f).exists(_.nonEmpty))
-    if (withPos) antiJoinDv(spark, root, v, files, rel(files, pos = true))
-    else if (dvd.isEmpty) rel(files, pos = false)
+    val raw = ManifestFileIndex.relation(spark, root, files,
+      prunedFiles(v, files, _, p => logicalOf.getOrElse(p, p)),
+      physicalStruct(schema, v.colMap), v.sizes)
+    val vectors = files.flatMap(f => v.dvs.get(f).filter(_.nonEmpty).map(scs =>
+      dvKeyOf(f) -> scs.map(sc => Paths.get(root).resolve(sc._1).toString)))
+    if (vectors.isEmpty && !withPos)
+      if (v.colMap.isEmpty) raw else raw.select(logicalCols: _*)
     else {
-      val alive = antiJoinDv(spark, root, v, dvd, rel(dvd, pos = true))
-        .drop(DvKeyCol, DvPosCol)
-      val clean = files.filterNot(dvd.toSet)
-      if (clean.isEmpty) alive
-      else rel(clean, pos = false).unionByName(alive)
+      val tagged = raw.select(logicalCols :+
+        substring_index(col("_metadata.file_path"), "/", -2).as(DvKeyCol) :+
+        col("_metadata.row_index").as(DvPosCol): _*)
+      val alive =
+        if (vectors.isEmpty) tagged
+        else tagged.where(ColumnBridge.column(DvAlive(ColumnBridge.expression(col(DvKeyCol)),
+          ColumnBridge.expression(col(DvPosCol)), vectors.toMap, sidecarReader(spark))))
+      if (withPos) alive else alive.drop(DvKeyCol, DvPosCol)
     }
   }
 
@@ -3085,20 +3056,21 @@ object Versioned {
   // published Delta/Iceberg-v2 design — a delete records the POSITIONS of
   // its victims in a small parquet sidecar and attaches it to the file in
   // the manifest (`dv=` lines); the file's bytes never move. A read of a
-  // DV-carrying file scans with parquet's native `_metadata.row_index`,
-  // anti-joins the recorded positions (sidecars are tiny, AQE broadcasts
-  // them), and serves survivors. At 100 TB this is the difference between
-  // writing O(deleted rows) and rewriting O(affected files): deleting 100
-  // rows from a 1 GB file costs a KB-sized sidecar, not a gigabyte — the
-  // copy-on-write forms ([[deleteWhere]]/[[updateWhere]]) stay the right
-  // tool for WIDE deletes, and [[purgeDeletes]] (Delta's `REORG … APPLY
-  // (PURGE)`) folds accumulated vectors back into clean files.
+  // DV-carrying file scans with parquet's native `_metadata.row_index`, and
+  // the task that reads the file loads its sidecars and drops the recorded
+  // positions ([[DvAlive]]) — the driver never opens a sidecar. At 100 TB
+  // this is the difference between writing O(deleted rows) and rewriting
+  // O(affected files): deleting 100 rows from a 1 GB file costs a KB-sized
+  // sidecar, not a gigabyte — the copy-on-write forms
+  // ([[deleteWhere]]/[[updateWhere]]) stay the right tool for WIDE deletes,
+  // and [[purgeDeletes]] (Delta's `REORG … APPLY (PURGE)`) folds
+  // accumulated vectors back into clean files.
 
   private[graft] val DvKeyCol = "__dv_key"
   private[graft] val DvPosCol = "__dv_pos"
 
   /** Sidecar loads performed since JVM start (each = one sidecar parquet
-    * opened and its positions materialized, EXECUTOR-side on the DSv2
+    * opened and its positions materialized, EXECUTOR-side on every read
     * path) — spec instrumentation proving the driver never materializes
     * victim positions during planning: a plan-only operation must leave
     * this counter untouched, execution moves it. Shared-JVM local mode
@@ -3110,31 +3082,91 @@ object Versioned {
     * sidecars carry `(file, cnt, bits)` (positions RLE-compressed into one
     * row per file), pre-round-19 sidecars carry `(file, pos)` rows. An
     * explicit merged schema makes parquet serve the absent columns as
-    * NULL, so one scan — and one NULL test — handles both generations.
+    * NULL, so one reader — and one NULL test — handles both generations.
     */
-  private[graft] val SidecarSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "file STRING, pos BIGINT, cnt BIGINT, bits BINARY")
+  private[graft] val SidecarSchema: StructType =
+    StructType.fromDDL("file STRING, pos BIGINT, cnt BIGINT, bits BINARY")
 
-  /** Sidecar rows as `(file key, pos)` whatever the sidecar generation —
-    * compressed blobs decode behind an `explode` (executor-side, a native
-    * expression), legacy rows pass through. Feeds the library read's
-    * broadcast anti-join; the DSv2 partition reader decodes its own file's
-    * blob directly instead ([[graft.streaming.VersionedReaderFactory]]).
+  /** Spark's own parquet reader for files of `schema`, rows not batches,
+    * built on the driver and shipped to executors — the closure
+    * `ParquetFileFormat` hands `FileScanRDD`. The DSv2 batch and stream read
+    * their data files through it, and every read loads its sidecars through
+    * it ([[victimPositions]]).
     */
-  private[graft] def sidecarPositions(spark: SparkSession, root: String,
-      sidecars: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val paths = sidecars.map(p => Paths.get(root).resolve(p).toString)
-    spark.read.schema(SidecarSchema).parquet(paths: _*)
-      .select(col("file"),
-        explode(when(col("bits").isNotNull, ColumnBridge.column(
-          graft.functions.RleDecodePositions(ColumnBridge.expression(col("bits")))))
-          .otherwise(array(col("pos")))).as("pos"))
+  private[graft] def parquetReader(spark: SparkSession,
+      schema: StructType): PartitionedFile => Iterator[InternalRow] =
+    new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark,
+      dataSchema = schema,
+      partitionSchema = new StructType(),
+      requiredSchema = schema,
+      filters = Seq.empty,
+      options = Map(org.apache.spark.sql.execution.datasources.FileFormat
+        .OPTION_RETURNING_BATCH -> "false"),
+      // a FRESH conf per reader: the builder SETS its requested-schema keys
+      // on the conf it's given, and local mode's broadcast serves the live
+      // object — two readers sharing one conf would poison each other's
+      // schemas
+      hadoopConf = new org.apache.hadoop.conf.Configuration(
+        spark.sparkContext.hadoopConfiguration))
+
+  /** [[parquetReader]] over [[SidecarSchema]], built once per SparkContext:
+    * building one copies the Hadoop conf and broadcasts it, a fixed cost
+    * every vector-carrying read would otherwise pay on the driver. A race
+    * builds it twice, harmlessly.
+    */
+  @volatile private var sidecarReaderOf
+      : Option[(org.apache.spark.SparkContext, PartitionedFile => Iterator[InternalRow])] = None
+
+  private[graft] def sidecarReader(spark: SparkSession): PartitionedFile => Iterator[InternalRow] =
+    sidecarReaderOf.collect { case (sc, r) if sc eq spark.sparkContext => r }.getOrElse {
+      val r = parquetReader(spark, SidecarSchema)
+      sidecarReaderOf = Some(spark.sparkContext -> r)
+      r
+    }
+
+  /** The rows `read` ([[parquetReader]]) serves for the whole file at
+    * `path`: ColumnarBatches (the vectorized reader's output, masked as
+    * InternalRow) unwrapped to rows.
+    */
+  private[graft] def fileRows(read: PartitionedFile => Iterator[InternalRow],
+      path: String, length: Long): Iterator[InternalRow] = {
+    val pf = PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
+      0L, length, Array.empty[String], 0L, length)
+    read(pf).asInstanceOf[Iterator[Any]].flatMap {
+      case b: org.apache.spark.sql.vectorized.ColumnarBatch => b.rowIterator().asScala
+      case r: InternalRow => Iterator.single(r)
+    }
   }
 
-  /** The sidecar join key of a data file: its `<commitDir>/<fileName>`
-    * tail. Commit dirs are uuid-named, so the tail is unique per table —
+  /** The one loader of deletion vectors: the victim positions of the file
+    * whose [[dvKeyOf]] key is `key`, merged from its `sidecars` (absolute
+    * paths) and read through `read` ([[sidecarReader]]) by the task that
+    * scans the file. Compressed rows
+    * decode their blob, legacy `(file, pos)` rows add their position, and
+    * rows of other files sharing a sidecar are skipped by key. Sorted and
+    * distinct. The DSv2 partition reader and [[DvAlive]] both call it.
+    */
+  private[graft] def victimPositions(read: PartitionedFile => Iterator[InternalRow],
+      key: String, sidecars: Seq[String]): Array[Long] = {
+    val k = UTF8String.fromString(key)
+    val acc = scala.collection.mutable.ArrayBuilder.make[Long]
+    sidecars.foreach { sc =>
+      dvSidecarLoads.incrementAndGet()
+      // SidecarSchema order: file(0), pos(1), cnt(2), bits(3)
+      fileRows(read, sc, Files.size(Paths.get(sc))).foreach { r =>
+        if (!r.isNullAt(0) && r.getUTF8String(0) == k) {
+          if (!r.isNullAt(3)) acc ++= graft.functions.RlePositions.decodeLongs(r.getBinary(3))
+          else if (!r.isNullAt(1)) acc += r.getLong(1)
+        }
+      }
+    }
+    acc.result().sorted.distinct
+  }
+
+  /** The deletion-vector key of a data file, as its sidecar rows record it
+    * and its scan reads it off `_metadata.file_path`: the
+    * `<commitDir>/<fileName>` tail. Commit dirs are uuid-named, so the tail is unique per table —
     * and stable under table relocation, shallow-clone absolute paths, and
     * [[cloneTable]]'s tail-preserving deep copies (an absolute-path scan's
     * `_metadata.file_path` still ends with the same two segments).
@@ -3142,30 +3174,6 @@ object Versioned {
   private[graft] def dvKeyOf(f: String): String = {
     val p = Paths.get(f)
     s"${p.getParent.getFileName}/${p.getFileName}"
-  }
-
-  /** Anti-join `scanned` (a frame carrying [[DvKeyCol]]/[[DvPosCol]])
-    * against the deletion vectors `v` records for `files`. The sidecars
-    * are blast-radius-sized parquet, so AQE broadcasts the join; filters on
-    * data columns still push below a left-anti join (Catalyst's
-    * PushPredicateThroughJoin), so pruning selectivity is unaffected.
-    */
-  private def antiJoinDv(spark: SparkSession, root: String, v: Version,
-      files: Seq[String], scanned: DataFrame): DataFrame = {
-    val sidecars = files.flatMap(f => v.dvs.getOrElse(f, Nil).map(_._1)).distinct
-    if (sidecars.isEmpty) scanned
-    else {
-      val keys = files.map(dvKeyOf)
-      // restrict to the scanned files' keys: a shared sidecar may carry
-      // positions for files outside this scan (harmless to the anti-join,
-      // but the filter keeps the broadcast exactly blast-radius-sized)
-      val dv = sidecarPositions(spark, root, sidecars)
-        .where(col("file").isInCollection(keys))
-        .select(col("file").as("__dvf"), col("pos").as("__dvp"))
-      scanned.join(dv,
-        scanned(DvKeyCol) === col("__dvf") && scanned(DvPosCol) === col("__dvp"),
-        "left_anti")
-    }
   }
 
   // ---- vt24 column mapping (Delta's published design, name-keyed form):
@@ -3483,4 +3491,68 @@ object Versioned {
     val v = versionAt(root, asOf)
     scan(spark, root, v, v.files)
   }
+}
+
+/** The deletion-vector filter of [[Versioned.scan]]: true for a row whose
+  * parquet position `pos` in the file keyed `key` ([[Versioned.dvKeyOf]]) is
+  * not a victim. `vectors` maps each vector-carrying file's key to its
+  * sidecars' absolute paths — pure manifest metadata; the positions load in
+  * the task, once per file it reads ([[Versioned.victimPositions]]), and
+  * each row is a binary search. Keys without vectors keep every row.
+  */
+private[graft] final case class DvAlive(key: Expression, pos: Expression,
+    vectors: Map[String, Seq[String]], read: PartitionedFile => Iterator[InternalRow])
+    extends BinaryExpression {
+  override def left: Expression = key
+  override def right: Expression = pos
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = false
+  override def toString: String = s"dv_alive($key, $pos)"
+
+  @transient private var lastKey: UTF8String = _
+  @transient private var victims: Array[Long] = _
+
+  def alive(k: UTF8String, p: Long): Boolean = {
+    if (lastKey == null || lastKey != k) {
+      lastKey = k.clone()
+      victims = vectors.get(k.toString).fold(Array.emptyLongArray)(
+        Versioned.victimPositions(read, k.toString, _))
+    }
+    victims.isEmpty || java.util.Arrays.binarySearch(victims, p) < 0
+  }
+
+  override def eval(input: InternalRow): Any =
+    alive(key.eval(input).asInstanceOf[UTF8String], pos.eval(input).asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("dvAlive", this)
+    defineCodeGen(ctx, ev, (k, p) => s"$self.alive($k, $p)")
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): DvAlive = copy(key = newLeft, pos = newRight)
+}
+
+/** The segment of the sorted distinct boundaries `edges` that holds the
+  * encoded key `child` ([[Versioned.planMerge]]): 2i+1 for a key equal to
+  * `edges(i)`, 2i for one strictly between `edges(i-1)` and `edges(i)`; NULL
+  * for a NULL key and for one below the first or above the last boundary,
+  * where no file's range reaches.
+  */
+private[graft] final case class KeySegment(child: Expression, edges: Array[Long])
+    extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = true
+  override def toString: String = s"key_segment($child)"
+
+  override def eval(input: InternalRow): Any = child.eval(input) match {
+    case null => null
+    case v: Long =>
+      val i = java.util.Arrays.binarySearch(edges, v)
+      val seg = if (i >= 0) 2 * i + 1 else 2 * (-i - 1)
+      if (seg == 0 || seg == 2 * edges.length) null else seg
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): KeySegment =
+    copy(child = newChild)
 }

@@ -1036,7 +1036,7 @@ object SinkQueries extends QueryModule {
     // a parquet sidecar attached via the manifest, data files never move
     // (`mor_zero_copy` hash-fails if a delete rewrote or delisted a file).
     // Three phases prove the full lifecycle: the MOR head serves
-    // survivors + updated rows through the anti-join, purgeDeletes folds
+    // survivors + updated rows through the in-scan vectors, purgeDeletes folds
     // the vectors into clean files with identical rows, and v1
     // time-travels the pre-delete snapshot intact.
     "vt27_deletion_vectors" -> ((s, dir) => {
@@ -1463,7 +1463,7 @@ object SinkQueries extends QueryModule {
         |FROM orders WHERE o_orderstatus = 'O' AND o_orderkey BETWEEN 1000 AND 3000""".stripMargin,
     // vt27: v1 = the full F snapshot; mor = F minus the deleted window,
     // the update window re-priced/re-statused (served through the
-    // deletion-vector anti-join); purged = the same rows from clean files
+    // in-scan deletion vectors); purged = the same rows from clean files
     "vt27_deletion_vectors" ->
       """SELECT 'v1' AS phase, o_orderkey, o_totalprice, o_orderstatus,
         |  1 AS mor_zero_copy FROM orders WHERE o_orderstatus = 'F'

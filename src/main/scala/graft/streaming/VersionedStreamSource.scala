@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.merge.Versioned
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -12,13 +11,10 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.vectorized.ColumnarBatch
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /** ST19: the versioned table as a STREAMING SOURCE — the other half of the
   * loop st17/st18 close as a sink. The published Delta streaming-source
@@ -230,8 +226,9 @@ private[graft] class VersionedStreamTable(root: String, tableSchema: StructType,
   * (pruning only skips
   * files, Spark still decides rows), and column pruning narrows the
   * parquet reader's required schema. Deletion vectors (vt27) apply
-  * executor-side: each partition ships its file's victim positions and the
-  * reader drops them with a sorted merge — zero joins, zero shuffles.
+  * executor-side: each partition ships its file's sidecar paths and the
+  * reader loads them through [[Versioned.victimPositions]], the loader of
+  * every read of the log — zero joins, zero shuffles.
   */
 private[streaming] class VersionedScanBuilder(root: String, tableSchema: StructType,
     startingVersion: Int, maxVersionsPerTrigger: Int, ignoreChanges: Boolean,
@@ -482,42 +479,21 @@ private[streaming] object VersionedMicroBatchStream {
   /** The shared reader factory of the stream and batch paths. Files carry
     * PHYSICAL names (vt24); a rename is name-only so the physicalized
     * struct is positionally identical to the logical one — InternalRows
-    * read here serve the logical readSchema() unchanged. Spark's own
-    * parquet reader, built once on the driver and shipped to executors —
-    * the closure ParquetFileFormat returns is exactly what FileScanRDD
-    * ships for the batch path.
+    * read here serve the logical readSchema() unchanged. Data files and
+    * deletion-vector sidecars both read through Spark's own parquet reader
+    * ([[Versioned.parquetReader]]), so DV application is entirely
+    * executor-side.
     */
   def readerFactory(spark: SparkSession, schema: StructType,
-      colMap: Map[String, String]): PartitionReaderFactory = {
-    val fileSchema = Versioned.physicalStruct(schema, colMap)
-    def reader(s: StructType): PartitionedFile => Iterator[InternalRow] =
-      new ParquetFileFormat().buildReaderWithPartitionValues(
-        spark,
-        dataSchema = s,
-        partitionSchema = new StructType(),
-        requiredSchema = s,
-        filters = Seq.empty,
-        // rows, not ColumnarBatches: PartitionReader[InternalRow] is the
-        // row-level contract (the batch-masked-as-row hack would leak here)
-        options = Map(org.apache.spark.sql.execution.datasources.FileFormat
-          .OPTION_RETURNING_BATCH -> "false"),
-        // a FRESH conf per reader: the builder SETS its requested-schema
-        // keys on the conf it's given, and local mode's broadcast serves
-        // the live object — two readers sharing one conf would poison
-        // each other's schemas
-        hadoopConf = new org.apache.hadoop.conf.Configuration(
-          spark.sparkContext.hadoopConfiguration))
-    // the sidecar reader is the SAME parquet machinery over the merged
-    // sidecar schema (legacy (file,pos) rows and compressed (file,cnt,bits)
-    // rows both satisfy it — absent columns read NULL), shipped alongside
-    // the data reader so DV application is entirely executor-side
-    new VersionedReaderFactory(reader(fileSchema), reader(Versioned.SidecarSchema))
-  }
+      colMap: Map[String, String]): PartitionReaderFactory =
+    new VersionedReaderFactory(
+      Versioned.parquetReader(spark, Versioned.physicalStruct(schema, colMap)),
+      Versioned.sidecarReader(spark))
 }
 
 /** `dvSidecars` (vt27/vt32) are the ABSOLUTE paths of the deletion-vector
-  * sidecars attached to this file, `dvKey` its [[Versioned.dvKeyOf]] join
-  * key — pure metadata, O(attachments) bytes however many rows are
+  * sidecars attached to this file, `dvKey` its [[Versioned.dvKeyOf]] key
+  * — pure metadata, O(attachments) bytes however many rows are
   * deleted. The reader loads and merges its own file's positions
   * executor-side; empty for clean files and on every streaming partition
   * (a DV attach is a CHANGE commit the stream refuses by default; under
@@ -532,72 +508,18 @@ private[streaming] class VersionedReaderFactory(
     sidecarReadFunc: PartitionedFile => Iterator[InternalRow])
     extends PartitionReaderFactory {
 
-  /** Unwrap the parquet reader's output: ColumnarBatch objects masked as
-    * InternalRow when vectorization kicks in — either shape to rows.
-    */
-  private def rows(f: PartitionedFile => Iterator[InternalRow],
-      path: String, length: Long): Iterator[InternalRow] = {
-    val pf = PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
-      0L, length, Array.empty[String], 0L, length)
-    f(pf).asInstanceOf[Iterator[Any]].flatMap {
-      case b: ColumnarBatch => b.rowIterator().asScala
-      case r: InternalRow => Iterator.single(r)
-    }
-  }
-
-  /** This file's victim positions, loaded + merged from its sidecars HERE
-    * (executor-side): compressed sidecars decode their one matching row's
-    * blob; legacy sidecars collect their matching (file, pos) rows. Rows
-    * for OTHER files sharing the sidecar are skipped by key. Sorted
-    * distinct ascending for the two-pointer merge.
-    */
-  private def victimPositions(vp: VersionedFilePartition): Array[Long] = {
-    val key = org.apache.spark.unsafe.types.UTF8String.fromString(vp.dvKey)
-    val acc = scala.collection.mutable.ArrayBuffer.empty[Long]
-    vp.dvSidecars.foreach { sc =>
-      Versioned.dvSidecarLoads.incrementAndGet()
-      // SidecarSchema order: file(0), pos(1), cnt(2), bits(3)
-      rows(sidecarReadFunc, sc, Files.size(Paths.get(sc))).foreach { r =>
-        if (!r.isNullAt(0) && r.getUTF8String(0) == key) {
-          if (!r.isNullAt(3))
-            acc ++= graft.functions.RlePositions.decodeLongs(r.getBinary(3))
-          else if (!r.isNullAt(1)) acc += r.getLong(1)
-        }
-      }
-    }
-    acc.toArray.sorted.distinct
-  }
-
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val vp = partition.asInstanceOf[VersionedFilePartition]
-    val base: Iterator[InternalRow] = rows(readFunc, vp.path, vp.length)
+    val base: Iterator[InternalRow] = Versioned.fileRows(readFunc, vp.path, vp.length)
     val deleted: Array[Long] =
-      if (vp.dvSidecars.isEmpty) Array.emptyLongArray else victimPositions(vp)
+      if (vp.dvSidecars.isEmpty) Array.emptyLongArray
+      else Versioned.victimPositions(sidecarReadFunc, vp.dvKey, vp.dvSidecars.toSeq)
     // no filters were pushed into parquet, so rows arrive in FILE ORDER and
-    // the running index IS the parquet row position — victims drop with a
-    // two-pointer merge against the sorted vector, O(1) per row, no hashing
+    // the running index IS the parquet row position
+    var pos = -1L
     val it: Iterator[InternalRow] =
       if (deleted.isEmpty) base
-      else new Iterator[InternalRow] {
-        private var pos = -1L
-        private var di = 0
-        private var nxt: InternalRow = _
-        private var ready = false
-        private def advance(): Unit =
-          while (!ready && base.hasNext) {
-            val r = base.next(); pos += 1
-            while (di < deleted.length && deleted(di) < pos) di += 1
-            if (di >= deleted.length || deleted(di) != pos) {
-              nxt = r; ready = true
-            }
-          }
-        override def hasNext: Boolean = { advance(); ready }
-        override def next(): InternalRow = {
-          advance()
-          if (!ready) throw new NoSuchElementException
-          ready = false; nxt
-        }
-      }
+      else base.filter { _ => pos += 1; java.util.Arrays.binarySearch(deleted, pos) < 0 }
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _
       override def next(): Boolean =

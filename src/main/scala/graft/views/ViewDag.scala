@@ -362,12 +362,3 @@ object ViewDag {
       .unionByName(estimated)
   }
 }
-
-/** Convenience: run the whole DAG for a SparkSession + sf dir. */
-object ViewRunner {
-  import graft.sources.Tables
-  def v5(spark: SparkSession, dir: String): DataFrame =
-    ViewDag.v5View(Tables.lineitem(spark, dir), Tables.orders(spark, dir),
-      Tables.customer(spark, dir), Tables.nation(spark, dir),
-      Tables.region(spark, dir), Tables.supplier(spark, dir))
-}

@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions._
   * PLANNING a DV-carrying DSv2 read never opens a sidecar or materializes a
   * victim position on the driver (partitions carry sidecar PATHS), and
   * (c) that pre-round-19 sidecars — raw (file, pos) rows — still read
-  * through both the library and DSv2 paths.
+  * through both the library scan and the DSv2 path.
   */
 class DvCompressedSpec extends SparkSuite {
-  import java.nio.file.{Files, Paths}
+  import java.nio.file.Paths
 
   private def roundtrip(ps: Array[Long]): Array[Long] =
     RlePositions.decodeLongs(RlePositions.encode(new GenericArrayData(ps)))
@@ -105,24 +105,7 @@ class DvCompressedSpec extends SparkSuite {
     mk(root)
     val v2 = Versioned.deleteWhereDV(spark, root, col("k") % 7 === 0L)
     val sidecar = v2.dvs.valuesIterator.flatten.map(_._1).toSeq.distinct.head
-    val scAbs = Paths.get(root).resolve(sidecar)
-    // decode the new sidecar to legacy rows, then splice the legacy parquet
-    // bytes over the SAME manifest-referenced path
-    val legacy = Versioned.sidecarPositions(spark, root, Seq(sidecar))
-      .select(col("file"), col("pos")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val tmp = tmpDir() + "/legacy"
-    legacy.toDF("file", "pos").coalesce(1).write.parquet(tmp)
-    val part = Files.list(Paths.get(tmp)).iterator()
-    val partFile = {
-      var p: java.nio.file.Path = null
-      while (part.hasNext) { val c = part.next(); if (c.toString.endsWith(".parquet")) p = c }
-      p
-    }
-    Files.copy(partFile, scAbs, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // the local checksum FS keeps a .crc beside the original bytes — drop
-    // the stale one or the spliced file fails checksum verification
-    Files.deleteIfExists(scAbs.getParent.resolve("." + scAbs.getFileName + ".crc"))
+    toLegacySidecar(root, sidecar)
     val expect = (1L to 100L).filterNot(_ % 7 == 0).toArray
     assert(Versioned.read(spark, root).select("k").as[Long].collect().sorted === expect)
     assert(spark.read.format(classOf[graft.streaming.VersionedStreamSource].getName)

@@ -105,6 +105,34 @@ class MergeSpec extends SparkSuite {
     assert(out === Map(1 -> "new1", 2 -> "new2", 3 -> "keep3"))
   }
 
+  test("merge anti-joins the raw source keys: no aggregate or window on the build side, same rows") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Window}
+    val rnd = new scala.util.Random(7)
+    val target = kv((0 until 40).map(i => (i, 0, s"t$i")))
+    // duplicate keys, keys outside the target, a NULL key
+    val source = kv(Seq.fill(30)((rnd.nextInt(60), rnd.nextInt(9), s"s${rnd.nextInt(99)}")))
+      .union(Seq[(Option[Int], Int, String)]((None, 1, "n")).toDF("k", "seq", "v"))
+    for (order <- Seq(None, Some("seq"))) {
+      val tie = if (order.isEmpty) Nil else Seq(col("v"))
+      val out = MergeInto.merge(target, source, Seq("k"), order, tie)
+      val antis = out.queryExecution.optimizedPlan.collect {
+        case j: Join if j.joinType == LeftAnti => j }
+      assert(antis.length === 1, out.queryExecution.optimizedPlan)
+      assert(antis.head.right.collect { case a: Aggregate => a; case w: Window => w }.isEmpty,
+        s"the anti-join's build side deduplicates again:\n${antis.head.right}")
+      // the rows the dedup-then-anti-join rewrite produced
+      val deduped = order.fold(source.dropDuplicates("k"))(c =>
+        graft.ops.Core.dedupByKey(source, Seq("k"), col(c).desc +: tie))
+        .localCheckpoint(true)
+      val expected = target.join(deduped.select("k"), Seq("k"), "left_anti").unionByName(deduped)
+      val got = MergeInto.merge(target, deduped, Seq("k"), order, tie)
+      assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty, order)
+      if (order.nonEmpty)
+        assert(out.exceptAll(expected).isEmpty && expected.exceptAll(out).isEmpty)
+    }
+  }
+
   test("mergeWithAudit: matched rows keep uuid + refresh ts; new rows mint uuid") {
     val target = Seq((1, "a", "uuid-1", "2024-01-01 00:00:00"), (2, "b", "uuid-2", "2024-01-01 00:00:00"))
       .toDF("k", "v", "row_uuid", "ts0")

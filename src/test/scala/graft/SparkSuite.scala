@@ -103,6 +103,28 @@ trait SparkSuite extends AnyFunSuite {
         })
     }.toMap
   }
+  /** Rewrite the deletion-vector sidecar at `root`-relative `sidecar` in
+    * place, at the same manifest-referenced path, to the pre-compression
+    * format: one `(file, pos)` row per victim, decoded from its compressed
+    * rows.
+    */
+  def toLegacySidecar(root: String, sidecar: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    val scAbs = Paths.get(root).resolve(sidecar)
+    val legacy = spark.read.schema(graft.merge.Versioned.SidecarSchema).parquet(scAbs.toString)
+      .collect().toSeq.flatMap(r => graft.functions.RlePositions.decodeLongs(
+        r.getAs[Array[Byte]]("bits")).map(p => (r.getAs[String]("file"), p)))
+    val tmp = tmpDir() + "/legacy"
+    legacy.toDF("file", "pos").coalesce(1).write.parquet(tmp)
+    val part = Files.list(Paths.get(tmp))
+    val partFile = try part.iterator().asScala.find(_.toString.endsWith(".parquet")).get
+      finally part.close()
+    Files.copy(partFile, scAbs, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // the local checksum FS keeps a .crc beside the original bytes — drop
+    // the stale one or the spliced file fails checksum verification
+    Files.deleteIfExists(scAbs.getParent.resolve("." + scAbs.getFileName + ".crc"))
+  }
   def tmpDir(): String = {
     val d = java.nio.file.Files.createTempDirectory("graft_test").toFile
     d.deleteOnExit()

@@ -81,8 +81,8 @@ class VersionedClusterSpec extends SparkSuite {
 
     appendDay(5)
     // the split points come from the manifest, so the write samples nothing:
-    // no range-partitioning exchange, and the same three queries as before
-    // (source aggregate, source key buckets, write)
+    // no range-partitioning exchange, and two queries (the source aggregate
+    // that plans the merge, and the write)
     var v2: Versioned.Version = null
     val plans = plansOf { v2 = mergeWindow(1, 2) }
     assert(!plans.exists(_.toString.contains("rangepartitioning")))
@@ -93,7 +93,7 @@ class VersionedClusterSpec extends SparkSuite {
     assert(added2.length <= math.min(shufflePartitions, removed2))
     assert(disjoint(addedRanges(r, v2.n)), addedRanges(r, v2.n))
     assert(rowsOf(r) === model)
-    assert(executionsOf(mergeWindow(1, 3)).length === 3)
+    assert(executionsOf(mergeWindow(1, 3)).length === 2)
     assert(rowsOf(r) === model)
 
     // purge, copy-on-write delete and update land at most the files they replace

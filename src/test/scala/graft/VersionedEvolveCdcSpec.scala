@@ -5,45 +5,14 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Round-16 log surface: exactly-once streaming MERGE (st18), metadata-only
-  * ADD COLUMN (vt16), keyed CDC pairing (vt17), and the per-key range-SET
-  * blast radius that keeps a multi-window backfill merge from degrading to
-  * a near-full rewrite.
+  * ADD COLUMN (vt16), keyed CDC pairing (vt17), and the per-key blast
+  * radius that keeps a multi-window backfill merge from degrading to a
+  * near-full rewrite (its plan is pinned in VersionedMergePlanSpec).
   */
 class VersionedEvolveCdcSpec extends SparkSuite {
 
   private def freshRoot(): String =
     Files.createTempDirectory("graft_vt16").toString + "/t"
-
-  // ---- keyRangeSet: the COW blast-radius algebra ----
-
-  test("keyRangeSet covers every key, splits distant windows, caps by largest gaps") {
-    import spark.implicits._
-    // two distant windows: 1..10 and 9001..9010
-    val src = ((1L to 10L) ++ (9001L to 9010L)).toDF("k")
-    val rs = Versioned.keyRangeSet(src, "k", 1L, 9010L)
-    assert(rs.length === 2, s"two windows must yield two ranges, got $rs")
-    assert(rs(0)._1 <= 1L && rs(0)._2 >= 10L && rs(0)._2 < 9001L)
-    assert(rs(1)._1 <= 9001L && rs(1)._1 > 10L && rs(1)._2 >= 9010L)
-    // coverage: every source key inside some range
-    ((1L to 10L) ++ (9001L to 9010L)).foreach(k =>
-      assert(rs.exists { case (lo, hi) => k >= lo && k <= hi }, s"key $k uncovered"))
-    // single point
-    assert(Versioned.keyRangeSet(Seq(42L).toDF("k"), "k", 42L, 42L) === Seq((42L, 42L)))
-    // cap: 100 scattered singleton windows collapse to ≤ maxDisjuncts ranges,
-    // still covering every key
-    val scattered = (0L until 100L).map(_ * 1000000L)
-    val rs2 = Versioned.keyRangeSet(scattered.toDF("k"), "k", 0L, 99000000L, maxDisjuncts = 8)
-    assert(rs2.length <= 8)
-    scattered.foreach(k =>
-      assert(rs2.exists { case (lo, hi) => k >= lo && k <= hi }, s"key $k uncovered after cap"))
-    // DATE keys: encoded as epoch days, two month-windows split
-    val d = (0 until 10).map(i => java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1)
-      .plusDays(i.toLong))) ++ (0 until 10).map(i =>
-      java.sql.Date.valueOf(java.time.LocalDate.of(2024, 12, 1).plusDays(i.toLong)))
-    val mnD = java.time.LocalDate.of(2024, 1, 1).toEpochDay
-    val mxD = java.time.LocalDate.of(2024, 12, 10).toEpochDay
-    assert(Versioned.keyRangeSet(d.toDF("dt"), "dt", mnD, mxD).length === 2)
-  }
 
   test("a two-window backfill merge rewrites ONLY the windows' files (not the table span)") {
     import spark.implicits._

@@ -135,12 +135,11 @@ class VersionedPruneSpec extends SparkSuite {
       "scanAlivePos", "matchesNatively", "bloomPrune", "nullPrune").foreach(t =>
       assert(count(versioned, t) === 0, s"Versioned.scala still has $t"))
     // spark.read only where no manifest lists the files to read: a
-    // pre-contract log's schema inference, the deletion-vector sidecars and
-    // applyChangesPartitioned's plain parquet replica
+    // pre-contract log's schema inference and applyChangesPartitioned's
+    // plain parquet replica (deletion-vector sidecars load inside the scan)
     val reads = versioned.linesIterator.filter(_.contains("spark.read")).toSeq
-    assert(reads.length === 3, reads.mkString("\n"))
-    Seq("spark.read.parquet(v.files", "spark.read.schema(SidecarSchema)",
-      "spark.read.parquet(replicaPath)").foreach(t =>
+    assert(reads.length === 2, reads.mkString("\n"))
+    Seq("spark.read.parquet(v.files", "spark.read.parquet(replicaPath)").foreach(t =>
       assert(reads.count(_.contains(t)) === 1, t))
     // one rule decides: prunedFiles is the only caller of the range walker,
     // and the index and the DSv2 batch hand their filters to it
